@@ -174,7 +174,7 @@ object ScalingBench {
     val md =
       s"""# BENCH — measured scaling of the end-to-end indexing pipeline
          |
-         |Job: scan → grok parse (dead-letter) → tokenize → broadcast enrich →
+         |Job: scan → grok parse (dead-letter) → tokenize → dims lookup enrich →
          |route (hash_mod, overflow cap) → range-salted repartition → 3-sink
          |fan-out (error index / per-conversation rollup / dead letter) →
          |split-level aggregates (term cardinality, postings, time ranges,

@@ -147,7 +147,7 @@ object TranscriptGen {
       ts.cast("timestamp").as("ts"))
   }
 
-  /** tools dimension (broadcast-join enrichment; FIXTURES.md §2). */
+  /** tools dimension (left-join enrichment; FIXTURES.md §2). */
   def toolsDim: Seq[(String, String, String, Boolean)] =
     ToolVocab.map { t =>
       val category = t match {

@@ -4,20 +4,27 @@ import graft.functions.Tokenizers
 import graft.parse.DocParser
 import graft.publish.{Checkpoint, Manifest}
 import graft.route.Routing
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.Executors
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** The end-to-end indexing job — Quickwit's pipeline
   * Source → DocProcessor → Indexer → Packager → Uploader → Publisher
   * (quickwit-indexing/src/actors/indexing_pipeline.rs:326-464) re-expressed
   * as ONE Spark job:
   *
-  *   scan → parse (grok, dead-letter) → tokenize → enrich (broadcast dims)
-  *        → route (partition_id, salted on conv_id) → fan-out sinks
-  *        → split-level aggregate → atomic manifest publish (+ lineage)
+  *   scan → parse (grok, dead-letter) → tokenize → enrich (dims lookup)
+  *        → route (partition_id) → routed repartition (cached)
+  *        → split-level aggregate + fan-out sinks → atomic manifest publish
   *
-  * Node boundaries = exactly two shuffles: the routed repartition and the
-  * rollup aggregation; everything else is narrow and whole-stage-codegen'd.
+  * Exchanges per run: the routed repartition on partition_id, plus the two
+  * of the salted rollup — (conv_id, chunk), then conv_id — or the one of the
+  * unsalted rollup. The split doc and term stats group by partition_id over
+  * the hash-partitioned cache and plan none; everything else is narrow and
+  * whole-stage-codegen'd. IndexingPipelineSpec pins these counts.
   */
 object IndexingPipeline {
 
@@ -51,16 +58,38 @@ object IndexingPipeline {
     val parsed = DocParser.parse(input, DocParser.Lenient)
     // NOTE: tokens are NOT materialized here — an array<string> per row
     // would dominate the shuffle and cache footprint of everything
-    // downstream; splitAggregates re-derives terms from `text` after the
+    // downstream; splitTermStats re-derives terms from `text` after the
     // routed repartition, where the explode is narrow and cache-local.
-    // broadcast-join enrichment replaces the routing/index-config lookup
-    // (SURVEY.md §2.8); left join: unknown tool keeps the row, sink null.
-    val enriched = parsed.valid
-      .join(broadcast(tools), Seq("tool"), "left")
-      .join(broadcast(roles), Seq("role"), "left")
+    // dims enrichment replaces the routing/index-config lookup (SURVEY.md
+    // §2.8); left-join semantics: an unknown tool keeps the row, sink null.
+    val enriched = lookupJoin(lookupJoin(parsed.valid, tools, "tool"), roles, "role")
     val routed = Routing.withPartitionId(
       enriched, Routing.parse(cfg.routingExpr), cfg.maxPartitions)
     (routed, parsed.deadLetter)
+  }
+
+  /** `df.join(dim, Seq(key), "left")` for a small `dim` with a unique `key`,
+    * as a lookup in a literal map instead of a hash join. The dim rows are
+    * collected on the driver and every row reads its dim columns from one
+    * `element_at(map(key -> struct(...)), key)`, so a run builds no
+    * broadcast hash relation (an 8 MB page each, however few the rows), and
+    * its generated code is the same from run to run. The output has the
+    * join's schema: the key first, then `df`'s other columns, then `dim`'s,
+    * null when the key is null or not in `dim`. */
+  private[pipeline] def lookupJoin(df: DataFrame, dim: DataFrame, key: String): DataFrame = {
+    val valueFields = dim.schema.fields.filterNot(_.name == key).toSeq
+    val entries = dim.collect().toSeq.filterNot(r => r.isNullAt(r.fieldIndex(key)))
+    val keys = entries.map(_.getAs[Any](key))
+    require(keys.distinct.size == keys.size, s"dimension key `$key` is not unique")
+    val lookup = Option.when(entries.nonEmpty)(element_at(map(entries.flatMap { r =>
+      Seq(lit(r.getAs[Any](key)), struct(valueFields.map { f =>
+        lit(r.getAs[Any](f.name)).cast(f.dataType).as(f.name)
+      }: _*))
+    }: _*), col(key)))
+    val dimCols = valueFields.map { f =>
+      lookup.fold(lit(null))(_.getField(f.name)).cast(f.dataType).as(f.name)
+    }
+    df.select((col(key) +: df.columns.toSeq.filterNot(_ == key).map(col)) ++ dimCols: _*)
   }
 
   /** Per-conversation rollup with the per-turn text-equality invariant:
@@ -116,31 +145,51 @@ object IndexingPipeline {
     * CROSS-split term cardinality answerable from merged metadata bytes
     * (`SplitSketches.mergedEstimate`) — per-split exact counts don't merge
     * (terms repeat across splits). Off by default: the benched plan is
-    * unchanged. */
+    * unchanged. The join of the two builders' outputs plans no exchange over
+    * a frame already hash-partitioned on partition_id. */
   def splitAggregates(routed: DataFrame, cfg: Config,
-                      withSketches: Boolean = false): DataFrame = {
-    // two-level term aggregation instead of countDistinct: grouping on
-    // (partition, term) first lets the map-side partial collapse duplicate
-    // terms BEFORE the shuffle (volume = distinct terms, not all postings)
-    // and avoids the Expand duplication countDistinct+count in one agg
-    // would plan; cardinality = count of groups, postings = sum of counts
+                      withSketches: Boolean = false): DataFrame =
+    splitDocStats(routed, cfg)
+      .join(splitTermStats(routed, withSketches), Seq("partition_id"), "left")
+
+  /** Per-split doc stats: num_docs, bytes, time range and the capped tag set. */
+  def splitDocStats(routed: DataFrame, cfg: Config): DataFrame = {
+    val aggs = docStatsAggs(cfg)
+    routed.groupBy("partition_id").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** `tags_complete` reads the size of the same `collect_set` the tags come
+    * from, so the aggregate plans one set per split and no distinct-count
+    * Expand. */
+  private def docStatsAggs(cfg: Config): Seq[Column] = {
+    val tools = collect_set(col("tool"))
+    Seq(count(lit(1)).as("num_docs"),
+      sum(octet_length(col("text")).cast("long")).as("uncompressed_docs_size_in_bytes"),
+      min(col("ts")).as("time_range_start"), max(col("ts")).as("time_range_end"),
+      slice(sort_array(tools), 1, cfg.tagCap).as("tags"),
+      (size(tools) <= cfg.tagCap).as("tags_complete"))
+  }
+
+  /** Per-split term stats: exact term_cardinality and postings_count (plus
+    * `term_hll` with `withSketches`).
+    *
+    * Two-level term aggregation instead of countDistinct: grouping on
+    * (partition, term) first lets the partial aggregate collapse duplicate
+    * terms early, and avoids the Expand duplication countDistinct+count in
+    * one agg would plan; cardinality = count of groups, postings = sum of
+    * counts. Over a frame hash-partitioned on partition_id both levels plan
+    * no exchange. */
+  def splitTermStats(routed: DataFrame, withSketches: Boolean = false): DataFrame = {
     val termAggs =
       Seq(count(lit(1)).as("term_cardinality"), sum(col("_tc")).as("postings_count")) ++
         // second-level rows are one per DISTINCT (partition, term), so the
         // sketch sees each term once — no postings inflation
         (if (withSketches) Seq(hll_sketch_agg(col("term"), lit(12)).as("term_hll")) else Nil)
-    val termStats = routed
+    routed
       .select(col("partition_id"), explode(Tokenizers.default(col("text"))).as("term"))
       .groupBy("partition_id", "term").agg(count(lit(1)).as("_tc"))
       .groupBy("partition_id")
       .agg(termAggs.head, termAggs.tail: _*)
-    val docStats = routed.groupBy("partition_id")
-      .agg(count(lit(1)).as("num_docs"),
-           sum(octet_length(col("text")).cast("long")).as("uncompressed_docs_size_in_bytes"),
-           min(col("ts")).as("time_range_start"), max(col("ts")).as("time_range_end"),
-           slice(sort_array(collect_set(col("tool"))), 1, cfg.tagCap).as("tags"),
-           (count_distinct(col("tool")) <= cfg.tagCap).as("tags_complete"))
-    docStats.join(termStats, Seq("partition_id"), "left")
   }
 
   /** Deterministic routed-row set checksum over (sink, conv_id, turn_idx) —
@@ -160,17 +209,16 @@ object IndexingPipeline {
   private[pipeline] def combineChecksum(limbSums: Seq[Long]): Long =
     limbSums.zip(Seq(48, 32, 16, 0)).map { case (s, sh) => s << sh }.sum // wrapping = mod 2^64
 
-  def routedChecksum(routedWithSink: DataFrame): Long = {
-    val h = xxhash64(coalesce(col("sink"), lit("_null")), col("conv_id"), col("turn_idx"))
-    val aggs = checksumAggs(h)
-    val r = routedWithSink.agg(aggs.head, aggs.tail: _*).collect()(0)
-    if (r.isNullAt(0)) 0L
-    else combineChecksum((0 to 3).map(r.getLong))
-  }
-
   /** Run the whole pipeline and publish. `delta` identifies the input batch
     * for exactly-once resume: rerunning an already-published delta is
-    * rejected by the manifest store and the job becomes a no-op. */
+    * rejected by the manifest store and the job becomes a no-op.
+    *
+    * One grouped pass over the persisted routed frame fills the cache and
+    * returns each split's doc stats, the error count and the checksum limbs.
+    * The three sink writes and the term stats then read the cache
+    * concurrently; the rollup and dead-letter counts are `Observation`s on
+    * their own writes. When any of them fails, `run` waits for the others,
+    * then throws the first failure with the rest suppressed. */
   def run(spark: SparkSession, input: DataFrame, outDir: String,
           delta: Checkpoint.Delta, cfg: Config = Config(),
           salted: Boolean = true): Option[Result] = {
@@ -185,92 +233,74 @@ object IndexingPipeline {
     val batchId = store.currentSnapshot().map(_.snapshotId + 1).getOrElse(1L)
     val (tools, roles) = dims(spark)
     val (routedRaw, deadLetter) = parseEnrichRoute(input, tools, roles, cfg)
-    val timing = sys.env.contains("GRAFT_TIMING")
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (timing) System.err.println(f"[timing] $label%-16s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     val routed = routedRaw
       .repartition(cfg.shufflePartitions, col("partition_id"))
       .persist()
-    // One thread per downstream action: after the cache is materialized the
-    // five remaining actions (3 sink writes, counts agg, split aggs) are
-    // INDEPENDENT reads of the cached frame — submitting them serially left
-    // the cluster idle between jobs and capped 8→32-core efficiency at 0.41
-    // (VERDICT r1 "next" #6); concurrent submission lets the scheduler
-    // interleave their tasks and the wall clock approach max(), not sum().
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    implicit val ec: concurrent.ExecutionContext =
-      concurrent.ExecutionContext.fromExecutorService(pool)
+    // One thread per fan-out action (3 sink writes, term stats): they are
+    // independent reads of the cached frame, and submitting them together
+    // lets the scheduler interleave their tasks, so the wall clock
+    // approaches max(), not sum(), of the four.
+    val pool = Executors.newFixedThreadPool(4, (r: Runnable) => new Thread(r, FanOutThreadName))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
-      // materialize parse+shuffle+cache ONCE before fanning out — concurrent
-      // first-touch of an unmaterialized cache would race partition
-      // computation instead of sharing it
-      timed("materialize") { routed.count() }
+      // the grouped pass runs alone and first: concurrent first-touch of an
+      // unmaterialized cache would race partition computation instead of
+      // sharing it
+      val isErr = col("call_status") === "ERR" || col("severity") === "ERROR"
+      val h = xxhash64(coalesce(col("sink"), lit("_null")), col("conv_id"), col("turn_idx"))
+      val aggs = docStatsAggs(cfg) ++
+        (sum(when(isErr, 1L).otherwise(0L)).as("_errors") +: checksumAggs(h))
+      val docStats = routed.groupBy("partition_id").agg(aggs.head, aggs.tail: _*)
+        // NTZ-safe: convert to epoch µs inside the plan — collecting raw
+        // ts columns yields LocalDateTime for TIMESTAMP_NTZ inputs
+        .withColumn("_start_us", unix_micros(col("time_range_start").cast("timestamp_ltz")))
+        .withColumn("_end_us", unix_micros(col("time_range_end").cast("timestamp_ltz")))
+        .collect()
 
-      val fErrorIndex = concurrent.Future(timed("error_index") {
-        routed.filter(col("call_status") === "ERR" || col("severity") === "ERROR")
-          .write.mode("overwrite").option("compression", "zstd")
-          .partitionBy("sink").parquet(s"$outDir/error_index/batch-$batchId")
-      })
-      val fRollup = concurrent.Future(timed("rollup") {
-        conversationRollup(routed, salted, cfg)
-          .write.mode("overwrite").option("compression", "zstd")
-          .parquet(s"$outDir/rollup/batch-$batchId")
-      })
-      val fDeadLetter = concurrent.Future(timed("dead_letter") {
-        deadLetter.write.mode("overwrite").parquet(s"$outDir/dead_letter/batch-$batchId")
-      })
+      val rollupRows = Observation()
+      val deadRows = Observation()
+      def zstd(df: DataFrame) = df.write.mode("overwrite").option("compression", "zstd")
+      val writes = Seq(
+        Future(zstd(routed.filter(isErr)).partitionBy("sink")
+          .parquet(s"$outDir/error_index/batch-$batchId")),
+        Future(zstd(conversationRollup(routed, salted, cfg)
+          .observe(rollupRows, count(lit(1)).as("rows")))
+          .parquet(s"$outDir/rollup/batch-$batchId")),
+        Future(deadLetter.observe(deadRows, count(lit(1)).as("rows"))
+          .write.mode("overwrite").parquet(s"$outDir/dead_letter/batch-$batchId")))
+      val fTerms = Future(splitTermStats(routed).collect())
+      val all = writes :+ fTerms
+      all.foreach(f => Await.ready(f, Duration.Inf))
+      all.flatMap(_.value.flatMap(_.failed.toOption)) match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ =>
+      }
 
-      // error/rollup counts + routed checksum + valid-row count in ONE
-      // aggregate job over the persisted frame. Dead-letter count = input −
-      // valid: parse partitions the input exactly two ways, and count(*)
-      // over the raw input is answered from parquet footers — no third
-      // parse pass.
-      val fCounts = concurrent.Future(timed("counts+checksum") {
-        val h = xxhash64(coalesce(col("sink"), lit("_null")), col("conv_id"), col("turn_idx"))
-        val aggs = Seq(
-          sum(when(col("call_status") === "ERR" || col("severity") === "ERROR", 1L)
-            .otherwise(0L)).as("errors"),
-          count_distinct(col("conv_id")).as("rollups"),
-          count(lit(1)).as("valid")) ++ checksumAggs(h)
-        val r = routed.agg(aggs.head, aggs.tail: _*).collect()(0)
-        val cks = if (r.isNullAt(3)) 0L else combineChecksum((3 to 6).map(r.getLong))
-        (SinkCounts(
-          errorIndex = Option(r.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L),
-          rollup = r.getLong(1),
-          deadLetter = input.count() - r.getLong(2)), cks)
-      })
-
-      val fSplits = concurrent.Future(timed("split_aggs") {
-        splitAggregates(routed, cfg)
-          // NTZ-safe: convert to epoch µs inside the plan — collecting raw
-          // ts columns yields LocalDateTime for TIMESTAMP_NTZ inputs
-          .withColumn("_start_us", unix_micros(col("time_range_start").cast("timestamp_ltz")))
-          .withColumn("_end_us", unix_micros(col("time_range_end").cast("timestamp_ltz")))
-          .collect()
-      }.toSeq.map { r =>
+      // observations are read only once every write has succeeded: Spark
+      // does not promise to complete the observation of a failed write
+      def observed(o: Observation): Long = o.get("rows").asInstanceOf[Long]
+      val counts = SinkCounts(
+        errorIndex = docStats.map(_.getAs[Long]("_errors")).sum,
+        rollup = observed(rollupRows),
+        deadLetter = observed(deadRows))
+      val checksum = combineChecksum(
+        (3 to 0 by -1).map(limb => docStats.map(_.getAs[Long](s"_ck_$limb")).sum))
+      val terms = fTerms.value.get.get.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val splits = docStats.toSeq.sortBy(_.getAs[Long]("partition_id")).map { r =>
+        val pid = r.getAs[Long]("partition_id")
+        val (termCardinality, postings) = terms.getOrElse(pid, (0L, 0L))
         Manifest.SplitEntry(
-          splitId = s"split-$batchId-p${r.getAs[Long]("partition_id")}",
-          partitionId = r.getAs[Long]("partition_id"),
+          splitId = s"split-$batchId-p$pid",
+          partitionId = pid,
           numDocs = r.getAs[Long]("num_docs"),
           uncompressedBytes = r.getAs[Long]("uncompressed_docs_size_in_bytes"),
           timeRangeStartMicros = Option(r.getAs[Any]("_start_us")).map(_.asInstanceOf[Long]).getOrElse(0L),
           timeRangeEndMicros = Option(r.getAs[Any]("_end_us")).map(_.asInstanceOf[Long]).getOrElse(0L),
           tags = r.getAs[scala.collection.Seq[String]]("tags").toSeq,
-          termCardinality = Option(r.getAs[Any]("term_cardinality")).map(_.asInstanceOf[Long]).getOrElse(0L),
-          postingsCount = Option(r.getAs[Any]("postings_count")).map(_.asInstanceOf[Long]).getOrElse(0L),
+          termCardinality = termCardinality,
+          postingsCount = postings,
           numMergeOps = 0, deleteOpstamp = 0L, files = Nil)
-      })
-
-      import scala.concurrent.duration.Duration
-      val (counts, checksum) = concurrent.Await.result(fCounts, Duration.Inf)
-      val splits = concurrent.Await.result(fSplits, Duration.Inf)
-      concurrent.Await.result(fErrorIndex, Duration.Inf)
-      concurrent.Await.result(fRollup, Duration.Inf)
-      concurrent.Await.result(fDeadLetter, Duration.Inf)
+      }
 
       store.publish(splits, Set.empty, delta) match {
         case Left(err) => throw new IllegalStateException(err)
@@ -281,5 +311,8 @@ object IndexingPipeline {
       routed.unpersist()
     }
   }
+
+  /** Name of the threads `run` fans its sink writes and term stats out on. */
+  private[pipeline] val FanOutThreadName = "indexing-pipeline-fanout"
 
 }

@@ -3,12 +3,20 @@ package graft.pipeline
 import graft.SparkTestBase
 import graft.model.{TranscriptGen, Turn}
 import graft.publish.Checkpoint
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.collection.mutable
 
 /** End-to-end pipeline test — the BASELINE's core claims:
   * per-sink counts + routed-row equality vs an independent plain-Scala
   * oracle, per-turn text equality under stable ordering, salted == unsalted
-  * results, and exactly-once resume from checkpoint. */
+  * results, and exactly-once resume from checkpoint; plus the plan shape of
+  * each phase (jobs, shuffle-map stages, exchanges) and the failure path. */
 class IndexingPipelineSpec extends SparkTestBase {
 
   private val toolCallRe = "CALL ([A-Za-z_][A-Za-z0-9_]*)\\(([^)]*)\\) -> (OK|ERR)".r
@@ -185,5 +193,168 @@ class IndexingPipelineSpec extends SparkTestBase {
       a.add(java.math.BigInteger.valueOf(h)))
       .mod(java.math.BigInteger.ONE.shiftLeft(64)).longValue()
     assert(fromSql === direct)
+  }
+
+  /** Jobs and shuffle-map stages Spark ran for `f`'s jobs, counted by a
+    * listener over `f`'s job group. A trailing job in a second group drains
+    * the listener bus: its end arrives after every event `f` posted. */
+  private def planShape(group: String)(f: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val endGroup = s"$group-end"
+    val ended = new CountDownLatch(1)
+    var jobs = 0
+    var shuffleMapStages = 0
+    val stages = mutable.Set.empty[Int]
+    var endJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs += 1; stages ++= e.stageIds
+          case `endGroup` => endJob = e.jobId
+          case _ =>
+        }
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+        // a stage that wrote shuffle output is a shuffle-map stage
+        val m = e.stageInfo.taskMetrics
+        if (stages(e.stageInfo.stageId) && m != null && m.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleMapStages += 1
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+        if (e.jobId == endJob) ended.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(endGroup, endGroup)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(ended.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      listener.synchronized((jobs, shuffleMapStages))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Shuffle exchanges in `df`'s executed plan. The plan is read after the
+    * action: adaptive execution re-plans once a cache it reads is built, and
+    * drops the exchange its initial plan put over a not-yet-built cache. */
+  private def exchanges(df: DataFrame): Int = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e
+    }.size
+  }
+
+  test("plan shape: jobs and shuffle-map stages per run") {
+    val turns = TranscriptGen.turns(numConvs = 60, avgTurns = 8, skewed = true)
+    val input = df(turns)
+    val salted = planShape("run-salted") {
+      IndexingPipeline.run(spark, input, tmpDir("shapeS"), delta1)
+    }
+    val unsalted = planShape("run-unsalted") {
+      IndexingPipeline.run(spark, input, tmpDir("shapeU"), delta1, salted = false)
+    }
+    // shuffle-map stages: the routed repartition plus the salted rollup's
+    // two exchanges (the unsalted rollup plans one). Jobs: adaptive
+    // execution submits each shuffle-map stage and the cache fill as jobs
+    // of their own, so the grouped pass takes 3 (routed stage, cache fill,
+    // aggregate), the rollup write 1 per exchange plus 1, and the error
+    // index write, dead-letter write and term stats 1 each.
+    assert(salted === ((9, 3)))
+    assert(unsalted === ((8, 2)))
+  }
+
+  test("plan shape: split stats plan no exchange, the salted rollup two") {
+    val turns = TranscriptGen.turns(numConvs = 25, avgTurns = 6)
+    val (tools, roles) = IndexingPipeline.dims(spark)
+    val cfg = IndexingPipeline.Config()
+    val routed = IndexingPipeline.parseEnrichRoute(df(turns), tools, roles, cfg)._1
+      .repartition(cfg.shufflePartitions, col("partition_id")).persist()
+    try {
+      assert(exchanges(IndexingPipeline.splitDocStats(routed, cfg)) === 0)
+      assert(exchanges(IndexingPipeline.splitTermStats(routed)) === 0)
+      assert(exchanges(IndexingPipeline.splitAggregates(routed, cfg)) === 0)
+      assert(exchanges(IndexingPipeline.conversationRollup(routed, salted = true, cfg)) === 2)
+      assert(exchanges(IndexingPipeline.conversationRollup(routed, salted = false, cfg)) === 1)
+    } finally routed.unpersist()
+  }
+
+  test("dims lookup equals the broadcast left join row for row (unknown tool, null role)") {
+    val base = TranscriptGen.turns(numConvs = 20, avgTurns = 5)
+    val turns = base.zipWithIndex.map {
+      case (t, i) if i % 7 == 0 => t.copy(tool = "no_such_tool")
+      case (t, i) if i % 11 == 0 => t.copy(role = null)
+      case (t, _) => t
+    }
+    assert(turns.exists(_.tool == "no_such_tool") && turns.exists(_.role == null))
+    val (tools, roles) = IndexingPipeline.dims(spark)
+    val valid = graft.parse.DocParser.parse(df(turns)).valid
+    val joined = valid
+      .join(broadcast(tools), Seq("tool"), "left")
+      .join(broadcast(roles), Seq("role"), "left")
+    val looked = IndexingPipeline.lookupJoin(
+      IndexingPipeline.lookupJoin(valid, tools, "tool"), roles, "role")
+    assert(looked.schema === joined.schema)
+    val order = Seq(col("conv_id"), col("turn_idx"))
+    assert(looked.orderBy(order: _*).collect().toSeq === joined.orderBy(order: _*).collect().toSeq)
+    val unknown = looked.filter(col("tool") === "no_such_tool")
+    assert(unknown.count() > 0)
+    assert(unknown.filter(col("sink").isNotNull || col("category").isNotNull).count() === 0)
+    assert(looked.filter(col("role").isNull).filter(col("role_group").isNotNull).count() === 0)
+    // the lookup plans no join, so a run builds no broadcast hash relation
+    assert(looked.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isEmpty)
+  }
+
+  test("empty input: zero counts, zero checksum, no splits") {
+    val res = IndexingPipeline.run(spark, df(Vector.empty[Turn]), tmpDir("empty"), delta1).get
+    assert(res.counts === IndexingPipeline.SinkCounts(0L, 0L, 0L))
+    assert(res.routedChecksum === 0L)
+    assert(res.splits.isEmpty)
+  }
+
+  test("all-invalid input: every row dead-lettered, nothing routed") {
+    val turns = TranscriptGen.turns(numConvs = 10, avgTurns = 4).zipWithIndex.map {
+      case (t, i) => t.copy(text = if (i % 2 == 0) null else s"CALL broken_$i(")
+    }
+    val o = oracle(turns)
+    assert(o.valid.isEmpty)
+    val out = tmpDir("invalid")
+    val res = IndexingPipeline.run(spark, df(turns), out, delta1).get
+    assert(res.counts === IndexingPipeline.SinkCounts(o.errorCount, o.rollupCount, o.dead.size.toLong))
+    assert(res.routedChecksum === 0L)
+    assert(res.splits.isEmpty)
+    assert(spark.read.parquet(s"$out/dead_letter/batch-1").count() === turns.size.toLong)
+  }
+
+  test("a failing sink: run throws promptly, after the other writes, releasing cache and pool") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val turns = TranscriptGen.turns(numConvs = 30, avgTurns = 5)
+    val input = df(turns)
+    val out = tmpDir("failing")
+    // the error index sink's directory is a regular file, so its write fails
+    // while the other sinks are still writing
+    java.nio.file.Files.write(java.nio.file.Paths.get(out, "error_index"), Array[Byte](1))
+    val baseline = spark.sparkContext.getPersistentRDDs.size
+    val attempt = Future(IndexingPipeline.run(spark, input, out, delta1))
+    Await.ready(attempt, 120.seconds)
+    assert(attempt.value.get.isFailure)
+    // the other sinks finished before run returned
+    Seq("rollup", "dead_letter").foreach { sink =>
+      assert(new java.io.File(s"$out/$sink/batch-1/_SUCCESS").exists(), sink)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size === baseline)
+    def fanOutThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .count(_.getName == IndexingPipeline.FanOutThreadName)
+    val deadline = System.nanoTime() + 10.seconds.toNanos
+    while (fanOutThreads > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(fanOutThreads === 0)
+    // nothing was published, so the same delta runs once the sink is fixed
+    java.nio.file.Files.delete(java.nio.file.Paths.get(out, "error_index"))
+    val res = IndexingPipeline.run(spark, input, out, delta1).get
+    assert(res.counts.rollup === oracle(turns).rollupCount)
   }
 }
