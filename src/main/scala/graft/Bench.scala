@@ -55,7 +55,7 @@ object Bench {
     // unset = the driver's full run)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val selected = only.fold(SparkEntry.queries)(ns => SparkEntry.queries.filter(kv => ns(kv._1)))
+    val selected = SparkEntry.queries.filter(q => only.forall(_(q.name)))
     // Warmup, timed separately (warmup_sec): first-job costs (parquet
     // reader + codegen + JIT spin-up, ~5-10 s on this box) otherwise land
     // entirely on whichever query iterates first, misattributing its cost.
@@ -76,10 +76,10 @@ object Bench {
     // round-over-round. Cheap queries stay single-rep.
     val HeavyThresholdSec = 2.0
     val HeavyReps = 3
-    val results = selected.map { case (name, fn) =>
+    val results = selected.map { q =>
       def once(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
+        try { q.build(spark, sfDir).count() } catch { case _: Throwable => return -1.0 }
         (System.nanoTime() - t0) / 1e9
       }
       val first = once()
@@ -87,14 +87,14 @@ object Bench {
       // fixed micro-batch machinery (checkpoint dirs + full restarts), not
       // AQE plan nondeterminism, and each rep re-runs entire streaming jobs.
       val time =
-        if (first < HeavyThresholdSec || name.startsWith("pipe_stream")) first
+        if (first < HeavyThresholdSec || q.name.startsWith("pipe_stream")) first
         else {
           val all = first +: Seq.fill(HeavyReps - 1)(once())
           // a failed rep is a failure, not a sample — never median it away
           if (all.exists(_ < 0)) -1.0
           else { val sorted = all.sorted; sorted(sorted.length / 2) }
         }
-      name -> time
+      q.name -> time
     }
     // end-to-end pipeline throughput on the transcripts derived from this SF
     val (pipeSecs, turnsPerSec) =
@@ -110,12 +110,12 @@ object Bench {
         input.unpersist()
         (secs, n / secs)
       } catch { case _: Throwable => (-1.0, -1.0) }
-    val qs = (results + ("pipeline_e2e" -> pipeSecs))
+    val qs = (results :+ ("pipeline_e2e" -> pipeSecs))
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // -1.0 failure sentinels stay visible per-query but never DEFLATE the
     // round-over-round total (same guard pipeSecs gets)
-    val total = results.values.map(math.max(_, 0.0)).sum + math.max(pipeSecs, 0.0)
+    val total = results.map(r => math.max(r._2, 0.0)).sum + math.max(pipeSecs, 0.0)
     // Host-load evidence for adjudicating round-over-round deltas without
     // a judge re-run: whole-box busy fraction and steal fraction over the
     // bench window, plus loadavg at both ends. busy_frac far above

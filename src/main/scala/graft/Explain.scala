@@ -26,7 +26,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      SparkEntry.byName(n).build(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -200,7 +200,7 @@ object Analyze {
     val body = tokens(cfg, text, spark).map { t =>
       s"""{"offset_from":${t.offsetFrom},"offset_to":${t.offsetTo},""" +
         s""""position":${t.position},"position_length":${t.positionLength},""" +
-        s""""text":${graft.operators.EsAggResponse.esc(t.text)}}"""
+        s""""text":${graft.util.Json.quote(t.text)}}"""
     }
     body.mkString("[", ",", "]")
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Json.quote
 import org.apache.spark.sql.Row
 
 /** ES-compatible aggregation response rendering — the presentation layer the
@@ -15,28 +16,21 @@ import org.apache.spark.sql.Row
   */
 object EsAggResponse {
 
-  private[graft] def esc(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** ES renders numeric keys as JSON doubles (1420070400000.0). */
   private[graft] def num(d: Double): String =
     if (d.isWhole && math.abs(d) < 1e15) s"${d.toLong}.0" else d.toString
 
   private def keyJson(k: Any): String = k match {
-    case s: String => esc(s)
+    case s: String => quote(s)
     case d: Double => num(d)
     case l: Long   => num(l.toDouble)
     case i: Int    => num(i.toDouble)
-    case other     => esc(String.valueOf(other))
+    case other     => quote(String.valueOf(other))
   }
 
   /** Full `{"aggregations": {...}}` envelope. */
   def response(aggs: Seq[(String, String)]): String =
-    s"""{"aggregations":{${aggs.map { case (n, b) => s"${esc(n)}:$b" }.mkString(",")}}}"""
+    s"""{"aggregations":{${aggs.map { case (n, b) => s"${quote(n)}:$b" }.mkString(",")}}}"""
 
   /** terms body from a (key, doc_count, sum_other_doc_count) frame.
     * doc_count_error_upper_bound is exact-0 here: the frame comes from a
@@ -94,7 +88,7 @@ object EsAggResponse {
       val millis = ts.getTime
       val iso = java.time.Instant.ofEpochMilli(millis).toString
       val sub = subAgg.map { case (n, f) => s""","${n}":${f(r)}""" }.getOrElse("")
-      s"""{"doc_count":${r.getAs[Long]("doc_count")},"key":${num(millis.toDouble)},"key_as_string":${esc(iso)}$sub}"""
+      s"""{"doc_count":${r.getAs[Long]("doc_count")},"key":${num(millis.toDouble)},"key_as_string":${quote(iso)}$sub}"""
     }.mkString(",")
     s"""{"buckets":[$buckets]}"""
   }
@@ -111,7 +105,7 @@ object EsAggResponse {
       val label = s"${rs.from.map(_.toString).getOrElse("*")}-${rs.to.map(_.toString).getOrElse("*")}"
       val fromJ = rs.from.map(f => s""","from":${num(f)}""").getOrElse("")
       val toJ = rs.to.map(t => s""","to":${num(t)}""").getOrElse("")
-      s"""{"doc_count":${byLabel.getOrElse(label, 0L)}$fromJ,"key":${esc(rs.key)}$toJ}"""
+      s"""{"doc_count":${byLabel.getOrElse(label, 0L)}$fromJ,"key":${quote(rs.key)}$toJ}"""
     }.mkString(",")
     s"""{"buckets":[$buckets]}"""
   }
@@ -143,7 +137,7 @@ object EsAggResponse {
   /** percentiles body: keyed (object) or non-keyed (key/value array) form. */
   def percentiles(percents: Seq[Double], values: Seq[Double], keyed: Boolean): String =
     if (keyed)
-      s"""{"values":{${percents.zip(values).map { case (p, v) => s"${esc(num(p))}:${num(v)}" }.mkString(",")}}}"""
+      s"""{"values":{${percents.zip(values).map { case (p, v) => s"${quote(num(p))}:${num(v)}" }.mkString(",")}}}"""
     else
       s"""{"values":[${percents.zip(values).map { case (p, v) => s"""{"key":${num(p)},"value":${num(v)}}""" }.mkString(",")}]}"""
 }

@@ -10,6 +10,7 @@
   */
 package graft.publish
 
+import graft.util.Json
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -42,40 +43,31 @@ object Manifest {
       splits: Seq[SplitEntry],
       checkpoint: Map[String, Long])
 
-  private def esc(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   private def splitJson(s: SplitEntry): String = {
     // bounds as STRINGS: the JSON reader parses numbers as Double, which
     // rounds i64 values beyond 2^53 (hash/id columns) and would make
     // generalized split skipping lossy after a manifest round-trip
     val ranges = s.fieldRanges.toSeq.sortBy(_._1)
-      .map { case (f, (lo, hi)) => s"""${esc(f)}:["$lo","$hi"]""" }.mkString("{", ",", "}")
-    s"""{"split_id":${esc(s.splitId)},"partition_id":${s.partitionId},"num_docs":${s.numDocs},""" +
+      .map { case (f, (lo, hi)) => s"""${Json.quote(f)}:["$lo","$hi"]""" }.mkString("{", ",", "}")
+    s"""{"split_id":${Json.quote(s.splitId)},"partition_id":${s.partitionId},"num_docs":${s.numDocs},""" +
       s""""uncompressed_docs_size_in_bytes":${s.uncompressedBytes},""" +
       s""""time_range_start":${s.timeRangeStartMicros},"time_range_end":${s.timeRangeEndMicros},""" +
-      s""""tags":[${s.tags.map(esc).mkString(",")}],""" +
+      s""""tags":[${s.tags.map(Json.quote).mkString(",")}],""" +
       s""""term_cardinality":${s.termCardinality},"postings_count":${s.postingsCount},""" +
       s""""num_merge_ops":${s.numMergeOps},"delete_opstamp":${s.deleteOpstamp},""" +
       s""""field_ranges":$ranges,""" +
-      s""""files":[${s.files.map(esc).mkString(",")}]}"""
+      s""""files":[${s.files.map(Json.quote).mkString(",")}]}"""
   }
 
   def toJson(snap: Snapshot): String = {
     val cp = snap.checkpoint.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${esc(k)}:$v" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.quote(k)}:$v" }.mkString("{", ",", "}")
     s"""{"snapshot_id":${snap.snapshotId},"checkpoint":$cp,"splits":[${snap.splits.map(splitJson).mkString(",")}]}"""
   }
 
   // Minimal JSON reader for our own snapshot format (no JSON lib beyond
   // Spark's shaded ones; keep it dependency-free and exact for round-trip).
   def fromJson(json: String): Snapshot = {
-    import graft.util.Json
     val obj = Json.parse(json).asInstanceOf[Map[String, Any]]
     val splits = obj("splits").asInstanceOf[Seq[Any]].map { e =>
       val m = e.asInstanceOf[Map[String, Any]]

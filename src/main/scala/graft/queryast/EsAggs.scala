@@ -233,7 +233,7 @@ object EsAggs {
   private def percentilesBody(ps: Seq[Double], vs: Seq[Option[Double]], keyed: Boolean): String = {
     def v(o: Option[Double]) = o.map(R.num).getOrElse("null")
     if (keyed)
-      s"""{"values":{${ps.zip(vs).map { case (p, o) => s"${R.esc(R.num(p))}:${v(o)}" }.mkString(",")}}}"""
+      s"""{"values":{${ps.zip(vs).map { case (p, o) => s"${Json.quote(R.num(p))}:${v(o)}" }.mkString(",")}}}"""
     else
       s"""{"values":[${ps.zip(vs).map { case (p, o) => s"""{"key":${R.num(p)},"value":${v(o)}}""" }.mkString(",")}]}"""
   }
@@ -374,16 +374,16 @@ object EsAggs {
 
     def subsJson(path: Seq[Any], r: Row): String = {
       val metricParts = metricSubs.map { case (nm, m, i) =>
-        s"${R.esc(nm)}:${metricBody(i, m, r, pctBins.get(i).flatMap(_.get(path)).getOrElse(Nil))}"
+        s"${Json.quote(nm)}:${metricBody(i, m, r, pctBins.get(i).flatMap(_.get(path)).getOrElse(Nil))}"
       }
       val nestedParts = nestedBodies.map { case (nm, bodies, n) =>
-        s"${R.esc(nm)}:${bodies.getOrElse(path, emptyBucketBody(n))}"
+        s"${Json.quote(nm)}:${bodies.getOrElse(path, emptyBucketBody(n))}"
       }
       (metricParts ++ nestedParts).map("," + _).mkString
     }
     def emptySubsJson: String = {
-      val metricParts = metricSubs.map { case (nm, m, _) => s"${R.esc(nm)}:${emptyMetricBody(m)}" }
-      val nestedParts = nestedBodies.map { case (nm, _, n) => s"${R.esc(nm)}:${emptyBucketBody(n)}" }
+      val metricParts = metricSubs.map { case (nm, m, _) => s"${Json.quote(nm)}:${emptyMetricBody(m)}" }
+      val nestedParts = nestedBodies.map { case (nm, _, n) => s"${Json.quote(nm)}:${emptyBucketBody(n)}" }
       (metricParts ++ nestedParts).map("," + _).mkString
     }
 
@@ -400,7 +400,7 @@ object EsAggs {
       val bs = ranges.map { rs =>
         val fromJ = rs.from.map(f => s""","from":${R.num(f)}""").getOrElse("")
         val toJ = rs.to.map(t => s""","to":${R.num(t)}""").getOrElse("")
-        s"""{"doc_count":0$fromJ,"key":${R.esc(rs.key)}$toJ}"""
+        s"""{"doc_count":0$fromJ,"key":${Json.quote(rs.key)}$toJ}"""
       }.mkString(",")
       s"""{"buckets":[$bs]}"""
     case _ => """{"buckets":[]}"""
@@ -482,9 +482,9 @@ object EsAggs {
             // date_histogram case), else the numeric key's rendering
             iso -> (byMs.get(ms) match {
               case Some(r) =>
-                s"""{"doc_count":${dc(r)},"key":${R.num(ms.toDouble)},"key_as_string":${R.esc(iso)}${subsJson(path :+ key(r), r)}}"""
+                s"""{"doc_count":${dc(r)},"key":${R.num(ms.toDouble)},"key_as_string":${Json.quote(iso)}${subsJson(path :+ key(r), r)}}"""
               case None =>
-                s"""{"doc_count":0,"key":${R.num(ms.toDouble)},"key_as_string":${R.esc(iso)}$emptySubsJson}"""
+                s"""{"doc_count":0,"key":${R.num(ms.toDouble)},"key_as_string":${Json.quote(iso)}$emptySubsJson}"""
             })
           }
         s"""{"buckets":${bucketsJson(bs, keyed)}}"""
@@ -496,8 +496,8 @@ object EsAggs {
           val toJ = rs.to.map(t => s""","to":${R.num(t)}""").getOrElse("")
           byLabel.get(rs.key) match {
             case Some(r) =>
-              s"""{"doc_count":${dc(r)}$fromJ,"key":${R.esc(rs.key)}$toJ${subsJson(path :+ key(r), r)}}"""
-            case None => s"""{"doc_count":0$fromJ,"key":${R.esc(rs.key)}$toJ$emptySubsJson}"""
+              s"""{"doc_count":${dc(r)}$fromJ,"key":${Json.quote(rs.key)}$toJ${subsJson(path :+ key(r), r)}}"""
+            case None => s"""{"doc_count":0$fromJ,"key":${Json.quote(rs.key)}$toJ$emptySubsJson}"""
           }
         }
         s"""{"buckets":[${bs.mkString(",")}]}"""
@@ -510,14 +510,14 @@ object EsAggs {
     * a date bucket's hashmap key is its key_as_string, matching ES). The
     * bucket bodies themselves are identical in both forms. */
   private def bucketsJson(bs: Seq[(String, String)], keyed: Boolean): String =
-    if (keyed) bs.map { case (k, b) => s"${R.esc(k)}:$b" }.mkString("{", ",", "}")
+    if (keyed) bs.map { case (k, b) => s"${Json.quote(k)}:$b" }.mkString("{", ",", "}")
     else bs.map(_._2).mkString("[", ",", "]")
 
   private def keyJson(k: Any): String = k match {
-    case s: String => R.esc(s)
+    case s: String => Json.quote(s)
     case d: Double => R.num(d)
     case l: Long   => R.num(l.toDouble)
     case i: Int    => R.num(i.toDouble)
-    case other     => R.esc(String.valueOf(other))
+    case other     => Json.quote(String.valueOf(other))
   }
 }

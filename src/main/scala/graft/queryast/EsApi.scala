@@ -302,11 +302,11 @@ object EsApi {
         }
         collected.map { r =>
           val idJ = r.get(0) match {
-            case s: String => graft.operators.EsAggResponse.esc(s)
+            case s: String => graft.util.Json.quote(s)
             case other     => other.toString
           }
           val idxJ = Option(r.getAs[String]("_idx_v"))
-            .map(i => s""","_index":${graft.operators.EsAggResponse.esc(i)}""")
+            .map(i => s""","_index":${graft.util.Json.quote(i)}""")
             .getOrElse("")
           val sortJ =
             if (sortSpec.isEmpty) ""
@@ -340,7 +340,7 @@ object EsApi {
     * issue before any request (rest_handler.rs:63-84's exact shape). */
   def clusterInfo(nodeId: String, clusterId: String, version: String,
                   commitHash: String, buildDate: String): String = {
-    val e = graft.operators.EsAggResponse.esc _
+    val e = graft.util.Json.quote _
     s"""{"name":${e(nodeId)},"cluster_name":${e(clusterId)},""" +
       s""""version":{"distribution":"quickwit","number":${e(version)},""" +
       s""""build_hash":${e(commitHash)},"build_date":${e(buildDate)}}}"""
@@ -352,7 +352,7 @@ object EsApi {
     * values). */
   private def svJson(v: Any): String = v match {
     case null                  => "null"
-    case s: String             => graft.operators.EsAggResponse.esc(s)
+    case s: String             => graft.util.Json.quote(s)
     case d: java.lang.Double   =>
       if (d.doubleValue.isWhole && math.abs(d.doubleValue) < 9.007199254740992e15)
         d.longValue.toString
@@ -362,7 +362,7 @@ object EsApi {
     case b: java.lang.Boolean  => b.toString
     case t: java.sql.Timestamp => t.getTime.toString
     case i: java.time.Instant  => i.toEpochMilli.toString
-    case other                 => graft.operators.EsAggResponse.esc(String.valueOf(other))
+    case other                 => graft.util.Json.quote(String.valueOf(other))
   }
 
   /** Multi-index `_search` (es_compatibility/multi-indices scenarios;
@@ -432,7 +432,7 @@ object EsApi {
           val status =
             if (String.valueOf(e.getMessage).startsWith("could not find indexes")) 404
             else 400
-          s"""{"status":$status,"error":{"reason":${graft.operators.EsAggResponse.esc(String.valueOf(e.getMessage))}}}"""
+          s"""{"status":$status,"error":{"reason":${graft.util.Json.quote(String.valueOf(e.getMessage))}}}"""
       }
     }
     s"""{"responses":[${responses.mkString(",")}]}"""
@@ -616,7 +616,7 @@ object EsApi {
       }
     val respIndices = entries.map(_._2._1).distinct.sorted
     def arr(xs: Seq[String]): String =
-      xs.map(graft.operators.EsAggResponse.esc).mkString("[", ",", "]")
+      xs.map(graft.util.Json.quote).mkString("[", ",", "]")
     val fieldsJson = entries.groupBy(_._1._1).toSeq.sortBy(_._1).map {
       case (fieldName, fieldEntries) =>
         val typesJson = fieldEntries.groupBy(_._1._2).toSeq.sortBy(_._1).map {

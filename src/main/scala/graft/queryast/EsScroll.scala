@@ -102,8 +102,14 @@ object EsScroll {
       * thread otherwise pins this store for the JVM's life). */
     def close(): Unit = {
       sweeper.foreach(_.cancel())
-      store.clear()
+      store.keys.foreach(drop)
     }
+
+    /** Remove one context and release its cached score aggregate — every
+      * way a context ends (clear, expiry, LRU eviction, close) comes here,
+      * so no ended scroll keeps cached blocks. */
+    private def drop(sid: String): Boolean =
+      store.remove(sid).map(_.scores.foreach(_.unpersist())).isDefined
 
     /** Drop every context past its deadline — O(expired · log n), callable
       * from the sweeper thread without touching any request path. */
@@ -116,7 +122,7 @@ object EsScroll {
         // only evict if the LIVE deadline matches — a refreshed context
         // re-registered a later entry and this one is stale
         store.get(sid).filter(_.deadlineMs == dl).filter(_.deadlineMs <= now)
-          .foreach(_ => store.remove(sid))
+          .foreach(_ => drop(sid))
         top = deadlines.peek()
       }
     }
@@ -127,7 +133,7 @@ object EsScroll {
       if (!store.contains(sid) && store.size >= capacity) {
         // LRU eviction at capacity (ttl_cache's insert-beyond-capacity)
         store.minByOption(_._2.lastAccessMs).foreach { case (victim, _) =>
-          store.remove(victim)
+          drop(victim)
         }
       }
       store.put(sid, st)
@@ -153,10 +159,13 @@ object EsScroll {
       val page = EsApi.searchPage(df, resolver, idCol, bodyJson,
         cursorOverride = None, extraSort = tiebreak, includeAggs = true)
       // A BM25-ranked scroll materializes the corpus score aggregate ONCE
-      // here (eager localCheckpoint): replaying it per continuation would
+      // here (eager persist): replaying it per continuation would
       // re-tokenize the whole index for every size-N page. This is a
-      // node-local twin of the reference's cached scroll window.
-      val cachedScores = page.scores.map(_.localCheckpoint())
+      // node-local twin of the reference's cached scroll window; `drop`
+      // unpersists it when the context ends. Two open scrolls with the same
+      // index and query share one cache entry: ending either unpersists it
+      // and the other recomputes its scores per page.
+      val cachedScores = page.scores.map { scores => scores.persist().count(); scores }
       val sid = java.util.UUID.randomUUID().toString
       register(sid, State(Some(df), resolver, idCol, idField, bodyJson,
         page.lastSortValues, page.total, cachedScores, tiebreak,
@@ -196,11 +205,9 @@ object EsScroll {
 
     /** `_search/scroll` continuation: one bounded TakeOrdered job per page
       * (the total is the one fixed at open — no per-page count job).
-      * Unknown/expired ids get the reference-shaped failure. The
-      * window-CACHED variant of this machinery (serve many tiny pages per
-      * refill, scroll_context.rs's batch shape) is
-      * [[graft.operators.ScrollContext]] for programmatic callers; the ES
-      * envelope layer keeps pages stateless beyond the cursor. */
+      * Unknown/expired ids get the reference-shaped failure. Pages are
+      * stateless beyond the cursor: unlike the reference's SCROLL_BATCH_LEN
+      * window, no hits are cached between calls. */
     def scroll(scrollId: String): String = {
       evictExpired()
       val st = store.getOrElse(scrollId,
@@ -223,7 +230,7 @@ object EsScroll {
     }
 
     /** DELETE `_search/scroll`. */
-    def clear(scrollId: String): Boolean = store.remove(scrollId).isDefined
+    def clear(scrollId: String): Boolean = drop(scrollId)
 
     private def splice(sid: String, rendered: String): String =
       s"""{"_scroll_id":"$sid",""" + rendered.stripPrefix("{")

@@ -30,17 +30,23 @@ object Json {
       if (!java.lang.Float.isFinite(f)) "null"
       else if (f.isWhole && math.abs(f) < 1e15f) f.toLong.toString else f.toString
     case n: Number  => n.toString
-    case s: String  => "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    case s: String  => quote(s)
     case m: Map[_, _] =>
       m.map { case (k, x) => render(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
     case xs: Seq[_] => xs.map(render).mkString("[", ",", "]")
     case other      => render(other.toString)
   }
+
+  /** `s` as a quoted JSON string literal: quote and backslash escaped,
+    * newline/CR/tab as `\n`/`\r`/`\t`, every other control character
+    * (< 0x20) as a 4-hex-digit unicode escape — a raw one would make the
+    * output unparseable. */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+    case '\r' => "\\r"; case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   private final class P(s: String) {
     var pos = 0

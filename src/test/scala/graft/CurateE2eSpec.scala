@@ -34,13 +34,13 @@ class CurateE2eSpec extends SparkTestBase {
   }
 
   test("gate, prefix dedup, decontamination and rollup compose correctly") {
-    val out = SparkEntry.queries("x_curate_e2e")(spark, dir).collect()
+    val out = SparkEntry.byName("x_curate_e2e").build(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq === Seq(("a", 2L, 100L), ("b", 1L, 50L)))
   }
 
   test("plan shape: broadcast gram join, prefix-keyed shuffle, no text exchange") {
-    val plan = SparkEntry.queries("x_curate_e2e")(spark, dir)
+    val plan = SparkEntry.byName("x_curate_e2e").build(spark, dir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"benchmark grams must broadcast:\n$plan")
     // Catalyst names the groupBy key `_groupingexpression` in the exchange

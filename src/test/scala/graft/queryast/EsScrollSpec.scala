@@ -87,6 +87,34 @@ class EsScrollSpec extends SparkTestBase {
     assert(total(r4) === 3.0)
   }
 
+  test("a BM25 scroll's cached score aggregate is released however its context ends") {
+    import spark.implicits._
+    val corpus = Seq((1L, "spark vector"), (2L, "spark hit"), (3L, "nothing"))
+      .toDF("id", "name")
+    val bm25 = """{"query":{"match":{"name":{"query":"spark","operator":"or"}}},"size":1}"""
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    var now = 0L
+    // opens a BM25 scroll, pages it once, ends it with `end`, and returns
+    // the persistent RDDs the scroll left behind
+    def leftBehind(ctx: EsScroll.Context)(end: String => Unit): Set[Int] = {
+      val before = persisted
+      val sid = parsed(ctx.search(corpus, resolver, "id", bm25, "60s"))("_scroll_id")
+        .asInstanceOf[String]
+      ctx.scroll(sid)
+      assert((persisted -- before).nonEmpty, "the scroll caches its score aggregate")
+      end(sid)
+      persisted -- before
+    }
+    val ctx = new EsScroll.Context(clock = () => now, capacity = 1)
+    assert(leftBehind(ctx)(sid => assert(ctx.clear(sid))) === Set.empty, "clear")
+    assert(leftBehind(ctx) { _ => now += 61000L; ctx.purgeExpired() } === Set.empty, "expiry")
+    assert(leftBehind(ctx) { _ =>
+      // at capacity 1, a second (match_all, score-free) scroll evicts the first
+      ctx.search(corpus, resolver, "id", """{"size":1,"sort":[{"id":"asc"}]}""", "60s")
+    } === Set.empty, "LRU eviction")
+    assert(leftBehind(ctx)(_ => ctx.close()) === Set.empty, "close")
+  }
+
   test("multi-index scroll walks ONE global order across indexes (multi-indices/0002)") {
     import spark.implicits._
     // the scenario's actors, ids descending trinity > guilload >

@@ -7,6 +7,9 @@ class JsonSpec extends AnyFunSuite {
   test("render/parse round-trip preserves order, integral doubles, escapes") {
     val v = Json.parse("""{"b":1,"a":[1.5,true,null,"x\ny"],"c":{"k":"v"}}""")
     assert(Json.render(v) === """{"b":1,"a":[1.5,true,null,"x\ny"],"c":{"k":"v"}}""")
+    val ctl = "cr\rtab\tsoh\u0001"
+    assert(Json.render(ctl) === "\"cr\\rtab\\tsoh\\u0001\"")
+    assert(Json.parse(Json.render(ctl)) === ctl)
   }
 
   test("non-finite doubles and floats render as null, keeping the output parseable") {
