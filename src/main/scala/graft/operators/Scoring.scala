@@ -12,13 +12,16 @@ import org.apache.spark.sql.functions._
   *   idf(t)      = ln(1 + (N − df + 0.5) / (df + 0.5))
   *   score(q, d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
   *
-  * Expressed relationally over an exploded postings frame so Catalyst keeps
-  * every stage a two-phase hash aggregate: tf is a partial-aggregated
-  * groupBy, df and the corpus stats are single-row/tiny broadcasts, and the
-  * per-doc sum is map-side combined. At warehouse scale the postings frame
-  * and (N, avgdl, df) stats come precomputed from the split metadata
-  * (IndexingPipeline writes term/postings cardinalities per split) instead
-  * of being derived inline — see [[bm25FromPostings]].
+  * Scored per row, the way a leaf scores each document of a split in one
+  * pass (collector.rs:106-112): ONE aggregate over the corpus gives N (docs
+  * with ≥1 token), avgdl and each query term's df ([[corpusStats]]), and
+  * each row's score is then a column expression over its OWN tokens —
+  * `dl = size(tokens)`, `tf = size(filter(tokens, _ === term))` — against
+  * the one-row stats frame, broadcast-joined as data ([[withScore]]). The
+  * plan has no explode, no groupBy and no score join: scoring adds a
+  * broadcast nested-loop join and a projection, never a shuffle. At
+  * warehouse scale the postings frame comes precomputed from the split
+  * metadata instead — see [[bm25FromPostings]].
   *
   * tantivy quantizes doc length through a lossy byte-encoded fieldnorm
   * before scoring (one byte per doc, ~4% relative error above 40 tokens);
@@ -33,17 +36,70 @@ object Scoring {
   val DefaultB = 0.75
 
   /** Per-doc BM25 scores for `queryTerms` over `text`, tokenized with the
-    * default analyzer. Docs matching no term are absent (score 0 — same as
-    * the reference, which only scores postings hits). */
+    * default analyzer: `(doc_id, score)`, one row per doc with at least one
+    * term hit (docs matching no term are absent — score 0, as the reference
+    * only scores postings hits). Rows that share an id are scored as
+    * separate docs, as tantivy scores each document. */
   def bm25(docs: DataFrame, id: Column, text: Column, queryTerms: Seq[String],
            k1: Double = DefaultK1, b: Double = DefaultB,
            quantizeNorms: Boolean = false): DataFrame = {
-    val toks = docs.select(id.as("doc_id"), explode(Tokenizers.default(text)).as("term"))
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    // corpus stats: one row — N (docs with ≥1 token) and average doc length
-    val tf = toks.filter(col("term").isin(queryTerms: _*))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    scoreFromParts(tf, dl, k1, b, quantizeNorms)
+    val terms = Terms(Seq(text), queryTerms.distinct.map(0 -> _))
+    // every hit term adds a positive weight, so score > 0 ⇔ ≥1 term hit
+    withScore(docs, terms, corpusStats(docs, terms), "score", k1, b, quantizeNorms)
+      .filter(col("score") > 0.0)
+      .select(id.as("doc_id"), col("score"))
+  }
+
+  /** The scoring terms of one request: the text columns they are matched
+    * in, and the `(field index, term)` pairs in query order — the order the
+    * per-term weights are added up in. */
+  final case class Terms(fields: Seq[Column], terms: Seq[(Int, String)])
+
+  /** The corpus statistics of [[Terms]] over `docs` as a one-row LOCAL frame:
+    * per field i, `_n<i>` (docs with ≥1 token) and `_avgdl<i>`; per term j,
+    * `_df<j>`. One aggregate job computes them; the row then travels as data
+    * — numeric literals are inlined into generated code, so literal stats
+    * would compile new classes on every request — and a scroll reuses the
+    * frame for its continuation pages without re-running the aggregate. */
+  def corpusStats(docs: DataFrame, q: Terms): DataFrame = {
+    val toks = docs.select(q.fields.zipWithIndex.map { case (f, i) =>
+      Tokenizers.default(f).as(s"_tok$i") }: _*)
+    val fieldAggs = q.fields.indices.flatMap { i =>
+      val dl = size(col(s"_tok$i"))
+      Seq(count_if(dl > 0).as(s"_n$i"), avg(when(dl > 0, dl)).as(s"_avgdl$i"))
+    }
+    val dfAggs = q.terms.zipWithIndex.map { case ((i, t), j) =>
+      count_if(array_contains(col(s"_tok$i"), t)).as(s"_df$j")
+    }
+    val aggs = fieldAggs ++ dfAggs
+    val row = toks.agg(aggs.head, aggs.tail: _*).head()
+    docs.sparkSession.createDataFrame(java.util.List.of(row), row.schema)
+  }
+
+  /** `rows` plus a `scoreCol` column: each row's BM25 score over its own
+    * tokens against `stats` (from [[corpusStats]]), broadcast-joined. The
+    * per-term weight `w` is the formula above with tf = 0 weighing 0.0;
+    * the terms add up in query order. */
+  def withScore(rows: DataFrame, q: Terms, stats: DataFrame, scoreCol: String,
+                k1: Double = DefaultK1, b: Double = DefaultB,
+                quantizeNorms: Boolean = false): DataFrame = {
+    val tokCols = q.fields.indices.map(i => s"_tok$i")
+    val tokenized = q.fields.zip(tokCols).foldLeft(rows) { case (df, (f, c)) =>
+      df.withColumn(c, Tokenizers.default(f))
+    }
+    val weights = q.terms.zipWithIndex.map { case ((i, t), j) =>
+      val tok = col(s"_tok$i")
+      val tf = size(filter(tok, _ === t))
+      val dl = if (quantizeNorms) fieldnormQuantize(size(tok)) else size(tok)
+      val (n, df) = (col(s"_n$i"), col(s"_df$j"))
+      val idf = log(lit(1.0) + (n - df + 0.5) / (df + 0.5))
+      val w = idf * (tf * (k1 + 1.0)) /
+        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / col(s"_avgdl$i")))
+      when(tf > 0, w).otherwise(lit(0.0))
+    }
+    tokenized.crossJoin(broadcast(stats))
+      .withColumn(scoreCol, weights.reduce(_ + _))
+      .drop(tokCols ++ stats.columns: _*)
   }
 
   /** tantivy's per-doc fieldnorm byte codec (fieldnorm/code.rs), which is
@@ -75,9 +131,9 @@ object Scoring {
   /** The warehouse-scale scoring path: BM25 over a PRECOMPUTED postings
     * frame. tf is read, dl = Σ tf per doc, (N, avgdl, df) derive from the
     * compact postings — the raw-text scan and tokenize pass disappear from
-    * query time entirely. Math is [[scoreFromParts]], shared with the
-    * inline [[bm25]], so ScoringSpec's equality check holds by
-    * construction + a parquet round-trip. */
+    * query time entirely. The per-term weight is the same expression as the
+    * inline [[bm25]]'s, so the two agree exactly up to the order the terms
+    * are added in (bit-identical for ≤ 2 terms). */
   def bm25FromPostings(postings: DataFrame, queryTerms: Seq[String],
                        k1: Double = DefaultK1, b: Double = DefaultB,
                        quantizeNorms: Boolean = false): DataFrame = {
@@ -86,7 +142,7 @@ object Scoring {
     scoreFromParts(tf, dl, k1, b, quantizeNorms)
   }
 
-  /** Shared scoring join: tf (doc_id, term, tf) × df (broadcast) × dl ×
+  /** Postings scoring join: tf (doc_id, term, tf) × df (broadcast) × dl ×
     * one-row corpus stats (broadcast), then the per-doc sum — every stage a
     * two-phase hash aggregate or broadcast join. With `quantizeNorms` the
     * per-doc dl passes through the fieldnorm byte codec, while avgdl stays

@@ -313,8 +313,9 @@ object EsAggs {
     val aggExprs = count(lit(1)).as("_dc") +:
       metricSubs.flatMap { case (_, m, i) => metricExprs(i, m) }
 
-    // terms truncation/order; other buckets keep every non-empty cell
-    val (keptFrame, totals: Map[Seq[Any], Long]) = bucket match {
+    // terms truncation/order; other buckets keep every non-empty cell.
+    // `totalsFrame` holds a terms agg's per-parent totals (`_gid` = 1)
+    val (keptFrame, totalsFrame: Option[DataFrame]) = bucket match {
       case Terms(_, size, minDoc, target, asc, _) =>
         // ONE rollup aggregate computes the per-term cells AND the
         // per-parent totals that sum_other_doc_count needs (same shape as
@@ -339,13 +340,9 @@ object EsAggs {
             cells.withColumn("_rk", row_number().over(w))
               .filter(col("_rk") <= size).drop("_rk")
           }
-        val tots = g.filter(col("_gid") === 1).collect().toSeq.map { r =>
-          (0 until pathNames.size).map(r.get).toSeq -> r.getAs[Long]("_dc")
-        }.toMap
-        (kept, tots)
+        (kept, Some(g.filter(col("_gid") === 1)))
       case _ =>
-        (keyed.groupBy(groupCols: _*).agg(aggExprs.head, aggExprs.tail: _*),
-          Map.empty[Seq[Any], Long])
+        (keyed.groupBy(groupCols: _*).agg(aggExprs.head, aggExprs.tail: _*), None)
     }
 
     // percentile subs: one (path, key, sketch-bin) aggregation each
@@ -367,9 +364,21 @@ object EsAggs {
 
     // collect is BOUNDED by the remaining budget + 1 before it runs — a
     // high-cardinality agg must abort with the limit error, not OOM the
-    // driver materializing every bucket first (the +1 row proves overflow)
-    val rows = keptFrame.limit(counter.remaining + 1).collect().toSeq
+    // driver materializing every bucket first (the +1 row proves overflow).
+    // At the top level the single totals row rides in the same query, so
+    // the rollup's exchange is computed once and reused; nested terms keep
+    // their per-parent totals in a query of their own.
+    val bounded = keptFrame.limit(counter.remaining + 1)
+    val (rows, totalRows) = totalsFrame match {
+      case Some(t) if pathNames.isEmpty =>
+        bounded.unionByName(t).collect().toSeq.partition(_.getAs[Number]("_gid").longValue == 0L)
+      case Some(t) => (bounded.collect().toSeq, t.collect().toSeq)
+      case None    => (bounded.collect().toSeq, Nil)
+    }
     counter.add(rows.size)
+    val totals: Map[Seq[Any], Long] = totalRows.map { r =>
+      (0 until pathNames.size).map(r.get) -> r.getAs[Long]("_dc")
+    }.toMap
     val byParent = rows.groupBy(r => (0 until pathNames.size).map(r.get).toList: Seq[Any])
 
     def subsJson(path: Seq[Any], r: Row): String = {

@@ -63,8 +63,13 @@ object EsApi {
     * Execution shape: one count aggregate for `total`, one
     * TakeOrdered-with-offset job for the page of hits (bounded by
     * from+size — never a full sort materialization), and EsAggs for the
-    * agg tree. `_id` comes from `id`; `_source` is the doc→JSON
-    * back-projection of the frame's columns (to_json of the row struct). */
+    * agg tree. A `_score` sort adds one corpus-stats aggregate over the
+    * index frame (N, avgdl, per-term df), collected into a one-row local
+    * frame; the page job scores each filtered row over its own tokens
+    * against that row through a broadcast nested-loop join — no explode,
+    * groupBy, or shuffle for scoring ([[graft.operators.Scoring]]). `_id`
+    * comes from `id`; `_source` is the doc→JSON back-projection of the
+    * frame's columns (to_json of the row struct). */
   def search(df: DataFrame, resolver: FieldResolver, id: Column,
              bodyJson: String): String =
     search(df, resolver, id, bodyJson, cursorOverride = None,
@@ -150,18 +155,18 @@ object EsApi {
   /** A rendered page plus the NATIVE machinery the scroll context needs:
     * the last hit's raw sort values (full i64/timestamp precision — a
     * JSON re-parse would collapse longs beyond 2^53 to doubles), the
-    * page's total, and — when the page ranked by BM25 — the (doc_id,
-    * score) frame, so a scroll can materialize the expensive corpus
-    * aggregate once instead of per continuation. */
+    * page's total, and — when the page ranked by BM25 — the one-row local
+    * corpus-stats frame, so a scroll's continuations score against the
+    * stats of its opening page instead of re-running the corpus aggregate. */
   final case class Page(rendered: String, lastSortValues: Option[Seq[Any]],
-                        total: Long, scores: Option[DataFrame] = None)
+                        total: Long, stats: Option[DataFrame] = None)
 
   def searchPage(df: DataFrame, resolver: FieldResolver, id: Column,
                  bodyJson: String, cursorOverride: Option[Seq[Any]],
                  extraSort: Seq[(String, Boolean)],
                  includeAggs: Boolean,
                  totalOverride: Option[Long] = None,
-                 scoresOverride: Option[DataFrame] = None): Page = {
+                 statsOverride: Option[DataFrame] = None): Page = {
     val m = graft.util.Json.parse(bodyJson).asInstanceOf[Map[String, Any]]
     val astOpt = m.get("query").map(q => EsDsl.fromParsed(q, resolver.defaultFields))
     val filtered = astOpt.map(a => df.filter(a.toColumn(resolver))).getOrElse(df)
@@ -192,30 +197,24 @@ object EsApi {
     // (collector.rs:106-112 SortBy::Score — the reference scores relevance
     // sorts with tantivy's BM25 on every `_search`). Corpus statistics
     // (df, avgdl, N) come from the WHOLE index frame, not the filtered
-    // subset, matching tantivy's segment-level stats; docs matching only
-    // filter clauses score 0.0; a term-free query (match_all / pure
-    // structural predicates) keeps the ES constant_score of 1.0.
+    // subset, matching tantivy's segment-level stats; each filtered row is
+    // then scored over its own tokens; docs matching only filter clauses
+    // score 0.0; a term-free query (match_all / pure structural
+    // predicates) keeps the ES constant_score of 1.0.
     val needsScore = sortSpec.exists(_._1 == "_score")
     val scoreTerms =
       if (needsScore) astOpt.map(QueryAst.scoringTerms).getOrElse(Nil).distinct else Nil
     val ScoreCol = "_bm25_score"
-    val scoresFrame: Option[DataFrame] =
-      if (scoreTerms.isEmpty) None
-      else scoresOverride.orElse {
-        val perField = scoreTerms.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, ts) =>
-          graft.operators.Scoring.bm25(df, id, col(f), ts.map(_._2))
-        }
-        Some(perField.reduce(_ union _)
-          .groupBy("doc_id").agg(sum("score").as(ScoreCol))
-          .withColumnRenamed("doc_id", "_score_join_id"))
-      }
-    val pageBase = scoresFrame match {
-      case None => filtered
-      case Some(scores) =>
-        filtered.join(scores, id === col("_score_join_id"), "left")
-          .drop("_score_join_id")
-          .withColumn(ScoreCol, coalesce(col(ScoreCol), lit(0.0d)))
+    val scoring = {
+      val fields = scoreTerms.map(_._1).distinct
+      graft.operators.Scoring.Terms(fields.map(col),
+        scoreTerms.map { case (f, t) => fields.indexOf(f) -> t })
     }
+    val stats: Option[DataFrame] =
+      if (scoreTerms.isEmpty) None
+      else statsOverride.orElse(Some(graft.operators.Scoring.corpusStats(df, scoring)))
+    val pageBase = stats.fold(filtered)(
+      graft.operators.Scoring.withScore(filtered, scoring, _, ScoreCol))
     def sortCol(f: String): Column =
       if (f == "_score") { if (scoreTerms.nonEmpty) col(ScoreCol) else lit(1.0d) }
       else col(f)
@@ -333,7 +332,7 @@ object EsApi {
     val hitsBlock =
       s""""hits":{$totalBlock"hits":[${hitsJson.mkString(",")}]}"""
     Page(s"""{"timed_out":false,$hitsBlock${aggsJson.map("," + _).getOrElse("")}}""",
-      lastSv, total, scoresFrame)
+      lastSv, total, stats)
   }
 
   /** `GET /_elastic` cluster-info banner — the version probe ES clients

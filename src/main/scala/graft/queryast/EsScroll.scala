@@ -60,10 +60,8 @@ object EsScroll {
     * any node can serve the continuation. The Spark analog of that shape
     * would persist (bodyJson, cursor, total) — all plain values — into a
     * shared store keyed by scroll id; the DataFrame itself is rebuilt per
-    * continuation from the table, not shipped (the node-local BM25 score
-    * cache would likewise be recomputed by whichever node serves the
-    * continuation, or carried as the reference carries its cached
-    * window). */
+    * continuation from the table, not shipped (the BM25 corpus-stats row
+    * is one small local row, as shippable as the cursor). */
   final class Context(clock: () => Long = () => System.currentTimeMillis(),
                       capacity: Int = DefaultCapacity,
                       sweepIntervalMs: Option[Long] = None) {
@@ -76,7 +74,9 @@ object EsScroll {
                                    bodyJson: String,
                                    cursor: Option[Seq[Any]],
                                    total: Long,
-                                   scores: Option[DataFrame],
+                                   // a BM25 scroll's one-row local
+                                   // corpus stats, fixed at open
+                                   stats: Option[DataFrame],
                                    // the tiebreak sort that made this
                                    // scroll's cursor a TOTAL order — the
                                    // continuation must replay it verbatim
@@ -105,11 +105,9 @@ object EsScroll {
       store.keys.foreach(drop)
     }
 
-    /** Remove one context and release its cached score aggregate — every
-      * way a context ends (clear, expiry, LRU eviction, close) comes here,
-      * so no ended scroll keeps cached blocks. */
-    private def drop(sid: String): Boolean =
-      store.remove(sid).map(_.scores.foreach(_.unpersist())).isDefined
+    /** Remove one context — every way a context ends (clear, expiry, LRU
+      * eviction, close) comes here. A context holds no cached blocks. */
+    private def drop(sid: String): Boolean = store.remove(sid).isDefined
 
     /** Drop every context past its deadline — O(expired · log n), callable
       * from the sweeper thread without touching any request path. */
@@ -158,17 +156,12 @@ object EsScroll {
       val idCol = org.apache.spark.sql.functions.col(idField)
       val page = EsApi.searchPage(df, resolver, idCol, bodyJson,
         cursorOverride = None, extraSort = tiebreak, includeAggs = true)
-      // A BM25-ranked scroll materializes the corpus score aggregate ONCE
-      // here (eager persist): replaying it per continuation would
-      // re-tokenize the whole index for every size-N page. This is a
-      // node-local twin of the reference's cached scroll window; `drop`
-      // unpersists it when the context ends. Two open scrolls with the same
-      // index and query share one cache entry: ending either unpersists it
-      // and the other recomputes its scores per page.
-      val cachedScores = page.scores.map { scores => scores.persist().count(); scores }
+      // A BM25-ranked scroll keeps the corpus stats of its opening page (a
+      // one-row local frame): continuations score each page's rows against
+      // them and never re-run the whole-index aggregate
       val sid = java.util.UUID.randomUUID().toString
       register(sid, State(Some(df), resolver, idCol, idField, bodyJson,
-        page.lastSortValues, page.total, cachedScores, tiebreak,
+        page.lastSortValues, page.total, page.stats, tiebreak,
         clock() + ttlMs, ttlMs, clock()))
       splice(sid, page.rendered)
     }
@@ -204,7 +197,8 @@ object EsScroll {
     }
 
     /** `_search/scroll` continuation: one bounded TakeOrdered job per page
-      * (the total is the one fixed at open — no per-page count job).
+      * (the total is the one fixed at open — no per-page count job; a BM25
+      * page scores against the stats stored at open — no corpus aggregate).
       * Unknown/expired ids get the reference-shaped failure. Pages are
       * stateless beyond the cursor: unlike the reference's SCROLL_BATCH_LEN
       * window, no hits are cached between calls. */
@@ -220,7 +214,7 @@ object EsScroll {
         case Some(df) => EsApi.searchPage(df, st.resolver, st.idCol, st.bodyJson,
           cursorOverride = st.cursor, extraSort = st.tiebreak,
           includeAggs = false, totalOverride = Some(st.total),
-          scoresOverride = st.scores)
+          statsOverride = st.stats)
         case None => EsApi.emptyPage(st.bodyJson) // zero-index scroll
       }
       register(scrollId,

@@ -5,6 +5,7 @@ import graft.publish.{Checkpoint, Manifest}
 import graft.queryast.{QueryAst, TagPruning, TimestampPruning}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-layout transcript table: `data/part-*.parquet` +
@@ -47,10 +48,10 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
     * with per-file stats (+ optional `field:value` tags) + a checkpoint
     * delta.
     *
-    * Stats are aggregated from the CACHED writer partitions keyed by
-    * `spark_partition_id()` — not by re-reading the written output (the r1
-    * self-re-read paid a second full scan of every batch). Writer partition
-    * i maps to output file `part-0000i-*` by Spark's naming contract. */
+    * Stats come from ONE stage over the CACHED writer partitions
+    * ([[TranscriptTable.partitionStats]]): no second scan of the written
+    * output and no exchange after the write. Writer partition i maps to
+    * output file `part-0000i-*` by Spark's naming contract. */
   def append(df: DataFrame, delta: Checkpoint.Delta, numFiles: Int = 4,
              tagFields: Seq[String] = Nil,
              rangeFields: Seq[String] = Nil): Unit = {
@@ -58,66 +59,57 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
     val subdir = s"$dir/data/batch-$batchId"
     val rep = df.repartition(numFiles).persist()
     try {
-      val tagAggs = tagFields.flatMap { f =>
-        Seq(collect_set(col(f)).as(s"_tagvals_$f"),
-            countDistinct(col(f)).as(s"_tagcard_$f"))
-      }
-      // per-fast-field [min,max] for generalized split skipping
-      // (SplitEntry.fieldRanges) — same single stats pass as the ts range
-      val rangeAggs = rangeFields.flatMap { f =>
-        Seq(min(col(f).cast("long")).as(s"_rmin_$f"),
-            max(col(f).cast("long")).as(s"_rmax_$f"))
-      }
-      val aggs =
-        Seq(count(lit(1)).as("num_docs"),
-            sum(coalesce(octet_length(col("text")).cast("long"), lit(0L))).as("bytes"),
-            min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts")) ++ tagAggs ++ rangeAggs
-      val statsF = rep.groupBy(spark_partition_id().as("_pid")).agg(aggs.head, aggs.tail: _*)
       rep.write.mode("overwrite")
         .option("compression", "zstd") // docstore zstd analog (indexer.rs:529-537)
         .parquet(subdir)
-      val stats = statsF.collect()
+      val stats = TranscriptTable.partitionStats(rep, tagFields, rangeFields, TagValueCap)
       // writer partition id ↔ file via the part-NNNNN name prefix
       val filesByPid = graft.util.Fs.list(java.nio.file.Paths.get(subdir))
         .iterator.map(_.toString)
         .filter(f => f.contains("/part-") && f.endsWith(".parquet"))
         .map(f => f.substring(f.lastIndexOf("/part-") + 6, f.lastIndexOf("/part-") + 11).toInt -> f)
         .toMap
-      val entries = stats.map { r =>
-        val pid = r.getAs[Int]("_pid")
-        val tags = tagFields.flatMap { f =>
-          val vals = r.getAs[scala.collection.Seq[Any]](s"_tagvals_$f")
-          if (r.getAs[Long](s"_tagcard_$f") > TagValueCap) Nil
-          else s"$f!" +: vals.map(v => s"$f:$v").sorted
-        }
+      val entries = stats.map { p =>
         Manifest.SplitEntry(
-          splitId = s"split-$batchId-$pid",
+          splitId = s"split-$batchId-${p.pid}",
           partitionId = 0L,
-          numDocs = r.getAs[Long]("num_docs"),
-          uncompressedBytes = r.getAs[Long]("bytes"),
-          timeRangeStartMicros = tsMicros(r.getAs[Any]("min_ts")),
-          timeRangeEndMicros = tsMicros(r.getAs[Any]("max_ts")),
-          tags = tags, termCardinality = 0L, postingsCount = 0L,
+          numDocs = p.numDocs,
+          uncompressedBytes = p.bytes,
+          timeRangeStartMicros = p.minTsMicros,
+          timeRangeEndMicros = p.maxTsMicros,
+          tags = p.tags, termCardinality = 0L, postingsCount = 0L,
           numMergeOps = 0, deleteOpstamp = 0L,
-          files = Seq(filesByPid(pid)),
-          fieldRanges = rangeFields.flatMap { f =>
-            Option(r.getAs[Any](s"_rmin_$f")).map(lo =>
-              f -> (lo.asInstanceOf[Long], r.getAs[Long](s"_rmax_$f")))
-          }.toMap)
+          files = Seq(filesByPid(p.pid)),
+          fieldRanges = p.fieldRanges)
       }
-      store.publish(entries.toSeq, Set.empty, delta) match {
+      store.publish(entries, Set.empty, delta) match {
         case Left(err) => throw new IllegalStateException(s"publish failed: $err")
         case Right(_)  => ()
       }
     } finally rep.unpersist()
   }
 
-  private def tsMicros(v: Any): Long = v match {
-    case null                  => 0L
-    case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000) % 1000
-    case d: java.time.LocalDateTime => // TIMESTAMP_NTZ collects as LocalDateTime
-      d.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + d.getNano / 1000
-    case other => throw new IllegalArgumentException(s"unexpected ts type: $other")
+  /** Footer schema per data file, bounded LRU. Data files are immutable, so
+    * the schema Spark infers for one never changes. */
+  private val footerSchemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, StructType]): Boolean =
+        size > 4096
+    })
+
+  /** Read data files (local paths) with exactly the schema
+    * `spark.read.parquet(paths)` infers: with schema merging off, Spark's
+    * inference reads the footer of the path-sorted first file alone. That
+    * footer's schema is memoized, so a read of known files plans without
+    * the inference job. */
+  private def readFiles(paths: Seq[String]): DataFrame = {
+    val first = paths.min
+    val schema = Option(footerSchemas.get(first)).getOrElse {
+      val inferred = spark.read.parquet(first).schema
+      footerSchemas.put(first, inferred)
+      inferred
+    }
+    spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** Scan with metadata-level pruning: only files overlapping
@@ -151,7 +143,7 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
       }
       .flatMap(_.files)
     if (files.isEmpty) spark.emptyDataset(spark.implicits.newProductEncoder[Turn]).toDF()
-    else spark.read.parquet(files.map(_.replaceFirst("^file:", "")): _*)
+    else readFiles(files.map(_.replaceFirst("^file:", "")))
   }
 
   /** Count answered purely from split metadata — the reference's
@@ -251,15 +243,8 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
       reqS = None, reqE = None)
   }
 
-  private def tsSortKey(r: org.apache.spark.sql.Row): Option[Long] = r.getAs[Any]("ts") match {
-    case null => None
-    case t: java.sql.Timestamp => Some(t.getTime * 1000L + (t.getNanos / 1000) % 1000)
-    case d: java.time.LocalDateTime =>
-      Some(d.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + d.getNano / 1000)
-    case i: java.time.Instant => // java8 datetime API sessions
-      Some(i.getEpochSecond * 1000000L + i.getNano / 1000)
-    case other => throw new IllegalArgumentException(s"unexpected ts type: $other")
-  }
+  private def tsSortKey(r: org.apache.spark.sql.Row): Option[Long] =
+    Option(r.getAs[Any]("ts")).map(TranscriptTable.tsMicros)
 
   private def topKCore(k: Int, desc: Boolean,
                        query: Option[QueryAst],
@@ -337,7 +322,7 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
                     rows)
                 case None =>
                   val files = s.files.map(_.replaceFirst("^file:", ""))
-                  val df = windowFilter(spark.read.parquet(files: _*))
+                  val df = windowFilter(readFiles(files))
                   val leaf = query.fold(df)(q => df.filter(q.toColumn(resolver)))
                     .orderBy(sortCols: _*).limit(k).collect()
                   leafCache.put(s.splitId, Some(s.timeRangeStartMicros),
@@ -362,8 +347,7 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
     }
     val out =
       if (schema == null) spark.emptyDataset(spark.implicits.newProductEncoder[Turn]).toDF()
-      else spark.createDataFrame(
-        spark.sparkContext.parallelize(top, math.max(1, math.min(top.size, 4))), schema)
+      else spark.createDataFrame(top.asJava, schema) // local rows: collecting runs no job
     (out, opened.result())
   }
 
@@ -381,5 +365,66 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
   private def rowsFromBytes(bytes: Array[Byte]): Array[org.apache.spark.sql.Row] = {
     val ois = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
     try ois.readObject().asInstanceOf[Array[org.apache.spark.sql.Row]] finally ois.close()
+  }
+}
+
+object TranscriptTable {
+
+  /** One writer partition's split stats, as published in its manifest
+    * entry: row count, text bytes, the [min, max] `ts` in µs (0 when every
+    * `ts` is null), the `field:value` tags and per-field [min, max]. */
+  private[sources] final case class PartStats(pid: Int, numDocs: Long, bytes: Long,
+                                              minTsMicros: Long, maxTsMicros: Long,
+                                              tags: Seq[String],
+                                              fieldRanges: Map[String, (Long, Long)])
+
+  /** Stats of every non-empty partition of `rep` in ONE stage over its
+    * partitions — no exchange. Tags per field: `field!` plus every distinct
+    * non-null `field:value`, sorted, unless the field has more than
+    * `tagCap` distinct values (then none: the field stays unprunable; at
+    * most `tagCap + 1` values are held). A range field's entry is absent
+    * when all its values are null. */
+  private[sources] def partitionStats(rep: DataFrame, tagFields: Seq[String],
+                                      rangeFields: Seq[String], tagCap: Int): Seq[PartStats] = {
+    val cols = Seq(coalesce(octet_length(col("text")).cast("long"), lit(0L)), col("ts")) ++
+      tagFields.map(col) ++ rangeFields.map(f => col(f).cast("long"))
+    rep.select(cols: _*).rdd.mapPartitionsWithIndex { (pid, rows) =>
+      if (!rows.hasNext) Iterator.empty
+      else {
+        var n = 0L
+        var bytes = 0L
+        var ts = Option.empty[(Long, Long)]
+        val tagVals = tagFields.map(_ => scala.collection.mutable.HashSet.empty[Any])
+        val ranges = Array.fill(rangeFields.size)(Option.empty[(Long, Long)])
+        def widen(r: Option[(Long, Long)], v: Long) =
+          r.fold((v, v)) { case (lo, hi) => (math.min(lo, v), math.max(hi, v)) }
+        rows.foreach { r =>
+          n += 1
+          bytes += r.getLong(0)
+          if (!r.isNullAt(1)) ts = Some(widen(ts, tsMicros(r.get(1))))
+          tagVals.zipWithIndex.foreach { case (vs, i) =>
+            if (!r.isNullAt(2 + i) && vs.size <= tagCap) vs += r.get(2 + i)
+          }
+          ranges.indices.foreach { i =>
+            val c = 2 + tagFields.size + i
+            if (!r.isNullAt(c)) ranges(i) = Some(widen(ranges(i), r.getLong(c)))
+          }
+        }
+        val tags = tagFields.zip(tagVals).flatMap { case (f, vs) =>
+          if (vs.size > tagCap) Nil else s"$f!" +: vs.toSeq.map(v => s"$f:$v").sorted
+        }
+        Iterator.single(PartStats(pid, n, bytes, ts.fold(0L)(_._1), ts.fold(0L)(_._2), tags,
+          rangeFields.zip(ranges).collect { case (f, Some(r)) => f -> r }.toMap))
+      }
+    }.collect().toSeq
+  }
+
+  private def tsMicros(v: Any): Long = v match {
+    case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos / 1000) % 1000
+    case d: java.time.LocalDateTime => // TIMESTAMP_NTZ collects as LocalDateTime
+      d.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + d.getNano / 1000
+    case i: java.time.Instant => // java8 datetime API sessions
+      i.getEpochSecond * 1000000L + i.getNano / 1000
+    case other => throw new IllegalArgumentException(s"unexpected ts type: $other")
   }
 }

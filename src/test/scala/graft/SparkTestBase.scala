@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.collection.mutable
 
 /** One shared local session for the whole forked test JVM (Test/fork := true
   * runs every suite in a single JVM — a per-suite session would pay ~5 s of
@@ -36,4 +40,44 @@ trait SparkTestBase extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Jobs and shuffle-map stages Spark ran for `f`'s jobs, counted by a
+    * listener over `f`'s job group. A trailing job in a second group drains
+    * the listener bus: its end arrives after every event `f` posted. */
+  def planShape(group: String)(f: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val endGroup = s"$group-end"
+    val ended = new CountDownLatch(1)
+    var jobs = 0
+    var shuffleMapStages = 0
+    val stages = mutable.Set.empty[Int]
+    var endJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs += 1; stages ++= e.stageIds
+          case `endGroup` => endJob = e.jobId
+          case _ =>
+        }
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+        // a stage that wrote shuffle output is a shuffle-map stage
+        val m = e.stageInfo.taskMetrics
+        if (stages(e.stageInfo.stageId) && m != null && m.shuffleWriteMetrics.recordsWritten > 0)
+          shuffleMapStages += 1
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+        if (e.jobId == endJob) ended.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(endGroup, endGroup)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(ended.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      listener.synchronized((jobs, shuffleMapStages))
+    } finally sc.removeSparkListener(listener)
+  }
 }

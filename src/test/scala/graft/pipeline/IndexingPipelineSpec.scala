@@ -3,14 +3,10 @@ package graft.pipeline
 import graft.SparkTestBase
 import graft.model.{TranscriptGen, Turn}
 import graft.publish.Checkpoint
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import scala.collection.mutable
 
 /** End-to-end pipeline test — the BASELINE's core claims:
   * per-sink counts + routed-row equality vs an independent plain-Scala
@@ -193,46 +189,6 @@ class IndexingPipelineSpec extends SparkTestBase {
       a.add(java.math.BigInteger.valueOf(h)))
       .mod(java.math.BigInteger.ONE.shiftLeft(64)).longValue()
     assert(fromSql === direct)
-  }
-
-  /** Jobs and shuffle-map stages Spark ran for `f`'s jobs, counted by a
-    * listener over `f`'s job group. A trailing job in a second group drains
-    * the listener bus: its end arrives after every event `f` posted. */
-  private def planShape(group: String)(f: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val endGroup = s"$group-end"
-    val ended = new CountDownLatch(1)
-    var jobs = 0
-    var shuffleMapStages = 0
-    val stages = mutable.Set.empty[Int]
-    var endJob = -1
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs += 1; stages ++= e.stageIds
-          case `endGroup` => endJob = e.jobId
-          case _ =>
-        }
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
-        // a stage that wrote shuffle output is a shuffle-map stage
-        val m = e.stageInfo.taskMetrics
-        if (stages(e.stageInfo.stageId) && m != null && m.shuffleWriteMetrics.recordsWritten > 0)
-          shuffleMapStages += 1
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-        if (e.jobId == endJob) ended.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(endGroup, endGroup)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(ended.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      listener.synchronized((jobs, shuffleMapStages))
-    } finally sc.removeSparkListener(listener)
   }
 
   /** Shuffle exchanges in `df`'s executed plan. The plan is read after the

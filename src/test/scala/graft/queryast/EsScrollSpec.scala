@@ -73,8 +73,8 @@ class EsScrollSpec extends SparkTestBase {
       (4L, "nothing relevant")                                    // filtered out
     ).toDF("id", "name")
     val ctx = new EsScroll.Context()
-    // sortless body → default _score desc; the context materializes the
-    // score aggregate ONCE at open, continuations page from the cursor
+    // sortless body → default _score desc; the context keeps the corpus
+    // stats of its opening page, continuations page from the cursor
     val r1 = parsed(ctx.search(corpus, resolver, "id",
       """{"query":{"match":{"name":{"query":"spark vector","operator":"or"}}},"size":1}""",
       "30m"))
@@ -87,22 +87,24 @@ class EsScrollSpec extends SparkTestBase {
     assert(total(r4) === 3.0)
   }
 
-  test("a BM25 scroll's cached score aggregate is released however its context ends") {
+  test("a BM25 scroll persists nothing while open, and ends on every path") {
     import spark.implicits._
     val corpus = Seq((1L, "spark vector"), (2L, "spark hit"), (3L, "nothing"))
       .toDF("id", "name")
     val bm25 = """{"query":{"match":{"name":{"query":"spark","operator":"or"}}},"size":1}"""
     def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     var now = 0L
-    // opens a BM25 scroll, pages it once, ends it with `end`, and returns
-    // the persistent RDDs the scroll left behind
+    // opens a BM25 scroll, pages it once, checks that the open scroll
+    // added no persistent RDD, ends it with `end`, checks that its id is
+    // gone, and returns the persistent RDDs the scroll left behind
     def leftBehind(ctx: EsScroll.Context)(end: String => Unit): Set[Int] = {
       val before = persisted
       val sid = parsed(ctx.search(corpus, resolver, "id", bm25, "60s"))("_scroll_id")
         .asInstanceOf[String]
       ctx.scroll(sid)
-      assert((persisted -- before).nonEmpty, "the scroll caches its score aggregate")
+      assert(persisted -- before === Set.empty, "an open scroll persists nothing")
       end(sid)
+      intercept[IllegalArgumentException](ctx.scroll(sid))
       persisted -- before
     }
     val ctx = new EsScroll.Context(clock = () => now, capacity = 1)

@@ -251,4 +251,103 @@ class TranscriptTableSpec extends SparkTestBase {
       table.append(turns.toDS().toDF(), delta(-1, 50))
     }
   }
+
+  test("read path: a scan of a known snapshot and a warm-cache top-k answer run no job") {
+    import spark.implicits._
+    val table = new TranscriptTable(tmpDir("ttable"), spark)
+    table.append(TranscriptGen.turns(numConvs = 20, avgTurns = 5).toDS().toDF(),
+      delta(-1, 100), numFiles = 3)
+    table.scan()
+    assert(planShape("scan-known")(table.scan()) === ((0, 0)))
+    val (cold, _) = table.topKByTs(5)
+    val want = cold.collect().toSeq
+    var (got, opened) = (Seq.empty[org.apache.spark.sql.Row], Seq("unset"))
+    assert(planShape("topk-warm") {
+      val (df, o) = table.topKByTs(5)
+      got = df.collect().toSeq
+      opened = o
+    } === ((0, 0)))
+    assert(opened.isEmpty) // every split answered from the leaf cache
+    assert(got === want)
+  }
+
+  test("scan schema equals spark.read.parquet's inference after appends and a merge") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val dir = tmpDir("ttable")
+    val table = new TranscriptTable(dir, spark)
+    val base = TranscriptGen.turns(numConvs = 4, avgTurns = 3).toDS().toDF()
+    val day0 = 1700006400L // a UTC midnight
+    // batch i holds day i; batch 10 alone has an extra column, and its
+    // path sorts before batch-2's, so the footer Spark infers from is not
+    // the first file in manifest order once day 1 is pruned
+    (1 to 11).foreach { i =>
+      val batch = base.withColumn("ts", timestamp_seconds(lit(day0 + i * 86400L) + col("turn_idx")))
+      table.append(if (i == 10) batch.withColumn("extra", lit(1L)) else batch,
+        delta(i - 2, i - 1), numFiles = 1)
+    }
+    def check(df: org.apache.spark.sql.DataFrame): Unit =
+      assert(df.schema === spark.read.parquet(df.inputFiles: _*).schema)
+    val fromDay2 = Some((day0 + 2 * 86400L) * 1000000L)
+    check(table.scan())
+    check(table.scan(startMicros = fromDay2))
+    val merged = graft.publish.MergeExecutor.run(dir, spark, graft.publish.MergePolicy.Config(
+      mergeFactor = 2, maxMergeFactor = 3, minLevelNumDocs = 1000000L,
+      splitNumDocsTarget = 1000000L))
+    assert(merged.merged.nonEmpty)
+    check(table.scan())
+    check(table.scan(startMicros = fromDay2))
+  }
+
+  test("append stats equal the groupBy(spark_partition_id()) formulation") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val cap = 3
+    val t = (s: Long) => new java.sql.Timestamp(1700000000000L + s * 1000L)
+    // three partitions of four rows: role stays under the cap everywhere,
+    // tool goes over it in partition 0 and sits exactly at it in
+    // partition 1, and partition 2 has only null ts and null turn_idx
+    val rows = Seq(
+      Row("a", t(5), "user", "t1", 3), Row("bb", t(1), "assistant", "t2", 9),
+      Row(null, t(7), "user", "t3", null), Row("dddd", t(2), null, "t4", 1),
+      Row("e", t(9), "user", "t1", 4), Row("ff", t(8), "user", "t3", 2),
+      Row("g", null, "system", "t1", 6), Row("", t(3), "user", "t2", 5),
+      Row("i", null, "user", "t1", null), Row("jj", null, null, null, null),
+      Row("k", null, "tool", "t9", null), Row(null, null, "user", "t9", null))
+    val schema = StructType(Seq(StructField("text", StringType), StructField("ts", TimestampType),
+      StructField("role", StringType), StructField("tool", StringType),
+      StructField("turn_idx", IntegerType)))
+    val rep = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val (tagFields, rangeFields) = (Seq("role", "tool"), Seq("turn_idx"))
+    val aggs = Seq(count(lit(1)).as("num_docs"),
+      sum(coalesce(octet_length(col("text")).cast("long"), lit(0L))).as("bytes"),
+      min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts")) ++
+      tagFields.flatMap(f => Seq(collect_set(col(f)).as(s"_tagvals_$f"),
+        countDistinct(col(f)).as(s"_tagcard_$f"))) ++
+      rangeFields.flatMap(f => Seq(min(col(f).cast("long")).as(s"_rmin_$f"),
+        max(col(f).cast("long")).as(s"_rmax_$f")))
+    def micros(v: Any): Long = Option(v.asInstanceOf[java.sql.Timestamp])
+      .fold(0L)(x => x.getTime * 1000L + (x.getNanos / 1000) % 1000)
+    val want = rep.groupBy(spark_partition_id().as("_pid")).agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq.map { r =>
+        TranscriptTable.PartStats(r.getAs[Int]("_pid"), r.getAs[Long]("num_docs"),
+          r.getAs[Long]("bytes"), micros(r.getAs[Any]("min_ts")), micros(r.getAs[Any]("max_ts")),
+          tagFields.flatMap { f =>
+            if (r.getAs[Long](s"_tagcard_$f") > cap) Nil
+            else s"$f!" +: r.getAs[scala.collection.Seq[Any]](s"_tagvals_$f")
+              .map(v => s"$f:$v").sorted.toSeq
+          },
+          rangeFields.flatMap { f =>
+            Option(r.getAs[Any](s"_rmin_$f")).map(lo =>
+              f -> (lo.asInstanceOf[Long], r.getAs[Long](s"_rmax_$f")))
+          }.toMap)
+      }.sortBy(_.pid)
+    val got = TranscriptTable.partitionStats(rep, tagFields, rangeFields, cap)
+    assert(got === want)
+    // the fixture reaches every branch
+    assert(want.size === 3)
+    assert(!want(0).tags.exists(_.startsWith("tool")) && want(1).tags.contains("tool!"))
+    assert(want(2).minTsMicros === 0L && want(2).fieldRanges.isEmpty)
+  }
 }
