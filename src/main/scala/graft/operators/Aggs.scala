@@ -17,11 +17,11 @@ object Aggs {
   def terms(df: DataFrame, key: Column, size: Int,
             minDocCount: Long = 1L,
             orderTarget: String = "_count", orderAsc: Boolean = false): DataFrame = {
-    // One aggregation job, not three: rollup computes per-key counts AND the
-    // grand-total row in a single two-phase HashAggregate (grouping_id tells
-    // them apart, so genuine null keys are safe); the total row broadcasts
-    // onto the TakeOrdered top-k, and the kept-sum window runs over ≤ size
-    // rows. No driver-synchronized count()/collect() scans.
+    // One scan: a groupBy gives the per-key cells (a null key is a cell of
+    // its own); the TakeOrdered top-k and the grand total both read those
+    // cells, so Spark plans one exchange and reuses it for the total, which
+    // broadcasts onto the top-k. The kept-sum window runs over ≤ size rows.
+    // No separate count()/collect() scans.
     //
     // `min_doc_count` (default 1, aggregation.md:542-547) filters terms
     // below the threshold — they fall into sum_other_doc_count, same as
@@ -29,18 +29,20 @@ object Aggs {
     // (aggregation.md:549-560); the ES default is count desc with the key
     // asc tiebreak. Ordering by a metric sub-aggregation composes the same
     // TakeOrdered over the sub-agg frame (see `a_sub_agg`).
-    val g = df.rollup(key.as("key"))
-      .agg(count(lit(1)).as("doc_count"), grouping_id().as("_gid"))
+    val cells = df.groupBy(key.as("key")).agg(count(lit(1)).as("doc_count"))
     val ordering = orderTarget match {
       case "_count" =>
         if (orderAsc) Seq(asc("doc_count"), asc("key")) else Seq(desc("doc_count"), asc("key"))
       case "_key" => Seq(if (orderAsc) asc("key") else desc("key"))
       case other => throw new IllegalArgumentException(s"unknown terms order target `$other`")
     }
-    val top = g.filter(col("_gid") === 0 && col("doc_count") >= minDocCount)
+    val top = cells.filter(col("doc_count") >= minDocCount)
       .orderBy(ordering: _*).limit(size)
-    val total = g.filter(col("_gid") === 1).select(col("doc_count").as("_total"))
-    val keptW = Window.partitionBy(col("_total")) // one group (≤ size rows)
+    val total = cells.agg(sum(col("doc_count")).as("_total"))
+    // one group (≤ size rows); its ordering also orders the output rows,
+    // which the top-k need not do once Spark drops a limit that bounds
+    // nothing (an input of at most `size` keys)
+    val keptW = Window.partitionBy(col("_total")).orderBy(ordering: _*)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     top.crossJoin(broadcast(total))
       .withColumn("sum_other_doc_count", col("_total") - sum("doc_count").over(keptW))

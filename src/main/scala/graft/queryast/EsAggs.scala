@@ -2,7 +2,7 @@ package graft.queryast
 
 import graft.operators.{Aggs, DdSketch, EsAggResponse => R}
 import graft.util.Json
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
@@ -30,8 +30,11 @@ import org.apache.spark.sql.types.ArrayType
   * nesting costs L shuffles, each partially aggregated, and per-parent
   * truncation for nested `terms` runs as a window over the per-parent TERM
   * HISTOGRAM (the same bounded state tantivy keeps per bucket), never over
-  * rows. Top-level `terms` keeps the TakeOrdered + single-row-total shape
-  * of [[Aggs.terms]].
+  * rows. A top-level `terms` is one query: one groupBy into term cells, a
+  * TakeOrdered of the kept buckets over them, and a `sum(doc_count)`
+  * Observation on the cells it reads for `sum_other_doc_count` — one scan
+  * and one exchange. Nested `terms` collect their per-parent totals in a
+  * second query over the same cells.
   *
   * Terms tie-break: the reference orders equal-count terms by key
   * DESCENDING (0001-aggregations.yaml:108-124: hosts 192.168.0.15 before
@@ -167,6 +170,34 @@ object EsAggs {
     val nodes = m.get("aggs").orElse(m.get("aggregations")).map(parseAggs).getOrElse(Nil)
     R.response(run(filtered, nodes))
   }
+
+  /** Runs `query` over `frame` with `metric`, a long aggregate over
+    * `frame`'s rows, observed inside it; `query` must read every row of the
+    * frame once, as a TakeOrdered does. Returns the query's result and the
+    * metric. `fallback` runs a query of its own instead when the
+    * observation cannot be trusted: over a frame whose row count the plan
+    * bounds (the sort may then read the frame twice, see
+    * [[org.apache.spark.sql.graft.ColumnBridge.rowsBounded]]), and when
+    * Spark completes the Observation without metrics because the optimizer
+    * removed its node (an input it can prove empty). */
+  private[queryast] def withObservedLong[T](frame: DataFrame, metric: Column,
+                                            fallback: => Long)(query: DataFrame => T): (T, Long) =
+    if (org.apache.spark.sql.graft.ColumnBridge.rowsBounded(frame)) (query(frame), fallback)
+    else {
+      val o = Observation()
+      val observed = frame.observe(o, metric.as("v"))
+      val result =
+        try query(observed)
+        catch { case scala.util.control.NonFatal(e) =>
+          // the session keeps an Observation registered until a query over
+          // it ends; a query that failed to build never ran, so end one
+          // that runs no job
+          scala.util.Try(observed.limit(0).collect())
+          throw e
+        }
+      (result, o.get.get("v").map(v => Option(v).fold(0L)(_.asInstanceOf[Number].longValue))
+        .getOrElse(fallback))
+    }
 
   /** name → rendered JSON body for each top-level aggregation. */
   def run(df: DataFrame, nodes: Seq[Node],
@@ -314,18 +345,14 @@ object EsAggs {
       metricSubs.flatMap { case (_, m, i) => metricExprs(i, m) }
 
     // terms truncation/order; other buckets keep every non-empty cell.
-    // `totalsFrame` holds a terms agg's per-parent totals (`_gid` = 1)
-    val (keptFrame, totalsFrame: Option[DataFrame]) = bucket match {
+    // Every collect of cells is BOUNDED by the remaining budget + 1 before
+    // it runs — a high-cardinality agg must abort with the limit error, not
+    // run out of memory collecting every bucket first (the +1 row proves
+    // overflow). `totals` are a terms agg's per-parent doc totals.
+    val cells = keyed.groupBy(groupCols: _*).agg(aggExprs.head, aggExprs.tail: _*)
+    def bounded(kept: DataFrame): Seq[Row] = kept.limit(counter.remaining + 1).collect().toSeq
+    val (rows, totals) = (bucket match {
       case Terms(_, size, minDoc, target, asc, _) =>
-        // ONE rollup aggregate computes the per-term cells AND the
-        // per-parent totals that sum_other_doc_count needs (same shape as
-        // Aggs.terms, VERDICT r1): grouping_id 0 = (parents..., term) cell,
-        // 1 = (parents...) total with the term rolled up. Term keys are
-        // non-null by construction (prepare filters), so the gid is
-        // unambiguous.
-        val g = keyed.rollup(groupCols: _*)
-          .agg(aggExprs.head, (aggExprs.tail :+ grouping_id().as("_gid")): _*)
-        val cells = g.filter(col("_gid") === 0 && col("_dc") >= minDoc)
         val ord: Seq[Column] = target match {
           case "_count" =>
             if (asc) Seq(col("_dc").asc, col(kName).asc) else Seq(col("_dc").desc, col(kName).desc)
@@ -333,17 +360,27 @@ object EsAggs {
           case other => throw new IllegalArgumentException(
             s"invalid aggregation request: unknown terms order target `$other`")
         }
-        val kept =
-          if (pathNames.isEmpty) cells.orderBy(ord: _*).limit(size) // TakeOrdered
-          else { // per-parent window over the term HISTOGRAM (bounded)
-            val w = Window.partitionBy(pathNames.map(col): _*).orderBy(ord: _*)
-            cells.withColumn("_rk", row_number().over(w))
-              .filter(col("_rk") <= size).drop("_rk")
+        if (pathNames.isEmpty) {
+          // sum_other_doc_count needs the doc total over ALL cells: a
+          // sum(_dc) observed on the cells the TakeOrdered reads (every one
+          // of them), so the one query scans and shuffles its input once
+          val (rows, total) = withObservedLong(cells, sum(col("_dc")),
+            cells.agg(coalesce(sum(col("_dc")), lit(0L))).head().getLong(0)) { observed =>
+            bounded(observed.filter(col("_dc") >= minDoc).orderBy(ord: _*).limit(size))
           }
-        (kept, Some(g.filter(col("_gid") === 1)))
-      case _ =>
-        (keyed.groupBy(groupCols: _*).agg(aggExprs.head, aggExprs.tail: _*), None)
-    }
+          (rows, Map(Seq.empty[Any] -> total))
+        } else { // per-parent window over the term HISTOGRAM (bounded)
+          val w = Window.partitionBy(pathNames.map(col): _*).orderBy(ord: _*)
+          val rows = bounded(cells.filter(col("_dc") >= minDoc)
+            .withColumn("_rk", row_number().over(w))
+            .filter(col("_rk") <= size).drop("_rk"))
+          // per-parent totals: a second query over the same cells
+          (rows, cells.groupBy(pathNames.map(col): _*).agg(sum(col("_dc"))).collect()
+            .map(r => (0 until pathNames.size).map(r.get) -> r.getLong(pathNames.size)).toMap)
+        }
+      case _ => (bounded(cells), Map.empty[Seq[Any], Long])
+    }): (Seq[Row], Map[Seq[Any], Long])
+    counter.add(rows.size)
 
     // percentile subs: one (path, key, sketch-bin) aggregation each
     val pctBins: Map[Int, Map[Seq[Any], Seq[DdSketch.Bin]]] =
@@ -362,23 +399,6 @@ object EsAggs {
       case n @ Node(nm, _: Bucket, _) => (nm, bucketBodies(keyed, n, pathNames :+ kName, counter), n)
     }
 
-    // collect is BOUNDED by the remaining budget + 1 before it runs — a
-    // high-cardinality agg must abort with the limit error, not OOM the
-    // driver materializing every bucket first (the +1 row proves overflow).
-    // At the top level the single totals row rides in the same query, so
-    // the rollup's exchange is computed once and reused; nested terms keep
-    // their per-parent totals in a query of their own.
-    val bounded = keptFrame.limit(counter.remaining + 1)
-    val (rows, totalRows) = totalsFrame match {
-      case Some(t) if pathNames.isEmpty =>
-        bounded.unionByName(t).collect().toSeq.partition(_.getAs[Number]("_gid").longValue == 0L)
-      case Some(t) => (bounded.collect().toSeq, t.collect().toSeq)
-      case None    => (bounded.collect().toSeq, Nil)
-    }
-    counter.add(rows.size)
-    val totals: Map[Seq[Any], Long] = totalRows.map { r =>
-      (0 until pathNames.size).map(r.get) -> r.getAs[Long]("_dc")
-    }.toMap
     val byParent = rows.groupBy(r => (0 until pathNames.size).map(r.get).toList: Seq[Any])
 
     def subsJson(path: Seq[Any], r: Row): String = {

@@ -138,11 +138,12 @@ object Replication {
       * promoted queue is contiguous with what clients observed. Each shard
       * is resynced onto `newFollower` (bootstrap + replay of the retained
       * records), restoring replication factor 2 before the first
-      * post-failover persist; closed shards stay closed on the new replica. */
+      * post-failover persist. Closed shards stay closed on both nodes: the
+      * new leader fails a persist to one before its WAL append. */
     def promote(newFollower: Follower): Leader = synchronized {
       val l = new Leader(wal, followerId, newFollower)
       shards.toSeq.sortBy(_._1).foreach { case (queueId, open) =>
-        l.adoptShard(queueId)
+        l.adoptShard(queueId, open)
         if (!open) newFollower.closeShard(queueId)
       }
       l
@@ -154,6 +155,8 @@ object Replication {
 
     private var nextSeqno = 0L
     private val shards = scala.collection.mutable.Set.empty[String]
+    // shards adopted closed at failover: persists fail without a WAL append
+    private val closed = scala.collection.mutable.Set.empty[String]
     private val acked = scala.collection.mutable.Map.empty[String, Long]
     private def seqno(): Long = { val s = nextSeqno; nextSeqno += 1; s }
 
@@ -177,8 +180,9 @@ object Replication {
       * SEGMENT-BY-SEGMENT — each file is read exactly once (no quadratic
       * re-reads), replay memory is bounded by the largest original persist
       * batch, and the replica's WAL keeps the leader's segment granularity
-      * so later truncation can reclaim the resynced range in pieces. */
-    private[Replication] def adoptShard(queueId: String): Unit = synchronized {
+      * so later truncation can reclaim the resynced range in pieces. A
+      * closed shard is resynced too, but never accepts a persist. */
+    private[Replication] def adoptShard(queueId: String, open: Boolean): Unit = synchronized {
       wal.createQueue(queueId)
       val ranges = wal.segmentRanges(queueId)
       val floor = ranges.headOption.map(_._1).getOrElse(wal.endPosition(queueId))
@@ -188,7 +192,7 @@ object Replication {
         follower.replicate(leaderId, follower.followerId, seqno(),
           Seq((queueId, from - 1, batch.map(_._2))))
       }
-      shards += queueId
+      if (open) shards += queueId else closed += queueId
       acked(queueId) = wal.endPosition(queueId) - 1 // retained ⇒ leader-acked
     }
 
@@ -201,6 +205,8 @@ object Replication {
       * (positions are never reused) but [[ackedPosition]] never reports
       * it: acks are tracked explicitly, not derived from the raw end. */
     def persist(queueId: String, docs: Seq[String]): Long = synchronized {
+      if (closed(queueId)) throw new IllegalStateException(
+        s"replication failed on $queueId: ${ShardClosed.label} — batch not acked")
       require(shards.contains(queueId), s"unknown shard: $queueId")
       val fromExclusive = wal.endPosition(queueId) - 1
       val (_, last) = wal.ingest(queueId, docs)

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
@@ -40,6 +43,27 @@ trait SparkTestBase extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Leaf file scans in an executed plan, through adaptive query stages. A
+    * reused exchange is a leaf, so a shuffle read twice counts its scan once. */
+  def leafScans(plan: SparkPlan): Int =
+    new AdaptiveSparkPlanHelper {}.collect(plan) { case s: FileSourceScanExec => s }.size
+
+  /** The executed plan of every query `f` ran to completion, drained the
+    * way [[planShape]] drains its job events. */
+  def executedPlans(f: => Unit): Seq[SparkPlan] = {
+    val plans = mutable.Buffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      planShape("executed-plans")(f)
+      plans.synchronized(plans.toList)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   /** Jobs and shuffle-map stages Spark ran for `f`'s jobs, counted by a
     * listener over `f`'s job group. A trailing job in a second group drains

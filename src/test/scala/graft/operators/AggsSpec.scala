@@ -44,6 +44,18 @@ class AggsSpec extends SparkTestBase {
       Aggs.terms(events, col("k"), 2, orderTarget = "avg_price"))
   }
 
+  test("terms: one scan of a Parquet input; a null key is a bucket of its own") {
+    import spark.implicits._
+    val dir = tmpDir("terms-scan")
+    events.select(col("k")).union(Seq[String](null, null, null, null).toDF("k"))
+      .repartition(3).write.mode("overwrite").parquet(dir)
+    val out = Aggs.terms(spark.read.parquet(dir), col("k"), size = 2)
+    val rows = out.collect().map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSeq
+    // null×4, a×3 kept; b×2, c, d left out
+    assert(rows === Seq((None, 4L, 4L), (Some("a"), 3L, 4L)))
+    assert(leafScans(out.queryExecution.executedPlan) === 1)
+  }
+
   test("date_histogram: hard_bounds (epoch-µs, closed) and min_doc_count") {
     // bounds cover only 2024-01-02 (µs): that day's 2 docs remain
     val lo = java.time.Instant.parse("2024-01-02T00:00:00Z").toEpochMilli * 1000L

@@ -236,20 +236,36 @@ class EsApiSpec extends SparkTestBase {
       EsApi.msearchNdjson(indexes, resolver, col("doc_id"),
         "{\"index\": \"a**b\"}\n{}")
     }.getMessage.startsWith("request header contains an invalid index:"))
-    // ANY search-time failure is a per-response 400 entry, not a whole-
-    // request abort: a 3-field sort in the first body must not stop the
-    // second pair from answering
+    // any other search-time failure is a per-response 400 entry, not a
+    // whole-request abort: a sort by a missing field in the first body must
+    // not stop the second pair from answering
     val mixed = Json.parse(EsApi.msearchNdjson(indexes, resolver, col("doc_id"),
       """{"index": "gharchive-1"}
-        |{"sort": ["doc_id", "text", "lang"]}
+        |{"sort": ["no_such_field"]}
         |{"index": "gharchive-2"}
         |{"query": {"match_all": {}}, "size": 0}""".stripMargin))
       .asInstanceOf[Map[String, Any]]("responses").asInstanceOf[Seq[Any]]
       .map(_.asInstanceOf[Map[String, Any]])
     assert(mixed.map(_("status")) === Seq(400.0, 200.0))
     assert(mixed(0)("error").asInstanceOf[Map[String, Any]]("reason").asInstanceOf[String]
-      .contains("sort by field must be up to 2 fields"))
+      .contains("no_such_field"))
     assert(totalOf(mixed(1)) === 1.0)
+  }
+
+  test("_msearch NDJSON: a malformed body, unknown query kind or sort-cap violation aborts the request") {
+    import spark.implicits._
+    val indexes = Seq("gharchive-1" -> Seq((1L, "alpha doc", "en")).toDF("doc_id", "text", "lang"))
+    def msearch(badBody: String): String = EsApi.msearchNdjson(indexes, resolver, col("doc_id"),
+      s"""{"index": "gharchive-1"}
+         |{"query": {"match_all": {}}, "size": 0}
+         |{"index": "gharchive-1"}
+         |$badBody""".stripMargin)
+    // the bad body is the SECOND pair: the valid first pair must not answer
+    intercept[Exception](msearch("""{"query": {"match_all": {}"""))
+    assert(intercept[IllegalArgumentException](msearch("""{"query": {"no_such_kind": {}}}"""))
+      .getMessage === "unsupported ES query kind: no_such_kind")
+    assert(intercept[IllegalArgumentException](msearch("""{"sort": ["doc_id", "text", "lang"]}"""))
+      .getMessage === "requirement failed: sort by field must be up to 2 fields, got 3")
   }
 
   test("selectIndexes: a malformed pattern is rejected even over an EMPTY catalog") {

@@ -137,12 +137,27 @@ class ReplicationSpec extends AnyFunSuite {
     follower.closeShard("q")
     val node3 = new Replication.Follower(wal(), "test-follower", "node-3")
     val promoted = follower.promote(node3)
-    // the new replica reports ShardClosed, so the persist is NOT acked
+    // the promoted leader fails the closed shard, so the persist is NOT acked
     intercept[IllegalStateException](promoted.persist("q", Seq("b")))
     // the bootstrap still aligned the replica's floor past the truncated
     // range — positions would continue at 1, never rewind to 0
     assert(node3.wal.endPosition("q") === 1L)
     assert(node3.wal.fetch("q", -1L, 10).isEmpty)
+  }
+
+  test("a shard closed before failover gets no WAL record on the promoted leader") {
+    val (leader, follower) = pair()
+    leader.openShard("q")
+    leader.openShard("live")
+    leader.persist("q", Seq("a"))
+    follower.closeShard("q")
+    val promoted = follower.promote(new Replication.Follower(wal(), "test-follower", "node-3"))
+    // failed before the local append: no orphaned record on the new leader
+    intercept[IllegalStateException](promoted.persist("q", Seq("b")))
+    assert(promoted.wal.fetch("q", -1L, 10).map(_._2) === Seq("a"))
+    assert(promoted.ackedPosition("q") === 0L)
+    // open shards keep persisting
+    assert(promoted.persist("live", Seq("x")) === 0L)
   }
 
   test("a gap rejection applies NO subrequest (two-phase validation)") {
