@@ -116,7 +116,7 @@ object Aggs {
                 hardBounds: Option[(Double, Double)] = None): DataFrame = {
     // hard_bounds filters VALUES to the closed [min, max] interval before
     // bucketing (aggregation.md:241-249); extended_bounds is presentation
-    // (EsAggResponse.histogram extends the gap-filled range).
+    // (EsAggs extends the gap-filled range when it renders the buckets).
     val clipped = hardBounds.fold(df) { case (lo, hi) =>
       df.filter(value >= lo && value <= hi)
     }
@@ -198,16 +198,6 @@ object Aggs {
       .agg(count(value).as("count"), min(value).as("min"), max(value).as("max"),
            sum(value).as("sum"), avg(value).as("avg"))
 
-  /** `percentiles`: exact via `percentile` (interpolating, same contract as
-    * DuckDB quantile_cont); the reference's sketch-based approximation
-    * (aggregation.md:811-862) maps to `percentile_approx` at scale — both
-    * exposed. */
-  def percentilesExact(df: DataFrame, value: Column, ps: Seq[Double]): DataFrame =
-    df.agg(percentile(value, array(ps.map(lit): _*)).as("values"))
-
-  def percentilesApprox(df: DataFrame, value: Column, ps: Seq[Double]): DataFrame =
-    df.agg(percentile_approx(value, array(ps.map(lit): _*), lit(10000)).as("values"))
-
   /** FindTraceIds analog: top-N group keys by max(ts), with dedup — the one
     * genuinely custom collector of the reference
     * (quickwit-search/src/find_trace_ids_collector.rs:111-140). groupBy+max+
@@ -240,7 +230,12 @@ object Aggs {
   /** start_offset pagination after merge (search.proto:206-211).
     * orderBy + offset + limit plans as a single TakeOrderedAndProject
     * (distributed per-partition top-(offset+k), root merge, driver slice) —
-    * no global single-partition window (VERDICT r1 "wrong" #5). */
+    * no global single-partition window (VERDICT r1 "wrong" #5) — unless the
+    * plan bounds `df`'s row count at or below `offset + k` (a local relation,
+    * a range, a limit; see
+    * [[org.apache.spark.sql.graft.ColumnBridge.rowsBounded]]): the optimizer
+    * then drops the limit, and Spark plans a range-partitioned sort whose
+    * sampling job reads the input twice. */
   def paginate(df: DataFrame, sortCols: Seq[Column], offset: Int, k: Int): DataFrame =
     df.orderBy(sortCols: _*).offset(offset).limit(k)
 }

@@ -24,9 +24,7 @@ object Decontaminate {
   def wordNgrams(text: Column, n: Int): Column = {
     require(n >= 1, s"n-gram size must be >= 1, got $n")
     val ws = QualityFilters.words(lower(coalesce(text, lit(""))))
-    when(size(ws) < n, array().cast("array<string>"))
-      .otherwise(array_distinct(transform(sequence(lit(0), size(ws) - n),
-        i => concat_ws(" ", slice(ws, i + 1, lit(n))))))
+    array_distinct(QualityFilters.ngramsOf(ws, n))
   }
 
   /** Per-document contamination report against a benchmark corpus:

@@ -87,14 +87,6 @@ object Dedup {
         i => array_join(slice(tokens, i + lit(1), lit(n)), " ")),
       g => size(split(g, " ")) === n)
 
-  /** MinHash signature: `numHashes` independent min-values of seeded
-    * xxhash64 over the shingle set. Returns array<bigint>.
-    * (Expression form — fine for few hashes; the pipeline below uses the
-    * explode+aggregate form instead, which stays in whole-stage codegen.) */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), seed =>
-      array_min(transform(shingleCol, s => xxhash64(s, seed))))
-
   /** MinHash signatures via explode + `numHashes` min-aggregates — each
     * aggregate is codegen'd and map-side partial, so this is one narrow pass
     * + one shuffle on doc_id regardless of corpus size. Double hashing: the
@@ -193,17 +185,7 @@ object Dedup {
                           shingleK: Int = 5, numHashes: Int = 32,
                           bands: Int = 8, threshold: Double = 0.9,
                           prefilter: Double = 0.6): DataFrame = {
-    val rows = numHashes / bands
-    val withSig = minhashSignatures(df, id, text, shingleK, numHashes)
-    val cand = lshCandidatePairs(lshBands(withSig, col("doc_id"), col("sig"), bands, rows))
-    val sigs = withSig.select(col("doc_id"), col("sig"))
-    val estOk = cand
-      .join(sigs.toDF("doc_id1", "sig1"), "doc_id1")
-      .join(sigs.toDF("doc_id2", "sig2"), "doc_id2")
-      .withColumn("est",
-        aggregate(zip_with(col("sig1"), col("sig2"), (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / numHashes)
-      .filter(col("est") >= prefilter)
+    val estOk = minhashNearDups(df, id, text, shingleK, numHashes, bands, threshold = prefilter)
       .select("doc_id1", "doc_id2")
     val sh = df.select(id.as("doc_id"), shingles(text, shingleK).as("sh"))
     estOk
@@ -214,43 +196,6 @@ object Dedup {
         col("inter") / (size(col("sh1")) + size(col("sh2")) - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("doc_id1", "doc_id2", "jaccard")
-  }
-
-  /** SimHash-blocking candidates + EXACT distinct-token Jaccard verification
-    * (same rationale as [[minhashVerifiedDups]]: output depends only on the
-    * token sets, not the hash, so it is oracle-checkable). Completeness rests
-    * on every ≥-threshold pair sitting within `maxHamming` of each other —
-    * pinned empirically per corpus by the parity gate. */
-  def simhashVerifiedDups(df: DataFrame, id: Column, tokens: Column,
-                          maxHamming: Int = 3, threshold: Double = 0.95): DataFrame = {
-    val cand = simhashNearDups(df, id, tokens, maxHamming).select("doc_id1", "doc_id2")
-    val tok = df.select(id.as("doc_id"), array_distinct(tokens).as("tk"))
-    cand
-      .join(tok.toDF("doc_id1", "tk1"), "doc_id1")
-      .join(tok.toDF("doc_id2", "tk2"), "doc_id2")
-      .withColumn("inter", size(array_intersect(col("tk1"), col("tk2"))).cast("double"))
-      .withColumn("jaccard",
-        col("inter") / (size(col("tk1")) + size(col("tk2")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_id1", "doc_id2", "jaccard")
-  }
-
-  /** SimHash (64-bit): per token, xxhash64; each bit contributes +1/-1;
-    * sign of the sum per bit position → fingerprint bit. Expressed with
-    * higher-order functions over the token array — one pass, no shuffle. */
-  def simhash(tokens: Column): Column = {
-    val bitSums = aggregate(
-      tokens,
-      array_repeat(lit(0), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (a, bit) => a + when(call_function("shiftright", h, bit.cast("int")).bitwiseAND(1) === 1, 1).otherwise(-1))
-      })
-    aggregate(
-      zip_with(bitSums, sequence(lit(0), lit(63)),
-        (s, bit) => when(s > 0, call_function("shiftleft", lit(1L), bit.cast("int"))).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
   }
 
   /** Hamming distance between two simhash fingerprints. */
@@ -269,23 +214,18 @@ object Dedup {
     call_function("shiftleft", hi, lit(32)).bitwiseOR(lo)
   }
 
-  /** SimHash as a DataFrame aggregation: explode tokens, then 64 codegen'd
-    * `sum(±1)` bit aggregates and one fingerprint-assembly projection —
-    * identical math to `simhash` (same xxhash64, bit order, sign rule) but
-    * ~10× faster than the interpreted nested array lambdas of the
-    * expression form. By default docs with zero tokens vanish (no rows to
-    * aggregate); `keepEmpty = true` restores the expression form's behavior
-    * of fingerprinting them as 0 (so identical empty docs match at hamming
-    * 0), via a cheap filter-scan unioned back in. `tokenHash` swaps the
+  /** SimHash (64-bit) as a DataFrame aggregation: explode tokens, hash each
+    * (xxhash64 by default), let each bit add +1/-1 in 64 codegen'd
+    * `sum(±1)` aggregates, and set the fingerprint bit where a sum is
+    * positive, in one assembly projection. A doc with zero tokens has no
+    * rows to aggregate; a cheap filter-scan unioned back in fingerprints it
+    * as 0, so identical empty docs match at hamming 0. `tokenHash` swaps the
     * per-token hash (e.g. [[md5Hash64]] for oracle-verifiable output).
     * Returns (doc_id, fp). */
   def simhashDf(df: DataFrame, id: Column, tokens: Column,
-                keepEmpty: Boolean = false,
                 tokenHash: Column => Column = xxhash64(_)): DataFrame = {
-    val empties =
-      if (!keepEmpty) None
-      else Some(df.filter(coalesce(size(tokens), lit(0)) === 0)
-        .select(id.as("doc_id"), lit(0L).as("fp")))
+    val empties = df.filter(coalesce(size(tokens), lit(0)) === 0)
+      .select(id.as("doc_id"), lit(0L).as("fp"))
     val h = tokenHash(col("_tok"))
     val bitSums = (0 until 64).map { i =>
       sum(when(call_function("shiftright", h, lit(i)).bitwiseAND(1) === 1, 1)
@@ -298,7 +238,7 @@ object Dedup {
       .groupBy("doc_id")
       .agg(bitSums.head, bitSums.tail: _*)
       .select(col("doc_id"), fp.as("fp"))
-    empties.fold(base)(base.unionByName(_))
+    base.unionByName(empties)
   }
 
   /** SimHash near-dup pairs: block on the 4 16-bit chunks (any pair within
@@ -307,7 +247,7 @@ object Dedup {
   def simhashNearDups(df: DataFrame, id: Column, tokens: Column,
                       maxHamming: Int = 3,
                       tokenHash: Column => Column = xxhash64(_)): DataFrame = {
-    val fp = simhashDf(df, id, tokens, keepEmpty = true, tokenHash)
+    val fp = simhashDf(df, id, tokens, tokenHash)
     val blocks = fp.select(col("doc_id"), col("fp"),
       posexplode(transform(sequence(lit(0), lit(3)),
         b => call_function("shiftright", col("fp"), b.cast("int") * 16).bitwiseAND(0xFFFFL))))

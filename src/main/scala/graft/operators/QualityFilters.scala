@@ -51,12 +51,7 @@ object QualityFilters {
   }
 
   /** Word 2-grams of a document ("w1 w2" strings); empty below 2 words. */
-  def bigrams(text: Column): Column = {
-    val ws = words(text)
-    when(size(ws) < 2, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(ws) - 2),
-        i => concat_ws(" ", element_at(ws, i + 1), element_at(ws, i + 2))))
-  }
+  def bigrams(text: Column): Column = ngramsOf(words(text), 2)
 
   /** Per-document top-2-gram coverage (Gopher's top-n-gram char fraction,
     * n=2): for each doc, the maximum over its 2-grams of

@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
   * `dl = size(tokens)`, `tf = size(filter(tokens, _ === term))` — against
   * the one-row stats frame, broadcast-joined as data ([[withScore]]). The
   * plan has no explode, no groupBy and no score join: scoring adds a
-  * broadcast nested-loop join and a projection, never a shuffle. At
-  * warehouse scale the postings frame comes precomputed from the split
-  * metadata instead — see [[bm25FromPostings]].
+  * broadcast nested-loop join and a projection, never a shuffle.
   *
   * tantivy quantizes doc length through a lossy byte-encoded fieldnorm
   * before scoring (one byte per doc, ~4% relative error above 40 tokens);
@@ -117,54 +115,6 @@ object Scoring {
       call_function("shiftright", j, shift).bitwiseAND(lit(7)).bitwiseOR(lit(8)),
       shift)
     when(dl < 32, dl.cast("bigint")).otherwise(lit(24L) + qj)
-  }
-
-  /** Index-time postings artifact (doc_id, term, tf) — what the packager
-    * persists next to the split metadata (packager.rs:235-238 hotcache +
-    * num_terms; IndexingPipeline.splitAggregates derives its cardinality
-    * stats from the same explode). Written once at indexing time, it lets
-    * [[bm25FromPostings]] score WITHOUT re-tokenizing raw text. */
-  def buildPostings(docs: DataFrame, id: Column, text: Column): DataFrame =
-    docs.select(id.as("doc_id"), explode(Tokenizers.default(text)).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-
-  /** The warehouse-scale scoring path: BM25 over a PRECOMPUTED postings
-    * frame. tf is read, dl = Σ tf per doc, (N, avgdl, df) derive from the
-    * compact postings — the raw-text scan and tokenize pass disappear from
-    * query time entirely. The per-term weight is the same expression as the
-    * inline [[bm25]]'s, so the two agree exactly up to the order the terms
-    * are added in (bit-identical for ≤ 2 terms). */
-  def bm25FromPostings(postings: DataFrame, queryTerms: Seq[String],
-                       k1: Double = DefaultK1, b: Double = DefaultB,
-                       quantizeNorms: Boolean = false): DataFrame = {
-    val dl = postings.groupBy("doc_id").agg(sum("tf").as("dl"))
-    val tf = postings.filter(col("term").isin(queryTerms: _*))
-    scoreFromParts(tf, dl, k1, b, quantizeNorms)
-  }
-
-  /** Postings scoring join: tf (doc_id, term, tf) × df (broadcast) × dl ×
-    * one-row corpus stats (broadcast), then the per-doc sum — every stage a
-    * two-phase hash aggregate or broadcast join. With `quantizeNorms` the
-    * per-doc dl passes through the fieldnorm byte codec, while avgdl stays
-    * exact — tantivy's average_fieldnorm divides the segment's exact
-    * total_num_tokens by doc count (bm25.rs), only the PER-DOC norm is
-    * byte-quantized. */
-  private def scoreFromParts(tf: DataFrame, dl: DataFrame,
-                             k1: Double, b: Double,
-                             quantizeNorms: Boolean = false): DataFrame = {
-    val stats = dl.agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
-    val dlEff =
-      if (quantizeNorms) dl.withColumn("dl", fieldnormQuantize(col("dl"))) else dl
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfreq), "term")
-      .join(dlEff, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("w",
-        col("idf") * (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-      .groupBy("doc_id").agg(sum("w").as("score"))
   }
 
   /** Top-k hits by BM25 score (desc, doc_id asc tie) — `_score` sort. */

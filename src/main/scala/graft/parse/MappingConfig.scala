@@ -164,11 +164,6 @@ object MappingConfig {
     }
   }
 
-  /** Full registry from a doc_mapping config: built-ins + its custom
-    * `tokenizers` entries. */
-  def registryFromJson(json: String): graft.functions.TokenizerRegistry.Registry =
-    new graft.functions.TokenizerRegistry.Registry(tokenizersFromJson(json))
-
   // ---- index-level doc mapper (DefaultDocMapper builder) -----------------
 
   /** The fully-validated index-level mapper — the Spark analog of

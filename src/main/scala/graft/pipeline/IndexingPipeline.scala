@@ -140,17 +140,14 @@ object IndexingPipeline {
   /** Split-level aggregates per routed partition — SplitMetadata analog
     * (A10–A12): num_docs, bytes, time range, capped tag set, exact
     * term_cardinality + postings_count (the merge-pipeline stats,
-    * packager.rs:230-273 + num_terms()). With `withSketches`, each split
-    * also carries an HLL sketch of its distinct terms (`term_hll`), making
-    * CROSS-split term cardinality answerable from merged metadata bytes
-    * (`SplitSketches.mergedEstimate`) — per-split exact counts don't merge
-    * (terms repeat across splits). Off by default: the benched plan is
-    * unchanged. The join of the two builders' outputs plans no exchange over
-    * a frame already hash-partitioned on partition_id. */
-  def splitAggregates(routed: DataFrame, cfg: Config,
-                      withSketches: Boolean = false): DataFrame =
+    * packager.rs:230-273 + num_terms()). Per-split exact counts do not
+    * merge across splits (terms repeat); cross-split distinct counts come
+    * from `SplitSketches.buildPerSplit`. The join of the two builders'
+    * outputs plans no exchange over a frame already hash-partitioned on
+    * partition_id. */
+  def splitAggregates(routed: DataFrame, cfg: Config): DataFrame =
     splitDocStats(routed, cfg)
-      .join(splitTermStats(routed, withSketches), Seq("partition_id"), "left")
+      .join(splitTermStats(routed), Seq("partition_id"), "left")
 
   /** Per-split doc stats: num_docs, bytes, time range and the capped tag set. */
   def splitDocStats(routed: DataFrame, cfg: Config): DataFrame = {
@@ -170,8 +167,7 @@ object IndexingPipeline {
       (size(tools) <= cfg.tagCap).as("tags_complete"))
   }
 
-  /** Per-split term stats: exact term_cardinality and postings_count (plus
-    * `term_hll` with `withSketches`).
+  /** Per-split term stats: exact term_cardinality and postings_count.
     *
     * Two-level term aggregation instead of countDistinct: grouping on
     * (partition, term) first lets the partial aggregate collapse duplicate
@@ -179,18 +175,12 @@ object IndexingPipeline {
     * one agg would plan; cardinality = count of groups, postings = sum of
     * counts. Over a frame hash-partitioned on partition_id both levels plan
     * no exchange. */
-  def splitTermStats(routed: DataFrame, withSketches: Boolean = false): DataFrame = {
-    val termAggs =
-      Seq(count(lit(1)).as("term_cardinality"), sum(col("_tc")).as("postings_count")) ++
-        // second-level rows are one per DISTINCT (partition, term), so the
-        // sketch sees each term once — no postings inflation
-        (if (withSketches) Seq(hll_sketch_agg(col("term"), lit(12)).as("term_hll")) else Nil)
+  def splitTermStats(routed: DataFrame): DataFrame =
     routed
       .select(col("partition_id"), explode(Tokenizers.default(col("text"))).as("term"))
       .groupBy("partition_id", "term").agg(count(lit(1)).as("_tc"))
       .groupBy("partition_id")
-      .agg(termAggs.head, termAggs.tail: _*)
-  }
+      .agg(count(lit(1)).as("term_cardinality"), sum(col("_tc")).as("postings_count"))
 
   /** Deterministic routed-row set checksum over (sink, conv_id, turn_idx) —
     * the routed-row equality check of the BASELINE. Order-independent and

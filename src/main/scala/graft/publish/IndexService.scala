@@ -1,7 +1,8 @@
 package graft.publish
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
 
@@ -82,6 +83,10 @@ object IndexService {
       retention: Option[RetentionPolicy],
       configJson: String,
       sources: Seq[String])
+
+  /** One monitor per index directory (absolute, normalized), shared by every
+    * service in this JVM: each read-modify-write of `sources.json` holds it. */
+  private val sourceLocks = new ConcurrentHashMap[Path, AnyRef]()
 
   /** Default sources added on every create (index.rs:126-147). */
   val DefaultSources: Seq[String] = Seq("_ingest-api-source", "_ingest-source", "_ingest-cli-source")
@@ -294,6 +299,14 @@ final class IndexService(rootDir: String, spark: SparkSession) {
   private def sourcesPath(indexId: String): Path =
     Paths.get(indexDir(indexId), "sources.json")
 
+  /** Runs `f` holding the index's source lock: a read-modify-write of
+    * `sources.json` under it cannot lose a concurrent writer's change. */
+  private def withSourcesLock[T](indexId: String)(f: => T): T =
+    sourceLocks.computeIfAbsent(Paths.get(indexDir(indexId)).toAbsolutePath.normalize,
+      _ => new Object).synchronized(f)
+
+  /** Writes the source list to a temp file and moves it over `sources.json`,
+    * so a reader sees the old list or the new one, never a truncated file. */
   private def writeSources(indexId: String, ss: Seq[SourceConfig]): Unit = {
     val json = graft.util.Json.render(ss.map(s => Map(
       "source_id" -> s.sourceId, "source_type" -> s.sourceType,
@@ -301,22 +314,25 @@ final class IndexService(rootDir: String, spark: SparkSession) {
       "desired_num_pipelines" -> s.desiredNumPipelines.toDouble,
       "max_num_pipelines_per_indexer" -> s.maxNumPipelinesPerIndexer.toDouble,
       "params" -> s.params)))
-    Files.write(sourcesPath(indexId), json.getBytes(StandardCharsets.UTF_8))
+    val dst = sourcesPath(indexId)
+    val tmp = Files.createTempFile(dst.getParent, ".sources-", ".tmp")
+    try {
+      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
-  /** The index's sources; the three Quickwit-managed defaults are seeded
-    * on first access of a pre-sources index (index.rs:126-147 registers
-    * them at create). */
+  /** The index's sources. An index that never stored a list has the three
+    * Quickwit-managed defaults (index.rs:126-147 registers them at create);
+    * they are returned, not written — the first mutation persists them. */
   def listSources(indexId: String): Seq[SourceConfig] = {
     if (!exists(indexId)) throw new IllegalArgumentException(s"index not found: `$indexId`")
     if (!Files.exists(sourcesPath(indexId))) {
       val typeOf = Map("_ingest-api-source" -> "ingest-api",
         "_ingest-source" -> "ingest", "_ingest-cli-source" -> "ingest-cli")
-      val defaults = DefaultSources.map(id =>
+      DefaultSources.map(id =>
         SourceConfig(id, typeOf(id), enabled = true, 1, 1, Map.empty))
-      writeSources(indexId, defaults)
-    }
-    graft.util.Json.parse(
+    } else graft.util.Json.parse(
       new String(Files.readAllBytes(sourcesPath(indexId)), StandardCharsets.UTF_8))
       .asInstanceOf[Seq[Any]].map(_.asInstanceOf[Map[String, Any]]).map { m =>
         SourceConfig(m("source_id").asInstanceOf[String],
@@ -338,11 +354,13 @@ final class IndexService(rootDir: String, spark: SparkSession) {
     catch { case _: IllegalArgumentException =>
       throw new IllegalArgumentException(s"invalid source ID: `${cfg.sourceId}`")
     }
-    val existing = listSources(indexId)
-    if (existing.exists(_.sourceId == cfg.sourceId))
-      throw new IllegalArgumentException(
-        s"source `$indexId/${cfg.sourceId}` already exist(s)")
-    writeSources(indexId, existing :+ cfg)
+    withSourcesLock(indexId) {
+      val existing = listSources(indexId)
+      if (existing.exists(_.sourceId == cfg.sourceId))
+        throw new IllegalArgumentException(
+          s"source `$indexId/${cfg.sourceId}` already exist(s)")
+      writeSources(indexId, existing :+ cfg)
+    }
     cfg
   }
 
@@ -354,14 +372,16 @@ final class IndexService(rootDir: String, spark: SparkSession) {
       throw new IllegalArgumentException(
         s"source `$sourceId` is managed by Quickwit, you cannot enable or disable a source " +
           "managed by Quickwit")
-    val existing = listSources(indexId)
-    val src = existing.find(_.sourceId == sourceId).getOrElse(
-      throw new IllegalArgumentException(s"source `$indexId/$sourceId` do(es) not exist"))
-    val mutated = src.enabled != enable
-    if (mutated)
-      writeSources(indexId, existing.map(s =>
-        if (s.sourceId == sourceId) s.copy(enabled = enable) else s))
-    mutated
+    withSourcesLock(indexId) {
+      val existing = listSources(indexId)
+      val src = existing.find(_.sourceId == sourceId).getOrElse(
+        throw new IllegalArgumentException(s"source `$indexId/$sourceId` do(es) not exist"))
+      val mutated = src.enabled != enable
+      if (mutated)
+        writeSources(indexId, existing.map(s =>
+          if (s.sourceId == sourceId) s.copy(enabled = enable) else s))
+      mutated
+    }
   }
 
   /** delete_source (rest_handler.rs:777-826 + index_metadata delete_source):
@@ -372,15 +392,17 @@ final class IndexService(rootDir: String, spark: SparkSession) {
       throw new IllegalArgumentException(
         s"source `$sourceId` is managed by Quickwit, you cannot delete a source managed by " +
           "Quickwit")
-    val existing = listSources(indexId)
-    if (!existing.exists(_.sourceId == sourceId))
-      throw new IllegalArgumentException(s"source `$indexId/$sourceId` do(es) not exist")
-    // checkpoint FIRST, source list second: if the write never happens
-    // (crash), a listed source with a reset checkpoint is a valid state —
-    // the reverse order could leave a DELETED source whose checkpoint
-    // survives (the reference removes both in one metastore mutation)
-    resetSourceCheckpoint(indexId, sourceId)
-    writeSources(indexId, existing.filterNot(_.sourceId == sourceId))
+    withSourcesLock(indexId) {
+      val existing = listSources(indexId)
+      if (!existing.exists(_.sourceId == sourceId))
+        throw new IllegalArgumentException(s"source `$indexId/$sourceId` do(es) not exist")
+      // checkpoint FIRST, source list second: if the write never happens
+      // (crash), a listed source with a reset checkpoint is a valid state —
+      // the reverse order could leave a DELETED source whose checkpoint
+      // survives (the reference removes both in one metastore mutation)
+      resetSourceCheckpoint(indexId, sourceId)
+      writeSources(indexId, existing.filterNot(_.sourceId == sourceId))
+    }
   }
 
   /** reset_source_checkpoint (file_backed_index/mod.rs:491-493): drop the
@@ -388,8 +410,12 @@ final class IndexService(rootDir: String, spark: SparkSession) {
     * that source starts from the beginning; no error for an unknown id
     * (reset_source returns a mutation bool). Commits through the same CAS
     * as any publish; a lost race RETRIES against the fresh snapshot (the
-    * removal is key-local, so it composes with any concurrent publish). */
-  def resetSourceCheckpoint(indexId: String, sourceId: String): Boolean = {
+    * removal is key-local, so it composes with any concurrent publish). It
+    * holds the source lock, so it never interleaves with a [[deleteSource]]. */
+  def resetSourceCheckpoint(indexId: String, sourceId: String): Boolean =
+    withSourcesLock(indexId)(resetCheckpoint(indexId, sourceId))
+
+  private def resetCheckpoint(indexId: String, sourceId: String): Boolean = {
     if (!exists(indexId)) throw new IllegalArgumentException(s"index not found: `$indexId`")
     val store = new Manifest.Store(indexDir(indexId))
     val MaxRetries = 16

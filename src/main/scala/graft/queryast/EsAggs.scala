@@ -1,6 +1,6 @@
 package graft.queryast
 
-import graft.operators.{Aggs, DdSketch, EsAggResponse => R}
+import graft.operators.{Aggs, DdSketch}
 import graft.util.Json
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
@@ -9,7 +9,11 @@ import org.apache.spark.sql.types.ArrayType
 
 /** ES aggregation-REQUEST compiler: the `aggs` body of a `_search` request
   * → one Spark aggregation plan per top-level aggregation → the ES JSON
-  * response body (rendering shared with [[graft.operators.EsAggResponse]]).
+  * response body, rendered here from the collected bucket cells (the
+  * reference converts merged intermediate aggs into the ES body once, at
+  * the root). ES renders gap-filled histograms and declared-but-empty range
+  * buckets; the aggregation only materializes non-empty groups, so the
+  * fill happens in rendering.
   *
   * This is the request side of the reference's aggregation path: the ES
   * handler deserializes `aggs` into tantivy's aggregation tree and runs it
@@ -59,7 +63,7 @@ object EsAggs {
   final case class DateHistogram(field: String, fixedInterval: String,
                                  offset: String,
                                  keyed: Boolean = false) extends Bucket
-  final case class RangeB(field: String, ranges: Seq[R.RangeSpec]) extends Bucket
+  final case class RangeB(field: String, ranges: Seq[RangeSpec]) extends Bucket
 
   sealed trait Metric extends Agg { def field: String }
   final case class Avg(field: String) extends Metric
@@ -72,6 +76,9 @@ object EsAggs {
                                keyed: Boolean) extends Metric
 
   final case class Node(name: String, agg: Agg, subs: Seq[Node])
+
+  /** One declared range bucket: ES keeps declared-but-empty ranges. */
+  final case class RangeSpec(key: String, from: Option[Double], to: Option[Double])
 
   private val Supported = Seq("range", "histogram", "date_histogram", "terms",
     "avg", "value_count", "max", "min", "stats", "sum", "percentiles")
@@ -116,8 +123,14 @@ object EsAggs {
             val o = b.asInstanceOf[Obj]
             (o("min").asInstanceOf[Double], o("max").asInstanceOf[Double])
           }
+          val minDocCount = dbl("min_doc_count", 0).toLong
+          val extended = bounds("extended_bounds")
+          // extended_bounds only adds empty buckets, which min_doc_count > 0
+          // would drop again; the reference forbids the pair
+          require(minDocCount == 0L || extended.isEmpty,
+            "extended_bounds cannot be set in conjunction with min_doc_count > 0")
           Histogram(fld, p("interval").asInstanceOf[Double], dbl("offset", 0.0),
-            dbl("min_doc_count", 0).toLong, bounds("hard_bounds"), bounds("extended_bounds"),
+            minDocCount, bounds("hard_bounds"), extended,
             p.get("keyed").exists(_.asInstanceOf[Boolean]))
         case "date_histogram" =>
           DateHistogram(fld, p("fixed_interval").asInstanceOf[String],
@@ -130,7 +143,7 @@ object EsAggs {
             val to = o.get("to").map(_.asInstanceOf[Double])
             val key = o.get("key").map(_.asInstanceOf[String]).getOrElse(
               s"${from.map(_.toString).getOrElse("*")}-${to.map(_.toString).getOrElse("*")}")
-            R.RangeSpec(key, from, to)
+            RangeSpec(key, from, to)
           }
           RangeB(fld, ranges)
         case "avg"         => Avg(fld)
@@ -168,7 +181,7 @@ object EsAggs {
       df.filter(EsDsl.fromParsed(q, resolver.defaultFields).toColumn(resolver))
     }.getOrElse(df)
     val nodes = m.get("aggs").orElse(m.get("aggregations")).map(parseAggs).getOrElse(Nil)
-    R.response(run(filtered, nodes))
+    response(run(filtered, nodes))
   }
 
   /** Runs `query` over `frame` with `metric`, a long aggregate over
@@ -239,12 +252,12 @@ object EsAggs {
 
   private def metricBody(i: Int, m: Metric, r: Row, bins: Seq[DdSketch.Bin]): String = m match {
     case _: Avg | _: Min | _: Max =>
-      R.singleValue(Option(r.getAs[Any](s"_m$i")).map(_.asInstanceOf[Double]))
-    case _: Sum        => R.singleValue(Some(r.getAs[Double](s"_m$i")))
-    case _: ValueCount => R.valueCount(r.getAs[Long](s"_m$i"))
+      singleValue(Option(r.getAs[Any](s"_m$i")).map(_.asInstanceOf[Double]))
+    case _: Sum        => singleValue(Some(r.getAs[Double](s"_m$i")))
+    case _: ValueCount => valueCount(r.getAs[Long](s"_m$i"))
     case _: Stats =>
       val c = r.getAs[Long](s"_m${i}_count")
-      R.statsValues(c,
+      statsValues(c,
         Option(r.getAs[Any](s"_m${i}_min")).map(_.asInstanceOf[Double]),
         Option(r.getAs[Any](s"_m${i}_max")).map(_.asInstanceOf[Double]),
         r.getAs[Double](s"_m${i}_sum"),
@@ -254,19 +267,19 @@ object EsAggs {
   }
 
   private def emptyMetricBody(m: Metric): String = m match {
-    case _: Avg | _: Min | _: Max => R.singleValue(None)
-    case _: Sum                   => R.singleValue(Some(0.0))
-    case _: ValueCount            => R.valueCount(0L)
-    case _: Stats                 => R.statsValues(0L, None, None, 0.0, None)
+    case _: Avg | _: Min | _: Max => singleValue(None)
+    case _: Sum                   => singleValue(Some(0.0))
+    case _: ValueCount            => valueCount(0L)
+    case _: Stats                 => statsValues(0L, None, None, 0.0, None)
     case Percentiles(_, ps, keyed) => percentilesBody(ps, ps.map(_ => None), keyed)
   }
 
   private def percentilesBody(ps: Seq[Double], vs: Seq[Option[Double]], keyed: Boolean): String = {
-    def v(o: Option[Double]) = o.map(R.num).getOrElse("null")
+    def v(o: Option[Double]) = o.map(num).getOrElse("null")
     if (keyed)
-      s"""{"values":{${ps.zip(vs).map { case (p, o) => s"${Json.quote(R.num(p))}:${v(o)}" }.mkString(",")}}}"""
+      s"""{"values":{${ps.zip(vs).map { case (p, o) => s"${Json.quote(num(p))}:${v(o)}" }.mkString(",")}}}"""
     else
-      s"""{"values":[${ps.zip(vs).map { case (p, o) => s"""{"key":${R.num(p)},"value":${v(o)}}""" }.mkString(",")}]}"""
+      s"""{"values":[${ps.zip(vs).map { case (p, o) => s"""{"key":${num(p)},"value":${v(o)}}""" }.mkString(",")}]}"""
   }
 
   /** Bucket-key source frame + key expression; working columns are
@@ -427,8 +440,8 @@ object EsAggs {
     case _: Terms => """{"buckets":[],"doc_count_error_upper_bound":0,"sum_other_doc_count":0}"""
     case RangeB(_, ranges) =>
       val bs = ranges.map { rs =>
-        val fromJ = rs.from.map(f => s""","from":${R.num(f)}""").getOrElse("")
-        val toJ = rs.to.map(t => s""","to":${R.num(t)}""").getOrElse("")
+        val fromJ = rs.from.map(f => s""","from":${num(f)}""").getOrElse("")
+        val toJ = rs.to.map(t => s""","to":${num(t)}""").getOrElse("")
         s"""{"doc_count":0$fromJ,"key":${Json.quote(rs.key)}$toJ}"""
       }.mkString(",")
       s"""{"buckets":[$bs]}"""
@@ -460,8 +473,8 @@ object EsAggs {
         val bs: Seq[(String, String)] =
           if (minDoc > 0L)
             byKey.toSeq.sortBy(_._1).collect { case (k, r) if dc(r) >= minDoc =>
-              R.num(k) ->
-                s"""{"doc_count":${dc(r)},"key":${R.num(k)}${subsJson(path :+ (k: Any), r)}}"""
+              num(k) ->
+                s"""{"doc_count":${dc(r)},"key":${num(k)}${subsJson(path :+ (k: Any), r)}}"""
             }
           else {
             // Snap with the offset so gap-fill keys land on the same grid as the
@@ -482,11 +495,11 @@ object EsAggs {
             range.toSeq.flatMap { case (lo, hi) =>
               (lo to hi).map { i =>
                 byIdx.get(i) match {
-                  case Some((k, r)) => R.num(k) ->
-                    s"""{"doc_count":${dc(r)},"key":${R.num(k)}${subsJson(path :+ (k: Any), r)}}"""
+                  case Some((k, r)) => num(k) ->
+                    s"""{"doc_count":${dc(r)},"key":${num(k)}${subsJson(path :+ (k: Any), r)}}"""
                   case None =>
                     val k = i * interval + offset
-                    R.num(k) -> s"""{"doc_count":0,"key":${R.num(k)}$emptySubsJson}"""
+                    num(k) -> s"""{"doc_count":0,"key":${num(k)}$emptySubsJson}"""
                 }
               }
             }
@@ -511,9 +524,9 @@ object EsAggs {
             // date_histogram case), else the numeric key's rendering
             iso -> (byMs.get(ms) match {
               case Some(r) =>
-                s"""{"doc_count":${dc(r)},"key":${R.num(ms.toDouble)},"key_as_string":${Json.quote(iso)}${subsJson(path :+ key(r), r)}}"""
+                s"""{"doc_count":${dc(r)},"key":${num(ms.toDouble)},"key_as_string":${Json.quote(iso)}${subsJson(path :+ key(r), r)}}"""
               case None =>
-                s"""{"doc_count":0,"key":${R.num(ms.toDouble)},"key_as_string":${Json.quote(iso)}$emptySubsJson}"""
+                s"""{"doc_count":0,"key":${num(ms.toDouble)},"key_as_string":${Json.quote(iso)}$emptySubsJson}"""
             })
           }
         s"""{"buckets":${bucketsJson(bs, keyed)}}"""
@@ -521,8 +534,8 @@ object EsAggs {
       case RangeB(_, ranges) =>
         val byLabel = cells.map(r => key(r).asInstanceOf[String] -> r).toMap
         val bs = ranges.map { rs =>
-          val fromJ = rs.from.map(f => s""","from":${R.num(f)}""").getOrElse("")
-          val toJ = rs.to.map(t => s""","to":${R.num(t)}""").getOrElse("")
+          val fromJ = rs.from.map(f => s""","from":${num(f)}""").getOrElse("")
+          val toJ = rs.to.map(t => s""","to":${num(t)}""").getOrElse("")
           byLabel.get(rs.key) match {
             case Some(r) =>
               s"""{"doc_count":${dc(r)}$fromJ,"key":${Json.quote(rs.key)}$toJ${subsJson(path :+ key(r), r)}}"""
@@ -532,6 +545,28 @@ object EsAggs {
         s"""{"buckets":[${bs.mkString(",")}]}"""
     }
   }
+
+  /** ES renders numeric keys as JSON doubles (1420070400000.0). */
+  private def num(d: Double): String =
+    if (d.isWhole && math.abs(d) < 1e15) s"${d.toLong}.0" else d.toString
+
+  /** Full `{"aggregations": {...}}` envelope. */
+  def response(aggs: Seq[(String, String)]): String =
+    s"""{"aggregations":{${aggs.map { case (n, b) => s"${Json.quote(n)}:$b" }.mkString(",")}}}"""
+
+  /** stats body (docs whose field is null are excluded, per ES). */
+  private def statsValues(count: Long, mn: Option[Double], mx: Option[Double],
+                          sm: Double, av: Option[Double]): String = {
+    def opt(v: Option[Double]) = v.map(num).getOrElse("null")
+    s"""{"avg":${opt(av)},"count":$count,"max":${opt(mx)},"min":${opt(mn)},"sum":${num(sm)}}"""
+  }
+
+  /** Single-value metric body (`avg`/`min`/`max`/`sum`): {"value": x|null}. */
+  private def singleValue(v: Option[Double]): String =
+    s"""{"value":${v.map(num).getOrElse("null")}}"""
+
+  /** value_count body — ES renders the count as an integer. */
+  private def valueCount(n: Long): String = s"""{"value":$n}"""
 
   /** `keyed: true` renders the bucket list as a hashmap keyed by each
     * bucket's `key` (aggregation.md "keyed" parameter on histogram and
@@ -544,9 +579,9 @@ object EsAggs {
 
   private def keyJson(k: Any): String = k match {
     case s: String => Json.quote(s)
-    case d: Double => R.num(d)
-    case l: Long   => R.num(l.toDouble)
-    case i: Int    => R.num(i.toDouble)
+    case d: Double => num(d)
+    case l: Long   => num(l.toDouble)
+    case i: Int    => num(i.toDouble)
     case other     => Json.quote(String.valueOf(other))
   }
 }

@@ -87,23 +87,8 @@ object EsApi {
     * the frame's columns (to_json of the row struct). */
   def search(df: DataFrame, resolver: FieldResolver, id: Column,
              bodyJson: String): String =
-    search(df, resolver, id, bodyJson, cursorOverride = None,
-      extraSort = Nil, includeAggs = true)
-
-  /** `_search` with the scroll hooks: `cursorOverride` replaces the body's
-    * `search_after` (the scroll context's stored cursor), `extraSort`
-    * appends trailing tiebreak criteria (a unique id sort makes the scroll
-    * cursor a total order — ties can never drop rows),
-    * `includeAggs = false` skips aggregations (ES serves them only on the
-    * FIRST scroll response), and `totalOverride` reuses the total fixed at
-    * scroll-open time instead of re-counting per page. */
-  def search(df: DataFrame, resolver: FieldResolver, id: Column,
-             bodyJson: String, cursorOverride: Option[Seq[Any]],
-             extraSort: Seq[(String, Boolean)],
-             includeAggs: Boolean,
-             totalOverride: Option[Long] = None): String =
-    searchPage(df, resolver, id, bodyJson, cursorOverride, extraSort,
-      includeAggs, totalOverride).rendered
+    searchPage(df, resolver, id, bodyJson, cursorOverride = None,
+      extraSort = Nil, includeAggs = true).rendered
 
   /** `_search` with URL QUERY-STRING parameters
     * (build_request_for_es_api, rest_handler.rs:160-214; param model
@@ -194,6 +179,14 @@ object EsApi {
   /** Name of the per-request thread that runs a `_search`'s aggregations. */
   private[queryast] val AggsThreadName = "es-search-aggs"
 
+  /** `_search` with the scroll hooks: `cursorOverride` replaces the body's
+    * `search_after` (the scroll context's stored cursor), `extraSort`
+    * appends trailing tiebreak criteria (a unique id sort makes the scroll
+    * cursor a total order — ties can never drop rows),
+    * `includeAggs = false` skips aggregations (ES serves them only on the
+    * FIRST scroll response), `totalOverride` reuses the total fixed at
+    * scroll-open time instead of re-counting per page, and `statsOverride`
+    * reuses the opening page's BM25 corpus-stats frame. */
   def searchPage(df: DataFrame, resolver: FieldResolver, id: Column,
                  bodyJson: String, cursorOverride: Option[Seq[Any]],
                  extraSort: Seq[(String, Boolean)],
@@ -242,7 +235,7 @@ object EsApi {
       (r: Runnable) => new Thread(r, AggsThreadName)))
     try {
       val aggs = aggNodes.zip(aggsPool).map { case (nodes, pool) =>
-        Future(graft.operators.EsAggResponse.response(EsAggs.run(filtered, nodes)))(
+        Future(EsAggs.response(EsAggs.run(filtered, nodes)))(
           ExecutionContext.fromExecutor(pool))
       }
       val hits = Try(searchHits(df, filtered, id, m, astOpt, size, from, sortSpec, cursor,

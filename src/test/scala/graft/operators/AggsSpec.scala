@@ -123,12 +123,6 @@ class AggsSpec extends SparkTestBase {
     assert(r.getDouble(3) === 45.0 && r.getDouble(4) === 15.0)
   }
 
-  test("percentiles: exact matches interpolated quantiles") {
-    val vals = Aggs.percentilesExact(events, col("v"), Seq(0.0, 0.5, 1.0))
-      .collect()(0).getAs[scala.collection.Seq[Double]](0)
-    assert(vals === Seq(5.0, 35.0, 65.0))
-  }
-
   test("topGroupsByMaxTs: FindTraceIds semantics (desc max_ts, key tie)") {
     val out = Aggs.topGroupsByMaxTs(events, col("k"), col("ts"), 2)
       .collect().map(_.getString(0)).toSeq

@@ -2,11 +2,31 @@ package graft.operators
 
 import graft.SparkTestBase
 import graft.functions.Tokenizers
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Dedup-operator tests: exact, shingles, MinHash+LSH, SimHash, n-gram
   * Jaccard — the training-data-pipeline staples. */
 class DedupSpec extends SparkTestBase {
+
+  /** SimHash (64-bit) as one column expression: per token, xxhash64; each
+    * bit contributes +1/-1; the sign of the sum per bit position is the
+    * fingerprint bit. Higher-order functions over the token array, kept
+    * here as the bit-for-bit reference for [[Dedup.simhashDf]]. */
+  private def simhash(tokens: Column): Column = {
+    val bitSums = aggregate(
+      tokens,
+      array_repeat(lit(0), 64),
+      (acc, t) => {
+        val h = xxhash64(t)
+        zip_with(acc, sequence(lit(0), lit(63)),
+          (a, bit) => a + when(call_function("shiftright", h, bit.cast("int")).bitwiseAND(1) === 1, 1).otherwise(-1))
+      })
+    aggregate(
+      zip_with(bitSums, sequence(lit(0), lit(63)),
+        (s, bit) => when(s > 0, call_function("shiftleft", lit(1L), bit.cast("int"))).otherwise(lit(0L))),
+      lit(0L), (acc, v) => acc.bitwiseOR(v))
+  }
 
   test("exact dedup groups identical texts, keeps lowest id") {
     import spark.implicits._
@@ -67,7 +87,7 @@ class DedupSpec extends SparkTestBase {
       (3L, "dog lazy the over jumps fox brown quick the"), // permutation — same bag
       (4L, "entirely unrelated words describing database internals stuff")
     ).toDF("doc_id", "text").withColumn("tokens", Tokenizers.default(col("text")))
-    val fps = df.select(col("doc_id"), Dedup.simhash(col("tokens")).as("fp"))
+    val fps = df.select(col("doc_id"), simhash(col("tokens")).as("fp"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fps(1L) === fps(2L))
     assert(fps(1L) === fps(3L)) // simhash is order-insensitive
@@ -195,10 +215,10 @@ class DedupSpec extends SparkTestBase {
     assert(pairs.subsetOf(planted5), s"non-planted pair matched: ${pairs -- planted5}")
     assert((pairs & planted5).size >= 3, s"recall too low: found $pairs")
 
-    // ADVICE r1: empty-token docs fingerprint as 0 when keepEmpty = true
+    // ADVICE r1: empty-token docs fingerprint as 0
     val withEmpty = Seq((1L, Seq("a", "b")), (2L, Seq.empty[String]), (3L, Seq.empty[String]))
       .toDF("doc_id", "tokens")
-    val fps = Dedup.simhashDf(withEmpty, col("doc_id"), col("tokens"), keepEmpty = true)
+    val fps = Dedup.simhashDf(withEmpty, col("doc_id"), col("tokens"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fps(2L) === 0L && fps(3L) === 0L)
     val emptyPair = Dedup.simhashNearDups(withEmpty, col("doc_id"), col("tokens"), 0)

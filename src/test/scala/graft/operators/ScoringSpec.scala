@@ -33,20 +33,6 @@ class ScoringSpec extends SparkTestBase {
     assert(top === Seq(1L, 2L))
   }
 
-  test("precomputed-postings path scores identically to the inline path") {
-    val inline = Scoring.bm25(corpus, col("doc_id"), col("text"), Seq("spark", "planner"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // postings written at index time, read back at query time (the
-    // warehouse shape: no raw-text scan in the scoring job)
-    val dir = tmpDir("postings")
-    Scoring.buildPostings(corpus, col("doc_id"), col("text"))
-      .write.mode("overwrite").parquet(dir)
-    val fromPostings = Scoring.bm25FromPostings(
-      spark.read.parquet(dir), Seq("spark", "planner"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(fromPostings === inline)
-  }
-
   test("rarer terms outweigh common ones (idf)") {
     import spark.implicits._
     val df = Seq(

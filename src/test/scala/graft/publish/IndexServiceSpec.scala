@@ -155,6 +155,46 @@ class IndexServiceSpec extends SparkTestBase {
       "delete a source managed by Quickwit")
   }
 
+  test("source management: concurrent createSource calls of distinct ids all land") {
+    val svc = new IndexService(tmpDir("idx-src-race"), spark)
+    val threads = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      (1 to 5).foreach { round =>
+        val id = s"race-index-$round"
+        svc.createIndex(ValidConfig.replace("my-index", id))
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val calls = (0 until threads).map { i =>
+          pool.submit(() => {
+            start.await()
+            svc.createSource(id,
+              s"""{"source_id": "void-$i", "source_type": "void", "params": {}}""")
+          })
+        }
+        start.countDown()
+        val failures = calls.flatMap(c => scala.util.Try(c.get()).failed.toOption)
+        assert(failures.isEmpty, s"round $round: ${failures.map(_.getCause)}")
+        val listed = svc.listSources(id).map(_.sourceId)
+        assert(listed.toSet === (IndexService.DefaultSources ++ (0 until threads).map(i => s"void-$i")).toSet,
+          s"round $round lost a source")
+        assert(listed.size === IndexService.DefaultSources.size + threads)
+      }
+    } finally pool.shutdownNow()
+  }
+
+  test("source management: listSources writes nothing on an index without sources") {
+    val svc = new IndexService(tmpDir("idx-src-read"), spark)
+    svc.createIndex(ValidConfig)
+    val path = java.nio.file.Paths.get(svc.indexDir("my-index"), "sources.json")
+    assert(svc.listSources("my-index").map(_.sourceId) === IndexService.DefaultSources)
+    assert(!java.nio.file.Files.exists(path))
+    // the first mutation persists the defaults beside the new source
+    svc.createSource("my-index", """{"source_id": "void-source", "source_type": "void", "params": {}}""")
+    assert(java.nio.file.Files.exists(path))
+    assert(svc.listSources("my-index").map(_.sourceId) ===
+      IndexService.DefaultSources :+ "void-source")
+  }
+
   test("create → ingest → describe → clear → re-ingest → delete") {
     val root = tmpDir("idx-svc")
     val svc = new IndexService(root, spark)

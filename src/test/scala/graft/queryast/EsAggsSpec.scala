@@ -172,6 +172,38 @@ class EsAggsSpec extends SparkTestBase {
     assert(buckets.count(_("doc_count") !== 0.0) === 2)
   }
 
+  test("histogram: extended_bounds narrower than the data range change nothing") {
+    // extended_bounds "can only be used to extend the value range"
+    // (aggregation.md:266-289): data keys 0..100 already cover [50, 50]
+    def body(extra: String) = EsAggs.search(docs, resolver,
+      s"""{"aggs":{"m":{"histogram":{"field":"response","interval":50$extra}}}}""")
+    assert(Json.parse(body(""","extended_bounds":{"min":50,"max":50}""")) === Json.parse(body("")))
+  }
+
+  test("histogram: min_doc_count > 0 turns gap-filling off") {
+    // golden 7's interior empty bucket (key 50) is not rendered
+    check(
+      """{"aggs":{"metrics":{"histogram":{"field":"response","interval":50,"min_doc_count":1}}}}""",
+      """{"metrics":{"buckets":[{"doc_count":4,"key":0.0},{"doc_count":3,"key":100.0}]}}""")
+  }
+
+  test("histogram: extended_bounds with min_doc_count > 0 is rejected before any job runs") {
+    // extended_bounds only adds empty buckets, which min_doc_count > 0 drops
+    // again; the reference forbids the pair
+    val agg = """{"h":{"histogram":{"field":"response","interval":50,"min_doc_count":1,
+                |"extended_bounds":{"min":0,"max":200}}}}""".stripMargin
+    val msg = "extended_bounds cannot be set in conjunction with min_doc_count > 0"
+    assert(intercept[IllegalArgumentException](EsAggs.parse(agg)).getMessage.contains(msg))
+    var failure: Option[Throwable] = None
+    val (jobs, _) = planShape("histogram-bounds-rejected") {
+      failure = scala.util.Try(EsApi.search(docs, resolver,
+        org.apache.spark.sql.functions.col("id"), s"""{"size":1,"aggs":$agg}""")).failed.toOption
+    }
+    assert(failure.exists(e => e.isInstanceOf[IllegalArgumentException] && e.getMessage.contains(msg)),
+      s"_search accepted the pair: $failure")
+    assert(jobs === 0)
+  }
+
   test("unknown aggregation variant reproduces the reference error (root.rs:3513-3517)") {
     val e = intercept[IllegalArgumentException] {
       EsAggs.parse("""{"x":{"termss":{"field":"host"}}}""")
