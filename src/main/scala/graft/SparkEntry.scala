@@ -237,6 +237,53 @@ object SparkEntry {
     "(VALUES ('purchase','sink_commerce'),('view','sink_web'),('click','sink_web'),('logger','sink_errors')) AS dim(eff_tool, sink)"
 
   private val docResolver = FieldResolver(textFields = Set("text"), defaultFields = Seq("text"))
+  private val noTextResolver = FieldResolver(Set.empty, Nil)
+
+  private type JsonObj = Map[String, Any]
+
+  private def parseObj(rendered: String): JsonObj =
+    graft.util.Json.parse(rendered).asInstanceOf[JsonObj]
+
+  /** `hits.hits` of a parsed `_search` response. */
+  private def hitsOf(response: JsonObj): Seq[JsonObj] =
+    response("hits").asInstanceOf[JsonObj]("hits").asInstanceOf[Seq[Any]]
+      .map(_.asInstanceOf[JsonObj])
+
+  /** The rendered body of one aggregation `agg` over `df`, sent through
+    * `_search`'s aggregation compiler ([[graft.queryast.EsAggs.search]]) and
+    * read back out of the response JSON. */
+  private def aggBody(df: DataFrame, agg: String): JsonObj =
+    parseObj(graft.queryast.EsAggs.search(df, noTextResolver,
+      s"""{"aggs": {"a": $agg}}"""))("aggregations")
+      .asInstanceOf[JsonObj]("a").asInstanceOf[JsonObj]
+
+  /** Each response of a rendered `_msearch`, and a response's total. */
+  private def msearchResponses(rendered: String): Seq[JsonObj] =
+    parseObj(rendered)("responses").asInstanceOf[Seq[Any]].map(_.asInstanceOf[JsonObj])
+
+  private def totalOf(response: JsonObj): Option[Long] =
+    response.get("hits").map(h => asLong(h.asInstanceOf[JsonObj]("total").asInstanceOf[JsonObj]("value")))
+
+  private def buckets(body: JsonObj): Seq[JsonObj] =
+    body("buckets").asInstanceOf[Seq[Any]].map(_.asInstanceOf[JsonObj])
+
+  private def asLong(v: Any): Long = v.asInstanceOf[Double].toLong
+
+  /** A served `terms` aggregation as (key, doc_count, sum_other_doc_count). */
+  private def termsRows(s: SparkSession, df: DataFrame, agg: String): DataFrame = {
+    import s.implicits._
+    val body = aggBody(df, agg)
+    val other = asLong(body("sum_other_doc_count"))
+    buckets(body).map(b => (b("key").asInstanceOf[String], asLong(b("doc_count")), other))
+      .toDF("key", "doc_count", "sum_other_doc_count")
+  }
+
+  /** A served `histogram` aggregation as (key, doc_count). */
+  private def histogramRows(s: SparkSession, df: DataFrame, agg: String): DataFrame = {
+    import s.implicits._
+    buckets(aggBody(df, agg)).map(b => (b("key").asInstanceOf[Double], asLong(b("doc_count"))))
+      .toDF("key", "doc_count")
+  }
 
   /** Shared ANN inputs: corpus + first-5 query vectors, double precision. */
   private def annInputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
@@ -503,10 +550,10 @@ object SparkEntry {
     Query("pipe_split_stats", (s, d) => {
       val tr = transcripts(s, d).filter(col("text").isNotNull)
         .withColumn("partition_id", substring(col("conv_id"), 5, 20).cast("long") % 8)
-      val docStats = tr.groupBy("partition_id")
-        .agg(count(lit(1)).as("num_docs"),
-             sum(octet_length(col("text")).cast("long")).as("uncompressed_bytes"),
-             min(col("ts")).as("min_ts"), max(col("ts")).as("max_ts"))
+      val docStats = IndexingPipeline.splitDocStats(tr, IndexingPipeline.Config())
+        .select(col("partition_id"), col("num_docs"),
+          col("uncompressed_docs_size_in_bytes").as("uncompressed_bytes"),
+          col("time_range_start").as("min_ts"), col("time_range_end").as("max_ts"))
       docStats.join(IndexingPipeline.splitTermStats(tr), Seq("partition_id"))
         .orderBy("partition_id")
     },
@@ -726,10 +773,13 @@ object SparkEntry {
         |  AND NOT source = 'src3'""".stripMargin),
 
     // ---- aggregations ---------------------------------------------------
+    // Each `a_*` query below sends an ES `aggs` body through `_search`'s
+    // aggregation compiler and reads the buckets back out of the rendered
+    // JSON. Equal counts order by key DESCENDING, as the reference does.
     Query("a_terms", (s, d) =>
-      Aggs.terms(t(s, d, "events"), col("event_type"), size = 3),
+      termsRows(s, t(s, d, "events"), """{"terms": {"field": "event_type", "size": 3}}"""),
       """WITH c AS (SELECT event_type AS key, CAST(count(*) AS BIGINT) AS doc_count FROM events GROUP BY 1),
-        |top AS (SELECT * FROM c ORDER BY doc_count DESC, key ASC LIMIT 3)
+        |top AS (SELECT * FROM c ORDER BY doc_count DESC, key DESC LIMIT 3)
         |SELECT key, doc_count,
         |  CAST((SELECT sum(doc_count) FROM c) - (SELECT sum(doc_count) FROM top) AS BIGINT) AS sum_other_doc_count
         |FROM top""".stripMargin),
@@ -737,8 +787,9 @@ object SparkEntry {
     // terms ordered by _key asc with min_doc_count filtering
     // (aggregation.md:542-560); dropped terms flow into sum_other_doc_count
     Query("a_terms_order", (s, d) =>
-      Aggs.terms(t(s, d, "events"), col("event_type"), size = 3,
-        minDocCount = 2L, orderTarget = "_key", orderAsc = true),
+      termsRows(s, t(s, d, "events"),
+        """{"terms": {"field": "event_type", "size": 3, "min_doc_count": 2,
+          |  "order": {"_key": "asc"}}}""".stripMargin),
       """WITH c AS (SELECT event_type AS key, CAST(count(*) AS BIGINT) AS doc_count
         |           FROM events GROUP BY 1),
         |t AS (SELECT CAST(sum(doc_count) AS BIGINT) AS total FROM c),
@@ -777,39 +828,65 @@ object SparkEntry {
     // histogram with tantivy's hard_bounds (closed-interval value clip) and
     // min_doc_count bucket pruning (aggregation.md:237-249)
     Query("a_histogram_bounds", (s, d) =>
-      Aggs.histogram(t(s, d, "events"), col("value"), interval = 50.0,
-        minDocCount = 2L, hardBounds = Some((50.0, 300.0))),
+      histogramRows(s, t(s, d, "events"),
+        """{"histogram": {"field": "value", "interval": 50, "min_doc_count": 2,
+          |  "hard_bounds": {"min": 50, "max": 300}}}""".stripMargin),
       """SELECT CAST(floor(value / 50.0) * 50.0 AS DOUBLE) AS key, CAST(count(*) AS BIGINT) AS doc_count
         |FROM events WHERE value >= 50.0 AND value <= 300.0
         |GROUP BY 1 HAVING count(*) >= 2 ORDER BY 1""".stripMargin),
 
+    // min_doc_count 1: the oracle lists only non-empty buckets, where the
+    // ES default of 0 would gap-fill an empty one between min and max
     Query("a_histogram", (s, d) =>
-      Aggs.histogram(t(s, d, "events"), col("value"), interval = 50.0)
-        .withColumn("key", col("key").cast("double")),
+      histogramRows(s, t(s, d, "events"),
+        """{"histogram": {"field": "value", "interval": 50, "min_doc_count": 1}}"""),
       """SELECT CAST(floor(value / 50.0) * 50.0 AS DOUBLE) AS key, CAST(count(*) AS BIGINT) AS doc_count
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    Query("a_date_histogram", (s, d) =>
-      Aggs.dateHistogram(t(s, d, "events"), col("ts"), "1d"),
+    // date_histogram always gap-fills; the events days are dense at every sf
+    Query("a_date_histogram", (s, d) => {
+      import s.implicits._
+      buckets(aggBody(t(s, d, "events"),
+        """{"date_histogram": {"field": "ts", "fixed_interval": "1d"}}"""))
+        .map(b => (asLong(b("key")), asLong(b("doc_count")))).toDF("key", "doc_count")
+        .withColumn("key", timestamp_millis(col("key")))
+    },
       """SELECT make_timestamp(CAST(floor(epoch_us(ts) / 86400000000) * 86400000000 AS BIGINT)) AS key,
         |  CAST(count(*) AS BIGINT) AS doc_count
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    Query("a_range", (s, d) =>
-      Aggs.rangeAgg(t(s, d, "events"), col("value"),
-        Seq((None, Some(50.0)), (Some(50.0), Some(150.0)), (Some(150.0), None))),
+    Query("a_range", (s, d) => {
+      import s.implicits._
+      buckets(aggBody(t(s, d, "events"),
+        """{"range": {"field": "value",
+          |  "ranges": [{"to": 50}, {"from": 50, "to": 150}, {"from": 150}]}}""".stripMargin))
+        .map(b => (b("key").asInstanceOf[String], asLong(b("doc_count"))))
+        .toDF("range_key", "doc_count")
+    },
       """SELECT CASE WHEN value < 50.0 THEN '*-50.0'
         |            WHEN value >= 50.0 AND value < 150.0 THEN '50.0-150.0'
         |            ELSE '150.0-*' END AS range_key,
         |  CAST(count(*) AS BIGINT) AS doc_count
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    Query("a_stats", (s, d) =>
-      Aggs.stats(t(s, d, "events"), Seq(col("event_type")), col("value"))
+    // `stats` per event type: a terms bucket wide enough for every type
+    // (5 at every sf), checked by its empty sum_other_doc_count
+    Query("a_stats", (s, d) => {
+      import s.implicits._
+      val body = aggBody(t(s, d, "events"),
+        """{"terms": {"field": "event_type", "size": 100},
+          | "aggs": {"s": {"stats": {"field": "value"}}}}""".stripMargin)
+      require(asLong(body("sum_other_doc_count")) == 0L, "a_stats: terms bucket truncated")
+      buckets(body).map { b =>
+        val st = b("s").asInstanceOf[JsonObj]
+        def v(k: String) = st(k).asInstanceOf[Double]
+        (b("key").asInstanceOf[String], asLong(st("count")), v("min"), v("max"), v("sum"), v("avg"))
+      }.toDF("event_type", "count", "min", "max", "sum", "avg")
         .withColumn("sum", round(col("sum"), 4))
         .withColumn("avg", round(col("avg"), 4))
         .withColumn("min", round(col("min"), 4))
-        .withColumn("max", round(col("max"), 4)),
+        .withColumn("max", round(col("max"), 4))
+    },
       """SELECT event_type, CAST(count(value) AS BIGINT) AS count,
         |  round(min(value), 4) AS min, round(max(value), 4) AS max,
         |  round(sum(value), 4) AS sum, round(avg(value), 4) AS avg
@@ -1002,9 +1079,19 @@ object SparkEntry {
         .select("event_id", "value").limit(10),
       "SELECT event_id, value FROM events ORDER BY value DESC, event_id ASC LIMIT 10"),
 
-    Query("k_search_after", (s, d) =>
-      Aggs.searchAfter(t(s, d, "events").select("event_id", "value"),
-        col("value"), col("event_id"), 150.0, 500L, 10),
+    // `_search` resuming strictly after a (value, event_id) cursor
+    // (collector.rs:316-341)
+    Query("k_search_after", (s, d) => {
+      import s.implicits._
+      hitsOf(parseObj(graft.queryast.EsApi.search(
+        t(s, d, "events").select("event_id", "value"), noTextResolver, col("event_id"),
+        """{"sort": [{"value": "asc"}, {"event_id": "asc"}],
+          | "search_after": [150.0, 500], "size": 10}""".stripMargin)))
+        .map { h =>
+          val src = h("_source").asInstanceOf[JsonObj]
+          (asLong(src("event_id")), src("value").asInstanceOf[Double])
+        }.toDF("event_id", "value")
+    },
       """SELECT event_id, value FROM events
         |WHERE value > 150.0 OR (value = 150.0 AND event_id > 500)
         |ORDER BY value ASC, event_id ASC LIMIT 10""".stripMargin),
@@ -1028,12 +1115,23 @@ object SparkEntry {
         |ORDER BY tool ASC NULLS LAST, conv_id ASC, turn_idx ASC
         |LIMIT 20""".stripMargin),
 
-    Query("k_search_after_full", (s, d) =>
+    Query("k_search_after_full", (s, d) => {
       // the reference's FULL cursor shape: (sort value, …, forced doc tie)
-      // as an N-part lexicographic resume (collector.rs:316-341)
-      Aggs.searchAfterN(t(s, d, "events").select("event_id", "event_type", "value"),
-        Seq(col("event_type") -> "error", col("value") -> 100.0, col("event_id") -> 500L),
-        k = 10),
+      // as an N-part lexicographic resume (collector.rs:316-341). Two user
+      // sort criteria is the cap, so the doc tie rides the scroll hooks: a
+      // trailing event_id sort and the stored three-part cursor.
+      import s.implicits._
+      val page = graft.queryast.EsApi.searchPage(
+        t(s, d, "events").select("event_id", "event_type", "value"), noTextResolver,
+        col("event_id"), """{"sort": [{"event_type": "asc"}, {"value": "asc"}], "size": 10}""",
+        cursorOverride = Some(Seq("error", 100.0, 500L)),
+        extraSort = Seq("event_id" -> true), includeAggs = false)
+      hitsOf(parseObj(page.rendered)).map { h =>
+        val src = h("_source").asInstanceOf[JsonObj]
+        (asLong(src("event_id")), src("event_type").asInstanceOf[String],
+          src("value").asInstanceOf[Double])
+      }.toDF("event_id", "event_type", "value")
+    },
       """SELECT event_id, event_type, value FROM events
         |WHERE (event_type, value, event_id) > ('error', 100.0, 500)
         |ORDER BY event_type, value, event_id LIMIT 10""".stripMargin),
@@ -2007,15 +2105,9 @@ object SparkEntry {
           |  "must": [{"match": {"text": {"query": "spark vector", "operator": "or"}}}],
           |  "filter": [{"term": {"lang": "en"}}]}},
           | "sort": [{"_score": "desc"}, {"doc_id": "asc"}], "size": 10}""".stripMargin
-      val rendered = graft.queryast.EsApi.search(
-        t(s, d, "documents"), docResolver, col("doc_id"), body)
-      val parsed = graft.util.Json.parse(rendered).asInstanceOf[Map[String, Any]]
-      val hits = parsed("hits").asInstanceOf[Map[String, Any]]("hits")
-        .asInstanceOf[Seq[Any]]
-      hits.map { h =>
-        val m = h.asInstanceOf[Map[String, Any]]
-        (m("_id").asInstanceOf[Double].toLong,
-          m("sort").asInstanceOf[Seq[Any]].head.asInstanceOf[Double])
+      hitsOf(parseObj(graft.queryast.EsApi.search(
+        t(s, d, "documents"), docResolver, col("doc_id"), body))).map { h =>
+        (asLong(h("_id")), h("sort").asInstanceOf[Seq[Any]].head.asInstanceOf[Double])
       }.toDF("doc_id", "score")
         .withColumn("score", round(col("score"), 4))
     },
@@ -2039,15 +2131,22 @@ object SparkEntry {
         |WHERE d.lang = 'en'
         |ORDER BY s.score DESC, d.doc_id ASC LIMIT 10""".stripMargin),
 
-    // one msearch batch = ONE shared-scan aggregate for all sub-queries
-    Query("es_msearch", (s, d) =>
-      graft.queryast.EsApi.msearch(t(s, d, "documents"), docResolver, col("doc_id"),
-        Seq(
-          """{"match": {"text": "vector"}}""",
-          """{"term": {"lang": "de"}}""",
-          """{"bool": {"must": [{"range": {"doc_id": {"lt": 50}}}, {"exists": {"field": "text"}}]}}"""),
-        size = 10)
-        .orderBy("query_idx"),
+    // three NDJSON `_msearch` pairs over one index, each sorted by doc_id
+    // with size 10: every sub-search answers its total and first ids
+    Query("es_msearch", (s, d) => {
+      import s.implicits._
+      val payload = Seq(
+        """{"match": {"text": "vector"}}""",
+        """{"term": {"lang": "de"}}""",
+        """{"bool": {"must": [{"range": {"doc_id": {"lt": 50}}}, {"exists": {"field": "text"}}]}}"""
+      ).flatMap(q => Seq("""{"index": "documents"}""",
+        s"""{"query": $q, "sort": [{"doc_id": "asc"}], "size": 10}""")).mkString("\n")
+      msearchResponses(graft.queryast.EsApi.msearchNdjson(
+        Seq("documents" -> t(s, d, "documents")), docResolver, col("doc_id"), payload))
+        .zipWithIndex.map { case (r, i) =>
+          (i.toLong, totalOf(r).get, hitsOf(r).map(h => asLong(h("_id"))).mkString(","))
+        }.toDF("query_idx", "total", "top_doc_ids")
+    },
       """WITH q0 AS (SELECT doc_id FROM documents WHERE ' ' || lower(text) || ' ' LIKE '% vector %'),
         |q1 AS (SELECT doc_id FROM documents WHERE lang = 'de'),
         |q2 AS (SELECT doc_id FROM documents WHERE doc_id < 50 AND text IS NOT NULL)
@@ -2079,15 +2178,9 @@ object SparkEntry {
           |{"query": {"range": {"doc_id": {"lt": 100}}}, "size": 0}
           |{"index": "docs-missing"}
           |{"query": {"match_all": {}}, "size": 0}""".stripMargin
-      val m = graft.util.Json.parse(graft.queryast.EsApi.msearchNdjson(
-        indexes, docResolver, col("doc_id"), payload)).asInstanceOf[Map[String, Any]]
-      m("responses").asInstanceOf[Seq[Any]].zipWithIndex.map { case (r, i) =>
-        val rm = r.asInstanceOf[Map[String, Any]]
-        val total = rm.get("hits")
-          .map(_.asInstanceOf[Map[String, Any]]("total")
-            .asInstanceOf[Map[String, Any]]("value").asInstanceOf[Double].toLong)
-          .getOrElse(-1L)
-        (i, rm("status").asInstanceOf[Double].toLong, total)
+      msearchResponses(graft.queryast.EsApi.msearchNdjson(
+        indexes, docResolver, col("doc_id"), payload)).zipWithIndex.map { case (r, i) =>
+        (i, asLong(r("status")), totalOf(r).getOrElse(-1L))
       }.toDF("resp_idx", "status", "total")
     },
       """SELECT * FROM (
@@ -2108,10 +2201,8 @@ object SparkEntry {
         t(s, d, "documents"), docResolver, col("doc_id"), "{}",
         Map("q" -> "spark vector", "default_operator" -> "AND",
           "sort" -> "doc_id:DESC", "size" -> "15"))
-      val m = graft.util.Json.parse(rendered).asInstanceOf[Map[String, Any]]
-      val hits = m("hits").asInstanceOf[Map[String, Any]]("hits").asInstanceOf[Seq[Any]]
-      hits.zipWithIndex.map { case (h, i) =>
-        (i + 1, h.asInstanceOf[Map[String, Any]]("_id").asInstanceOf[Double].toLong)
+      hitsOf(parseObj(rendered)).zipWithIndex.map { case (h, i) =>
+        (i + 1, asLong(h("_id")))
       }.toDF("rank", "doc_id")
     },
       """WITH m AS (
@@ -2136,16 +2227,10 @@ object SparkEntry {
       val first = ctx.searchMulti(indexes, docResolver, "doc_id", "docs-*",
         """{"query":{"match_all":{}},"size":20,"sort":[{"doc_id":{"order":"desc"}}]}""",
         "30m")
-      def hitsOf(rendered: String): Seq[(Long, String)] = {
-        val m = graft.util.Json.parse(rendered).asInstanceOf[Map[String, Any]]
-        m("hits").asInstanceOf[Map[String, Any]]("hits").asInstanceOf[Seq[Any]]
-          .map(_.asInstanceOf[Map[String, Any]])
-          .map(h => (h("_id").asInstanceOf[Double].toLong,
-            h("_index").asInstanceOf[String]))
-      }
-      val sid = graft.util.Json.parse(first).asInstanceOf[Map[String, Any]]("_scroll_id")
-        .asInstanceOf[String]
-      val pages = Seq(hitsOf(first), hitsOf(ctx.scroll(sid)), hitsOf(ctx.scroll(sid)))
+      def idsOf(rendered: String): Seq[(Long, String)] =
+        hitsOf(parseObj(rendered)).map(h => (asLong(h("_id")), h("_index").asInstanceOf[String]))
+      val sid = parseObj(first)("_scroll_id").asInstanceOf[String]
+      val pages = Seq(idsOf(first), idsOf(ctx.scroll(sid)), idsOf(ctx.scroll(sid)))
       ctx.clear(sid)
       pages.zipWithIndex.flatMap { case (hs, pn) =>
         hs.map { case (id, idx) => (pn, id, idx) }
@@ -2780,7 +2865,7 @@ object SparkEntry {
         numFiles = 2, tagFields = Seq("role"))
       val q = QueryAst.Term("role", "tool")
       table.scan(query = Some(q), tagFields = Set("role"))
-        .filter(q.toColumn(FieldResolver(Set.empty, Nil)))
+        .filter(q.toColumn(noTextResolver))
         .groupBy("role").agg(count(lit(1)).as("n_docs"))
     },
       TranscriptsCte +
@@ -2807,7 +2892,7 @@ object SparkEntry {
       val q = QueryAst.Bool(filterQ =
         Seq(QueryAst.Range("ts", gte = Some("2024-01-16T00:00:00Z"))))
       table.scan(query = Some(q))
-        .filter(q.toColumn(FieldResolver(Set.empty, Nil)))
+        .filter(q.toColumn(noTextResolver))
         .groupBy("role").agg(count(lit(1)).as("n_docs"), min(col("ts")).as("first_ts"))
         .orderBy("role")
     },
@@ -2939,17 +3024,13 @@ object SparkEntry {
         .filter(col("text").isNotNull && col("role") === "system")
         .select(col("conv_id"), col("turn_idx"))
       val ctx = new graft.queryast.EsScroll.Context()
-      def parsed(rendered: String) =
-        graft.util.Json.parse(rendered).asInstanceOf[Map[String, Any]]
-      def hitsOf(page: Map[String, Any]): Seq[(String, Int)] =
-        page("hits").asInstanceOf[Map[String, Any]]("hits").asInstanceOf[Seq[Any]]
-          .map(h => h.asInstanceOf[Map[String, Any]]("_source").asInstanceOf[Map[String, Any]])
-          .map(src => (src("conv_id").asInstanceOf[String],
-            src("turn_idx").asInstanceOf[Double].toInt))
-      val first = parsed(ctx.search(tr, FieldResolver(Set.empty, Nil), "conv_id",
+      def turnsOf(page: JsonObj): Seq[(String, Int)] =
+        hitsOf(page).map(_("_source").asInstanceOf[JsonObj])
+          .map(src => (src("conv_id").asInstanceOf[String], asLong(src("turn_idx")).toInt))
+      val first = parseObj(ctx.search(tr, noTextResolver, "conv_id",
         """{"size":5,"sort":[{"conv_id":"asc"},{"turn_idx":"asc"}]}""", "1m"))
       val sid = first("_scroll_id").asInstanceOf[String]
-      val pages = Iterator(hitsOf(first)) ++ Iterator.continually(hitsOf(parsed(ctx.scroll(sid))))
+      val pages = Iterator(turnsOf(first)) ++ Iterator.continually(turnsOf(parseObj(ctx.scroll(sid))))
       val served = pages.takeWhile(_.nonEmpty).take(10).toSeq
       ctx.clear(sid)
       served.zipWithIndex.flatMap { case (hits, pn) =>

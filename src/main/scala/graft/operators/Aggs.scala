@@ -4,50 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** ES-compatible aggregations (reference: docs/reference/aggregation.md;
-  * partial/final merge at quickwit-search/src/collector.rs:416-437,666) as
-  * thin DataFrame combinators. Catalyst's two-phase HashAggregate IS the
-  * segment-partial + root-merge of the reference, for free.
+/** Aggregation and paging combinators outside `_search`'s aggregation
+  * tree (reference: docs/reference/aggregation.md; partial/final merge at
+  * quickwit-search/src/collector.rs:416-437,666): distributed `terms` with
+  * leaf truncation, the `date_histogram` bucket key, FindTraceIds and
+  * offset pagination. The `aggs` body of a `_search` request compiles in
+  * [[graft.queryast.EsAggs]], and `search_after` resumes in
+  * [[graft.queryast.EsApi.searchPage]]. Catalyst's two-phase HashAggregate
+  * IS the segment-partial + root-merge of the reference, for free.
   */
 object Aggs {
-
-  /** `terms` bucket agg: top-`size` keys by doc count (desc, key asc tie),
-    * plus `sum_other_doc_count` = docs outside the returned buckets
-    * (aggregation.md:88-95). */
-  def terms(df: DataFrame, key: Column, size: Int,
-            minDocCount: Long = 1L,
-            orderTarget: String = "_count", orderAsc: Boolean = false): DataFrame = {
-    // One scan: a groupBy gives the per-key cells (a null key is a cell of
-    // its own); the TakeOrdered top-k and the grand total both read those
-    // cells, so Spark plans one exchange and reuses it for the total, which
-    // broadcasts onto the top-k. The kept-sum window runs over ≤ size rows.
-    // No separate count()/collect() scans.
-    //
-    // `min_doc_count` (default 1, aggregation.md:542-547) filters terms
-    // below the threshold — they fall into sum_other_doc_count, same as
-    // terms cut by `size`. `order` targets `_count` or `_key`
-    // (aggregation.md:549-560); the ES default is count desc with the key
-    // asc tiebreak. Ordering by a metric sub-aggregation composes the same
-    // TakeOrdered over the sub-agg frame (see `a_sub_agg`).
-    val cells = df.groupBy(key.as("key")).agg(count(lit(1)).as("doc_count"))
-    val ordering = orderTarget match {
-      case "_count" =>
-        if (orderAsc) Seq(asc("doc_count"), asc("key")) else Seq(desc("doc_count"), asc("key"))
-      case "_key" => Seq(if (orderAsc) asc("key") else desc("key"))
-      case other => throw new IllegalArgumentException(s"unknown terms order target `$other`")
-    }
-    val top = cells.filter(col("doc_count") >= minDocCount)
-      .orderBy(ordering: _*).limit(size)
-    val total = cells.agg(sum(col("doc_count")).as("_total"))
-    // one group (≤ size rows); its ordering also orders the output rows,
-    // which the top-k need not do once Spark drops a limit that bounds
-    // nothing (an input of at most `size` keys)
-    val keptW = Window.partitionBy(col("_total")).orderBy(ordering: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    top.crossJoin(broadcast(total))
-      .withColumn("sum_other_doc_count", col("_total") - sum("doc_count").over(keptW))
-      .select("key", "doc_count", "sum_other_doc_count")
-  }
 
   /** Distributed `terms` with the reference's leaf-truncation error
     * protocol (aggregation.md:495-534): each split returns only its top
@@ -108,28 +74,6 @@ object Aggs {
       .orderBy(desc("doc_count"), asc("key"))
   }
 
-  /** `histogram`: bucket = floor((v - offset) / interval) * interval + offset
-    * (aggregation.md:124-160). Empty buckets are not materialized
-    * (min_doc_count=1 semantics; ES default 0 fills gaps — presentation-side). */
-  def histogram(df: DataFrame, value: Column, interval: Double, offset: Double = 0.0,
-                minDocCount: Long = 0L,
-                hardBounds: Option[(Double, Double)] = None): DataFrame = {
-    // hard_bounds filters VALUES to the closed [min, max] interval before
-    // bucketing (aggregation.md:241-249); extended_bounds is presentation
-    // (EsAggs extends the gap-filled range when it renders the buckets).
-    val clipped = hardBounds.fold(df) { case (lo, hi) =>
-      df.filter(value >= lo && value <= hi)
-    }
-    val agg = clipped
-      .groupBy((floor((value - offset) / interval) * interval + offset).as("key"))
-      .agg(count(lit(1)).as("doc_count"))
-    // min_doc_count prunes materialized buckets (aggregation.md:237-239);
-    // 0 and 1 coincide on the frame — empty buckets are never materialized,
-    // gap-filling to 0 is the renderer's job.
-    (if (minDocCount > 1L) agg.filter(col("doc_count") >= minDocCount) else agg)
-      .orderBy("key")
-  }
-
   /** Bucket-key expression of `date_histogram` (fixed_interval + offset) —
     * exposed so sub-aggregations can group by the same key. */
   def dateHistogramKey(ts: Column, fixedInterval: String, offset: String = "0ms"): Column = {
@@ -139,26 +83,6 @@ object Aggs {
     val ivl = intervalMicros(fixedInterval)
     val off = intervalMicros(offset)
     timestamp_micros((floor((micros - off) / ivl) * ivl + off).cast("long"))
-  }
-
-  /** `date_histogram` with fixed_interval and offset (aggregation.md; test
-    * rest-api-tests/scenarii/aggregations/0001-aggregations.yaml:1-20).
-    * Docs with a missing date are excluded, per ES. */
-  def dateHistogram(df: DataFrame, ts: Column, fixedInterval: String,
-                    offset: String = "0ms",
-                    minDocCount: Long = 0L,
-                    hardBounds: Option[(Long, Long)] = None): DataFrame = {
-    // same hard_bounds/min_doc_count semantics as histogram
-    // (aggregation.md:379-386); bounds are epoch-µs, closed interval
-    val micros = unix_micros(ts.cast("timestamp_ltz"))
-    val clipped = hardBounds.fold(df.filter(ts.isNotNull)) { case (lo, hi) =>
-      df.filter(ts.isNotNull && micros >= lo && micros <= hi)
-    }
-    val agg = clipped
-      .groupBy(dateHistogramKey(ts, fixedInterval, offset).as("key"))
-      .agg(count(lit(1)).as("doc_count"))
-    (if (minDocCount > 1L) agg.filter(col("doc_count") >= minDocCount) else agg)
-      .orderBy("key")
   }
 
   def intervalMicros(fixedInterval: String): Long = {
@@ -177,27 +101,6 @@ object Aggs {
     }
   }
 
-  /** `range` buckets: [from, to) per ES semantics. */
-  def rangeAgg(df: DataFrame, value: Column,
-               ranges: Seq[(Option[Double], Option[Double])]): DataFrame = {
-    val bucketed = ranges.foldLeft(when(lit(false), lit(""))) { case (acc, (from, to)) =>
-      val cond = (from.map(value >= _) ++ to.map(value < _))
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val label = s"${from.map(_.toString).getOrElse("*")}-${to.map(_.toString).getOrElse("*")}"
-      acc.when(cond, lit(label))
-    }
-    df.withColumn("range_key", bucketed)
-      .filter(col("range_key").isNotNull)
-      .groupBy("range_key").agg(count(lit(1)).as("doc_count"))
-      .orderBy("range_key")
-  }
-
-  /** `stats`: count/min/max/sum/avg in one pass (aggregation.md:102-105). */
-  def stats(df: DataFrame, groupKeys: Seq[Column], value: Column): DataFrame =
-    df.groupBy(groupKeys: _*)
-      .agg(count(value).as("count"), min(value).as("min"), max(value).as("max"),
-           sum(value).as("sum"), avg(value).as("avg"))
-
   /** FindTraceIds analog: top-N group keys by max(ts), with dedup — the one
     * genuinely custom collector of the reference
     * (quickwit-search/src/find_trace_ids_collector.rs:111-140). groupBy+max+
@@ -205,27 +108,6 @@ object Aggs {
   def topGroupsByMaxTs(df: DataFrame, key: Column, ts: Column, n: Int): DataFrame =
     df.groupBy(key.as("key")).agg(max(ts).as("max_ts"))
       .orderBy(desc("max_ts"), asc("key")).limit(n)
-
-  /** search_after: resume strictly after a sort cursor (collector.rs:316-341).
-    * The tuple predicate pushes into the scan. */
-  def searchAfter(df: DataFrame, sortCol: Column, tieCol: Column,
-                  cursorSort: Any, cursorTie: Any, k: Int): DataFrame =
-    searchAfterN(df, Seq(sortCol -> cursorSort, tieCol -> cursorTie), k)
-
-  /** Full-cursor search_after: the reference cursor is the N-part tuple
-    * (sort value(s), split_id, segment_ord, doc_id) with `_shard_doc` as
-    * the forced final tie (collector.rs:316-341) — generalized here to any
-    * lexicographic (column, value) chain. The expanded OR-of-ANDs predicate
-    * is pushdown-friendly (its first disjunct `c1 > v1` prunes row groups
-    * on the leading sort column). */
-  def searchAfterN(df: DataFrame, cursor: Seq[(Column, Any)], k: Int): DataFrame = {
-    require(cursor.nonEmpty, "empty search_after cursor")
-    val pred = cursor.indices.map { i =>
-      (cursor.take(i).map { case (c, v) => c === lit(v) } :+
-        (cursor(i)._1 > lit(cursor(i)._2))).reduce(_ && _)
-    }.reduce(_ || _)
-    df.filter(pred).orderBy(cursor.map(_._1.asc): _*).limit(k)
-  }
 
   /** start_offset pagination after merge (search.proto:206-211).
     * orderBy + offset + limit plans as a single TakeOrderedAndProject

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   *    (quickwit-doc-mapper/src/doc_mapper.rs:57-78,
   *     default_doc_mapper/mapping_tree.rs:404-436) → here regex extraction
   *    of tool-call / error / severity patterns from turn text.
-  *  - strict | lenient | dynamic unmapped-field modes
-  *    (default_mapper_builder.rs:87-95).
+  *  - lenient | dynamic unmapped-field modes
+  *    (default_mapper_builder.rs:87-95); strict mode, which rejects an
+  *    unmapped field, is [[MappingTree]]'s.
   *  - per-doc valid / parse-error counters + byte totals
   *    (actors/doc_processor.rs:239-337).
   */
@@ -23,17 +24,11 @@ object DocParser {
   val ErrorRe    = "ERROR\\[([0-9]{3})\\]: (.*)"
   val SeverityRe = "^(INFO|WARN|ERROR)\\b"
 
+  /** `Lenient` keeps only the parsed columns; `Dynamic` adds the
+    * `_dynamic` catch-all map. */
   sealed trait Mode
-  case object Strict extends Mode
   case object Lenient extends Mode
   case object Dynamic extends Mode
-
-  /** A row is *valid* iff text is non-null and, when it contains a CALL
-    * pattern opener, the pattern is complete. (The generator's malformed rows
-    * are null text or a truncated `CALL x(` with no close.) */
-  def isValid(text: Column): Column =
-    text.isNotNull &&
-      (!text.contains("CALL ") || regexp_extract(text, ToolCallRe, 1) =!= "")
 
   /** Extraction columns appended to the input. Pure projection — stays inside
     * whole-stage codegen; no shuffle. Each grok pattern's matcher runs ONCE
@@ -98,9 +93,11 @@ object DocParser {
     * `observedMetrics` after an action on `valid`. */
   def parse(input: DataFrame, mode: Mode = Lenient,
             observation: Option[org.apache.spark.sql.Observation] = None): ParseResult = {
-    // validity re-derives from the already-extracted called_tool instead of
-    // re-running the ToolCallRe regex a second time (isValid's standalone
-    // form); codegen CSE then executes each grok pattern exactly once/row
+    // A row is valid iff text is non-null and, when it contains a CALL
+    // pattern opener, the pattern is complete (the generator's malformed
+    // rows are null text or a truncated `CALL x(` with no close). Validity
+    // reads the already-extracted called_tool, so codegen CSE executes each
+    // grok pattern exactly once per row.
     val parsedAll = withParsedColumns(input)
     val flagged = parsedAll.withColumn("_valid",
       col("text").isNotNull &&
@@ -119,7 +116,6 @@ object DocParser {
       .withColumn("error_label",
         when(col("text").isNull, lit("null_text")).otherwise(lit("truncated_pattern")))
     mode match {
-      case Strict  => ParseResult(valid, dead) // caller asserts dead.isEmpty
       case Lenient => ParseResult(valid, dead)
       case Dynamic =>
         // leftover (unmapped) content funnels into a catch-all map column,

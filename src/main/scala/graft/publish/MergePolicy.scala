@@ -13,7 +13,7 @@ import graft.publish.Manifest.SplitEntry
   *  - defaults: quickwit-config/src/merge_policy_config.rs:81-99
   *  - combine: quickwit-indexing/src/actors/merge_executor.rs:184-263 —
   *    sum num_docs + sizes, union time ranges, min delete_opstamp,
-  *    max(num_merge_ops)+1, union tags.
+  *    max(num_merge_ops)+1, union tags (see [[combineTags]]).
   */
 object MergePolicy {
 
@@ -104,7 +104,7 @@ object MergePolicy {
       uncompressedBytes = splits.map(_.uncompressedBytes).sum,
       timeRangeStartMicros = splits.map(_.timeRangeStartMicros).min,
       timeRangeEndMicros = splits.map(_.timeRangeEndMicros).max,
-      tags = splits.flatMap(_.tags).distinct.sorted,
+      tags = combineTags(splits.map(_.tags)),
       termCardinality = -1L, // recomputed by the merge executor's re-index pass
       postingsCount = splits.map(_.postingsCount).sum,
       numMergeOps = splits.map(_.numMergeOps).max + 1,
@@ -117,5 +117,23 @@ object MergePolicy {
         a.keySet.intersect(b.keySet).map(f =>
           f -> (math.min(a(f)._1, b(f)._1), math.max(a(f)._2, b(f)._2))).toMap
       })
+  }
+
+  /** The union of the inputs' tags, except that a field's exhaustive `f!`
+    * marker survives only when EVERY input carries it and the merged `f:`
+    * values stay within [[graft.sources.TranscriptTable.TagValueCap]]. An
+    * input without the marker may hold any value of `f` (it was written
+    * without tagging `f`, or went over the cap), so a merged marker would
+    * let tag pruning skip rows that match. */
+  private def combineTags(tags: Seq[Seq[String]]): Seq[String] = {
+    val union = tags.flatten.distinct
+    def values(f: String) = union.count(_.startsWith(s"$f:"))
+    union.filterNot { t =>
+      t.endsWith("!") && {
+        val f = t.dropRight(1)
+        !tags.forall(_.contains(t)) ||
+          values(f) > graft.sources.TranscriptTable.TagValueCap
+      }
+    }.sorted
   }
 }

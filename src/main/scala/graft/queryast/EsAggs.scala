@@ -113,8 +113,8 @@ object EsAggs {
           }.getOrElse(("_count", false))
           // split_size is an ACCURACY knob for truncated leaves
           // (aggregation.md:527-532); this engine computes terms exactly
-          // (Aggs.terms rollup), so it is accepted and has no effect —
-          // 0 error bounds are the truthful exact-case values.
+          // (one groupBy over every doc), so it is accepted and has no
+          // effect — 0 error bounds are the truthful exact-case values.
           // show_term_doc_count_error adds the per-bucket bound field.
           Terms(fld, dbl("size", 10).toInt, dbl("min_doc_count", 1).toLong, target, asc,
             p.get("show_term_doc_count_error").exists(_.asInstanceOf[Boolean]))
@@ -423,35 +423,31 @@ object EsAggs {
       }
       (metricParts ++ nestedParts).map("," + _).mkString
     }
-    def emptySubsJson: String = {
-      val metricParts = metricSubs.map { case (nm, m, _) => s"${Json.quote(nm)}:${emptyMetricBody(m)}" }
-      val nestedParts = nestedBodies.map { case (nm, _, n) => s"${Json.quote(nm)}:${emptyBucketBody(n)}" }
-      (metricParts ++ nestedParts).map("," + _).mkString
-    }
-
     val parents = if (pathNames.isEmpty) Seq(Seq.empty[Any]) else byParent.keys.toSeq
     parents.map { parent =>
       val cells = byParent.getOrElse(parent, Nil)
-      parent -> renderBucketBody(bucket, kName, parent, cells, totals, subsJson, emptySubsJson)
+      parent -> renderBucketBody(bucket, kName, parent, cells, totals, subsJson,
+        emptySubsJson(node.subs))
     }.toMap
   }
 
-  private def emptyBucketBody(n: Node): String = n.agg match {
-    case _: Terms => """{"buckets":[],"doc_count_error_upper_bound":0,"sum_other_doc_count":0}"""
-    case RangeB(_, ranges) =>
-      val bs = ranges.map { rs =>
-        val fromJ = rs.from.map(f => s""","from":${num(f)}""").getOrElse("")
-        val toJ = rs.to.map(t => s""","to":${num(t)}""").getOrElse("")
-        s"""{"doc_count":0$fromJ,"key":${Json.quote(rs.key)}$toJ}"""
-      }.mkString(",")
-      s"""{"buckets":[$bs]}"""
-    case _ => """{"buckets":[]}"""
+  /** The sub-aggregation bodies of a bucket that holds no doc. */
+  private def emptySubsJson(subs: Seq[Node]): String = {
+    val metricParts = subs.collect { case Node(nm, m: Metric, _) => s"${Json.quote(nm)}:${emptyMetricBody(m)}" }
+    val nestedParts = subs.collect { case n @ Node(nm, _: Bucket, _) => s"${Json.quote(nm)}:${emptyBucketBody(n)}" }
+    (metricParts ++ nestedParts).map("," + _).mkString
   }
+
+  /** The body of a bucket aggregation over no doc: the renderer over no
+    * cells (declared ranges and extended_bounds still render, empty). */
+  private def emptyBucketBody(n: Node): String =
+    renderBucketBody(n.agg.asInstanceOf[Bucket], "", Nil, Nil, Map.empty,
+      (_, _) => "", emptySubsJson(n.subs))
 
   private def renderBucketBody(bucket: Bucket, kName: String, path: Seq[Any], cells: Seq[Row],
                                totals: Map[Seq[Any], Long],
                                subsJson: (Seq[Any], Row) => String,
-                               emptySubsJson: => String): String = {
+                               emptySubs: => String): String = {
     def key(r: Row): Any = r.getAs[Any](kName)
     def dc(r: Row): Long = r.getAs[Long]("_dc")
     bucket match {
@@ -499,7 +495,7 @@ object EsAggs {
                     s"""{"doc_count":${dc(r)},"key":${num(k)}${subsJson(path :+ (k: Any), r)}}"""
                   case None =>
                     val k = i * interval + offset
-                    num(k) -> s"""{"doc_count":0,"key":${num(k)}$emptySubsJson}"""
+                    num(k) -> s"""{"doc_count":0,"key":${num(k)}$emptySubs}"""
                 }
               }
             }
@@ -526,7 +522,7 @@ object EsAggs {
               case Some(r) =>
                 s"""{"doc_count":${dc(r)},"key":${num(ms.toDouble)},"key_as_string":${Json.quote(iso)}${subsJson(path :+ key(r), r)}}"""
               case None =>
-                s"""{"doc_count":0,"key":${num(ms.toDouble)},"key_as_string":${Json.quote(iso)}$emptySubsJson}"""
+                s"""{"doc_count":0,"key":${num(ms.toDouble)},"key_as_string":${Json.quote(iso)}$emptySubs}"""
             })
           }
         s"""{"buckets":${bucketsJson(bs, keyed)}}"""
@@ -539,7 +535,7 @@ object EsAggs {
           byLabel.get(rs.key) match {
             case Some(r) =>
               s"""{"doc_count":${dc(r)}$fromJ,"key":${Json.quote(rs.key)}$toJ${subsJson(path :+ key(r), r)}}"""
-            case None => s"""{"doc_count":0$fromJ,"key":${Json.quote(rs.key)}$toJ$emptySubsJson}"""
+            case None => s"""{"doc_count":0$fromJ,"key":${Json.quote(rs.key)}$toJ$emptySubs}"""
           }
         }
         s"""{"buckets":[${bs.mkString(",")}]}"""

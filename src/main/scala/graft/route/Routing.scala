@@ -121,14 +121,4 @@ object Routing {
       when(col("partition_id").isInCollection(keep), col("partition_id"))
         .otherwise(lit(OtherPartitionId)))
   }
-
-  /** Salted repartition to defuse hot-key skew (R4): shuffle on
-    * (key, salt) where salt = pmod(hash(subKey), buckets); downstream
-    * per-key aggregation must be algebraic (partial per salt, then final
-    * re-combine by key). */
-  def saltedRepartition(df: DataFrame, key: Column, subKey: Column,
-                        saltBuckets: Int, numPartitions: Int): DataFrame = {
-    val salted = df.withColumn("_salt", pmod(xxhash64(subKey), lit(saltBuckets)))
-    salted.repartition(numPartitions, key, col("_salt"))
-  }
 }

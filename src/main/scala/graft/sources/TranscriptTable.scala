@@ -38,11 +38,6 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
   private lazy val leafPool = java.util.concurrent.Executors.newCachedThreadPool(
     (r: Runnable) => { val t = new Thread(r, "graft-leaf"); t.setDaemon(true); t })
 
-  /** Tag-value cap per field, as the reference's tag extraction cap —
-    * above it the field is not tagged exhaustively (no `field!` marker)
-    * and stays unprunable (default_mapper tag cap = 1000). */
-  val TagValueCap = 1000
-
   /** Write a batch of turns as one published "split" set: one parquet file
     * group per writer partition, then atomically publish manifest entries
     * with per-file stats (+ optional `field:value` tags) + a checkpoint
@@ -62,7 +57,8 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
       rep.write.mode("overwrite")
         .option("compression", "zstd") // docstore zstd analog (indexer.rs:529-537)
         .parquet(subdir)
-      val stats = TranscriptTable.partitionStats(rep, tagFields, rangeFields, TagValueCap)
+      val stats = TranscriptTable.partitionStats(rep, tagFields, rangeFields,
+        TranscriptTable.TagValueCap)
       // writer partition id ↔ file via the part-NNNNN name prefix
       val filesByPid = graft.util.Fs.list(java.nio.file.Paths.get(subdir))
         .iterator.map(_.toString)
@@ -369,6 +365,12 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
 }
 
 object TranscriptTable {
+
+  /** Tag-value cap per field, as the reference's tag extraction cap —
+    * above it the field is not tagged exhaustively (no `field!` marker)
+    * and stays unprunable (default_mapper tag cap = 1000), in a written
+    * split and in a merged one. */
+  val TagValueCap = 1000
 
   /** One writer partition's split stats, as published in its manifest
     * entry: row count, text bytes, the [min, max] `ts` in µs (0 when every

@@ -75,6 +75,21 @@ class MergePolicySpec extends AnyFunSuite {
     assert(m.postingsCount === a.postingsCount + b.postingsCount)
   }
 
+  test("combine: a field's f! marker survives only when every input has it, within the cap") {
+    def tagged(id: String, tags: String*) = split(id, 10L).copy(tags = tags)
+    val user = tagged("a", "role!", "role:user")
+    val asst = tagged("b", "role!", "role:assistant")
+    assert(MergePolicy.combine(Seq(user, asst), "m").tags ===
+      Seq("role!", "role:assistant", "role:user"))
+    // an input without role tags may hold any role
+    assert(MergePolicy.combine(Seq(user, tagged("c")), "m").tags === Seq("role:user"))
+    // both exhaustive, but the merged values go over the cap
+    val cap = graft.sources.TranscriptTable.TagValueCap
+    def many(id: String, from: Int) =
+      tagged(id, "tool!" +: (from until from + cap / 2 + 1).map(i => s"tool:t$i"): _*)
+    assert(!MergePolicy.combine(Seq(many("d", 0), many("e", cap)), "m").tags.contains("tool!"))
+  }
+
   test("property: every planned batch is within [mergeFactor, maxMergeFactor], disjoint, immature") {
     val small = MergePolicy.Config(mergeFactor = 3, maxMergeFactor = 4,
       minLevelNumDocs = 100L, splitNumDocsTarget = 10000L)

@@ -81,6 +81,35 @@ class EsAggsSpec extends SparkTestBase {
         |{"doc_count":4,"key":"fast","to":50.0},
         |{"doc_count":0,"from":50.0,"key":"medium","to":80.0},
         |{"doc_count":3,"from":80.0,"key":"slow"}]}}""".stripMargin)
+    // [from, to): a value equal to a bound lands in the range it opens
+    // (responses 20, 30×3, 100, 120, 130; the null one in none)
+    check(
+      """{"aggs":{"r":{"range":{"field":"response",
+        |"ranges":[{"to":30},{"from":30,"to":100},{"from":100}]}}}}""".stripMargin,
+      """{"r":{"buckets":[
+        |{"doc_count":1,"key":"*-30.0","to":30.0},
+        |{"doc_count":3,"from":30.0,"key":"30.0-100.0","to":100.0},
+        |{"doc_count":3,"from":100.0,"key":"100.0-*"}]}}""".stripMargin)
+  }
+
+  test("range under terms: a parent with no doc in any range still renders the sub-aggs") {
+    // host .15 holds only response 130, outside both ranges; its declared
+    // ranges must carry the avg sub-agg like the other hosts' empty ranges
+    val got = Json.parse(EsAggs.search(docs, resolver,
+      """{"aggs":{"hosts":{"terms":{"field":"host"},
+        |"aggs":{"r":{"range":{"field":"response","ranges":[{"to":50},{"from":50,"to":125}]},
+        |"aggs":{"a":{"avg":{"field":"response"}}}}}}}}""".stripMargin))
+    val hosts = got.asInstanceOf[Map[String, Any]]("aggregations")
+      .asInstanceOf[Map[String, Any]]("hosts").asInstanceOf[Map[String, Any]]("buckets")
+      .asInstanceOf[Seq[Any]].map(_.asInstanceOf[Map[String, Any]])
+    val ranges = hosts.map(h => h("key") -> h("r").asInstanceOf[Map[String, Any]]("buckets")).toMap
+    assert(ranges("192.168.0.15") === Json.parse(
+      """[{"doc_count":0,"key":"*-50.0","to":50.0,"a":{"value":null}},
+        | {"doc_count":0,"from":50.0,"key":"50.0-125.0","to":125.0,"a":{"value":null}}]""".stripMargin))
+    // host .11 (response 120): its empty first range renders the same way
+    assert(ranges("192.168.0.11") === Json.parse(
+      """[{"doc_count":0,"key":"*-50.0","to":50.0,"a":{"value":null}},
+        | {"doc_count":1,"from":50.0,"key":"50.0-125.0","to":125.0,"a":{"value":120.0}}]""".stripMargin))
   }
 
   test("golden 5: terms aggs — scalar host and multi-valued tags, reference tie order") {
@@ -185,6 +214,18 @@ class EsAggsSpec extends SparkTestBase {
     check(
       """{"aggs":{"metrics":{"histogram":{"field":"response","interval":50,"min_doc_count":1}}}}""",
       """{"metrics":{"buckets":[{"doc_count":4,"key":0.0},{"doc_count":3,"key":100.0}]}}""")
+    // with an offset, keys are floor((v - offset) / interval) * interval +
+    // offset; min_doc_count 2 drops the 1-doc bucket at 55
+    check(
+      """{"aggs":{"metrics":{"histogram":{"field":"response","interval":50,"offset":5,
+        |"min_doc_count":2}}}}""".stripMargin,
+      """{"metrics":{"buckets":[{"doc_count":4,"key":5.0},{"doc_count":2,"key":105.0}]}}""")
+    // hard_bounds clip VALUES to the closed [20, 100] before bucketing:
+    // 100 stays, 120 and 130 go
+    check(
+      """{"aggs":{"metrics":{"histogram":{"field":"response","interval":50,"min_doc_count":1,
+        |"hard_bounds":{"min":20,"max":100}}}}}""".stripMargin,
+      """{"metrics":{"buckets":[{"doc_count":4,"key":0.0},{"doc_count":1,"key":100.0}]}}""")
   }
 
   test("histogram: extended_bounds with min_doc_count > 0 is rejected before any job runs") {
@@ -252,6 +293,15 @@ class EsAggsSpec extends SparkTestBase {
         |{"doc_count":3,"key":"192.168.0.10"},{"doc_count":2,"key":"192.168.0.1"}],
         |"doc_count_error_upper_bound":0,"sum_other_doc_count":2}}}""".stripMargin)
     assert(got2 === want2)
+
+    // _count asc orders the (count, key) tuple ascending: ties key asc
+    check("""{"aggs":{"hosts":{"terms":{"field":"host","size":2,"order":{"_count":"asc"}}}}}""",
+      """{"hosts":{"buckets":[
+        |{"doc_count":1,"key":"192.168.0.11"},{"doc_count":1,"key":"192.168.0.15"}],
+        |"doc_count_error_upper_bound":0,"sum_other_doc_count":5}}""".stripMargin)
+    assert(intercept[IllegalArgumentException](EsAggs.search(docs, resolver,
+      """{"aggs":{"hosts":{"terms":{"field":"host","order":{"avg_price":"asc"}}}}}"""))
+      .getMessage.contains("unknown terms order target `avg_price`"))
   }
 
   test("top-level metrics: avg/sum/min/max/value_count/stats/percentiles") {
@@ -272,6 +322,9 @@ class EsAggsSpec extends SparkTestBase {
          |"st":{"avg":${sum / 7},"count":7,"max":130.0,"min":20.0,"sum":460.0},
          |"p":{"values":{"50.0":$p50}}}}""".stripMargin)
     assert(got === want)
+    // stats over a query's docs: host .10 holds responses 20, 30 and a null
+    check("""{"query":{"term":{"host":"192.168.0.10"}},"aggs":{"st":{"stats":{"field":"response"}}}}""",
+      """{"st":{"avg":25.0,"count":2,"max":30.0,"min":20.0,"sum":50.0}}""")
   }
 
   test("bucket limit guards the agg tree cumulatively (AggregationLimits analog)") {

@@ -3,8 +3,8 @@ package graft.queryast
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** ES serve-layer shells: response shapes + msearch single-scan batching
-  * semantics (elasticsearch_api/mod.rs:53-72 route behaviors). */
+/** ES serve-layer shells: response shapes, `search_after` cursors and
+  * `_msearch` pairs (elasticsearch_api/mod.rs:53-72 route behaviors). */
 class EsApiSpec extends SparkTestBase {
 
   private val resolver = FieldResolver(textFields = Set("text"), defaultFields = Seq("text"))
@@ -25,23 +25,35 @@ class EsApiSpec extends SparkTestBase {
       """{"count":2,"_shards":{"total":1,"successful":1,"skipped":0,"failed":0}}""")
   }
 
+  /** (total, hit ids) of each response of an NDJSON `_msearch` over one
+    * index "docs", one pair per query, each sorted by doc_id. */
+  private def msearchIds(df: org.apache.spark.sql.DataFrame, size: Int,
+                         queries: String*): Seq[(Long, Seq[Long])] = {
+    val payload = queries.flatMap(q => Seq("""{"index": "docs"}""",
+      s"""{"query": $q, "sort": ["doc_id"], "size": $size}""")).mkString("\n")
+    val got = graft.util.Json.parse(EsApi.msearchNdjson(Seq("docs" -> df), resolver,
+      col("doc_id"), payload)).asInstanceOf[Map[String, Any]]
+    got("responses").asInstanceOf[Seq[Any]].map { r =>
+      val hits = r.asInstanceOf[Map[String, Any]]("hits").asInstanceOf[Map[String, Any]]
+      (hits("total").asInstanceOf[Map[String, Any]]("value").asInstanceOf[Double].toLong,
+        hits("hits").asInstanceOf[Seq[Any]]
+          .map(_.asInstanceOf[Map[String, Any]]("_id").asInstanceOf[Double].toLong))
+    }
+  }
+
   test("_msearch: every sub-search answered, zero-hit ones as (0, empty)") {
-    val rows = EsApi.msearch(docs, resolver, col("doc_id"), Seq(
+    assert(msearchIds(docs, 10,
         """{"match": {"text": "spark"}}""",
         """{"match": {"text": "nothing_matches_this"}}""",
-        """{"term": {"lang": "en"}}"""), size = 10)
-      .orderBy("query_idx")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-    assert(rows === Seq((0L, 1L, "1"), (1L, 0L, ""), (2L, 2L, "1,2")))
+        """{"term": {"lang": "en"}}""") ===
+      Seq((1L, Seq(1L)), (0L, Nil), (2L, Seq(1L, 2L))))
   }
 
   test("_msearch: top_doc_ids capped at size") {
     import spark.implicits._
     val big = (1L to 25L).map(i => (i, "common token", "en")).toDF("doc_id", "text", "lang")
-    val r = EsApi.msearch(big, resolver, col("doc_id"),
-      Seq("""{"match": {"text": "common"}}"""), size = 3).collect()(0)
-    assert(r.getLong(1) === 25L)
-    assert(r.getString(2) === "1,2,3")
+    val topDocIds = msearchIds(big, 3, """{"match": {"text": "common"}}""")
+    assert(topDocIds === Seq((25L, Seq(1L, 2L, 3L))))
   }
 
   test("_field_caps: text fields searchable-only, scalars aggregatable") {
@@ -125,6 +137,11 @@ class EsApiSpec extends SparkTestBase {
     val (_, ids2) = hitsOf(
       """{"size": 2, "sort": ["doc_id"], "search_after": [1]}""")
     assert(ids2 === Seq(2.0, 3.0))
+    // a tie on the first criterion resumes strictly after the second:
+    // lang asc orders (de, 3), (en, 1), (en, 2)
+    val (_, ids3) = hitsOf(
+      """{"size": 2, "sort": ["lang", "doc_id"], "search_after": ["en", 1]}""")
+    assert(ids3 === Seq(2.0))
     // length mismatch rejected
     intercept[IllegalArgumentException] {
       EsApi.search(docs, resolver, col("doc_id"),

@@ -67,20 +67,6 @@ class RoutingSpec extends SparkTestBase {
     assert(!pids.contains(Routing.OtherPartitionId))
   }
 
-  test("salted repartition preserves rows and bounds the salt") {
-    import spark.implicits._
-    val df = (0 until 1000).map(i => (s"conv${i % 3}", i)).toDF("conv_id", "turn_idx")
-    val salted = Routing.saltedRepartition(df, col("conv_id"), col("turn_idx"),
-      saltBuckets = 8, numPartitions = 4)
-    assert(salted.count() === 1000L)
-    val saltRange = salted.agg(min("_salt"), max("_salt")).collect()(0)
-    assert(saltRange.getLong(0) >= 0L && saltRange.getLong(1) < 8L)
-    // a hot key actually spreads across >1 salt bucket
-    val spread = salted.filter(col("conv_id") === "conv0")
-      .select("_salt").distinct().count()
-    assert(spread > 1L)
-  }
-
   test("cap path: cached variant scans the source once (filesystem byte count)") {
     import spark.implicits._
     val dir = tmpDir("route_scan")

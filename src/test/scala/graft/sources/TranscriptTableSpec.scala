@@ -252,6 +252,31 @@ class TranscriptTableSpec extends SparkTestBase {
     }
   }
 
+  test("tag pruning after a merge: a split without a field's tags keeps it unprunable") {
+    import spark.implicits._
+    import graft.queryast.QueryAst
+    val dir = tmpDir("ttable")
+    val table = new TranscriptTable(dir, spark)
+    val df = TranscriptGen.turns(numConvs = 20, avgTurns = 5).toDS().toDF()
+    // one split tagged exhaustively with role:user only, one with no role
+    // tags at all (appended without tagFields) that holds the assistants
+    table.append(df.filter("role = 'user'"), delta(-1, 50), numFiles = 1,
+      tagFields = Seq("role"))
+    table.append(df.filter("role = 'assistant'"), delta(50, 100), numFiles = 1)
+    val assistants = df.filter("role = 'assistant'").count()
+    assert(assistants > 0L)
+    def scanAssistants(): Long =
+      table.scan(query = Some(QueryAst.Term("role", "assistant")), tagFields = Set("role"))
+        .filter("role = 'assistant'").count()
+    assert(scanAssistants() === assistants)
+    val res = graft.publish.MergeExecutor.run(dir, spark, graft.publish.MergePolicy.Config(
+      mergeFactor = 2, maxMergeFactor = 2, minLevelNumDocs = 1000000L,
+      splitNumDocsTarget = 1000000L))
+    assert(res.merged.size === 1)
+    assert(scanAssistants() === assistants)
+    assert(!table.store.currentSnapshot().get.splits.exists(_.tags.contains("role!")))
+  }
+
   test("read path: a scan of a known snapshot and a warm-cache top-k answer run no job") {
     import spark.implicits._
     val table = new TranscriptTable(tmpDir("ttable"), spark)
