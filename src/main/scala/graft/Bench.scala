@@ -1,13 +1,16 @@
 package graft
 import graft.pipeline.IndexingPipeline
 import graft.publish.Checkpoint
+import graft.util.Json
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the given SF, plus
   * one end-to-end indexing-pipeline run (parse→route→aggregate→publish) whose
-  * throughput in turns/sec is the BASELINE's headline metric. Emits ONE JSON
-  * line. The two-parallelism scaling evidence lives in graft.ScalingBench →
-  * BENCH/BASELINE.md. */
+  * throughput in turns/sec is the BASELINE's headline metric. Prints one
+  * `{"query":…,"sec":…}` JSON line per query as it finishes (-1.0 = failed),
+  * then one short `{"metric":"total",…}` line: the total, the pipeline
+  * throughput, the warmup and the host load. The two-parallelism scaling
+  * evidence lives in graft.ScalingBench → BENCH/BASELINE.md. */
 object Bench {
 
   /** (steal, busy, total) jiffies from /proc/stat's aggregate cpu line. */
@@ -94,6 +97,7 @@ object Bench {
           if (all.exists(_ < 0)) -1.0
           else { val sorted = all.sorted; sorted(sorted.length / 2) }
         }
+      println(s"""{"query":${Json.quote(q.name)},"sec":$time}""")
       q.name -> time
     }
     // end-to-end pipeline throughput on the transcripts derived from this SF
@@ -110,9 +114,7 @@ object Bench {
         input.unpersist()
         (secs, n / secs)
       } catch { case _: Throwable => (-1.0, -1.0) }
-    val qs = (results :+ ("pipeline_e2e" -> pipeSecs))
-      .map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    println(s"""{"query":"pipeline_e2e","sec":$pipeSecs}""")
     // -1.0 failure sentinels stay visible per-query but never DEFLATE the
     // round-over-round total (same guard pipeSecs gets)
     val total = results.map(r => math.max(r._2, 0.0)).sum + math.max(pipeSecs, 0.0)
@@ -125,7 +127,7 @@ object Bench {
     val host = s"""{"pinned":$pinned,"cpus":$cpus,"nproc":$nproc,""" +
       s""""loadavg_start":$load0,"loadavg_end":${loadavg()},""" +
       s""""steal_frac":${(steal1 - steal0) / dt},"busy_frac":${(busy1 - busy0) / dt}}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","pipeline_turns_per_sec":$turnsPerSec,"warmup_sec":$warmupSec,"host":$host}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":${Json.quote(sfDir)},"pipeline_turns_per_sec":$turnsPerSec,"warmup_sec":$warmupSec,"host":$host}""")
     spark.stop()
   }
 }

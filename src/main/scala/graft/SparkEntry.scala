@@ -5,7 +5,7 @@ import graft.operators.{Aggs, Decontaminate, Dedup, Jaeger, Multimodal, QualityF
 import graft.parse.{BytesParse, DateTimeParse, DocParser}
 import graft.pipeline.IndexingPipeline
 import graft.publish.{ListSplits, MergePolicy}
-import graft.queryast.{EsDsl, FieldResolver, UserQueryParser}
+import graft.queryast.{EsApi, EsDsl, FieldResolver, QueryAst, UserQueryParser}
 import graft.route.Routing
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -227,15 +227,6 @@ object SparkEntry {
           .otherwise(col("ts_max")).as("time_range_end"))
   }
 
-  private def sinkDim(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(("purchase", "sink_commerce"), ("view", "sink_web"),
-        ("click", "sink_web"), ("logger", "sink_errors"))
-      .toDF("eff_tool", "sink")
-  }
-  private val SinkDimSql =
-    "(VALUES ('purchase','sink_commerce'),('view','sink_web'),('click','sink_web'),('logger','sink_errors')) AS dim(eff_tool, sink)"
-
   private val docResolver = FieldResolver(textFields = Set("text"), defaultFields = Seq("text"))
   private val noTextResolver = FieldResolver(Set.empty, Nil)
 
@@ -248,6 +239,14 @@ object SparkEntry {
   private def hitsOf(response: JsonObj): Seq[JsonObj] =
     response("hits").asInstanceOf[JsonObj]("hits").asInstanceOf[Seq[Any]]
       .map(_.asInstanceOf[JsonObj])
+
+  /** The `_source` of each hit of a rendered `_search` response over `df`,
+    * read back as rows of `df`'s schema. */
+  private def sourceRows(s: SparkSession, df: DataFrame, rendered: String): DataFrame = {
+    import s.implicits._
+    s.read.schema(df.schema)
+      .json(hitsOf(parseObj(rendered)).map(h => graft.util.Json.render(h("_source"))).toDS())
+  }
 
   /** The rendered body of one aggregation `agg` over `df`, sent through
     * `_search`'s aggregation compiler ([[graft.queryast.EsAggs.search]]) and
@@ -293,9 +292,9 @@ object SparkEntry {
      emb.filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("v").as("qvec")))
   }
 
-  /** Flagship: per-tool error counts routed to sinks, on sf0.001. */
+  /** Flagship: per-sink error counts of the served routing, on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
-    pipeRouteAgg(spark, "/root/testdata/sf0.001")
+    byName("pipe_route_agg").build(spark, "/root/testdata/sf0.001")
 
   /** Shared input for the mapping-tree queries: nested-JSON docs derived
     * DETERMINISTICALLY from transcripts (the oracle rebuilds the identical
@@ -340,18 +339,19 @@ object SparkEntry {
       unix_micros(col("ts")).as("ts_us"),
       col("parse_error_field"), col("parse_error_kind"), col("dynamic_json"))
 
-  private def parsedTranscripts(s: SparkSession, dir: String): DataFrame =
-    DocParser.withParsedColumns(transcripts(s, dir).filter(col("text").isNotNull))
-
-  private def pipeRouteAgg(s: SparkSession, dir: String): DataFrame = {
-    val parsed = parsedTranscripts(s, dir)
-      .withColumn("eff_tool", coalesce(col("tool"), col("called_tool")))
-    parsed
-      .join(broadcast(sinkDim(s)), Seq("eff_tool"), "left")
-      .filter(col("call_status") === "ERR" || col("severity") === "ERROR")
-      .groupBy(coalesce(col("sink"), lit("sink_unrouted")).as("sink"))
-      .agg(count(lit(1)).as("n_errors"))
-      .orderBy("sink")
+  /** The error rows of the served parse → enrich → route stage
+    * ([[IndexingPipeline.parseEnrichRoute]]) over the transcripts, enriched
+    * on `tool` through a four-row tools dim; a row whose tool has no sink is
+    * `sink_unrouted`. */
+  private def routedErrors(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val tools = Seq(("purchase", "sink_commerce"), ("view", "sink_web"),
+        ("click", "sink_web"), ("logger", "sink_errors")).toDF("tool", "sink")
+    val (_, roles) = IndexingPipeline.dims(s)
+    IndexingPipeline.parseEnrichRoute(transcripts(s, dir), tools, roles,
+        IndexingPipeline.Config())._1
+      .filter(IndexingPipeline.isError)
+      .withColumn("sink", coalesce(col("sink"), lit("sink_unrouted")))
   }
 
   /** Shared oracle for the hand-built (`p_mapping_tree`) and the
@@ -421,6 +421,7 @@ object SparkEntry {
   val queries: Seq[Query] = Seq(
 
     // ---- sources / scans / sinks -------------------------------------
+    // control: a Parquet filter + projection; no engine code
     Query("s_scan_project", (s, d) =>
       t(s, d, "lineitem")
         .filter(expr("l_shipdate >= TIMESTAMP '1995-06-01' AND l_discount > 0.05"))
@@ -430,7 +431,7 @@ object SparkEntry {
 
     // ---- parse (doc mapper) ------------------------------------------
     Query("pipe_parse", (s, d) =>
-      parsedTranscripts(s, d)
+      DocParser.parse(transcripts(s, d)).valid
         .select(col("conv_id"), col("turn_idx"), col("called_tool"),
                 col("call_status"), col("error_code"), col("severity")),
       TranscriptsCte +
@@ -444,11 +445,11 @@ object SparkEntry {
         |FROM transcripts WHERE text IS NOT NULL""".stripMargin),
 
     Query("pipe_doc_counters", (s, d) => {
-      val tr = transcripts(s, d)
-      tr.agg(
-        sum(when(col("text").isNotNull, 1L).otherwise(0L)).as("num_valid_docs"),
-        sum(when(col("text").isNull, 1L).otherwise(0L)).as("num_doc_parsing_errors"),
-        sum(coalesce(octet_length(col("text")).cast("long"), lit(0L))).as("num_bytes_total"))
+      import s.implicits._
+      val (parsed, obs) = DocParser.parseObserved(transcripts(s, d))
+      parsed.valid.count() // the action that completes the observation
+      Seq(DocParser.counters(obs))
+        .toDF("num_valid_docs", "num_doc_parsing_errors", "num_bytes_total")
     },
       TranscriptsCte +
       """SELECT CAST(sum(CASE WHEN text IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS num_valid_docs,
@@ -457,7 +458,7 @@ object SparkEntry {
         |FROM transcripts""".stripMargin),
 
     Query("pipe_dead_letter", (s, d) =>
-      transcripts(s, d).filter(col("text").isNull)
+      DocParser.parse(transcripts(s, d)).deadLetter
         .select("conv_id", "turn_idx", "role"),
       TranscriptsCte +
       "SELECT conv_id, turn_idx, role FROM transcripts WHERE text IS NULL"),
@@ -482,11 +483,11 @@ object SparkEntry {
         |FROM (SELECT event_id, CAST(floor(value * 1e8) AS BIGINT) AS e FROM events)""".stripMargin),
 
     // ---- route / partition -------------------------------------------
-    Query("pipe_route_agg", (s, d) => pipeRouteAgg(s, d),
+    Query("pipe_route_agg", (s, d) =>
+      routedErrors(s, d).groupBy("sink").agg(count(lit(1)).as("n_errors")).orderBy("sink"),
       TranscriptsCte +
       """, parsed AS (
-        |  SELECT conv_id, turn_idx,
-        |    coalesce(tool, NULLIF(regexp_extract(text, 'CALL ([A-Za-z_][A-Za-z0-9_]*)\(([^)]*)\) -> (OK|ERR)', 1), '')) AS eff_tool,
+        |  SELECT conv_id, turn_idx, tool AS eff_tool,
         |    NULLIF(regexp_extract(text, 'CALL ([A-Za-z_][A-Za-z0-9_]*)\(([^)]*)\) -> (OK|ERR)', 3), '') AS call_status,
         |    (text LIKE 'ERROR%') AS is_err_sev
         |  FROM transcripts WHERE text IS NOT NULL)
@@ -496,18 +497,11 @@ object SparkEntry {
         |WHERE call_status = 'ERR' OR is_err_sev
         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    Query("pipe_routed_rows", (s, d) => {
-      val parsed = parsedTranscripts(s, d)
-        .withColumn("eff_tool", coalesce(col("tool"), col("called_tool")))
-      parsed.join(broadcast(sinkDim(s)), Seq("eff_tool"), "left")
-        .filter(col("call_status") === "ERR" || col("severity") === "ERROR")
-        .select(coalesce(col("sink"), lit("sink_unrouted")).as("sink"),
-                col("conv_id"), col("turn_idx"))
-    },
+    Query("pipe_routed_rows", (s, d) =>
+      routedErrors(s, d).select("sink", "conv_id", "turn_idx"),
       TranscriptsCte +
       """, parsed AS (
-        |  SELECT conv_id, turn_idx,
-        |    coalesce(tool, NULLIF(regexp_extract(text, 'CALL ([A-Za-z_][A-Za-z0-9_]*)\(([^)]*)\) -> (OK|ERR)', 1), '')) AS eff_tool,
+        |  SELECT conv_id, turn_idx, tool AS eff_tool,
         |    NULLIF(regexp_extract(text, 'CALL ([A-Za-z_][A-Za-z0-9_]*)\(([^)]*)\) -> (OK|ERR)', 3), '') AS call_status,
         |    (text LIKE 'ERROR%') AS is_err_sev
         |  FROM transcripts WHERE text IS NOT NULL)
@@ -537,7 +531,7 @@ object SparkEntry {
         |FROM transcripts""".stripMargin),
 
     Query("pipe_rollup", (s, d) =>
-      IndexingPipeline.conversationRollup(parsedTranscripts(s, d), salted = true,
+      IndexingPipeline.conversationRollup(DocParser.parse(transcripts(s, d)).valid, salted = true,
         IndexingPipeline.Config()),
       TranscriptsCte +
       """SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
@@ -693,12 +687,13 @@ object SparkEntry {
 
     // ---- filters / query AST ------------------------------------------
     Query("f_term", (s, d) =>
-      t(s, d, "events").filter(col("event_type") === "error")
+      t(s, d, "events").filter(QueryAst.Term("event_type", "error").toColumn(noTextResolver))
         .select("event_id", "user_id", "value"),
       "SELECT event_id, user_id, value FROM events WHERE event_type = 'error'"),
 
     Query("f_termset", (s, d) =>
-      t(s, d, "events").filter(col("event_type").isin("signup", "click"))
+      t(s, d, "events")
+        .filter(QueryAst.TermSet("event_type", Seq("signup", "click")).toColumn(noTextResolver))
         .select("event_id", "event_type"),
       "SELECT event_id, event_type FROM events WHERE event_type IN ('signup','click')"),
 
@@ -717,14 +712,14 @@ object SparkEntry {
 
     Query("f_range_ts", (s, d) =>
       t(s, d, "events")
-        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
-                col("ts") < lit("2024-01-20").cast("timestamp"))
+        .filter(QueryAst.Range("ts", gte = Some("2024-01-05"), lt = Some("2024-01-20"))
+          .toColumn(noTextResolver))
         .select("event_id", "ts"),
       """SELECT event_id, ts FROM events
         |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-20'""".stripMargin),
 
     Query("f_exists", (s, d) =>
-      transcripts(s, d).filter(col("tool").isNotNull)
+      transcripts(s, d).filter(QueryAst.Exists("tool").toColumn(noTextResolver))
         .select("conv_id", "turn_idx", "tool"),
       TranscriptsCte +
       "SELECT conv_id, turn_idx, tool FROM transcripts WHERE tool IS NOT NULL"),
@@ -892,6 +887,7 @@ object SparkEntry {
         |  round(sum(value), 4) AS sum, round(avg(value), 4) AS avg
         |FROM events GROUP BY event_type""".stripMargin),
 
+    // control: Spark's `percentile`; the served sketch is a_percentiles_sketch
     Query("a_percentiles", (s, d) =>
       t(s, d, "events").agg(
         round(percentile(col("value"), lit(0.25)), 4).as("p25"),
@@ -904,6 +900,7 @@ object SparkEntry {
         |  round(quantile_cont(value, 0.95), 4) AS p95
         |FROM events""".stripMargin),
 
+    // control: Spark's `percentile_approx` against its rank-error contract
     Query("a_percentiles_approx", (s, d) => {
       // sketch-based (aggregation.md:811-862). The sketch's picked elements
       // aren't SQL-mirrorable, but its CONTRACT is: the returned value's rank
@@ -968,6 +965,7 @@ object SparkEntry {
          |ORDER BY role""".stripMargin
     }),
 
+    // control: Spark's `countDistinct`
     Query("a_cardinality", (s, d) =>
       t(s, d, "events").groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("user_cardinality"))
@@ -975,6 +973,7 @@ object SparkEntry {
       """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS user_cardinality
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
+    // control: Spark's HLL; the served sketch is a_cardinality_splits
     Query("a_cardinality_approx", (s, d) =>
       // the reference's cardinality agg is sketch-based (postcard HLL);
       // approx_count_distinct is the Spark twin — oracle-checked via the
@@ -1054,6 +1053,7 @@ object SparkEntry {
       """SELECT event_type AS item, CAST(count(*) AS BIGINT) AS doc_count
         |FROM events GROUP BY 1 ORDER BY doc_count DESC, item ASC LIMIT 5""".stripMargin),
 
+    // control: a Spark groupBy; served sub-aggregations go through EsAggs
     Query("a_sub_agg", (s, d) =>
       t(s, d, "events")
         .groupBy(date_trunc("month", col("ts")).as("month"), col("event_type"))
@@ -1069,28 +1069,26 @@ object SparkEntry {
       """SELECT user_id AS key, max(ts) AS max_ts FROM events
         |GROUP BY 1 ORDER BY max_ts DESC, key ASC LIMIT 5""".stripMargin),
 
+    // control: a Spark count over lineitem
     Query("a_count_meta", (s, d) =>
       t(s, d, "lineitem").agg(count(lit(1)).as("total")),
       "SELECT CAST(count(*) AS BIGINT) AS total FROM lineitem"),
 
     // ---- sort / limit / pagination --------------------------------------
-    Query("k_topk", (s, d) =>
-      t(s, d, "events").orderBy(desc("value"), asc("event_id"))
-        .select("event_id", "value").limit(10),
+    Query("k_topk", (s, d) => {
+      val ev = t(s, d, "events").select("event_id", "value")
+      sourceRows(s, ev, EsApi.search(ev, noTextResolver, col("event_id"),
+        """{"sort": [{"value": "desc"}, {"event_id": "asc"}], "size": 10}"""))
+    },
       "SELECT event_id, value FROM events ORDER BY value DESC, event_id ASC LIMIT 10"),
 
     // `_search` resuming strictly after a (value, event_id) cursor
     // (collector.rs:316-341)
     Query("k_search_after", (s, d) => {
-      import s.implicits._
-      hitsOf(parseObj(graft.queryast.EsApi.search(
-        t(s, d, "events").select("event_id", "value"), noTextResolver, col("event_id"),
+      val ev = t(s, d, "events").select("event_id", "value")
+      sourceRows(s, ev, EsApi.search(ev, noTextResolver, col("event_id"),
         """{"sort": [{"value": "asc"}, {"event_id": "asc"}],
-          | "search_after": [150.0, 500], "size": 10}""".stripMargin)))
-        .map { h =>
-          val src = h("_source").asInstanceOf[JsonObj]
-          (asLong(src("event_id")), src("value").asInstanceOf[Double])
-        }.toDF("event_id", "value")
+          | "search_after": [150.0, 500], "size": 10}""".stripMargin))
     },
       """SELECT event_id, value FROM events
         |WHERE value > 150.0 OR (value = 150.0 AND event_id > 500)
@@ -1120,17 +1118,11 @@ object SparkEntry {
       // as an N-part lexicographic resume (collector.rs:316-341). Two user
       // sort criteria is the cap, so the doc tie rides the scroll hooks: a
       // trailing event_id sort and the stored three-part cursor.
-      import s.implicits._
-      val page = graft.queryast.EsApi.searchPage(
-        t(s, d, "events").select("event_id", "event_type", "value"), noTextResolver,
-        col("event_id"), """{"sort": [{"event_type": "asc"}, {"value": "asc"}], "size": 10}""",
+      val ev = t(s, d, "events").select("event_id", "event_type", "value")
+      sourceRows(s, ev, EsApi.searchPage(ev, noTextResolver, col("event_id"),
+        """{"sort": [{"event_type": "asc"}, {"value": "asc"}], "size": 10}""",
         cursorOverride = Some(Seq("error", 100.0, 500L)),
-        extraSort = Seq("event_id" -> true), includeAggs = false)
-      hitsOf(parseObj(page.rendered)).map { h =>
-        val src = h("_source").asInstanceOf[JsonObj]
-        (asLong(src("event_id")), src("event_type").asInstanceOf[String],
-          src("value").asInstanceOf[Double])
-      }.toDF("event_id", "event_type", "value")
+        extraSort = Seq("event_id" -> true), includeAggs = false).rendered)
     },
       """SELECT event_id, event_type, value FROM events
         |WHERE (event_type, value, event_id) > ('error', 100.0, 500)
@@ -1165,6 +1157,7 @@ object SparkEntry {
         |WHERE token >= 'p' AND token < 't' ORDER BY token LIMIT 20""".stripMargin),
 
     // ---- joins / enrichment / union -------------------------------------
+    // control: TPC-H broadcast joins; the served enrich is pipe_route_agg
     Query("j_enrich", (s, d) =>
       t(s, d, "customer")
         .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
@@ -1177,6 +1170,7 @@ object SparkEntry {
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY r_name ORDER BY r_name""".stripMargin),
 
+    // control: a Spark union; the served multi-index search is es_msearch_ndjson
     Query("j_union_multi_index", (s, d) => {
       val ev = t(s, d, "events")
       ev.filter(col("event_type") === "error")
@@ -1495,13 +1489,11 @@ object SparkEntry {
         |ORDER BY doc_id LIMIT 5""".stripMargin),
 
     // ---- doc fetch phase (K7): top-k ids → fetch stored columns ----------
+    // `_source` is the fetch phase: the top hits' stored columns
     Query("k_doc_fetch", (s, d) => {
-      val ev = t(s, d, "events")
-      val top = ev.orderBy(desc("value"), asc("event_id")).limit(5)
-        .select(col("event_id").as("_hit_id"))
-      ev.join(top, ev("event_id") === col("_hit_id"))
-        .select("event_id", "event_type", "user_id", "value")
-        .orderBy("event_id")
+      val ev = t(s, d, "events").select("event_id", "event_type", "user_id", "value")
+      sourceRows(s, ev, EsApi.search(ev, noTextResolver, col("event_id"),
+        """{"sort": [{"value": "desc"}, {"event_id": "asc"}], "size": 5}"""))
     },
       """WITH top AS (SELECT event_id FROM events ORDER BY value DESC, event_id ASC LIMIT 5)
         |SELECT e.event_id, e.event_type, e.user_id, e.value
@@ -1800,6 +1792,7 @@ object SparkEntry {
     // blocklist takes at 100 TB (blocklist broadcast, text never
     // shuffles; the per-doc rollup is one partial-agg shuffle of
     // (doc_id, counts)).
+    // control: regex + broadcast join, no engine operator
     Query("x_url_blocklist", (s, d) => {
       val injected = t(s, d, "documents").withColumn("text2", concat(col("text"),
         when(pmod(col("doc_id"), lit(7)) === 0,
@@ -2538,6 +2531,7 @@ object SparkEntry {
         |FROM m, unnest(generate_series(1, len(l))) t(i)""".stripMargin),
 
     // ---- tag sets (A12) --------------------------------------------------
+    // control: Spark's collect_set; served split tags come from the indexing run
     Query("a_tag_sets", (s, d) =>
       t(s, d, "documents").groupBy(col("source"))
         .agg(array_join(slice(sort_array(collect_set(col("lang"))), 1, 1000), ",").as("tags"),
@@ -2548,6 +2542,7 @@ object SparkEntry {
         |FROM documents GROUP BY source ORDER BY source""".stripMargin),
 
     // ---- search-stream export (S9) ---------------------------------------
+    // control: a Spark filter; the served stream encoder is s_search_stream_binary
     Query("s_search_stream", (s, d) =>
       t(s, d, "events").filter(col("event_type") === "click").select("user_id"),
       "SELECT user_id FROM events WHERE event_type = 'click'"),
@@ -2683,6 +2678,7 @@ object SparkEntry {
         |FROM s GROUP BY doc_id, n""".stripMargin),
 
     // ---- input formats: 1→N doc expansion (S6, the OTLP-spans shape) -----
+    // control: Spark's explode over a sequence
     Query("p_input_expand", (s, d) =>
       t(s, d, "events")
         .select(col("event_id"),
@@ -3071,6 +3067,7 @@ object SparkEntry {
         |ORDER BY turn_idx DESC, conv_id LIMIT 5""".stripMargin),
 
     // ---- list_fields / field caps (§2.11): schema introspection ----------
+    // control: the Parquet schemas as Spark reads them
     Query("s_list_fields", (s, d) => {
       import s.implicits._
       Seq("events", "documents", "lineitem").flatMap { tbl =>
@@ -3089,6 +3086,7 @@ object SparkEntry {
         |FROM cols ORDER BY table_name, field""".stripMargin),
 
     // ---- doc → JSON back-projection (P6) ---------------------------------
+    // control: Spark's to_json; the served doc → JSON is p_mapping_roundtrip
     Query("p_doc_to_json", (s, d) =>
       t(s, d, "documents").select(
         col("doc_id"),
@@ -3099,6 +3097,7 @@ object SparkEntry {
         |FROM documents""".stripMargin),
 
     // ---- JSON doc parse (P1): from_json round-trip -----------------------
+    // control: Spark's from_json round trip
     Query("p_json_parse", (s, d) => {
       val asJson = to_json(struct(col("doc_id"), col("lang"), col("source")))
       val parsed = from_json(asJson,
@@ -3109,20 +3108,6 @@ object SparkEntry {
         parsed.getField("source").as("source2"))
     },
       "SELECT doc_id, lang AS lang2, source AS source2 FROM documents"),
-
-    // ---- janitor: delete-task rewrite (T7) -------------------------------
-    Query("m_delete_rewrite", (s, d) => {
-      val docs = t(s, d, "documents")
-      // stored delete query: lang:fr AND source:src2 → anti-join rewrite
-      val doomed = docs.filter(col("lang") === "fr" && col("source") === "src2")
-        .select(col("doc_id").as("_del_id"))
-      docs.join(doomed, docs("doc_id") === col("_del_id"), "left_anti")
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-        .orderBy("lang")
-    },
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs FROM documents
-        |WHERE NOT (lang = 'fr' AND source = 'src2')
-        |GROUP BY lang ORDER BY lang""".stripMargin),
 
     // ---- janitor: retention policy over split metadata -------------------
     // CLI `index describe` (IndexStats + DescriptiveStats,
@@ -3309,6 +3294,7 @@ object SparkEntry {
         |  round(quantile_cont(bytes, 0.99), 4) AS bytes_q99
         |FROM splits""".stripMargin),
 
+    // control: an inline filter over pipe_split_stats; the served retention is m_janitor_cycle
     Query("m_retention", (s, d) => {
       val stats = byName("pipe_split_stats").build(s, d)
       // retention: drop splits whose whole time range ended before cutoff

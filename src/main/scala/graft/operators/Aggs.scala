@@ -103,8 +103,10 @@ object Aggs {
 
   /** FindTraceIds analog: top-N group keys by max(ts), with dedup — the one
     * genuinely custom collector of the reference
-    * (quickwit-search/src/find_trace_ids_collector.rs:111-140). groupBy+max+
-    * TakeOrdered gives identical semantics with partial aggregation. */
+    * (quickwit-search/src/find_trace_ids_collector.rs:111-140), and the one
+    * [[Jaeger.findTraceIds]] runs. groupBy+max+TakeOrdered gives identical
+    * semantics: partial aggregation map-side, one (key, max_ts) row shuffled
+    * per distinct key, TakeOrdered at the root. */
   def topGroupsByMaxTs(df: DataFrame, key: Column, ts: Column, n: Int): DataFrame =
     df.groupBy(key.as("key")).agg(max(ts).as("max_ts"))
       .orderBy(desc("max_ts"), asc("key")).limit(n)

@@ -130,17 +130,11 @@ object Jaeger {
   }
 
   /** `find_trace_ids` (lib.rs:248-296): filter + the FindTraceIds collector
-    * — top `numTraces` trace ids by max span-start, ties broken by trace id
-    * asc (find_trace_ids_collector.rs:111-140; same rule as
-    * `Aggs.topGroupsByMaxTs`). Partial-aggregates map-side, shuffles one
-    * (trace_id, max_ts) row per distinct trace, TakeOrdered at the root. */
+    * ([[Aggs.topGroupsByMaxTs]]) — top `numTraces` trace ids by max
+    * span-start, ties broken by trace id asc, as (trace_id, span_ts). */
   def findTraceIds(spans: DataFrame, q: TraceQuery): DataFrame =
-    spans
-      .filter(searchPredicate(q))
-      .groupBy(col("trace_id"))
-      .agg(max(col("ts")).as("span_ts"))
-      .orderBy(desc("span_ts"), asc("trace_id"))
-      .limit(q.numTraces)
+    Aggs.topGroupsByMaxTs(spans.filter(searchPredicate(q)), col("trace_id"), col("ts"),
+      q.numTraces).toDF("trace_id", "span_ts")
 
   /** `find_traces` (lib.rs:190-221): phase 1 = `findTraceIds`; phase 2 =
     * `stream_spans` (lib.rs:298-361) — fetch every span of the selected

@@ -87,10 +87,11 @@ object DocParser {
       m("num_bytes_total").asInstanceOf[Long])
   }
 
-  /** Full parse stage. `observe`d metrics: num_valid_docs,
-    * num_doc_parsing_errors, num_bytes_total (doc_processor.rs counters).
-    * Read them via `parseObserved`, a QueryExecutionListener, or
-    * `observedMetrics` after an action on `valid`. */
+  /** Full parse stage. With an `observation`, the input rows carry the
+    * doc_processor.rs counters num_valid_docs, num_doc_parsing_errors and
+    * num_bytes_total (read them with [[counters]]; see [[parseObserved]]).
+    * Without one the plan observes nothing, so any number of parsed frames
+    * can meet in one plan. */
   def parse(input: DataFrame, mode: Mode = Lenient,
             observation: Option[org.apache.spark.sql.Observation] = None): ParseResult = {
     // A row is valid iff text is non-null and, when it contains a CALL
@@ -102,14 +103,10 @@ object DocParser {
     val flagged = parsedAll.withColumn("_valid",
       col("text").isNotNull &&
         (!col("text").contains("CALL ") || col("called_tool").isNotNull))
-    val metrics = Seq(
+    val observed = observation.fold(flagged)(flagged.observe(_,
       sum(when(col("_valid"), 1L).otherwise(0L)).as("num_valid_docs"),
       sum(when(!col("_valid"), 1L).otherwise(0L)).as("num_doc_parsing_errors"),
-      sum(coalesce(octet_length(col("text")).cast("long"), lit(0L))).as("num_bytes_total"))
-    val observed = observation match {
-      case Some(obs) => flagged.observe(obs, metrics.head, metrics.tail: _*)
-      case None => flagged.observe("doc_processor", metrics.head, metrics.tail: _*)
-    }
+      sum(coalesce(octet_length(col("text")).cast("long"), lit(0L))).as("num_bytes_total")))
     val parsedCols = Seq("called_tool", "call_status", "error_code", "error_msg", "severity")
     val valid = observed.filter(col("_valid")).drop("_valid")
     val dead = flagged.filter(!col("_valid")).drop("_valid").drop(parsedCols: _*)

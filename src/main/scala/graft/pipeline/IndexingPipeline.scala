@@ -42,6 +42,10 @@ object IndexingPipeline {
       splits: Seq[Manifest.SplitEntry],
       routedChecksum: Long)
 
+  /** The rows the error index keeps: a failed tool call or an ERROR-level
+    * turn. The rollup's `n_errors` counts the same rows. */
+  val isError: Column = col("call_status") === "ERR" || col("severity") === "ERROR"
+
   /** tools/roles dimension frames from the in-code fixtures. */
   def dims(spark: SparkSession): (DataFrame, DataFrame) = {
     import spark.implicits._
@@ -105,12 +109,12 @@ object IndexingPipeline {
     * (a hashed salt would force exactly that, keeping the skew tail). */
   def conversationRollup(routed: DataFrame, salted: Boolean, cfg: Config): DataFrame = {
     val turnStruct = struct(col("turn_idx"), col("text"))
-    val isErr = when(col("call_status") === "ERR" || col("severity") === "ERROR", 1L).otherwise(0L)
+    val oneIfError = when(isError, 1L).otherwise(0L)
     if (!salted) {
       routed.groupBy(col("conv_id"))
         .agg(collect_list(turnStruct).as("_turns"),
              count(lit(1)).as("n_turns"),
-             sum(isErr).as("n_errors"),
+             sum(oneIfError).as("n_errors"),
              min(col("ts")).as("first_ts"), max(col("ts")).as("last_ts"))
         .withColumn("rollup_text",
           array_join(transform(sort_array(col("_turns")), t => t.getField("text")), "\n"))
@@ -122,7 +126,7 @@ object IndexingPipeline {
         .groupBy(col("conv_id"), col("_chunk"))
         .agg(collect_list(turnStruct).as("_p_turns"),
              count(lit(1)).as("_p_n"),
-             sum(isErr).as("_p_err"),
+             sum(oneIfError).as("_p_err"),
              min(col("ts")).as("_p_min"), max(col("ts")).as("_p_max"))
         .withColumn("_p_text",
           array_join(transform(sort_array(col("_p_turns")), t => t.getField("text")), "\n"))
@@ -236,10 +240,9 @@ object IndexingPipeline {
       // the grouped pass runs alone and first: concurrent first-touch of an
       // unmaterialized cache would race partition computation instead of
       // sharing it
-      val isErr = col("call_status") === "ERR" || col("severity") === "ERROR"
       val h = xxhash64(coalesce(col("sink"), lit("_null")), col("conv_id"), col("turn_idx"))
       val aggs = docStatsAggs(cfg) ++
-        (sum(when(isErr, 1L).otherwise(0L)).as("_errors") +: checksumAggs(h))
+        (sum(when(isError, 1L).otherwise(0L)).as("_errors") +: checksumAggs(h))
       val docStats = routed.groupBy("partition_id").agg(aggs.head, aggs.tail: _*)
         // NTZ-safe: convert to epoch µs inside the plan — collecting raw
         // ts columns yields LocalDateTime for TIMESTAMP_NTZ inputs
@@ -251,7 +254,7 @@ object IndexingPipeline {
       val deadRows = Observation()
       def zstd(df: DataFrame) = df.write.mode("overwrite").option("compression", "zstd")
       val writes = Seq(
-        Future(zstd(routed.filter(isErr)).partitionBy("sink")
+        Future(zstd(routed.filter(isError)).partitionBy("sink")
           .parquet(s"$outDir/error_index/batch-$batchId")),
         Future(zstd(conversationRollup(routed, salted, cfg)
           .observe(rollupRows, count(lit(1)).as("rows")))

@@ -27,7 +27,9 @@ import org.apache.spark.sql.SparkSession
   * [[graft.sources.TranscriptTable]] (manifest CAS + split file groups) plus
   * the validated `index_config.json`. All operations are driver-side
   * metadata work of O(#splits) — file deletion is the only IO and is
-  * per-split independent.
+  * per-split independent. Source mutations serialize on a per-index lock
+  * that is a monitor inside one JVM; it does not cover two processes that
+  * share a root.
   */
 object IndexService {
 
@@ -300,7 +302,10 @@ final class IndexService(rootDir: String, spark: SparkSession) {
     Paths.get(indexDir(indexId), "sources.json")
 
   /** Runs `f` holding the index's source lock: a read-modify-write of
-    * `sources.json` under it cannot lose a concurrent writer's change. */
+    * `sources.json` under it cannot lose a concurrent writer's change made
+    * in this JVM. The lock is a monitor inside one JVM: two processes that
+    * share a root do not exclude each other, and one can lose the other's
+    * change. */
   private def withSourcesLock[T](indexId: String)(f: => T): T =
     sourceLocks.computeIfAbsent(Paths.get(indexDir(indexId)).toAbsolutePath.normalize,
       _ => new Object).synchronized(f)

@@ -83,7 +83,7 @@ object StreamingPipeline {
       // batch-scoped partition dirs + overwrite ⇒ idempotent under
       // foreachBatch replay (see class doc); readers see batch_id as a
       // discovered partition column
-      routed.filter(col("call_status") === "ERR" || col("severity") === "ERROR")
+      routed.filter(IndexingPipeline.isError)
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("sink").parquet(s"$outDir/error_index/batch_id=$batchId")
       dead.write.mode("overwrite").parquet(s"$outDir/dead_letter/batch_id=$batchId")

@@ -44,6 +44,13 @@ class DocParserSpec extends SparkTestBase {
     assert(c.numBytesTotal === (t1.length + t2.length + "CALL truncated(".length).toLong)
   }
 
+  test("two parsed batches combine in one plan: no observation unless one is passed") {
+    // an unnamed parse must not attach a named metric: two of them in one
+    // plan would fail analysis with DUPLICATED_METRICS_NAME
+    val both = DocParser.parse(fixture).valid.union(DocParser.parse(fixture).valid)
+    assert(both.count() === 4L)
+  }
+
   test("dead letter rows are labeled by failure kind") {
     val labels = DocParser.parse(fixture).deadLetter
       .select("conv_id", "turn_idx", "error_label").collect()

@@ -94,7 +94,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     // sink parity with an uninterrupted batch run over the full input
     val errAll = graft.pipeline.IndexingPipeline.parseEnrichRoute(
       spark.read.parquet(in), tools, roles, cfg)._1
-      .filter(col("call_status") === "ERR" || col("severity") === "ERROR").count()
+      .filter(graft.pipeline.IndexingPipeline.isError).count()
     assert(spark.read.parquet(s"$out/error_index").count() === errAll)
     assert(errBefore <= errAll)
     val deadAll = graft.pipeline.IndexingPipeline.parseEnrichRoute(
