@@ -71,10 +71,13 @@ object EsApi {
     *    filtered row, so `total` is a `count(1)` Observation inside it,
     *    placed below the search_after predicate and the offset. Only a
     *    `size: 0` request runs a `count()` for the total.
-    *  - A `_score` sort adds one corpus-stats aggregate over the index
-    *    frame (N, avgdl, per-term df), collected into a one-row local
-    *    frame; the page query scores each filtered row over its own tokens
-    *    against that row through a broadcast nested-loop join — no
+    *  - A `_score` sort first takes the corpus statistics of the index
+    *    frame (N, avgdl, per-term df) as a one-row local frame. Over a bare
+    *    Parquet scan (what `TranscriptTable.scan` returns) they are sums of
+    *    memoized per-file counts: no job once the files have been counted,
+    *    one grouped job over the new files otherwise. Any other frame runs
+    *    one aggregate. The page query scores each filtered row over its own
+    *    tokens against that row through a broadcast nested-loop join — no
     *    explode, groupBy, or shuffle for scoring
     *    ([[graft.operators.Scoring]]).
     *  - Aggregations: [[EsAggs.run]] over the same filtered frame, on one

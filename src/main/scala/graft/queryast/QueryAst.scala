@@ -4,6 +4,8 @@ import graft.functions.Tokenizers
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import java.util.Locale
+
 /** Query AST — every node of quickwit-query/src/query_ast/mod.rs:56-72,
   * compiled to a Spark `Column` predicate instead of a tantivy query.
   * These nodes FILTER; relevance ranking (`_score` sort) lives in
@@ -57,17 +59,18 @@ object QueryAst {
     * must appear among the field's tokens. */
   final case class Term(field: String, value: String) extends QueryAst {
     def toColumn(r: FieldResolver): Column =
-      if (r.isText(field)) array_contains(Tokenizers.default(col(field)), value.toLowerCase)
+      if (r.isText(field)) hasToken(col(field), value.toLowerCase(Locale.ROOT))
       else col(field) === lit(value)
   }
 
   /** term_set_query.rs: `field: IN [v1 v2 ...]`. */
   final case class TermSet(field: String, values: Seq[String]) extends QueryAst {
     def toColumn(r: FieldResolver): Column =
-      if (r.isText(field))
-        arrays_overlap(Tokenizers.default(col(field)),
-          array(values.map(v => lit(v.toLowerCase)): _*))
-      else col(field).isin(values: _*)
+      if (r.isText(field)) {
+        val terms = values.map(_.toLowerCase(Locale.ROOT))
+        terms.map(t => tokenGate(col(field), Seq(t))).foldLeft(lit(false))(_ || _) &&
+          arrays_overlap(Tokenizers.default(col(field)), array(terms.map(lit): _*))
+      } else col(field).isin(values: _*)
   }
 
   sealed trait FullTextMode
@@ -85,13 +88,14 @@ object QueryAst {
       if (terms.isEmpty) lit(true)
       else mode match {
         case ModeAnd =>
-          terms.map(t => array_contains(Tokenizers.default(col(field)), t)).reduce(_ && _)
+          tokenGate(col(field), terms) &&
+            terms.map(t => array_contains(Tokenizers.default(col(field)), t)).reduce(_ && _)
         case ModeOr =>
-          terms.map(t => array_contains(Tokenizers.default(col(field)), t)).reduce(_ || _)
+          terms.map(hasToken(col(field), _)).reduce(_ || _)
         case ModePhrase(0) =>
           // adjacency regex directly on lower(text) — one codegen'd pass,
           // no token-array build/join (see rawPhraseRegex for fidelity)
-          containsGate(col(field), terms) &&
+          tokenGate(col(field), terms) &&
             regexp_like(lower(col(field)), lit(rawPhraseRegex(terms, prefix = false)))
         case ModePhrase(slop) =>
           // Lucene/tantivy slop is a TOTAL budget over all gaps, and a
@@ -99,7 +103,7 @@ object QueryAst {
           // golden examples ibid.). Enumerate gap compositions summing
           // ≤ slop (plus, for 2-term phrases, the transposed order with the
           // residual budget) into one regex alternation.
-          containsGate(col(field), terms) &&
+          tokenGate(col(field), terms) &&
             regexp_like(normalizedStream(col(field)), lit(slopRegex(terms, slop)))
       }
     }
@@ -117,8 +121,8 @@ object QueryAst {
       if (terms.isEmpty) lit(true)
       else {
         val clauses =
-          terms.init.map(t => array_contains(Tokenizers.default(col(field)), t)) :+
-            (contains(lower(col(field)), lit(terms.last)) &&
+          terms.init.map(hasToken(col(field), _)) :+
+            (tokenGate(col(field), Seq(terms.last)) &&
               regexp_like(lower(col(field)),
                 lit(rawPhraseRegex(Seq(terms.last), prefix = true))))
         if (andOperator) clauses.reduce(_ && _) else clauses.reduce(_ || _)
@@ -131,7 +135,7 @@ object QueryAst {
     def toColumn(r: FieldResolver): Column = {
       val terms = tokenizeQuery(text)
       if (terms.isEmpty) lit(true)
-      else containsGate(col(field), terms) &&
+      else tokenGate(col(field), terms) &&
         regexp_like(lower(col(field)), lit(rawPhraseRegex(terms, prefix = true)))
     }
   }
@@ -139,7 +143,7 @@ object QueryAst {
   /** wildcard_query.rs: `foo*` / `f?o` style. */
   final case class Wildcard(field: String, pattern: String) extends QueryAst {
     def toColumn(r: FieldResolver): Column = {
-      val rx = "^" + pattern.toLowerCase.flatMap {
+      val rx = "^" + pattern.toLowerCase(Locale.ROOT).flatMap {
         case '*' => ".*"
         case '?' => "."
         case c if "\\.[]{}()+-^$|".indexOf(c) >= 0 => "\\" + c
@@ -219,7 +223,8 @@ object QueryAst {
   }
 
   private[queryast] def tokenizeQuery(text: String): Seq[String] =
-    text.toLowerCase.split("[^\\p{L}\\p{N}]+").toSeq.filter(t => t.nonEmpty && t.length <= 255)
+    text.toLowerCase(Locale.ROOT).split("[^\\p{L}\\p{N}]+").toSeq
+      .filter(t => t.nonEmpty && t.length <= 255)
 
   /** The (field, term) pairs that contribute to BM25 relevance — the
     * POSITIVE text clauses of the query. `filter` and `must_not` clauses
@@ -244,15 +249,25 @@ object QueryAst {
   private[queryast] def normalizedStream(c: Column): Column =
     concat(lit(" "), array_join(Tokenizers.default(c), " "), lit(" "))
 
-  /** Cheap conjunctive pre-gate for phrase regexes: every query term (terms
-    * are lowercased alphanumeric, so normalization can't synthesize them)
-    * must appear as a substring of lower(text) for the token-stream regex to
-    * possibly match. `contains` is codegen'd and ~10× cheaper than the
-    * tokenize+join+regex it guards; the && short-circuits in generated code
-    * so the regex only runs on candidate rows. Semantics unchanged — the
-    * gate is implied by the regex. */
-  private[queryast] def containsGate(c: Column, terms: Seq[String]): Column =
-    terms.map(t => contains(lower(c), lit(t))).reduce(_ && _)
+  /** Substring pre-gate for token tests: `t` can be a token of `c` only if
+    * it is a substring of `lower(coalesce(c, ""))`, because the `default`
+    * analyzer splits exactly that string, so every token it emits is a
+    * substring of it. The gate holds only for analyzers whose tokens are
+    * substrings of the lowered text, which is true of `default` (and of the
+    * phrase regexes, which match on the same lowered text) but not of a
+    * stemming or ASCII-folding analyzer. `contains` is a byte search with no
+    * allocation; `&&` short-circuits in generated code, so only candidate
+    * rows are tokenized. Every term must be a substring. A null text gives
+    * `false`, never null, so a gated test under `must_not` keeps the
+    * null-text row, as the tokenized test does. */
+  private[queryast] def tokenGate(c: Column, terms: Seq[String]): Column = {
+    val text = lower(coalesce(c, lit("")))
+    terms.map(t => contains(text, lit(t))).reduce(_ && _)
+  }
+
+  /** `array_contains(Tokenizers.default(c), t)` behind its [[tokenGate]]. */
+  private def hasToken(c: Column, t: String): Column =
+    tokenGate(c, Seq(t)) && array_contains(Tokenizers.default(c), t)
 
   /** Slop-0 adjacency regex applied DIRECTLY to lower(text): each query
     * term must form a whole token (bounded by non-alphanumeric runs or

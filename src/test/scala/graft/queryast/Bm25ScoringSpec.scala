@@ -2,17 +2,22 @@ package graft.queryast
 
 import graft.SparkTestBase
 import graft.functions.Tokenizers
+import graft.model.TranscriptGen
 import graft.operators.Scoring
+import graft.publish.{Checkpoint, DeleteExecutor, MergeExecutor, MergePolicy}
+import graft.sources.TranscriptTable
 import graft.util.Json
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** The per-row BM25 scorer behind `Scoring.bm25` and `_search`: its scores
-  * against the explode/groupBy/join formulation it replaced, and the plan
-  * it builds — no shuffle for scoring, and scroll continuations that reuse
-  * the corpus stats of the opening page. */
+  * against the explode/groupBy/join formulation it replaced, the corpus
+  * statistics of a Parquet scan summed from memoized per-file counts, and
+  * the plan it builds — no shuffle for scoring, no corpus job once the
+  * files are counted, and scroll continuations that reuse the corpus stats
+  * of the opening page. */
 class Bm25ScoringSpec extends SparkTestBase {
 
   private val resolver = FieldResolver(Set("title", "body"), Seq("title"))
@@ -114,12 +119,16 @@ class Bm25ScoringSpec extends SparkTestBase {
     val docs = spark.read.parquet(dir)
     val body = """{"query":{"match":{"title":{"query":"spark vector","operator":"or"}}},""" +
       """"size":3,"track_total_hits":false}"""
-    EsApi.search(docs, resolver, col("doc_id"), body) // warm
-    val (_, shuffles) = planShape("bm25-search") {
+    // cold: the one shuffle is the per-file count job over the new files
+    val (_, cold) = planShape("bm25-search-cold") {
       EsApi.search(docs, resolver, col("doc_id"), body)
     }
-    // the one shuffle is the corpus-stats aggregate's partial rows
-    assert(shuffles === 1)
+    assert(cold === 1)
+    // warm: the stats are sums of memoized per-file counts
+    val (_, warm) = planShape("bm25-search-warm") {
+      EsApi.search(docs, resolver, col("doc_id"), body)
+    }
+    assert(warm === 0)
     val terms = Scoring.Terms(Seq(col("title")), Seq(0 -> "spark", 0 -> "vector"))
     val scored = Scoring.withScore(docs, terms, Scoring.corpusStats(docs, terms), "s")
     scored.collect()
@@ -142,5 +151,106 @@ class Bm25ScoringSpec extends SparkTestBase {
     // the continuation scores against the stored stats: no corpus aggregate
     assert(nextShuffles === 0)
     ctx.close()
+  }
+
+  /** The replaced single aggregate: `avg` of the positive token counts. */
+  private def aggregateStats(docs: DataFrame, q: Scoring.Terms): Row = {
+    val toks = q.fields.map(Tokenizers.default)
+    val aggs = toks.flatMap { t =>
+      Seq(count_if(size(t) > 0), avg(when(size(t) > 0, size(t))))
+    } ++ q.terms.map { case (i, term) => count_if(array_contains(toks(i), term)) }
+    docs.agg(aggs.head, aggs.tail: _*).head()
+  }
+
+  /** Two fields × three terms: one term per field matches nothing. */
+  private val twoFields = Scoring.Terms(Seq(col("text"), col("role")),
+    Seq(0 -> "fox", 0 -> "spark", 0 -> "nowhere", 1 -> "tool", 1 -> "user", 1 -> "nobody"))
+
+  private def delta(from: Long, to: Long) =
+    Checkpoint.Delta(Seq(Checkpoint.PartitionDelta("src", from, to)))
+
+  test("per-file corpus stats equal the plain aggregate after appends, a merge and a delete") {
+    import spark.implicits._
+    // a space and a `%` in the table dir: file URIs escape both
+    val dir = tmpDir("bm25 stats %")
+    val table = new TranscriptTable(dir, spark)
+    val turns = TranscriptGen.turns(numConvs = 40, avgTurns = 5).toDS().toDF()
+    val half = pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(2L))
+    def check(step: String): Unit = {
+      val scan = table.scan()
+      assert(Scoring.corpusStats(scan, twoFields).head() === aggregateStats(scan, twoFields), step)
+      // the same files again: answered from the memo, no job
+      val (jobs, _) = planShape(s"bm25-files-$step")(Scoring.corpusStats(table.scan(), twoFields))
+      assert(jobs === 0, step)
+    }
+    table.append(turns.filter(half === 0L), delta(-1, 1), numFiles = 2)
+    check("append-1")
+    table.append(turns.filter(half === 1L), delta(1, 2), numFiles = 2)
+    // an all-null-text split
+    table.append(turns.limit(6).withColumn("text", lit(null).cast("string")), delta(2, 3),
+      numFiles = 1)
+    check("append-2")
+    val merged = MergeExecutor.run(dir, spark, MergePolicy.Config(mergeFactor = 2,
+      maxMergeFactor = 5, minLevelNumDocs = 1000000L, splitNumDocsTarget = 100000L))
+    assert(merged.merged.nonEmpty)
+    check("merge")
+    val deleted = DeleteExecutor.run(dir, spark,
+      Seq(DeleteExecutor.DeleteTask(5L, QueryAst.Term("role", "assistant"))))
+    assert(deleted.rewritten.nonEmpty)
+    check("delete")
+    // the all-null-text file alone, and an empty file: N = 0, avgdl null
+    val nullText = tmpDir("bm25-null")
+    turns.limit(6).withColumn("text", lit(null).cast("string")).coalesce(1)
+      .write.mode("overwrite").parquet(nullText)
+    val empty = tmpDir("bm25-empty")
+    turns.limit(0).coalesce(1).write.mode("overwrite").parquet(empty)
+    Seq(nullText, empty).foreach { d =>
+      val docs = spark.read.parquet(d)
+      val got = Scoring.corpusStats(docs, twoFields).head()
+      assert(got === aggregateStats(docs, twoFields))
+      assert(got.isNullAt(1))
+    }
+  }
+
+  test("filtered, _index-unioned and local frames take the aggregate path") {
+    val dir = tmpDir("bm25-paths")
+    corpus.repartition(3).write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val terms = Scoring.Terms(Seq(col("title")), Seq(0 -> "spark", 0 -> "vector"))
+    Scoring.corpusStats(docs, terms) // counts the files
+    val filtered = docs.filter(col("doc_id") > 2)
+    val unioned = docs.withColumn("_index", lit("a"))
+      .unionByName(docs.withColumn("_index", lit("b")))
+    val local = spark.createDataFrame(java.util.Arrays.asList(docs.collect(): _*), docs.schema)
+    Seq("filtered" -> filtered, "unioned" -> unioned, "local" -> local).foreach { case (name, df) =>
+      var got: Row = null
+      val (jobs, _) = planShape(s"bm25-aggregate-$name") {
+        got = Scoring.corpusStats(df, terms).head()
+      }
+      assert(jobs >= 1, name)
+      assert(got === aggregateStats(df, terms), name)
+    }
+    val (jobs, _) = planShape("bm25-per-file")(Scoring.corpusStats(docs, terms))
+    assert(jobs === 0)
+  }
+
+  test("plan shape: a warm BM25 _search over TranscriptTable.scan runs no corpus job") {
+    import spark.implicits._
+    val table = new TranscriptTable(tmpDir("bm25-table"), spark)
+    table.append(TranscriptGen.turns(numConvs = 60, avgTurns = 5).toDS().toDF(), delta(-1, 1))
+    val r = FieldResolver(Set("text"), Seq("text"))
+    val aggs = """"aggs":{"tools":{"terms":{"field":"tool"}}}"""
+    val bm25 = s"""{"query":{"match":{"text":"fox"}},"size":5,$aggs}"""
+    val byTs = s"""{"query":{"match":{"text":"fox"}},"sort":[{"ts":"desc"}],"size":5,$aggs}"""
+    def search(body: String): Unit =
+      EsApi.search(table.scan(), r, concat_ws("/", col("conv_id"), col("turn_idx")), body)
+    search(bm25) // warm: counts the files
+    search(byTs)
+    val (tsJobs, _) = planShape("table-ts-search")(search(byTs))
+    val (bm25Jobs, _) = planShape("table-bm25-search")(search(bm25))
+    assert(tsJobs <= 3)
+    assert(bm25Jobs <= tsJobs + 1)
+    // the page and the terms agg: no third, corpus-stats query
+    assert(executedPlans(search(bm25)).size === 2)
   }
 }

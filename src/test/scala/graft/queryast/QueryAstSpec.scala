@@ -1,7 +1,12 @@
 package graft.queryast
 
 import graft.SparkTestBase
+import graft.functions.Tokenizers
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 import QueryAst._
+
+import java.util.Locale
 
 /** Predicate-semantics tests for every query AST node over a small corpus
   * (reference node set: quickwit-query/src/query_ast/mod.rs:56-72). */
@@ -118,6 +123,56 @@ class QueryAstSpec extends SparkTestBase {
       (3L, new java.sql.Timestamp(base / 1000 + 10000))).toDF("id", "ts")
     val q = TsRange("ts", Some(base), Some(base + 10000000L))
     assert(df.filter(q.toColumn(r)).select("id").collect().map(_.getLong(0)).toSet === Set(1L, 2L))
+  }
+
+  /** Rows that trip a substring gate: null and empty text, substrings
+    * that are not tokens (`fox` in `foxes`), punctuation-joined tokens,
+    * upper-case and non-ASCII text. */
+  private def gated = {
+    import spark.implicits._
+    Seq[(Long, String)](
+      (1L, "The quick brown fox jumps"), (2L, null), (3L, "foxes outfoxed quickly"),
+      (4L, "fox,dog;quick"), (5L, "QUICK FOX"), (6L, "Ünïcode ÉTÉ über-fox"),
+      (7L, ""), (8L, "dog"), (9L, "brownish quickest dog")
+    ).toDF("id", "text")
+  }
+
+  test("substring gates match the tokenized predicates row for row, also under must_not") {
+    val toks = Tokenizers.default(col("text"))
+    def has(t: String): Column = array_contains(toks, t)
+    def check(q: QueryAst, reference: Column): Unit = {
+      def idsOf(c: Column) = gated.filter(c).select("id").collect().map(_.getLong(0)).toSet
+      assert(idsOf(q.toColumn(r)) === idsOf(reference), q)
+      assert(idsOf(Bool(mustNot = Seq(q)).toColumn(r)) === idsOf(!reference), q)
+    }
+    Seq("fox", "FOX", "quick", "dog", "été", "über", "fox,dog", "", "zzz").foreach { v =>
+      check(Term("text", v), has(v.toLowerCase(Locale.ROOT)))
+    }
+    check(TermSet("text", Seq("fox", "Dog")), arrays_overlap(toks, array(lit("fox"), lit("dog"))))
+    check(TermSet("text", Seq("foxe", "ÉTÉ")), has("foxe") || has("été"))
+    check(TermSet("text", Nil), lit(false))
+    check(FullText("text", "quick fox", ModeAnd), has("quick") && has("fox"))
+    check(FullText("text", "Quick, FOX!", ModeOr), has("quick") || has("fox"))
+    check(FullText("text", "über dog", ModeOr), has("über") || has("dog"))
+    def prefixed(p: String): Column = exists(toks, t => t.startsWith(p))
+    check(BoolPrefix("text", "fox qui", andOperator = true), has("fox") && prefixed("qui"))
+    check(BoolPrefix("text", "dog brow"), has("dog") || prefixed("brow"))
+    check(FullText("text", "quick fox", ModePhrase(0)),
+      concat(lit(" "), array_join(toks, " "), lit(" ")).contains(" quick fox "))
+  }
+
+  test("query text lowercases the same under a tr_TR default locale") {
+    val saved = Locale.getDefault
+    Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+    try {
+      // Java's "THINKING".toLowerCase is "thınkıng" here; Spark's lower of
+      // the ASCII doc text is "thinking"
+      assert(ids(Term("text", "THINKING")) === Set(2L))
+      assert(ids(TermSet("text", Seq("THINKING", "JUMPS"))) === Set(1L, 2L))
+      assert(ids(FullText("text", "QUICK THINKING", ModeAnd)) === Set(2L))
+      assert(ids(Wildcard("text", "THINK*")) === Set(2L))
+      assert(QueryAst.scoringTerms(Term("text", "WINS")) === Seq("text" -> "wins"))
+    } finally Locale.setDefault(saved)
   }
 
   test("slopRegex composes gap budgets") {
