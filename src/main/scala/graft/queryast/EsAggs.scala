@@ -1,11 +1,13 @@
 package graft.queryast
 
-import graft.operators.{Aggs, DdSketch}
+import graft.operators.{Aggs, DdSketch, TermCells}
 import graft.util.Json
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 /** ES aggregation-REQUEST compiler: the `aggs` body of a `_search` request
   * → one Spark aggregation plan per top-level aggregation → the ES JSON
@@ -34,11 +36,16 @@ import org.apache.spark.sql.types.ArrayType
   * nesting costs L shuffles, each partially aggregated, and per-parent
   * truncation for nested `terms` runs as a window over the per-parent TERM
   * HISTOGRAM (the same bounded state tantivy keeps per bucket), never over
-  * rows. A top-level `terms` is one query: one groupBy into term cells, a
-  * TakeOrdered of the kept buckets over them, and a `sum(doc_count)`
-  * Observation on the cells it reads for `sum_other_doc_count` — one scan
-  * and one exchange. Nested `terms` collect their per-parent totals in a
-  * second query over the same cells.
+  * rows. A top-level `terms` with no sub-aggregation under `_search` with a
+  * page costs no query of its own: its cells are a
+  * [[graft.operators.TermCells]] aggregate observed inside the page query
+  * ([[riders]], [[observedCells]]), and [[cellsBodies]] keeps and renders
+  * the buckets on the driver through the same renderer. Anywhere else (and
+  * when those cells overflow) a top-level `terms` is one query: one groupBy
+  * into term cells, a TakeOrdered of the kept buckets over them, and a
+  * `sum(doc_count)` Observation on the cells it reads for
+  * `sum_other_doc_count` — one scan and one exchange. Nested `terms`
+  * collect their per-parent totals in a second query over the same cells.
   *
   * Terms tie-break: the reference orders equal-count terms by key
   * DESCENDING (0001-aggregations.yaml:108-124: hosts 192.168.0.15 before
@@ -106,17 +113,33 @@ object EsAggs {
       def dbl(k: String, dflt: Double) = p.get(k).map(_.asInstanceOf[Double]).getOrElse(dflt)
       val agg: Agg = kind match {
         case "terms" =>
-          // order: {"_count"|"_key": "asc"|"desc"}; default _count desc
-          val (target, asc) = p.get("order").map { o =>
-            val (t, dir) = o.asInstanceOf[Obj].head
-            (t, dir == "asc")
+          // order: one {"_count"|"_key": "asc"|"desc"} entry; default
+          // _count desc. Checked here, before any job runs.
+          val (target, asc) = p.get("order").map {
+            case o: Map[String, Any] @unchecked if o.size == 1 =>
+              o.head match {
+                case (t @ ("_count" | "_key"), d @ ("asc" | "desc")) => (t, d == "asc")
+                case (t @ ("_count" | "_key"), d) => throw new IllegalArgumentException(
+                  s"invalid aggregation request: unknown terms order direction `$d` for `$t`, expected `asc` or `desc`")
+                case (t, _) => throw new IllegalArgumentException(
+                  s"invalid aggregation request: unknown terms order target `$t`")
+              }
+            case o => throw new IllegalArgumentException(
+              s"invalid aggregation request: terms aggregation `$name` order must be one " +
+                s"{target: direction} entry, got ${Json.render(o)}")
           }.getOrElse(("_count", false))
           // split_size is an ACCURACY knob for truncated leaves
           // (aggregation.md:527-532); this engine computes terms exactly
           // (one groupBy over every doc), so it is accepted and has no
           // effect — 0 error bounds are the truthful exact-case values.
           // show_term_doc_count_error adds the per-bucket bound field.
-          Terms(fld, dbl("size", 10).toInt, dbl("min_doc_count", 1).toLong, target, asc,
+          val size = dbl("size", 10).toInt
+          val minDocCount = dbl("min_doc_count", 1).toLong
+          require(size >= 0,
+            s"invalid aggregation request: terms aggregation `$name` size must be >= 0, got $size")
+          require(minDocCount >= 0, s"invalid aggregation request: terms aggregation `$name` " +
+            s"min_doc_count must be >= 0, got $minDocCount")
+          Terms(fld, size, minDocCount, target, asc,
             p.get("show_term_doc_count_error").exists(_.asInstanceOf[Boolean]))
         case "histogram" =>
           def bounds(k: String): Option[(Double, Double)] = p.get(k).map { b =>
@@ -193,35 +216,103 @@ object EsAggs {
     * [[org.apache.spark.sql.graft.ColumnBridge.rowsBounded]]), and when
     * Spark completes the Observation without metrics because the optimizer
     * removed its node (an input it can prove empty). */
-  private[queryast] def withObservedLong[T](frame: DataFrame, metric: Column,
-                                            fallback: => Long)(query: DataFrame => T): (T, Long) =
-    if (org.apache.spark.sql.graft.ColumnBridge.rowsBounded(frame)) (query(frame), fallback)
+  private def withObservedLong[T](frame: DataFrame, metric: Column,
+                                  fallback: => Long)(query: DataFrame => T): (T, Long) =
+    if (ColumnBridge.rowsBounded(frame)) (query(frame), fallback)
     else {
-      val o = Observation()
-      val observed = frame.observe(o, metric.as("v"))
-      val result =
-        try query(observed)
-        catch { case scala.util.control.NonFatal(e) =>
-          // the session keeps an Observation registered until a query over
-          // it ends; a query that failed to build never ran, so end one
-          // that runs no job
-          scala.util.Try(observed.limit(0).collect())
-          throw e
-        }
-      (result, o.get.get("v").map(v => Option(v).fold(0L)(_.asInstanceOf[Number].longValue))
-        .getOrElse(fallback))
+      val (result, observed) = withObserved(frame, Seq(metric.as("v")))(query)
+      (result, observed.fold(fallback)(m =>
+        Option(m("v")).fold(0L)(_.asInstanceOf[Number].longValue)))
     }
 
-  /** name → rendered JSON body for each top-level aggregation. */
+  /** Runs `query` over `frame` with `metrics`, named aggregates over
+    * `frame`'s rows, observed inside it. Returns the query's result and the
+    * metrics by name, or `None` when Spark completed the Observation
+    * without metrics (an input it proved empty). The caller checks that
+    * `frame` is not [[org.apache.spark.sql.graft.ColumnBridge.rowsBounded]]. */
+  private[queryast] def withObserved[T](frame: DataFrame, metrics: Seq[Column])(
+      query: DataFrame => T): (T, Option[Map[String, Any]]) = {
+    val o = Observation()
+    val observed = frame.observe(o, metrics.head, metrics.tail: _*)
+    val result =
+      try query(observed)
+      catch { case scala.util.control.NonFatal(e) =>
+        // the session keeps an Observation registered until a query over
+        // it ends; a query that failed to build never ran, so end one
+        // that runs no job
+        scala.util.Try(observed.limit(0).collect())
+        throw e
+      }
+    (result, Some(o.get).filter(_.nonEmpty))
+  }
+
+  /** name → rendered JSON body for each top-level aggregation. `counter`
+    * may be shared with the [[cellsBodies]] of the same request. */
   def run(df: DataFrame, nodes: Seq[Node],
-          bucketLimit: Int = DefaultBucketLimit): Seq[(String, String)] = {
-    val counter = new BucketCounter(bucketLimit)
+          counter: BucketCounter = new BucketCounter(DefaultBucketLimit)): Seq[(String, String)] =
     nodes.map {
       case Node(name, m: Metric, _) => name -> topMetric(df, m)
       case n @ Node(name, _: Bucket, _) =>
         name -> bucketBodies(df, n, Nil, counter).getOrElse(Seq.empty[Any], emptyBucketBody(n))
     }
+
+  // ---------------------------------------- terms counted inside the page
+
+  /** The top-level nodes of `nodes` that a page query over `frame` can
+    * count as it reads every filtered row (see [[observedCells]]): a
+    * `terms` with no sub-aggregation over a column [[TermCells]] counts.
+    * None over a frame whose row count the plan bounds, where the page
+    * query may read the frame twice. */
+  private[queryast] def riders(frame: DataFrame, nodes: Seq[Node]): Seq[Node] = {
+    val types = frame.schema.fields.map(f => f.name -> f.dataType).toMap
+    val candidates = nodes.filter {
+      case Node(_, t: Terms, Nil) => types.get(t.field).exists(TermCells.supports)
+      case _                      => false
+    }
+    if (candidates.isEmpty || ColumnBridge.rowsBounded(frame)) Nil else candidates
   }
+
+  /** One named [[TermCells]] metric per riding node, for the page query's
+    * Observation; a node's cells hold at most [[DefaultBucketLimit]] keys. */
+  private[queryast] def observedCells(riding: Seq[Node]): Seq[Column] =
+    riding.map(n => TermCells.of(col(n.agg.asInstanceOf[Terms].field), DefaultBucketLimit)
+      .as(cellsMetric(n)))
+
+  private def cellsMetric(n: Node): String = s"_cells_${n.name}"
+
+  /** name → rendered body of each riding node from the page query's
+    * metrics (`None`: Spark observed nothing, so every node is empty). An
+    * overflowed node runs its cells query over `frame`, as [[run]] does. */
+  private[queryast] def cellsBodies(frame: DataFrame, riding: Seq[Node],
+                                    observed: Option[Map[String, Any]],
+                                    counter: BucketCounter): Seq[(String, String)] =
+    riding.map { n =>
+      val t = n.agg.asInstanceOf[Terms]
+      n.name -> (observed.map(_(cellsMetric(n)).asInstanceOf[Row]) match {
+        case None => emptyBucketBody(n)
+        case Some(r) if r.getBoolean(0) =>
+          bucketBodies(frame, n, Nil, counter).getOrElse(Seq.empty[Any], emptyBucketBody(n))
+        case Some(r) =>
+          // the cells come sorted by key in Spark's order: the rank stands
+          // for the key, so the kept buckets are the ones the cells query's
+          // TakeOrdered keeps
+          val ranked = r.getSeq[Row](1).zipWithIndex
+          val byRank: Ordering[(Row, Int)] =
+            if (t.orderTarget == "_key") Ordering.by(_._2)
+            else Ordering.by(c => (c._1.getLong(1), c._2))
+          val kept = ranked.filter(_._1.getLong(1) >= t.minDocCount)
+            .sorted(if (t.orderAsc) byRank else byRank.reverse).take(t.size)
+          counter.add(kept.size)
+          val schema = new StructType()
+            .add("_k0", TermCells.keyType(frame.schema(t.field).dataType)).add("_dc", LongType)
+          val cells = kept.map { case (c, _) =>
+            new GenericRowWithSchema(Array(c.get(0), c.getLong(1)), schema): Row
+          }
+          val total = ranked.map(_._1.getLong(1)).sum
+          renderBucketBody(t, "_k0", Nil, cells, Map(Seq.empty[Any] -> total),
+            (_, _) => "", "")
+      })
+    }
 
   private def vcol(f: String): Column = col(f).cast("double")
 
@@ -318,9 +409,6 @@ object EsAggs {
     case _ => 0
   }
 
-  /** Recursive bucket execution: returns parent-key-path → rendered body.
-    * `pathNames` are the `_k<d>` grouping columns of enclosing buckets
-    * (empty at top level). */
   /** Cumulative bucket counter — the AggregationLimits guard the reference
     * wires into every segment collector (collector.rs:562,860-894; node
     * config default `aggregation_bucket_limit: 65000`,
@@ -328,12 +416,12 @@ object EsAggs {
     * collect of bucket cells, cumulatively across the whole agg tree, so a
     * high-cardinality terms/histogram request fails fast instead of
     * OOMing the driver — same role the limit plays for the reference's
-    * searcher memory. */
+    * searcher memory. The two threads of one `_search` share it. */
   final class BucketCounter(limit: Int) {
     private var n = 0
     /** How many more buckets may be collected (≥0). */
-    def remaining: Int = math.max(0, limit - n)
-    def add(k: Int): Unit = {
+    def remaining: Int = synchronized(math.max(0, limit - n))
+    def add(k: Int): Unit = synchronized {
       n += k
       if (n > limit) throw new IllegalArgumentException(
         s"Aborting aggregation because bucket limit was reached (limit: $limit)")
@@ -341,6 +429,9 @@ object EsAggs {
   }
   val DefaultBucketLimit = 65000 // node_config/mod.rs:220
 
+  /** Recursive bucket execution: returns parent-key-path → rendered body.
+    * `pathNames` are the `_k<d>` grouping columns of enclosing buckets
+    * (empty at top level). */
   private def bucketBodies(df: DataFrame, node: Node,
                            pathNames: Seq[String],
                            counter: BucketCounter): Map[Seq[Any], String] = {
@@ -370,8 +461,6 @@ object EsAggs {
           case "_count" =>
             if (asc) Seq(col("_dc").asc, col(kName).asc) else Seq(col("_dc").desc, col(kName).desc)
           case "_key" => Seq(if (asc) col(kName).asc else col(kName).desc)
-          case other => throw new IllegalArgumentException(
-            s"invalid aggregation request: unknown terms order target `$other`")
         }
         if (pathNames.isEmpty) {
           // sum_other_doc_count needs the doc total over ALL cells: a

@@ -64,13 +64,24 @@ object EsApi {
     * es_compatibility scenarios assert on (hits.total.value/relation,
     * hits.hits[]._id/sort/_source, aggregations).
     *
-    * Execution shape: at most one hits query and one query per top-level
+    * Execution shape: one hits query, which also counts every top-level
+    * `terms` aggregation it can, and one query per other top-level
     * aggregation, the two sides running at the same time.
     *  - Hits: one TakeOrdered-with-offset query for the page (bounded by
     *    from+size — never a full sort materialization). It reads every
-    *    filtered row, so `total` is a `count(1)` Observation inside it,
-    *    placed below the search_after predicate and the offset. Only a
+    *    filtered row once, so `total` is a `count(1)` Observation inside
+    *    it, placed below the search_after predicate and the offset. Only a
     *    `size: 0` request runs a `count()` for the total.
+    *  - Terms in the page: a top-level `terms` with no sub-aggregation is
+    *    one more aggregate in the same Observation, a
+    *    [[graft.operators.TermCells]] value→count map (partials per task,
+    *    merged on the driver, like the reference's leaf collector feeding
+    *    top-k and aggregation partials in one pass), rendered by
+    *    [[EsAggs.cellsBodies]]. A ts-sorted search with such an agg is one
+    *    job over one scan. Its buckets count every match, as `total` does;
+    *    `from` and `search_after` do not touch them. A field with more than
+    *    [[EsAggs.DefaultBucketLimit]] distinct values overflows the map and
+    *    runs its cells query after the page.
     *  - A `_score` sort first takes the corpus statistics of the index
     *    frame (N, avgdl, per-term df) as a one-row local frame. Over a bare
     *    Parquet scan (what `TranscriptTable.scan` returns) they are sums of
@@ -80,11 +91,17 @@ object EsApi {
     *    tokens against that row through a broadcast nested-loop join — no
     *    explode, groupBy, or shuffle for scoring
     *    ([[graft.operators.Scoring]]).
-    *  - Aggregations: [[EsAggs.run]] over the same filtered frame, on one
-    *    thread created for the request once the body has been validated
-    *    (a rejected request runs no job). The call awaits it on every
+    *  - Other aggregations: [[EsAggs.run]] over the same filtered frame, on
+    *    one thread created for the request once the body has been
+    *    validated (a rejected request runs no job), and only when such a
+    *    node exists: nested or sub-aggregated `terms`, histograms, ranges
+    *    and metrics; every node of a `size: 0` request; every node over a
+    *    frame whose row count the plan bounds (a local relation, a range,
+    *    a limit — the page may read it twice). The call awaits it on every
     *    path; when both sides fail, the hits' failure is thrown with the
-    *    aggregations' as suppressed.
+    *    aggregations' as suppressed. Both sides share one bucket counter,
+    *    so the bucket limit holds across the whole tree, and the
+    *    aggregations render in request order.
     * `_id` comes from `id`; `_source` is the doc→JSON back-projection of
     * the frame's columns (to_json of the row struct). */
   def search(df: DataFrame, resolver: FieldResolver, id: Column,
@@ -228,51 +245,67 @@ object EsApi {
       if (includeAggs) m.get("aggs").orElse(m.get("aggregations")).map(EsAggs.parseAggs)
       else None
 
-    // The body is valid: from here on the request runs jobs. The aggregation
-    // tree runs on a thread created for this request, beside the hits. A
-    // thread inherits the caller's Spark local properties (job group,
-    // scheduler pool) only when it is created, so a shared pool would run
-    // the aggregation jobs outside the caller's group.
-    val aggsPool = aggNodes.map(_ => Executors.newSingleThreadExecutor(
+    // The body is valid: from here on the request runs jobs. A top-level
+    // `terms` the page query can count rides it (its cells are observed as
+    // the page reads every filtered row); every other node runs on a thread
+    // created for this request, beside the hits. A thread inherits the
+    // caller's Spark local properties (job group, scheduler pool) only when
+    // it is created, so a shared pool would run the aggregation jobs outside
+    // the caller's group.
+    val nodes = aggNodes.getOrElse(Nil)
+    val riding = if (size > 0) EsAggs.riders(filtered, nodes) else Nil
+    val beside = nodes.filterNot(riding.contains)
+    val counter = new EsAggs.BucketCounter(EsAggs.DefaultBucketLimit)
+    val aggsPool = if (beside.isEmpty) None else Some(Executors.newSingleThreadExecutor(
       (r: Runnable) => new Thread(r, AggsThreadName)))
     try {
-      val aggs = aggNodes.zip(aggsPool).map { case (nodes, pool) =>
-        Future(EsAggs.response(EsAggs.run(filtered, nodes)))(
-          ExecutionContext.fromExecutor(pool))
+      val aggs = aggsPool.map { pool =>
+        Future(EsAggs.run(filtered, beside, counter))(ExecutionContext.fromExecutor(pool))
       }
       val hits = Try(searchHits(df, filtered, id, m, astOpt, size, from, sortSpec, cursor,
-        totalOverride, statsOverride))
+        totalOverride, statsOverride, EsAggs.observedCells(riding)))
       aggs.foreach(Await.ready(_, Duration.Inf))
-      val aggsJson = aggs.map(_.value.get) match {
+      val besideBodies = aggs.map(_.value.get) match {
         case Some(Failure(e)) =>
           hits.failed.foreach { h => h.addSuppressed(e); throw h }
           throw e
-        // splice the {"aggregations": ...} envelope's inner object
-        case Some(Success(rendered)) => Some(rendered.stripPrefix("{").stripSuffix("}"))
-        case None => None
+        case Some(Success(bodies)) => bodies
+        case None => Nil
       }
-      val (hitsJson, lastSv, total, stats) = hits.get
+      val h = hits.get
+      val bodies =
+        (besideBodies ++ EsAggs.cellsBodies(filtered, riding, h.observed, counter)).toMap
+      // the {"aggregations": ...} envelope's inner object, in request order
+      val aggsJson = aggNodes.map(ns =>
+        EsAggs.response(ns.map(n => n.name -> bodies(n.name))).stripPrefix("{").stripSuffix("}"))
       // track_total_hits (elasticsearch_api/mod.rs TrackTotalHits): `false`
       // omits the total, an integer n caps the reported value at n with
       // relation "gte" when more match, `true`/absent tracks exactly (this
       // engine is exact, so "eq" is always truthful).
-      val totalBlock = totalBlockJson(m, total)
+      val totalBlock = totalBlockJson(m, h.total)
       val hitsBlock =
-        s""""hits":{$totalBlock"hits":[${hitsJson.mkString(",")}]}"""
+        s""""hits":{$totalBlock"hits":[${h.json.mkString(",")}]}"""
       Page(s"""{"timed_out":false,$hitsBlock${aggsJson.map("," + _).getOrElse("")}}""",
-        lastSv, total, stats)
+        h.lastSortValues, h.total, h.stats)
     } finally aggsPool.foreach(_.shutdown())
   }
 
-  /** The hits half of [[searchPage]]: the rendered page of hits, the last
-    * hit's native sort values, the total (−1 when not tracked) and the BM25
-    * stats frame, if the page ranked by `_score`. */
+  /** What [[searchHits]] returns: the rendered page of hits, the last hit's
+    * native sort values, the total (−1 when not tracked), the BM25 stats
+    * frame if the page ranked by `_score`, and the metrics observed inside
+    * the page query (`None` when it observed none). */
+  private final case class Hits(json: Seq[String], lastSortValues: Option[Seq[Any]],
+                                total: Long, stats: Option[DataFrame],
+                                observed: Option[Map[String, Any]])
+
+  /** The hits half of [[searchPage]]. `cells` are aggregates observed on
+    * the filtered rows inside the page query ([[EsAggs.observedCells]]);
+    * they need a page (`size > 0`). */
   private def searchHits(df: DataFrame, filtered: DataFrame, id: Column,
                          m: Map[String, Any], astOpt: Option[QueryAst],
                          size: Int, from: Int, sortSpec: Seq[(String, Boolean)],
                          cursor: Option[Seq[Any]], totalOverride: Option[Long],
-                         statsOverride: Option[DataFrame])
-      : (Seq[String], Option[Seq[Any]], Long, Option[DataFrame]) = {
+                         statsOverride: Option[DataFrame], cells: Seq[Column]): Hits = {
     // `_score` compiles to REAL BM25 over the query's positive text terms
     // (collector.rs:106-112 SortBy::Score — the reference scores relevance
     // sorts with tantivy's BM25 on every `_search`). Corpus statistics
@@ -370,13 +403,21 @@ object EsApi {
     // stats.
     val wantTotal = m.get("track_total_hits") != Some(false)
     if (size == 0)
-      (Nil, None, if (wantTotal) totalOverride.getOrElse(filtered.count()) else -1L, None)
+      Hits(Nil, None, if (wantTotal) totalOverride.getOrElse(filtered.count()) else -1L,
+        None, None)
     else {
-      val (collected, total) =
-        if (!wantTotal || totalOverride.isDefined)
-          (pageOf(filtered).collect().toSeq, totalOverride.getOrElse(-1L))
-        else EsAggs.withObservedLong(filtered, count(lit(1)), filtered.count())(
-          pageOf(_).collect().toSeq)
+      // over a frame whose row count the plan bounds the page query may
+      // read the rows twice, so the total is a count query of its own
+      val observeTotal = wantTotal && totalOverride.isEmpty &&
+        !org.apache.spark.sql.graft.ColumnBridge.rowsBounded(filtered)
+      val metrics = (if (observeTotal) Seq(count(lit(1)).as("_total")) else Nil) ++ cells
+      val (collected, observed) =
+        if (metrics.isEmpty) (pageOf(filtered).collect().toSeq, None)
+        else EsAggs.withObserved(filtered, metrics)(pageOf(_).collect().toSeq)
+      val total = totalOverride.getOrElse(
+        if (!wantTotal) -1L
+        else observed.flatMap(_.get("_total"))
+          .fold(filtered.count())(_.asInstanceOf[Number].longValue))
       val lastSv = collected.lastOption.map { r =>
         val sv = r.getAs[org.apache.spark.sql.Row]("_sv")
         (0 until sv.length).map(sv.get)
@@ -394,7 +435,7 @@ object EsApi {
           .mkString(""","sort":[""", ",", "]")
         s"""{"_id":$idJ$idxJ$sortJ,"_source":${r.getAs[String]("_src")}}"""
       }
-      (hitsJson, lastSv, total, stats)
+      Hits(hitsJson, lastSv, total, stats, observed)
     }
   }
 

@@ -3,6 +3,8 @@ package graft.queryast
 import graft.SparkTestBase
 import graft.operators.DdSketch
 import graft.util.Json
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 
 /** END-TO-END aggregation-request goldens: each scenario's `json` request
   * body from rest-api-tests/scenarii/aggregations/0001-aggregations.yaml is
@@ -333,7 +335,7 @@ class EsAggsSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException] {
       EsAggs.run(docs, EsAggs.parseAggs(graft.util.Json.parse(
         """{"hosts": {"terms": {"field": "host"}}}""").asInstanceOf[Map[String, Any]]),
-        bucketLimit = 1)
+        new EsAggs.BucketCounter(1))
     }
     assert(e.getMessage.contains("Aborting aggregation because bucket limit was reached"))
     assert(EsAggs.search(docs, resolver,
@@ -353,5 +355,124 @@ class EsAggsSpec extends SparkTestBase {
       """{"aggs":{"hosts":{"terms":{"field":"host","size":2}}}}""")
     assert(!plain.replaceAll("""\],"doc_count_error_upper_bound".*""", "")
       .contains("doc_count_error_upper_bound"))
+  }
+
+  // ------------------------------------------- terms riding the page query
+
+  private val ridingResolver = FieldResolver(Set("text"), Seq("text"))
+
+  /** 300 docs over 4 Parquet files (a frame whose row count the plan does
+    * not bound, so a top-level `terms` rides the page query). Keys: `s`
+    * strings, `l` longs, `d` doubles (with a -0.0), `b` booleans, each with
+    * nulls and count ties; `tags` arrays with null elements. */
+  private lazy val ridingTable: DataFrame = {
+    val dir = tmpDir("riding-terms")
+    spark.range(0, 300).select(
+      col("id").as("doc_id"),
+      when(col("id") % 2 === 0, lit("doc alpha")).otherwise(lit("doc beta")).as("text"),
+      when(col("id") % 11 =!= 0, concat(lit("k"), (col("id") % 7).cast("string"))).as("s"),
+      when(col("id") % 13 =!= 0, col("id") % 5 - 2).as("l"),
+      when(col("id") % 17 === 0, lit(null).cast("double"))
+        .when(col("id") % 29 === 0, lit(-0.0)).otherwise((col("id") % 6) * 0.5 - 1.0).as("d"),
+      when(col("id") % 5 =!= 0, col("id") % 3 === 0).as("b"),
+      array(concat(lit("t"), (col("id") % 3).cast("string")),
+        when(col("id") % 4 =!= 0, lit("t9"))).as("tags"),
+      timestamp_seconds(lit(1704067200L) + col("id") * 60).as("ts"))
+      .repartition(4).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** The `"aggregations"` object of a `_search` response, as
+    * [[EsAggs.response]] renders it. */
+  private def aggsOf(searchJson: String): String = {
+    val i = searchJson.indexOf(""","aggregations":""")
+    assert(i > 0, searchJson)
+    "{" + searchJson.substring(i + 1, searchJson.length - 1) + "}"
+  }
+
+  /** `_search` renders `body`'s aggregations byte for byte as the cells
+    * queries of [[EsAggs.run]] do, in `plans` executed queries. */
+  private def ridingMatchesCells(df: DataFrame, body: String, plans: Int = 1): Unit = {
+    var got = ""
+    val ran = executedPlans {
+      got = EsApi.search(df, ridingResolver, col("doc_id"), body)
+    }
+    assert(aggsOf(got) === EsAggs.search(df, ridingResolver, body), body)
+    assert(ran.size === plans, body)
+  }
+
+  private val ridingQuery = """{"range":{"doc_id":{"gte":10}}}"""
+  private def ridingBody(aggs: String, extra: String = ""): String =
+    s"""{"query":$ridingQuery,"sort":[{"ts":"desc"}],"size":5,$extra"aggs":$aggs}"""
+
+  test("riding terms buckets equal the cells query's: key types, nulls, ties, order, size") {
+    for (f <- Seq("s", "l", "d", "b", "tags")) {
+      ridingMatchesCells(ridingTable, ridingBody(s"""{"k":{"terms":{"field":"$f"}}}"""))
+      ridingMatchesCells(ridingTable, ridingBody(s"""{"k":{"terms":{"field":"$f","size":2}}}"""))
+      for (order <- Seq("""{"_key":"asc"}""", """{"_key":"desc"}""", """{"_count":"asc"}"""))
+        ridingMatchesCells(ridingTable,
+          ridingBody(s"""{"k":{"terms":{"field":"$f","size":3,"order":$order}}}"""))
+      ridingMatchesCells(ridingTable,
+        ridingBody(s"""{"k":{"terms":{"field":"$f","size":100,"min_doc_count":2}}}"""))
+    }
+    // min_doc_count above some counts, and show_term_doc_count_error
+    ridingMatchesCells(ridingTable, ridingBody(
+      """{"k":{"terms":{"field":"l","min_doc_count":59,"show_term_doc_count_error":true}}}"""))
+    // a query that matches nothing
+    ridingMatchesCells(ridingTable,
+      """{"query":{"match":{"text":"nowhere"}},"sort":[{"ts":"desc"}],"size":5,""" +
+        """"aggs":{"k":{"terms":{"field":"s"}}}}""")
+    // an empty input, whose Observation Spark may complete without metrics
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ridingTable.schema)
+    val body = ridingBody("""{"k":{"terms":{"field":"s"}}}""")
+    assert(aggsOf(EsApi.search(empty, ridingResolver, col("doc_id"), body)) ===
+      EsAggs.search(empty, ridingResolver, body))
+  }
+
+  test("riding terms buckets ignore from and search_after; request order kept beside a histogram") {
+    val aggs = """{"k":{"terms":{"field":"s","size":3}}}"""
+    ridingMatchesCells(ridingTable, ridingBody(aggs, """"from":7,"""))
+    val cursor = (1704067200L + 150 * 60) * 1000 // epoch millis of doc 150
+    ridingMatchesCells(ridingTable, ridingBody(aggs, s""""search_after":[$cursor],"""))
+    // BM25 order (no sort), once the per-file corpus counts are memoized
+    val bm25 = s"""{"query":{"match":{"text":"alpha"}},"size":5,"aggs":$aggs}"""
+    EsApi.search(ridingTable, ridingResolver, col("doc_id"), bm25)
+    ridingMatchesCells(ridingTable, bm25)
+    // two riding terms around a histogram that runs beside the hits
+    val three = """{"first":{"terms":{"field":"l","order":{"_key":"asc"}}},""" +
+      """"hist":{"histogram":{"field":"doc_id","interval":100}},""" +
+      """"last":{"terms":{"field":"b"}}}"""
+    val body = ridingBody(three)
+    ridingMatchesCells(ridingTable, body, plans = 2)
+    val names = Json.parse(aggsOf(EsApi.search(ridingTable, ridingResolver, col("doc_id"), body)))
+      .asInstanceOf[Map[String, Any]]("aggregations").asInstanceOf[Map[String, Any]].keys.toSeq
+    assert(names === Seq("first", "hist", "last"))
+  }
+
+  test("riding terms at the bucket limit: 65,000 keys ride, 65,001 overflow into the cells query") {
+    val dir = tmpDir("riding-limit")
+    val n = EsAggs.DefaultBucketLimit
+    spark.range(0, n + 1L).select(col("id").as("doc_id"),
+      timestamp_seconds(lit(1704067200L) + col("id")).as("ts"))
+      .repartition(4).write.mode("overwrite").parquet(dir)
+    val wide = spark.read.parquet(dir)
+    def body(query: String, size: Int) =
+      s"""{"query":$query,"sort":[{"ts":"desc"}],"size":3,""" +
+        s""""aggs":{"k":{"terms":{"field":"doc_id","size":$size}}}}"""
+    val all = """{"match_all":{}}"""
+    val firstN = s"""{"range":{"doc_id":{"lt":$n}}}"""
+    // exactly the limit: every key is a bucket, counted inside the page
+    ridingMatchesCells(wide, body(firstN, n))
+    ridingMatchesCells(wide, body(firstN, 10))
+    // one key more: the cells overflow and the node runs its cells query
+    ridingMatchesCells(wide, body(all, 10), plans = 2)
+    ridingMatchesCells(wide, body(all, n), plans = 2)
+    val limitMsg = s"Aborting aggregation because bucket limit was reached (limit: $n)"
+    val viaSearch = intercept[IllegalArgumentException](
+      EsApi.search(wide, ridingResolver, col("doc_id"), body(all, n + 1)))
+    val viaCells = intercept[IllegalArgumentException](
+      EsAggs.search(wide, ridingResolver, body(all, n + 1)))
+    assert(viaSearch.getMessage === limitMsg)
+    assert(viaCells.getMessage === limitMsg)
   }
 }

@@ -5,9 +5,9 @@ import graft.util.Json
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** How one `_search` runs: the total observed inside the page query, one
-  * scan per query, and the aggregation tree on a per-request thread beside
-  * the hits. */
+/** How one `_search` runs: the total and a top-level `terms` agg's cells
+  * observed inside the page query, one scan per query, and every other
+  * aggregation on a per-request thread beside the hits. */
 class SearchWaveSpec extends SparkTestBase {
 
   private val resolver = FieldResolver(Set("text"), Seq("text"))
@@ -56,24 +56,31 @@ class SearchWaveSpec extends SparkTestBase {
     s"""{"query":$query,"sort":[{"ts":"desc"}],"size":5,""" +
       """"aggs":{"tools":{"terms":{"field":"tool"}}}}"""
 
-  test("plan shape: a ts-sorted _search with a terms agg runs 3 jobs, one scan per query") {
+  test("plan shape: a ts-sorted _search with a terms agg runs 1 job, 1 scan") {
     search(tsBody) // warm
-    val (jobs, _) = planShape("ts-search-terms")(search(tsBody))
-    // the page query (total observed inside it), the terms agg's
-    // shuffle-map job and its TakeOrdered
-    assert(jobs <= 3)
+    val (jobs, shuffles) = planShape("ts-search-terms")(search(tsBody))
+    // the page query: the total and the terms cells observed inside it
+    assert(jobs === 1)
+    assert(shuffles === 0)
     val plans = executedPlans(search(tsBody))
-    assert(plans.size === 2)
-    assert(plans.map(leafScans) === Seq(1, 1))
+    assert(plans.size === 1)
+    assert(plans.map(leafScans) === Seq(1))
   }
 
   test("a planShape group counts the aggregation jobs run beside the hits") {
     val noAggs = s"""{"query":$query,"sort":[{"ts":"desc"}],"size":5}"""
-    val aggsOnly = s"""{"query":$query,"aggs":{"tools":{"terms":{"field":"tool"}}}}"""
+    val histogram = """"aggs":{"ids":{"histogram":{"field":"doc_id","interval":50}}}"""
+    val withHistogram = s"""{"query":$query,"sort":[{"ts":"desc"}],"size":5,$histogram}"""
     search(tsBody) // warm
+    search(withHistogram)
     val (hits, _) = planShape("wave-hits")(search(noAggs))
-    val (aggs, _) = planShape("wave-aggs")(EsAggs.search(table, resolver, aggsOnly))
-    val (both, _) = planShape("wave-both")(search(tsBody))
+    // a top-level terms rides the page query: no job of its own
+    val (riding, _) = planShape("wave-riding")(search(tsBody))
+    assert(riding === hits)
+    // a histogram runs beside the hits, as EsAggs.search runs it alone
+    val (aggs, _) = planShape("wave-aggs")(
+      EsAggs.search(table, resolver, s"""{"query":$query,$histogram}"""))
+    val (both, _) = planShape("wave-both")(search(withHistogram))
     assert(aggs >= 2)
     assert(both === hits + aggs)
   }
@@ -143,6 +150,50 @@ class SearchWaveSpec extends SparkTestBase {
     assert(bothErr.getSuppressed.collect { case e: IllegalArgumentException => e.getMessage }
       .toSeq === Seq(limitMsg))
     assertNoAggsThread()
+  }
+
+  /** Observations the session still waits on: each is registered when its
+    * frame is built and dropped when a query over it ends. */
+  private def liveObservations: Int = {
+    val manager = spark.getClass.getMethod("observationManager").invoke(spark)
+    val field = manager.getClass.getDeclaredField("observations")
+    field.setAccessible(true)
+    field.get(manager).asInstanceOf[java.util.Map[_, _]].size
+  }
+
+  test("a page failure with a riding terms agg starts no thread and leaves no live observation") {
+    val body = """{"sort":["no_such_field"],"size":3,"aggs":{"tools":{"terms":{"field":"tool"}}}}"""
+    table.schema // built
+    assertNoAggsThread()
+    val before = liveObservations
+    val (jobs, _) = planShape("wave-riding-failure") {
+      intercept[AnalysisException](search(body))
+    }
+    assert(jobs === 0)
+    assert(aggsThreads === 0)
+    assert(liveObservations === before)
+  }
+
+  test("a rejected terms body runs no job and starts no thread") {
+    def body(terms: String) =
+      s"""{"query":$query,"sort":[{"ts":"desc"}],"size":5,"aggs":{"tools":{"terms":$terms}}}"""
+    val rejected = Seq(
+      """{"field":"tool","order":{"_count":"ascending"}}""" -> "unknown terms order direction `ascending`",
+      """{"field":"tool","order":{"_count":"asc","_key":"desc"}}""" -> "order must be one",
+      """{"field":"tool","order":{}}""" -> "order must be one",
+      """{"field":"tool","order":"asc"}""" -> "order must be one",
+      """{"field":"tool","order":{"avg_price":"asc"}}""" -> "unknown terms order target `avg_price`",
+      """{"field":"tool","size":-1}""" -> "size must be >= 0, got -1",
+      """{"field":"tool","min_doc_count":-2}""" -> "min_doc_count must be >= 0, got -2")
+    table.schema // built
+    rejected.foreach { case (terms, msg) =>
+      val (jobs, _) = planShape("wave-rejected-terms") {
+        val e = intercept[IllegalArgumentException](search(body(terms)))
+        assert(e.getMessage.contains(msg), terms)
+      }
+      assert(jobs === 0, terms)
+      assertNoAggsThread()
+    }
   }
 
   test("a rejected request runs no job and starts no thread") {

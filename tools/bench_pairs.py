@@ -13,9 +13,12 @@ each workload it runs N pairs of `perfbench/run.py --trace 0`, one seed per
 pair (seed0, seed0+1, ...), alternating which side runs first. Per end-to-end
 metric of BENCHMARK.json it prints each side's median (q1-q3), how many pairs
 the change won, and the change/parent median ratio against the metric's
-bound. For each --claim it prints whether the claim rule holds: the change
-wins at least 9/10 of the pairs and its median is better than the parent's
-by more than the parent's interquartile range. A run that fails or reports
+bound. It then prints each side's median (q1-q3) of the named per-workload
+lines that run.py prints as `metric` lines (search_p50_ms, lookup_p50_ms,
+commit_p50_ms, turns_per_s, where the workload has them), which show the
+request class that moved. For each --claim it prints whether the claim rule
+holds: the change wins at least 9/10 of the pairs and its median is better
+than the parent's by more than the parent's interquartile range. A run that fails or reports
 `correct: false` is printed and left out of the statistics. The temporary
 directories are removed on every exit.
 """
@@ -31,6 +34,8 @@ import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUN_LIMIT_S = 1200  # one run.py call, including a first build
+# named `metric <workload> <name> <value> <unit>` lines summarized per side
+NAMED = ("search_p50_ms", "lookup_p50_ms", "commit_p50_ms", "turns_per_s")
 
 
 def extract(ref, into):
@@ -69,7 +74,12 @@ class Runner:
             return None, "exit %s: %s" % (rc, err.decode(errors="replace")[-400:])
         if not result.get("correct") or result.get("failed"):
             return None, "correct=%s failed=%s" % (result.get("correct"), result.get("failed"))
-        return {k: v["value"] for k, v in result["metrics"].items()}, None
+        vals = {k: v["value"] for k, v in result["metrics"].items()}
+        for line in lines[:-1]:
+            parts = line.split()
+            if len(parts) >= 4 and parts[0] == "metric" and parts[2] in NAMED:
+                vals["named:" + parts[2]] = float(parts[3])
+        return vals, None
 
     def stop(self):
         if self.child is not None and self.child.poll() is None:
@@ -107,6 +117,15 @@ def report(workload, metrics, pairs, claims):
             holds = wins * 10 >= 9 * len(both) and gap > pq3 - pq1
             print("%-18s claim: wins %d/%d (need >= 9/10), median gap %.4g vs parent IQR %.4g: %s"
                   % ("", wins, len(both), gap, pq3 - pq1, "HOLDS" if holds else "does not hold"))
+    for name in NAMED:
+        key = "named:" + name
+        both = [(p[key], c[key]) for p, c in pairs if key in p and key in c]
+        if not both:
+            continue
+        pq1, pmed, pq3 = quartiles([x for x, _ in both])
+        cq1, cmed, cq3 = quartiles([y for _, y in both])
+        print("%-18s parent %.4g (%.4g-%.4g)  change %.4g (%.4g-%.4g)  ratio %.3f  (named line)"
+              % (name, pmed, pq1, pq3, cmed, cq1, cq3, cmed / pmed if pmed else float("nan")))
 
 
 def main():
