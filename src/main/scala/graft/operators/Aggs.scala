@@ -111,15 +111,23 @@ object Aggs {
     df.groupBy(key.as("key")).agg(max(ts).as("max_ts"))
       .orderBy(desc("max_ts"), asc("key")).limit(n)
 
-  /** start_offset pagination after merge (search.proto:206-211).
-    * orderBy + offset + limit plans as a single TakeOrderedAndProject
-    * (distributed per-partition top-(offset+k), root merge, driver slice) —
-    * no global single-partition window (VERDICT r1 "wrong" #5) — unless the
-    * plan bounds `df`'s row count at or below `offset + k` (a local relation,
-    * a range, a limit; see
-    * [[org.apache.spark.sql.graft.ColumnBridge.rowsBounded]]): the optimizer
-    * then drops the limit, and Spark plans a range-partitioned sort whose
-    * sampling job reads the input twice. */
-  def paginate(df: DataFrame, sortCols: Seq[Column], offset: Int, k: Int): DataFrame =
-    df.orderBy(sortCols: _*).offset(offset).limit(k)
+  /** start_offset pagination after merge (search.proto:206-211), and the
+    * one top-k rule: every top-k under an Observation goes through here,
+    * since this plan reads its input exactly once.
+    *  - Most frames: orderBy + offset + limit plans as a single
+    *    TakeOrderedAndProject (distributed per-partition top-(offset+k),
+    *    root merge, driver slice) — no global single-partition window
+    *    (VERDICT r1 "wrong" #5).
+    *  - A frame whose analyzed plan bounds its rows at or below
+    *    `offset + k` (a local relation, a range, a limit, cells grouped over
+    *    one): Spark's optimizer drops such a limit, and a bare global sort
+    *    plans a range exchange whose sampling job reads the input a second
+    *    time. The frame is coalesced to one partition first instead: one
+    *    partition already satisfies the sort's ordered distribution, so the
+    *    sort runs in one task over the at most `offset + k` rows, with no
+    *    exchange and one read. */
+  def paginate(df: DataFrame, sortCols: Seq[Column], offset: Int, k: Int): DataFrame = {
+    val fits = df.queryExecution.analyzed.maxRows.exists(_ <= offset.toLong + k)
+    (if (fits) df.coalesce(1) else df).orderBy(sortCols: _*).offset(offset).limit(k)
+  }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 /** ES aggregation-REQUEST compiler: the `aggs` body of a `_search` request
@@ -37,12 +36,13 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
   * truncation for nested `terms` runs as a window over the per-parent TERM
   * HISTOGRAM (the same bounded state tantivy keeps per bucket), never over
   * rows. A top-level `terms` with no sub-aggregation under `_search` with a
-  * page costs no query of its own: its cells are a
+  * page costs no query of its own, whatever the frame: its cells are a
   * [[graft.operators.TermCells]] aggregate observed inside the page query
   * ([[riders]], [[observedCells]]), and [[cellsBodies]] keeps and renders
   * the buckets on the driver through the same renderer. Anywhere else (and
   * when those cells overflow) a top-level `terms` is one query: one groupBy
-  * into term cells, a TakeOrdered of the kept buckets over them, and a
+  * into term cells, the top-k of the kept buckets over them
+  * ([[graft.operators.Aggs.paginate]], which reads each cell once), and a
   * `sum(doc_count)` Observation on the cells it reads for
   * `sum_other_doc_count` — one scan and one exchange. Nested `terms`
   * collect their per-parent totals in a second query over the same cells.
@@ -207,29 +207,12 @@ object EsAggs {
     response(run(filtered, nodes))
   }
 
-  /** Runs `query` over `frame` with `metric`, a long aggregate over
-    * `frame`'s rows, observed inside it; `query` must read every row of the
-    * frame once, as a TakeOrdered does. Returns the query's result and the
-    * metric. `fallback` runs a query of its own instead when the
-    * observation cannot be trusted: over a frame whose row count the plan
-    * bounds (the sort may then read the frame twice, see
-    * [[org.apache.spark.sql.graft.ColumnBridge.rowsBounded]]), and when
-    * Spark completes the Observation without metrics because the optimizer
-    * removed its node (an input it can prove empty). */
-  private def withObservedLong[T](frame: DataFrame, metric: Column,
-                                  fallback: => Long)(query: DataFrame => T): (T, Long) =
-    if (ColumnBridge.rowsBounded(frame)) (query(frame), fallback)
-    else {
-      val (result, observed) = withObserved(frame, Seq(metric.as("v")))(query)
-      (result, observed.fold(fallback)(m =>
-        Option(m("v")).fold(0L)(_.asInstanceOf[Number].longValue)))
-    }
-
   /** Runs `query` over `frame` with `metrics`, named aggregates over
     * `frame`'s rows, observed inside it. Returns the query's result and the
     * metrics by name, or `None` when Spark completed the Observation
-    * without metrics (an input it proved empty). The caller checks that
-    * `frame` is not [[org.apache.spark.sql.graft.ColumnBridge.rowsBounded]]. */
+    * without metrics (an input it proved empty: no row was read). `query`
+    * must read every row of `frame` once: a top-k goes through
+    * [[graft.operators.Aggs.paginate]], never a bare `orderBy.limit`. */
   private[queryast] def withObserved[T](frame: DataFrame, metrics: Seq[Column])(
       query: DataFrame => T): (T, Option[Map[String, Any]]) = {
     val o = Observation()
@@ -260,16 +243,13 @@ object EsAggs {
 
   /** The top-level nodes of `nodes` that a page query over `frame` can
     * count as it reads every filtered row (see [[observedCells]]): a
-    * `terms` with no sub-aggregation over a column [[TermCells]] counts.
-    * None over a frame whose row count the plan bounds, where the page
-    * query may read the frame twice. */
+    * `terms` with no sub-aggregation over a column [[TermCells]] counts. */
   private[queryast] def riders(frame: DataFrame, nodes: Seq[Node]): Seq[Node] = {
     val types = frame.schema.fields.map(f => f.name -> f.dataType).toMap
-    val candidates = nodes.filter {
+    nodes.filter {
       case Node(_, t: Terms, Nil) => types.get(t.field).exists(TermCells.supports)
       case _                      => false
     }
-    if (candidates.isEmpty || ColumnBridge.rowsBounded(frame)) Nil else candidates
   }
 
   /** One named [[TermCells]] metric per riding node, for the page query's
@@ -464,12 +444,13 @@ object EsAggs {
         }
         if (pathNames.isEmpty) {
           // sum_other_doc_count needs the doc total over ALL cells: a
-          // sum(_dc) observed on the cells the TakeOrdered reads (every one
-          // of them), so the one query scans and shuffles its input once
-          val (rows, total) = withObservedLong(cells, sum(col("_dc")),
-            cells.agg(coalesce(sum(col("_dc")), lit(0L))).head().getLong(0)) { observed =>
-            bounded(observed.filter(col("_dc") >= minDoc).orderBy(ord: _*).limit(size))
+          // sum(_dc) observed on the cells the top-k reads (every one of
+          // them, once), so the one query scans and shuffles its input once
+          val (rows, observed) = withObserved(cells, Seq(sum(col("_dc")).as("v"))) { o =>
+            bounded(Aggs.paginate(o.filter(col("_dc") >= minDoc), ord, offset = 0, k = size))
           }
+          val total =
+            observed.flatMap(m => Option(m("v"))).fold(0L)(_.asInstanceOf[Number].longValue)
           (rows, Map(Seq.empty[Any] -> total))
         } else { // per-parent window over the term HISTOGRAM (bounded)
           val w = Window.partitionBy(pathNames.map(col): _*).orderBy(ord: _*)

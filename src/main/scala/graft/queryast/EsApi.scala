@@ -67,11 +67,13 @@ object EsApi {
     * Execution shape: one hits query, which also counts every top-level
     * `terms` aggregation it can, and one query per other top-level
     * aggregation, the two sides running at the same time.
-    *  - Hits: one TakeOrdered-with-offset query for the page (bounded by
-    *    from+size — never a full sort materialization). It reads every
-    *    filtered row once, so `total` is a `count(1)` Observation inside
-    *    it, placed below the search_after predicate and the offset. Only a
-    *    `size: 0` request runs a `count()` for the total.
+    *  - Hits: one top-k-with-offset query for the page
+    *    ([[graft.operators.Aggs.paginate]]: a TakeOrdered bounded by
+    *    from+size, or a one-task sort over a frame the plan bounds at or
+    *    below from+size rows — never a full sort materialization). It reads
+    *    every filtered row once, so `total` is a `count(1)` Observation
+    *    inside it, placed below the search_after predicate and the offset.
+    *    Only a `size: 0` request runs a `count()` for the total.
     *  - Terms in the page: a top-level `terms` with no sub-aggregation is
     *    one more aggregate in the same Observation, a
     *    [[graft.operators.TermCells]] value→count map (partials per task,
@@ -95,12 +97,10 @@ object EsApi {
     *    one thread created for the request once the body has been
     *    validated (a rejected request runs no job), and only when such a
     *    node exists: nested or sub-aggregated `terms`, histograms, ranges
-    *    and metrics; every node of a `size: 0` request; every node over a
-    *    frame whose row count the plan bounds (a local relation, a range,
-    *    a limit — the page may read it twice). The call awaits it on every
-    *    path; when both sides fail, the hits' failure is thrown with the
-    *    aggregations' as suppressed. Both sides share one bucket counter,
-    *    so the bucket limit holds across the whole tree, and the
+    *    and metrics; every node of a `size: 0` request. The call awaits it
+    *    on every path; when both sides fail, the hits' failure is thrown
+    *    with the aggregations' as suppressed. Both sides share one bucket
+    *    counter, so the bucket limit holds across the whole tree, and the
     *    aggregations render in request order.
     * `_id` comes from `id`; `_source` is the doc→JSON back-projection of
     * the frame's columns (to_json of the row struct). */
@@ -397,27 +397,24 @@ object EsApi {
     // POINT of track_total_hits:false is skipping the count — don't run it
     // just to discard the result. With a page to fetch, the total is
     // `count(1)` observed on the filtered rows inside the page's own query:
-    // its TakeOrdered reads every filtered row, and the observation sits
-    // below the cursor predicate and the offset. Only a `size: 0` request
-    // runs a count query (beside the aggregations), and it needs no BM25
-    // stats.
+    // its top-k ([[graft.operators.Aggs.paginate]]) reads every filtered
+    // row once, and the observation sits below the cursor predicate and
+    // the offset. Only a `size: 0` request runs a count query (beside the
+    // aggregations), and it needs no BM25 stats.
     val wantTotal = m.get("track_total_hits") != Some(false)
     if (size == 0)
       Hits(Nil, None, if (wantTotal) totalOverride.getOrElse(filtered.count()) else -1L,
         None, None)
     else {
-      // over a frame whose row count the plan bounds the page query may
-      // read the rows twice, so the total is a count query of its own
-      val observeTotal = wantTotal && totalOverride.isEmpty &&
-        !org.apache.spark.sql.graft.ColumnBridge.rowsBounded(filtered)
+      val observeTotal = wantTotal && totalOverride.isEmpty
       val metrics = (if (observeTotal) Seq(count(lit(1)).as("_total")) else Nil) ++ cells
       val (collected, observed) =
         if (metrics.isEmpty) (pageOf(filtered).collect().toSeq, None)
         else EsAggs.withObserved(filtered, metrics)(pageOf(_).collect().toSeq)
+      // no metrics: Spark proved the input empty and read no row
       val total = totalOverride.getOrElse(
         if (!wantTotal) -1L
-        else observed.flatMap(_.get("_total"))
-          .fold(filtered.count())(_.asInstanceOf[Number].longValue))
+        else observed.flatMap(_.get("_total")).fold(0L)(_.asInstanceOf[Number].longValue))
       val lastSv = collected.lastOption.map { r =>
         val sv = r.getAs[org.apache.spark.sql.Row]("_sv")
         (0 until sv.length).map(sv.get)

@@ -1,6 +1,11 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -51,6 +56,41 @@ class AggsSpec extends SparkTestBase {
     val out = Aggs.paginate(events.select("v"), Seq(col("v").asc), offset = 2, k = 3)
       .collect().map(_.getDouble(0)).toSeq
     assert(out === Seq(25.0, 35.0, 45.0))
+
+    // one read of the input on every plan: an Observation under it counts
+    // each row once, and no plan has a range exchange
+    import spark.implicits._
+    val dir = tmpDir("paginate-once")
+    spark.range(0, 40).select(col("id").cast("double").as("v")).repartition(4)
+      .write.mode("overwrite").parquet(dir)
+    val local = Seq(3.0, 1.0).toDF("v")
+    val inputs: Seq[(String, DataFrame, Long)] = Seq(
+      ("local", local, 2L),
+      ("union of locals", local.union(Seq(7.0, 5.0, 4.0).toDF("v")), 5L),
+      ("range", spark.range(0, 20).select(col("id").cast("double").as("v")), 20L),
+      ("limit", spark.read.parquet(dir).limit(30), 30L),
+      ("groupBy over a local", events.groupBy("k").agg(max("v").as("v")).select("v"), 4L),
+      ("empty", Seq.empty[Double].toDF("v"), 0L),
+      ("parquet", spark.read.parquet(dir), 40L),
+      // bounded above offset + k: the top-k keeps its TakeOrdered
+      ("range above k", spark.range(0, 100000).select(col("id").cast("double").as("v")), 100000L))
+    def ranges(plan: SparkPlan): Int = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }.size
+    for ((name, df, n) <- inputs; offset <- Seq(0, 1)) {
+      val o = Observation()
+      var page = Seq.empty[Double]
+      val plans = executedPlans {
+        page = Aggs.paginate(df.observe(o, count(lit(1)).as("n")), Seq(col("v").asc),
+          offset, k = 40).collect().map(_.getDouble(0)).toSeq
+      }
+      // Spark completes an Observation over an input it proves empty
+      // without metrics: that reads as 0 rows
+      assert(o.get.get("n").fold(0L)(_.asInstanceOf[Number].longValue) === n, s"$name, offset $offset")
+      assert(plans.map(ranges).sum === 0, s"$name, offset $offset")
+      val sorted = df.collect().map(_.getDouble(0)).sorted.toSeq
+      assert(page === sorted.slice(offset, offset + 40), s"$name, offset $offset")
+    }
   }
 
   test("termsDistributed: leaf truncation, merged counts, error bounds") {

@@ -361,12 +361,10 @@ class EsAggsSpec extends SparkTestBase {
 
   private val ridingResolver = FieldResolver(Set("text"), Seq("text"))
 
-  /** 300 docs over 4 Parquet files (a frame whose row count the plan does
-    * not bound, so a top-level `terms` rides the page query). Keys: `s`
-    * strings, `l` longs, `d` doubles (with a -0.0), `b` booleans, each with
-    * nulls and count ties; `tags` arrays with null elements. */
-  private lazy val ridingTable: DataFrame = {
-    val dir = tmpDir("riding-terms")
+  /** 300 docs as a `range` (a frame whose row count the plan bounds). Keys:
+    * `s` strings, `l` longs, `d` doubles (with a -0.0), `b` booleans, each
+    * with nulls and count ties; `tags` arrays with null elements. */
+  private def ridingRange: DataFrame =
     spark.range(0, 300).select(
       col("id").as("doc_id"),
       when(col("id") % 2 === 0, lit("doc alpha")).otherwise(lit("doc beta")).as("text"),
@@ -378,7 +376,12 @@ class EsAggsSpec extends SparkTestBase {
       array(concat(lit("t"), (col("id") % 3).cast("string")),
         when(col("id") % 4 =!= 0, lit("t9"))).as("tags"),
       timestamp_seconds(lit(1704067200L) + col("id") * 60).as("ts"))
-      .repartition(4).write.mode("overwrite").parquet(dir)
+
+  /** [[ridingRange]] over 4 Parquet files (a frame whose row count the plan
+    * does not bound). */
+  private lazy val ridingTable: DataFrame = {
+    val dir = tmpDir("riding-terms")
+    ridingRange.repartition(4).write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }
 
@@ -402,8 +405,8 @@ class EsAggsSpec extends SparkTestBase {
   }
 
   private val ridingQuery = """{"range":{"doc_id":{"gte":10}}}"""
-  private def ridingBody(aggs: String, extra: String = ""): String =
-    s"""{"query":$ridingQuery,"sort":[{"ts":"desc"}],"size":5,$extra"aggs":$aggs}"""
+  private def ridingBody(aggs: String, extra: String = "", size: Int = 5): String =
+    s"""{"query":$ridingQuery,"sort":[{"ts":"desc"}],"size":$size,$extra"aggs":$aggs}"""
 
   test("riding terms buckets equal the cells query's: key types, nulls, ties, order, size") {
     for (f <- Seq("s", "l", "d", "b", "tags")) {
@@ -427,6 +430,17 @@ class EsAggsSpec extends SparkTestBase {
     val body = ridingBody("""{"k":{"terms":{"field":"s"}}}""")
     assert(aggsOf(EsApi.search(empty, ridingResolver, col("doc_id"), body)) ===
       EsAggs.search(empty, ridingResolver, body))
+    // frames whose row count the plan bounds ride too: the 8 golden docs (a
+    // local relation) and a range, with pages below and at or above the row
+    // count, with and without an offset
+    val local = docs.withColumnRenamed("id", "doc_id")
+    for (f <- Seq("name", "response", "host", "tags"); page <- Seq(
+        """"size":5""", """"size":8""", """"from":3,"size":10""", """"from":7,"size":1"""))
+      ridingMatchesCells(local,
+        s"""{"sort":[{"doc_id":"asc"}],$page,"aggs":{"k":{"terms":{"field":"$f"}}}}""")
+    for (f <- Seq("s", "l", "tags"); (from, size) <- Seq((0, 5), (0, 300), (4, 296)))
+      ridingMatchesCells(ridingRange,
+        ridingBody(s"""{"k":{"terms":{"field":"$f"}}}""", s""""from":$from,""", size))
   }
 
   test("riding terms buckets ignore from and search_after; request order kept beside a histogram") {

@@ -13,17 +13,20 @@ class SearchWaveSpec extends SparkTestBase {
   private val resolver = FieldResolver(Set("text"), Seq("text"))
   private val words = Seq("alpha", "beta", "gamma")
 
-  /** 240 docs over 4 Parquet files: text cycles through `words`, every
-    * seventh doc has no tool, ts one minute apart. */
-  private lazy val table: DataFrame = {
-    val dir = tmpDir("search-wave")
+  /** 240 docs as a `range`: text cycles through `words`, every seventh doc
+    * has no tool, ts one minute apart. */
+  private def docs: DataFrame =
     spark.range(0, 240).select(
       col("id").as("doc_id"),
       concat(lit("doc "), element_at(array(words.map(lit): _*), (col("id") % 3 + 1).cast("int")))
         .as("text"),
       when(col("id") % 7 =!= 0, concat(lit("tool-"), (col("id") % 5).cast("string"))).as("tool"),
       timestamp_seconds(lit(1704067200L) + col("id") * 60).as("ts"))
-      .repartition(4).write.mode("overwrite").parquet(dir)
+
+  /** [[docs]] over 4 Parquet files. */
+  private lazy val table: DataFrame = {
+    val dir = tmpDir("search-wave")
+    docs.repartition(4).write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }
 
@@ -111,6 +114,14 @@ class SearchWaveSpec extends SparkTestBase {
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       table.schema)
     assert(totalOf(search(body(""""size":5"""), empty)) === Some((0L, "eq")))
+    // frames whose row count the plan bounds (a range, a local relation),
+    // with a page at or above the row count: the page reads each row once
+    val local = spark.createDataFrame(java.util.Arrays.asList(docs.collect(): _*), docs.schema)
+    for (bounded <- Seq(docs, local); (from, size) <- Seq((0, 5), (0, 240), (3, 300))) {
+      val page = search(body(s""""from":$from,"size":$size"""), bounded)
+      assert(totalOf(page) === Some((n, "eq")), s"from $from, size $size")
+      assert(hitsOf(page)("hits").asInstanceOf[Seq[Any]].size === math.min(size, n - from))
+    }
     // scroll: the total fixed at open is served by every continuation
     val ctx = new EsScroll.Context()
     try {
@@ -139,7 +150,9 @@ class SearchWaveSpec extends SparkTestBase {
     val wide = spark.range(0, EsAggs.DefaultBucketLimit + 1L).select($"id".as("doc_id"))
     val limitMsg =
       s"Aborting aggregation because bucket limit was reached (limit: ${EsAggs.DefaultBucketLimit})"
-    val wideAggs = s""""aggs":{"k":{"terms":{"field":"doc_id","size":${EsAggs.DefaultBucketLimit + 1}}}}"""
+    // a max sub-agg keeps the terms off the page query, on the aggs thread
+    val wideAggs = s""""aggs":{"k":{"terms":{"field":"doc_id","size":${EsAggs.DefaultBucketLimit + 1}},""" +
+      """"aggs":{"m":{"max":{"field":"doc_id"}}}}}"""
     val aggsErr = intercept[IllegalArgumentException](
       search(s"""{"sort":["doc_id"],"size":3,$wideAggs}""", wide))
     assert(aggsErr.getMessage === limitMsg)
