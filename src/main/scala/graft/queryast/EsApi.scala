@@ -69,8 +69,8 @@ object EsApi {
     * aggregation, the two sides running at the same time.
     *  - Hits: one top-k-with-offset query for the page
     *    ([[graft.operators.Aggs.paginate]]: a TakeOrdered bounded by
-    *    from+size, or a one-task sort over a frame the plan bounds at or
-    *    below from+size rows — never a full sort materialization). It reads
+    *    from+size, or a one-task sort over a frame the optimized plan bounds
+    *    at or below from+size rows — never a full sort materialization). It reads
     *    every filtered row once, so `total` is a `count(1)` Observation
     *    inside it, placed below the search_after predicate and the offset.
     *    Only a `size: 0` request runs a `count()` for the total.

@@ -68,7 +68,10 @@ class AggsSpec extends SparkTestBase {
       ("local", local, 2L),
       ("union of locals", local.union(Seq(7.0, 5.0, 4.0).toDF("v")), 5L),
       ("range", spark.range(0, 20).select(col("id").cast("double").as("v")), 20L),
-      ("limit", spark.read.parquet(dir).limit(30), 30L),
+      ("limit", spark.read.parquet(dir).orderBy("v").limit(30), 30L),
+      // bounded at or below offset + k only once the optimizer folds the
+      // filter into the local relation
+      ("filter over a local", (0 until 60).map(_.toDouble).toDF("v").filter(col("v") < 10), 10L),
       ("groupBy over a local", events.groupBy("k").agg(max("v").as("v")).select("v"), 4L),
       ("empty", Seq.empty[Double].toDF("v"), 0L),
       ("parquet", spark.read.parquet(dir), 40L),

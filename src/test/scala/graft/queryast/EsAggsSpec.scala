@@ -441,6 +441,16 @@ class EsAggsSpec extends SparkTestBase {
     for (f <- Seq("s", "l", "tags"); (from, size) <- Seq((0, 5), (0, 300), (4, 296)))
       ridingMatchesCells(ridingRange,
         ridingBody(s"""{"k":{"terms":{"field":"$f"}}}""", s""""from":$from,""", size))
+    // a query that keeps fewer rows than `size` of more: the plan bounds
+    // them at or below `size` only once the optimizer folds the filter into
+    // the local relation, on the page and on the cells grouped from it
+    val few = """{"query":{"range":{"doc_id":{"gte":5}}},"sort":[{"doc_id":"asc"}],"size":5,""" +
+      """"aggs":{"k":{"terms":{"field":"name","size":5}}}}"""
+    assert(Json.parse(EsAggs.search(local, ridingResolver, few)) === Json.parse(
+      """{"aggregations":{"k":{"buckets":[{"doc_count":2,"key":"Fritz"},
+        |{"doc_count":1,"key":"Manfred"},{"doc_count":1,"key":"Bernhard"}],
+        |"doc_count_error_upper_bound":0,"sum_other_doc_count":0}}}""".stripMargin))
+    ridingMatchesCells(local, few)
   }
 
   test("riding terms buckets ignore from and search_after; request order kept beside a histogram") {

@@ -115,9 +115,13 @@ class SearchWaveSpec extends SparkTestBase {
       table.schema)
     assert(totalOf(search(body(""""size":5"""), empty)) === Some((0L, "eq")))
     // frames whose row count the plan bounds (a range, a local relation),
-    // with a page at or above the row count: the page reads each row once
+    // with a page at or above the row count, and with a page between the
+    // matches and the rows (the optimizer folds the filter into the local
+    // relation): the page reads each row once
     val local = spark.createDataFrame(java.util.Arrays.asList(docs.collect(): _*), docs.schema)
-    for (bounded <- Seq(docs, local); (from, size) <- Seq((0, 5), (0, 240), (3, 300))) {
+    assert(n < 100)
+    for (bounded <- Seq(docs, local);
+         (from, size) <- Seq((0, 5), (0, 100), (3, 100), (0, 240), (3, 300))) {
       val page = search(body(s""""from":$from,"size":$size"""), bounded)
       assert(totalOf(page) === Some((n, "eq")), s"from $from, size $size")
       assert(hitsOf(page)("hits").asInstanceOf[Seq[Any]].size === math.min(size, n - from))
