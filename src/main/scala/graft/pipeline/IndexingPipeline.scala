@@ -4,12 +4,9 @@ import graft.functions.Tokenizers
 import graft.parse.DocParser
 import graft.publish.{Checkpoint, Manifest}
 import graft.route.Routing
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import graft.util.FanOut
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 
 /** The end-to-end indexing job — Quickwit's pipeline
   * Source → DocProcessor → Indexer → Packager → Uploader → Publisher
@@ -209,10 +206,12 @@ object IndexingPipeline {
     *
     * One grouped pass over the persisted routed frame fills the cache and
     * returns each split's doc stats, the error count and the checksum limbs.
-    * The three sink writes and the term stats then read the cache
-    * concurrently; the rollup and dead-letter counts are `Observation`s on
-    * their own writes. When any of them fails, `run` waits for the others,
-    * then throws the first failure with the rest suppressed. */
+    *
+    * Execution shape: the three sink writes and the term stats then read
+    * the cache concurrently, one [[FanOut]] thread each, created by this
+    * call; the rollup and dead-letter counts are `Observation`s on their
+    * own writes. When any of them fails, `run` waits for the others, then
+    * throws the first failure with the rest suppressed. */
   def run(spark: SparkSession, input: DataFrame, outDir: String,
           delta: Checkpoint.Delta, cfg: Config = Config(),
           salted: Boolean = true): Option[Result] = {
@@ -230,12 +229,6 @@ object IndexingPipeline {
     val routed = routedRaw
       .repartition(cfg.shufflePartitions, col("partition_id"))
       .persist()
-    // One thread per fan-out action (3 sink writes, term stats): they are
-    // independent reads of the cached frame, and submitting them together
-    // lets the scheduler interleave their tasks, so the wall clock
-    // approaches max(), not sum(), of the four.
-    val pool = Executors.newFixedThreadPool(4, (r: Runnable) => new Thread(r, FanOutThreadName))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       // the grouped pass runs alone and first: concurrent first-touch of an
       // unmaterialized cache would race partition computation instead of
@@ -253,21 +246,20 @@ object IndexingPipeline {
       val rollupRows = Observation()
       val deadRows = Observation()
       def zstd(df: DataFrame) = df.write.mode("overwrite").option("compression", "zstd")
-      val writes = Seq(
-        Future(zstd(routed.filter(isError)).partitionBy("sink")
+      def write(w: => Unit): () => Option[Array[Row]] = () => { w; None }
+      // One thread per fan-out action (3 sink writes, term stats): they are
+      // independent reads of the cached frame, and submitting them together
+      // lets the scheduler interleave their tasks, so the wall clock
+      // approaches max(), not sum(), of the four.
+      val termRows = FanOut.all(FanOutThreadName, 4)(Seq(
+        write(zstd(routed.filter(isError)).partitionBy("sink")
           .parquet(s"$outDir/error_index/batch-$batchId")),
-        Future(zstd(conversationRollup(routed, salted, cfg)
+        write(zstd(conversationRollup(routed, salted, cfg)
           .observe(rollupRows, count(lit(1)).as("rows")))
           .parquet(s"$outDir/rollup/batch-$batchId")),
-        Future(deadLetter.observe(deadRows, count(lit(1)).as("rows"))
-          .write.mode("overwrite").parquet(s"$outDir/dead_letter/batch-$batchId")))
-      val fTerms = Future(splitTermStats(routed).collect())
-      val all = writes :+ fTerms
-      all.foreach(f => Await.ready(f, Duration.Inf))
-      all.flatMap(_.value.flatMap(_.failed.toOption)) match {
-        case first +: rest => rest.foreach(first.addSuppressed); throw first
-        case _ =>
-      }
+        write(deadLetter.observe(deadRows, count(lit(1)).as("rows"))
+          .write.mode("overwrite").parquet(s"$outDir/dead_letter/batch-$batchId")),
+        () => Some(splitTermStats(routed).collect()))).last.get
 
       // observations are read only once every write has succeeded: Spark
       // does not promise to complete the observation of a failed write
@@ -278,7 +270,7 @@ object IndexingPipeline {
         deadLetter = observed(deadRows))
       val checksum = combineChecksum(
         (3 to 0 by -1).map(limb => docStats.map(_.getAs[Long](s"_ck_$limb")).sum))
-      val terms = fTerms.value.get.get.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val terms = termRows.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       val splits = docStats.toSeq.sortBy(_.getAs[Long]("partition_id")).map { r =>
         val pid = r.getAs[Long]("partition_id")
         val (termCardinality, postings) = terms.getOrElse(pid, (0L, 0L))
@@ -299,10 +291,7 @@ object IndexingPipeline {
         case Left(err) => throw new IllegalStateException(err)
         case Right(_)  => Some(Result(counts, splits, checksum))
       }
-    } finally {
-      pool.shutdown()
-      routed.unpersist()
-    }
+    } finally routed.unpersist()
   }
 
   /** Name of the threads `run` fans its sink writes and term stats out on. */

@@ -4,8 +4,6 @@ import graft.publish.Manifest.SplitEntry
 import graft.queryast.{FieldResolver, QueryAst}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** Physical delete-task execution — the janitor's delete path of the merge
   * executor (quickwit-indexing/src/actors/merge_executor.rs:290-456):
@@ -40,88 +38,76 @@ object DeleteExecutor {
   def rewrittenSplitId(splitId: String, opstamp: Long): String =
     s"delete-$opstamp-$splitId"
 
+  /** Apply `tasks` to every split whose `delete_opstamp` is behind them.
+    * Execution shape: the stale splits are independent units of work (the
+    * planner caps them at 1000 per run), so they run two at a time on
+    * [[graft.util.FanOut]] threads created by this call (a lone split runs
+    * on the caller); publishes serialize on the store's lock. Every split
+    * runs to its end before a failure is thrown — the first in split
+    * order, with the later ones suppressed — so the report reflects the
+    * table's end state. */
   def run(tableDir: String, spark: SparkSession, tasks: Seq[DeleteTask],
-          resolver: FieldResolver = FieldResolver(Set("text"), Seq("text")),
-          concurrency: Int = 2): Result = {
+          resolver: FieldResolver = FieldResolver(Set("text"), Seq("text"))): Result = {
     val store = new Manifest.Store(tableDir)
     val snap = store.currentSnapshot().getOrElse(Manifest.Snapshot(0L, Nil, Map.empty))
     if (tasks.isEmpty) return Result(Nil, Nil, 0L)
     val maxOpstamp = tasks.map(_.opstamp).max
     val stale = snap.splits.filter(_.deleteOpstamp < maxOpstamp)
-    // splits are independent units of work (the planner caps them at 1000
-    // per run): fan them out like MergeExecutor's batches instead of one
-    // sequential driver loop — publishes serialize on the store's lock
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, concurrency))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
     sealed trait Outcome
     final case class Rewrote(e: SplitEntry, docs: Long) extends Outcome
     final case class Bumped(e: SplitEntry) extends Outcome
     final case class Dropped(docs: Long) extends Outcome
     case object Raced extends Outcome
-    try {
-      val jobs = stale.map { s =>
-        scala.concurrent.Future[Outcome] {
-          val applicable = tasks.filter(_.opstamp > s.deleteOpstamp)
-          val doomed = applicable.map(_.query.toColumn(resolver)).reduce(_ || _)
-          val files = s.files.map(_.replaceFirst("^file:", ""))
-          val df = spark.read.parquet(files: _*)
-          // Probe pass: a predicate-column-pruned count of the DOOMED side.
-          // The common case at scale — a query matching zero of a split's
-          // docs — touches ONLY the predicate columns of the parquet scan
-          // (a small fraction of a text-heavy split) and materializes
-          // nothing. Only a partial match pays a full-width second read,
-          // which the rewrite must do anyway to write the survivors.
-          val matches = df.filter(doomed).count()
-          if (matches == 0L) {
-            // bump_opstamp: metadata-only republish of the same id
-            val entry = s.copy(deleteOpstamp = maxOpstamp)
-            store.publish(Seq(entry), Set(s.splitId), Checkpoint.Delta(Nil))
-              .fold(_ => Raced, _ => Bumped(entry))
-          } else if (matches == s.numDocs) {
-            // every doc matched: drop the split outright — no empty split
-            // is ever staged (the reference's whole-split delete arm)
-            store.publish(Nil, Set(s.splitId), Checkpoint.Delta(Nil))
-              .fold(_ => Raced, _ => Dropped(matches))
-          } else {
-            // survivors cached once: stats + sorted write share the scan
-            val kept = df.filter(!doomed).persist()
-            try {
-              val newId = rewrittenSplitId(s.splitId, maxOpstamp)
-              val outDir = s"$tableDir/data/$newId"
-              val written = SplitStaging.writeSorted(kept, outDir)
-              val stats = SplitStaging.stats(kept)
-              // fieldRanges carry over UNCHANGED: the surviving rows are a
-              // subset, so the recorded [min,max] is a superset of the true
-              // range — skipping stays conservative, never lossy
-              val entry = s.copy(
-                splitId = newId,
-                numDocs = stats.numDocs,
-                uncompressedBytes = stats.bytes,
-                timeRangeStartMicros = stats.minUs.getOrElse(s.timeRangeStartMicros),
-                timeRangeEndMicros = stats.maxUs.getOrElse(s.timeRangeEndMicros),
-                numMergeOps = s.numMergeOps + 1,
-                deleteOpstamp = maxOpstamp,
-                files = written)
-              store.publish(Seq(entry), Set(s.splitId), Checkpoint.Delta(Nil))
-                .fold(_ => Raced, _ => Rewrote(entry, matches))
-            } finally kept.unpersist()
-          }
-        }
+    val outcomes = graft.util.FanOut.all[Outcome]("delete-executor", 2)(stale.map { s => () =>
+      val applicable = tasks.filter(_.opstamp > s.deleteOpstamp)
+      val doomed = applicable.map(_.query.toColumn(resolver)).reduce(_ || _)
+      val files = s.files.map(_.replaceFirst("^file:", ""))
+      val df = spark.read.parquet(files: _*)
+      // Probe pass: a predicate-column-pruned count of the DOOMED side.
+      // The common case at scale — a query matching zero of a split's
+      // docs — touches ONLY the predicate columns of the parquet scan
+      // (a small fraction of a text-heavy split) and materializes
+      // nothing. Only a partial match pays a full-width second read,
+      // which the rewrite must do anyway to write the survivors.
+      val matches = df.filter(doomed).count()
+      if (matches == 0L) {
+        // bump_opstamp: metadata-only republish of the same id
+        val entry = s.copy(deleteOpstamp = maxOpstamp)
+        store.publish(Seq(entry), Set(s.splitId), Checkpoint.Delta(Nil))
+          .fold(_ => Raced, _ => Bumped(entry))
+      } else if (matches == s.numDocs) {
+        // every doc matched: drop the split outright — no empty split
+        // is ever staged (the reference's whole-split delete arm)
+        store.publish(Nil, Set(s.splitId), Checkpoint.Delta(Nil))
+          .fold(_ => Raced, _ => Dropped(matches))
+      } else {
+        // survivors cached once: stats + sorted write share the scan
+        val kept = df.filter(!doomed).persist()
+        try {
+          val newId = rewrittenSplitId(s.splitId, maxOpstamp)
+          val outDir = s"$tableDir/data/$newId"
+          val written = SplitStaging.writeSorted(kept, outDir)
+          val stats = SplitStaging.stats(kept)
+          // fieldRanges carry over UNCHANGED: the surviving rows are a
+          // subset, so the recorded [min,max] is a superset of the true
+          // range — skipping stays conservative, never lossy
+          val entry = s.copy(
+            splitId = newId,
+            numDocs = stats.numDocs,
+            uncompressedBytes = stats.bytes,
+            timeRangeStartMicros = stats.minUs.getOrElse(s.timeRangeStartMicros),
+            timeRangeEndMicros = stats.maxUs.getOrElse(s.timeRangeEndMicros),
+            numMergeOps = s.numMergeOps + 1,
+            deleteOpstamp = maxOpstamp,
+            files = written)
+          store.publish(Seq(entry), Set(s.splitId), Checkpoint.Delta(Nil))
+            .fold(_ => Raced, _ => Rewrote(entry, matches))
+        } finally kept.unpersist()
       }
-      // Await EVERY job before surfacing any failure: rethrowing on the
-      // first bad future would leave queued jobs publishing in the
-      // background after the caller observed an error (pool.shutdown()
-      // does not cancel queued tasks) — the report must reflect the
-      // table's actual end state.
-      val settled = jobs.map(f => scala.util.Try(
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-      settled.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
-      val outcomes = settled.collect { case scala.util.Success(o) => o }
-      Result(
-        outcomes.collect { case Rewrote(e, _) => e },
-        outcomes.collect { case Bumped(e) => e },
-        outcomes.collect { case Rewrote(_, d) => d; case Dropped(d) => d }.sum)
-    } finally pool.shutdown()
+    })
+    Result(
+      outcomes.collect { case Rewrote(e, _) => e },
+      outcomes.collect { case Bumped(e) => e },
+      outcomes.collect { case Rewrote(_, d) => d; case Dropped(d) => d }.sum)
   }
 }

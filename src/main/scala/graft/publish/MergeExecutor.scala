@@ -2,8 +2,6 @@ package graft.publish
 
 import graft.publish.Manifest.SplitEntry
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** Physical merge execution — the missing half of T6 (VERDICT r3 next #1):
   * turns [[MergePolicy.planMerges]] batches into actual merged split files
@@ -27,13 +25,15 @@ import scala.jdk.CollectionConverters._
   *    input ids, so a rerun rewrites the SAME staged path (idempotent
   *    overwrite) instead of leaking a new one per attempt.
   *
-  * Scale: each batch reads its inputs with full scan parallelism, then
-  * funnels through a single-task sorted write — a split IS one file group,
-  * and the reference's merge executor is likewise one sequential merge per
-  * operation; throughput comes from running independent batches
-  * concurrently (`concurrency`), the pipeline's num_merge_concurrency
-  * analog. Publishes serialize on the store's CAS, so concurrent batches
-  * commit in some order and each sees the previous snapshot.
+  * Execution shape: each batch reads its inputs with full scan
+  * parallelism, then funnels through a single-task sorted write — a split
+  * IS one file group, and the reference's merge executor is likewise one
+  * sequential merge per operation. Throughput comes from running
+  * independent batches two at a time ([[graft.util.FanOut]] threads created
+  * by each `run`; a lone batch runs on the caller), the pipeline's
+  * num_merge_concurrency analog. Publishes serialize on the store's CAS,
+  * so concurrent batches commit in some order and each sees the previous
+  * snapshot.
   */
 object MergeExecutor {
 
@@ -50,17 +50,17 @@ object MergeExecutor {
 
   /** Stage the merged file group for one batch (the executor+packager+
     * uploader chain): read every input file, rewrite as ONE zstd parquet
-    * sorted by `sortCols` (tantivy merges into the index's sort order;
-    * ts-ordered splits keep time pruning sharp), and return the combined
-    * manifest entry pointing at the written files. Does NOT publish —
-    * exposed separately so specs can crash between stage and publish. */
-  def stageBatch(tableDir: String, spark: SparkSession, batch: Seq[SplitEntry],
-                 sortCols: Seq[String] = Seq("ts", "conv_id", "turn_idx")): SplitEntry = {
+    * sorted by (ts, conv_id, turn_idx) (tantivy merges into the index's
+    * sort order; ts-ordered splits keep time pruning sharp), and return the
+    * combined manifest entry pointing at the written files. Does NOT
+    * publish — exposed separately so specs can crash between stage and
+    * publish. */
+  def stageBatch(tableDir: String, spark: SparkSession, batch: Seq[SplitEntry]): SplitEntry = {
     require(batch.nonEmpty, "empty merge batch")
     val id = mergedSplitId(batch)
     val outDir = s"$tableDir/data/$id"
     val inFiles = batch.flatMap(_.files).map(_.replaceFirst("^file:", ""))
-    val written = SplitStaging.writeSorted(spark.read.parquet(inFiles: _*), outDir, sortCols)
+    val written = SplitStaging.writeSorted(spark.read.parquet(inFiles: _*), outDir)
     MergePolicy.combine(batch, id).copy(files = written)
   }
 
@@ -68,43 +68,29 @@ object MergeExecutor {
     * stage → publish(staged=[merged], replaced=inputs, empty delta).
     * Batches whose inputs are no longer all live (a concurrent or earlier
     * merge took them, or a rerun after a successful publish) are skipped —
-    * the convergence rule that makes crash reruns no-ops. */
+    * the convergence rule that makes crash reruns no-ops. Every batch runs
+    * to its end before a failure is thrown, so the result reflects the
+    * table's end state. */
   def run(tableDir: String, spark: SparkSession,
-          cfg: MergePolicy.Config = MergePolicy.Config(),
-          concurrency: Int = 2,
-          sortCols: Seq[String] = Seq("ts", "conv_id", "turn_idx")): Result = {
+          cfg: MergePolicy.Config = MergePolicy.Config()): Result = {
     val store = new Manifest.Store(tableDir)
     val snap = store.currentSnapshot().getOrElse(Manifest.Snapshot(0L, Nil, Map.empty))
     val plan = MergePolicy.planMerges(snap.splits, cfg)
-    if (plan.isEmpty) return Result(Nil, Set.empty, 0)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, concurrency))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      val jobs = plan.map { batch =>
-        scala.concurrent.Future {
-          val liveNow = store.currentSnapshot().map(_.splits.map(_.splitId).toSet)
-            .getOrElse(Set.empty[String])
-          if (!batch.forall(s => liveNow(s.splitId))) None
-          else {
-            val entry = stageBatch(tableDir, spark, batch, sortCols)
-            store.publish(Seq(entry), batch.map(_.splitId).toSet,
-              Checkpoint.Delta(Nil)) match {
-              case Right(_) => Some(entry -> batch.map(_.splitId).toSet)
-              case Left(_)  => None // raced: inputs gone or id already staged
-            }
-          }
+    val done = graft.util.FanOut.all("merge-executor", 2)(plan.map { batch => () =>
+      val liveNow = store.currentSnapshot().map(_.splits.map(_.splitId).toSet)
+        .getOrElse(Set.empty[String])
+      if (!batch.forall(s => liveNow(s.splitId))) None
+      else {
+        val entry = stageBatch(tableDir, spark, batch)
+        store.publish(Seq(entry), batch.map(_.splitId).toSet,
+          Checkpoint.Delta(Nil)) match {
+          case Right(_) => Some(entry -> batch.map(_.splitId).toSet)
+          case Left(_)  => None // raced: inputs gone or id already staged
         }
       }
-      // await EVERY batch before surfacing a failure — queued jobs keep
-      // publishing after shutdown(), so the result must reflect them
-      val settled = jobs.map(f => scala.util.Try(
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-      settled.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
-      val done = settled.collect { case scala.util.Success(o) => o }
-      Result(done.flatten.map(_._1),
-        done.flatten.flatMap(_._2).toSet,
-        done.count(_.isEmpty))
-    } finally pool.shutdown()
+    })
+    Result(done.flatten.map(_._1),
+      done.flatten.flatMap(_._2).toSet,
+      done.count(_.isEmpty))
   }
 }

@@ -11,13 +11,12 @@ import java.nio.file.Paths
   * (merge_executor.rs packager chain; uploader.rs:340-343). */
 object SplitStaging {
 
-  /** Write `df` as ONE sorted zstd parquet file group under `outDir`
-    * (overwrite — crash reruns land on the same staged path) and return
-    * the written data files. Sort columns missing from the schema are
-    * skipped. */
-  def writeSorted(df: DataFrame, outDir: String,
-                  sortCols: Seq[String] = Seq("ts", "conv_id", "turn_idx")): Seq[String] = {
-    val sortable = sortCols.filter(df.columns.contains)
+  /** Write `df` as ONE zstd parquet file group sorted by (ts, conv_id,
+    * turn_idx) under `outDir` (overwrite — crash reruns land on the same
+    * staged path) and return the written data files. Sort columns missing
+    * from the schema are skipped. */
+  def writeSorted(df: DataFrame, outDir: String): Seq[String] = {
+    val sortable = Seq("ts", "conv_id", "turn_idx").filter(df.columns.contains)
     df.repartition(1)
       .sortWithinPartitions(sortable.map(col): _*)
       .write.mode("overwrite").option("compression", "zstd").parquet(outDir)

@@ -3,11 +3,7 @@ package graft.queryast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-import scala.util.{Failure, Success, Try}
+import graft.util.FanOut
 
 /** ES-compatible serve-layer endpoints (VERDICT r2 missing #5) — the thin
   * request/response shells over compute that already exists:
@@ -93,13 +89,15 @@ object EsApi {
     *    tokens against that row through a broadcast nested-loop join — no
     *    explode, groupBy, or shuffle for scoring
     *    ([[graft.operators.Scoring]]).
-    *  - Other aggregations: [[EsAggs.run]] over the same filtered frame, on
-    *    one thread created for the request once the body has been
-    *    validated (a rejected request runs no job), and only when such a
-    *    node exists: nested or sub-aggregated `terms`, histograms, ranges
-    *    and metrics; every node of a `size: 0` request. The call awaits it
-    *    on every path; when both sides fail, the hits' failure is thrown
-    *    with the aggregations' as suppressed. Both sides share one bucket
+    *  - Other aggregations: [[EsAggs.run]] over the same filtered frame,
+    *    only when such a node exists: nested or sub-aggregated `terms`,
+    *    histograms, ranges and metrics; every node of a `size: 0` request.
+    *    Then the hits and the aggregations each run on a thread that
+    *    [[graft.util.FanOut]] creates for the request once the body has been
+    *    validated (a rejected request runs no job); otherwise the hits run
+    *    on the caller. The call awaits both sides on every path; when both
+    *    fail, the hits' failure is thrown with the aggregations' as
+    *    suppressed. Both sides share one bucket
     *    counter, so the bucket limit holds across the whole tree, and the
     *    aggregations render in request order.
     * `_id` comes from `id`; `_source` is the doc→JSON back-projection of
@@ -195,8 +193,9 @@ object EsApi {
     (m, astOpt, bodySort)
   }
 
-  /** Name of the per-request thread that runs a `_search`'s aggregations. */
-  private[queryast] val AggsThreadName = "es-search-aggs"
+  /** Name of the per-request threads that run a `_search`'s hits and, beside
+    * them, its aggregations. */
+  private[queryast] val SearchThreadName = "es-search"
 
   /** `_search` with the scroll hooks: `cursorOverride` replaces the body's
     * `search_after` (the scroll context's stored cursor), `extraSort`
@@ -247,47 +246,34 @@ object EsApi {
 
     // The body is valid: from here on the request runs jobs. A top-level
     // `terms` the page query can count rides it (its cells are observed as
-    // the page reads every filtered row); every other node runs on a thread
-    // created for this request, beside the hits. A thread inherits the
-    // caller's Spark local properties (job group, scheduler pool) only when
-    // it is created, so a shared pool would run the aggregation jobs outside
-    // the caller's group.
+    // the page reads every filtered row); every other node runs beside the
+    // hits on threads created for this request by FanOut, which copy the
+    // caller's Spark local properties (job group, scheduler pool). With no
+    // such node the hits run alone on the caller.
     val nodes = aggNodes.getOrElse(Nil)
     val riding = if (size > 0) EsAggs.riders(filtered, nodes) else Nil
     val beside = nodes.filterNot(riding.contains)
     val counter = new EsAggs.BucketCounter(EsAggs.DefaultBucketLimit)
-    val aggsPool = if (beside.isEmpty) None else Some(Executors.newSingleThreadExecutor(
-      (r: Runnable) => new Thread(r, AggsThreadName)))
-    try {
-      val aggs = aggsPool.map { pool =>
-        Future(EsAggs.run(filtered, beside, counter))(ExecutionContext.fromExecutor(pool))
-      }
-      val hits = Try(searchHits(df, filtered, id, m, astOpt, size, from, sortSpec, cursor,
-        totalOverride, statsOverride, EsAggs.observedCells(riding)))
-      aggs.foreach(Await.ready(_, Duration.Inf))
-      val besideBodies = aggs.map(_.value.get) match {
-        case Some(Failure(e)) =>
-          hits.failed.foreach { h => h.addSuppressed(e); throw h }
-          throw e
-        case Some(Success(bodies)) => bodies
-        case None => Nil
-      }
-      val h = hits.get
-      val bodies =
-        (besideBodies ++ EsAggs.cellsBodies(filtered, riding, h.observed, counter)).toMap
-      // the {"aggregations": ...} envelope's inner object, in request order
-      val aggsJson = aggNodes.map(ns =>
-        EsAggs.response(ns.map(n => n.name -> bodies(n.name))).stripPrefix("{").stripSuffix("}"))
-      // track_total_hits (elasticsearch_api/mod.rs TrackTotalHits): `false`
-      // omits the total, an integer n caps the reported value at n with
-      // relation "gte" when more match, `true`/absent tracks exactly (this
-      // engine is exact, so "eq" is always truthful).
-      val totalBlock = totalBlockJson(m, h.total)
-      val hitsBlock =
-        s""""hits":{$totalBlock"hits":[${h.json.mkString(",")}]}"""
-      Page(s"""{"timed_out":false,$hitsBlock${aggsJson.map("," + _).getOrElse("")}}""",
-        h.lastSortValues, h.total, h.stats)
-    } finally aggsPool.foreach(_.shutdown())
+    val sides = FanOut.all[Either[Hits, Seq[(String, String)]]](SearchThreadName, 2)(
+      (() => Left(searchHits(df, filtered, id, m, astOpt, size, from, sortSpec, cursor,
+        totalOverride, statsOverride, EsAggs.observedCells(riding)))) +:
+        (if (beside.isEmpty) Nil else Seq(() => Right(EsAggs.run(filtered, beside, counter)))))
+    val h = sides.collectFirst { case Left(hits) => hits }.get
+    val besideBodies = sides.collect { case Right(bodies) => bodies }.flatten
+    val bodies =
+      (besideBodies ++ EsAggs.cellsBodies(filtered, riding, h.observed, counter)).toMap
+    // the {"aggregations": ...} envelope's inner object, in request order
+    val aggsJson = aggNodes.map(ns =>
+      EsAggs.response(ns.map(n => n.name -> bodies(n.name))).stripPrefix("{").stripSuffix("}"))
+    // track_total_hits (elasticsearch_api/mod.rs TrackTotalHits): `false`
+    // omits the total, an integer n caps the reported value at n with
+    // relation "gte" when more match, `true`/absent tracks exactly (this
+    // engine is exact, so "eq" is always truthful).
+    val totalBlock = totalBlockJson(m, h.total)
+    val hitsBlock =
+      s""""hits":{$totalBlock"hits":[${h.json.mkString(",")}]}"""
+    Page(s"""{"timed_out":false,$hitsBlock${aggsJson.map("," + _).getOrElse("")}}""",
+      h.lastSortValues, h.total, h.stats)
   }
 
   /** What [[searchHits]] returns: the rendered page of hits, the last hit's

@@ -3,6 +3,7 @@ package graft.sources
 import graft.model.Turn
 import graft.publish.{Checkpoint, Manifest}
 import graft.queryast.{QueryAst, TagPruning, TimestampPruning}
+import graft.util.FanOut
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -30,13 +31,6 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
     * entries. 32 MiB byte-budget LRU like the reference's default
     * partial-request cache. */
   val leafCache = new graft.operators.LeafSearchCache(32L * 1024 * 1024)
-
-  /** Shared leaf fan-out pool: one cached pool per table instead of a fresh
-    * fixed pool per query — the `latest k` hot path is one split open, and
-    * per-query pool churn was pure overhead there (VERDICT r4 nit #4).
-    * Daemon threads; width is bounded by each call's batch size. */
-  private lazy val leafPool = java.util.concurrent.Executors.newCachedThreadPool(
-    (r: Runnable) => { val t = new Thread(r, "graft-leaf"); t.setDaemon(true); t })
 
   /** Write a batch of turns as one published "split" set: one parquet file
     * group per writer partition, then atomically publish manifest entries
@@ -170,11 +164,15 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
     * Concurrency (VERDICT r3 "wrong" #2): the reference fans leaf searches
     * across searchers and only the BOUND is sequential (leaf.rs:429-543).
     * Splits are processed in concurrent batches of `batch` leaf jobs along
-    * the skip order; the monotone bound refreshes between batches. The
-    * FIRST batch has width 1 so the lead split alone establishes the bound
-    * — the `latest k` hot path still opens exactly one split — and later
-    * batches open at most `batch - 1` splits the bound would have skipped.
-    * `batch = 1` is exactly the sequential reference order. */
+    * the skip order; the monotone bound refreshes between batches. Each
+    * batch is one [[graft.util.FanOut]] call: its leaf jobs run on threads
+    * created for that batch, so they carry the caller's Spark local
+    * properties, and every leaf of the batch ends before a failure is
+    * thrown. The FIRST batch has width 1 so the lead split alone
+    * establishes the bound — the `latest k` hot path opens exactly one
+    * split, on the calling thread — and later batches open at most
+    * `batch - 1` splits the bound would have skipped. `batch = 1` is
+    * exactly the sequential reference order, all on the caller. */
   def topKByTs(k: Int, desc: Boolean = true,
                query: Option[QueryAst] = None,
                resolver: graft.queryast.FieldResolver =
@@ -294,51 +292,43 @@ final class TranscriptTable(val dir: String, spark: SparkSession) {
     // the resolver is part of the request identity: the same AST compiles
     // to different predicates under different field resolutions
     val fp = s"topk|f=$sortField|k=$k|desc=$desc|q=${query.fold("*")(_.toString)}|r=$resolver"
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(leafPool);
-    {
-      while (i < ordered.size && !done) {
-        val width = if (first) 1 else math.max(1, batch)
-        // candidates under the CURRENT bound; the bound is monotone along
-        // the order, so the first unbeatable split ends the whole scan
-        val cand = ordered.slice(i, math.min(i + width, ordered.size))
-          .takeWhile(canBeBetter)
-        if (cand.isEmpty) done = true
-        else {
-          val leafJobs = cand.map { s =>
-            scala.concurrent.Future {
-              // consult the leaf cache BEFORE opening any file — the
-              // reference consults it on every leaf search (leaf.rs:96-125)
-              leafCache.get(s.splitId, Some(s.timeRangeStartMicros),
-                Some(s.timeRangeEndMicros), fp, reqS, reqE) match {
-                case Some(bytes) =>
-                  val rows = rowsFromBytes(bytes)
-                  (Nil: Seq[String],
-                    if (rows.nonEmpty) rows.head.schema else null,
-                    rows)
-                case None =>
-                  val files = s.files.map(_.replaceFirst("^file:", ""))
-                  val df = windowFilter(readFiles(files))
-                  val leaf = query.fold(df)(q => df.filter(q.toColumn(resolver)))
-                    .orderBy(sortCols: _*).limit(k).collect()
-                  leafCache.put(s.splitId, Some(s.timeRangeStartMicros),
-                    Some(s.timeRangeEndMicros), fp, reqS, reqE, rowsToBytes(leaf))
-                  (files, df.schema, leaf)
-              }
-            }
+    while (i < ordered.size && !done) {
+      val width = if (first) 1 else math.max(1, batch)
+      // candidates under the CURRENT bound; the bound is monotone along
+      // the order, so the first unbeatable split ends the whole scan
+      val cand = ordered.slice(i, math.min(i + width, ordered.size))
+        .takeWhile(canBeBetter)
+      if (cand.isEmpty) done = true
+      else {
+        val leaves = FanOut.all("topk-leaf", width)(cand.map { s => () =>
+          // consult the leaf cache BEFORE opening any file — the
+          // reference consults it on every leaf search (leaf.rs:96-125)
+          leafCache.get(s.splitId, Some(s.timeRangeStartMicros),
+            Some(s.timeRangeEndMicros), fp, reqS, reqE) match {
+            case Some(bytes) =>
+              val rows = rowsFromBytes(bytes)
+              (Nil: Seq[String],
+                if (rows.nonEmpty) rows.head.schema else null,
+                rows)
+            case None =>
+              val files = s.files.map(_.replaceFirst("^file:", ""))
+              val df = windowFilter(readFiles(files))
+              val leaf = query.fold(df)(q => df.filter(q.toColumn(resolver)))
+                .orderBy(sortCols: _*).limit(k).collect()
+              leafCache.put(s.splitId, Some(s.timeRangeStartMicros),
+                Some(s.timeRangeEndMicros), fp, reqS, reqE, rowsToBytes(leaf))
+              (files, df.schema, leaf)
           }
-          leafJobs.foreach { f =>
-            val (files, sch, leaf) =
-              scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-            opened ++= files
-            if (schema == null) schema = sch
-            top = (top ++ leaf).sorted.take(k)
-          }
-          if (top.size == k) worst = Some(key(top.last)._1)
-          if (cand.size < width) done = true // hit an unbeatable split (or the end)
-          i += cand.size
-          first = false
+        })
+        leaves.foreach { case (files, sch, leaf) =>
+          opened ++= files
+          if (schema == null) schema = sch
+          top = (top ++ leaf).sorted.take(k)
         }
+        if (top.size == k) worst = Some(key(top.last)._1)
+        if (cand.size < width) done = true // hit an unbeatable split (or the end)
+        i += cand.size
+        first = false
       }
     }
     val out =

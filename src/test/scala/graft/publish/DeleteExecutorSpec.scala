@@ -101,8 +101,7 @@ class DeleteExecutorSpec extends SparkTestBase {
     // than even ONE full scan of the split data.
     val b0 = fsBytesRead()
     val res = DeleteExecutor.run(dir, spark,
-      Seq(DeleteExecutor.DeleteTask(5L, QueryAst.Term("role", "no_such_role"))),
-      concurrency = 1)
+      Seq(DeleteExecutor.DeleteTask(5L, QueryAst.Term("role", "no_such_role"))))
     val read = fsBytesRead() - b0
     assert(res.bumped.size === 3 && res.rewritten.isEmpty)
     // column pruning must hold: the probe reads the predicate column only,

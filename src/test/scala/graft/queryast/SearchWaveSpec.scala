@@ -48,7 +48,7 @@ class SearchWaveSpec extends SparkTestBase {
     EsApi.search(df, resolver, col("doc_id"), body)
 
   private def aggsThreads: Int = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
-    .count(t => t.getName == EsApi.AggsThreadName && t.isAlive)
+    .count(t => t.getName == EsApi.SearchThreadName && t.isAlive)
   private def assertNoAggsThread(): Unit = {
     val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
     while (aggsThreads > 0 && System.nanoTime() < deadline) Thread.sleep(20)

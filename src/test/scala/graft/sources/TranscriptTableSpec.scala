@@ -375,4 +375,46 @@ class TranscriptTableSpec extends SparkTestBase {
     assert(!want(0).tags.exists(_.startsWith("tool")) && want(1).tags.contains("tool!"))
     assert(want(2).minTsMicros === 0L && want(2).fieldRanges.isEmpty)
   }
+
+  test("every leaf job of a top-k call carries the caller's local properties") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val table = new TranscriptTable(tmpDir("ttable"), spark)
+    val df = TranscriptGen.turns(numConvs = 30, avgTurns = 6).toDS().toDF()
+    (0 until 3).foreach { i =>
+      table.append(df.filter(s"turn_idx % 3 = $i"), delta(i - 1L, i.toLong), numFiles = 1)
+    }
+    val bigK = df.count().toInt + 1 // no bound ever skips: all three splits open
+    val key = "graft.spec.caller"
+    val seen = scala.collection.mutable.Buffer.empty[String]
+    val marks = new java.util.concurrent.CountDownLatch(2)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
+        val label = Option(e.properties).map(_.getProperty(key)).orNull
+        seen += label
+        if (label == "mark") marks.countDown()
+      }
+    }
+    // a one-task job under "mark" ends each call's jobs in the listener's order
+    def mark(): Unit = { sc.setLocalProperty(key, "mark"); sc.parallelize(Seq(1), 1).count() }
+    sc.addSparkListener(listener)
+    try {
+      // the first batch opens one split on the caller, the second batch
+      // the other two on fan-out threads
+      sc.setLocalProperty(key, "a")
+      table.topKByTs(bigK)
+      mark()
+      sc.setLocalProperty(key, "b")
+      table.topKByTs(bigK - 1) // another k: every leaf misses the cache
+      mark()
+      assert(marks.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    val secondCall = seen.synchronized(seen.toList)
+      .dropWhile(_ != "mark").drop(1).takeWhile(_ != "mark")
+    assert(secondCall.nonEmpty && secondCall.forall(_ == "b"), secondCall)
+  }
 }
