@@ -1,9 +1,9 @@
 package graft.queryast
 
+import graft.util.FanOut
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.util.FanOut
 
 /** ES-compatible serve-layer endpoints (VERDICT r2 missing #5) — the thin
   * request/response shells over compute that already exists:
@@ -97,9 +97,9 @@ object EsApi {
     *    validated (a rejected request runs no job); otherwise the hits run
     *    on the caller. The call awaits both sides on every path; when both
     *    fail, the hits' failure is thrown with the aggregations' as
-    *    suppressed. Both sides share one bucket
-    *    counter, so the bucket limit holds across the whole tree, and the
-    *    aggregations render in request order.
+    *    suppressed. Both sides share one bucket counter, so the bucket
+    *    limit holds across the whole tree, and the aggregations render in
+    *    request order.
     * `_id` comes from `id`; `_source` is the doc→JSON back-projection of
     * the frame's columns (to_json of the row struct). */
   def search(df: DataFrame, resolver: FieldResolver, id: Column,
