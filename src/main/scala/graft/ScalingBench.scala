@@ -3,6 +3,7 @@ package graft
 import graft.model.TranscriptGen
 import graft.pipeline.IndexingPipeline
 import graft.publish.Checkpoint
+import graft.util.Fs
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -39,12 +40,6 @@ object ScalingBench {
   final case class RunStats(cores: Int, secs: Double, turnsPerSec: Double,
                             errors: Long, rollups: Long, dead: Long, checksum: Long)
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
-
   /** Child mode: one measured pipeline run inside a core-pinned JVM.
     * args: "child" <cores> <inputDir> <totalTurns>. Prints one JSON line. */
   private def childMain(cores: Int, inputDir: String, totalTurns: Long): Unit = {
@@ -55,7 +50,7 @@ object ScalingBench {
       warmDir.toString,
       Checkpoint.Delta(Seq(Checkpoint.PartitionDelta("warm", -1, 1))),
       IndexingPipeline.Config(shufflePartitions = sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "64").toInt)).get
-    deleteRecursively(warmDir)
+    Fs.deleteRecursively(warmDir)
     val input = s.read.parquet(inputDir)
     val outDir = Files.createTempDirectory(s"graft_scaling_out_$cores")
     val out = outDir.toString
@@ -67,7 +62,7 @@ object ScalingBench {
     s.stop()
     // clean our ~350 MB of sink output — accumulated dirt from earlier runs
     // perturbs later ones via page-cache/writeback pressure
-    deleteRecursively(outDir)
+    Fs.deleteRecursively(outDir)
     // checksum as a STRING: a 64-bit value through a Double-typed JSON
     // number would silently lose low bits
     println(s"""CHILD{"secs":$secs,"errors":${res.counts.errorIndex},"rollups":${res.counts.rollup},"dead":${res.counts.deadLetter},"checksum":"${res.routedChecksum}"}""")

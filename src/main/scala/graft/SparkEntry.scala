@@ -566,41 +566,42 @@ object SparkEntry {
         |FROM tr JOIN ts_agg ON tr.partition_id = ts_agg.partition_id
         |GROUP BY tr.partition_id ORDER BY tr.partition_id""".stripMargin),
 
-    // ---- streaming fan-out + ledger resume (T1-T3 / S2 contract) ---------
-    // Two waves of input drain through the Structured-Streaming pipeline
-    // with the per-batch manifest ledger; between them the LAST batch is
-    // replayed (foreachBatch crash-redelivery) and must be rejected by the
-    // ledger's contiguous delta — counts land exactly once. DuckDB
-    // recomputes all three totals from the raw transcripts.
+    // ---- streaming indexing + manifest resume (T1-T3 / S2 contract) -----
+    // Two waves of input drain through the Structured-Streaming pipeline,
+    // each micro-batch one IndexingPipeline.run publishing to the manifest
+    // in `out`; between them the LAST batch is replayed (foreachBatch
+    // crash-redelivery) and must write and publish nothing — counts land
+    // exactly once. DuckDB recomputes all three totals from the raw
+    // transcripts. The sinks' `batch-N` dirs are counted with
+    // recursiveFileLookup: partition discovery cannot read them as one table.
     Query("pipe_stream_resume", (s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-streamres").toString
-      val (in, out, cp, ledgerDir) = (s"$base/in", s"$base/out", s"$base/cp", s"$base/ledger")
-      val cfg = graft.pipeline.IndexingPipeline.Config()
-      val (tools, roles) = graft.pipeline.IndexingPipeline.dims(s)
-      val tr = transcripts(s, d).select(col("conv_id"), col("turn_idx"),
-        col("role"), col("text"), col("tool"),
-        col("ts").cast("timestamp_ltz").as("ts"))
-      val waveKey = pmod(xxhash64(col("conv_id")), lit(2L))
-      tr.filter(waveKey === 0L).coalesce(2).write.mode("append").parquet(in)
-      graft.streaming.StreamingPipeline.start(s, in, out, cp, cfg,
-        ledgerDir = Some(ledgerDir)).awaitTermination()
-      val store = new graft.publish.Manifest.Store(ledgerDir)
-      val last1 = store.currentSnapshot().get.checkpoint("stream")
-      // wave 1 is 2 files < maxFilesPerTrigger = ONE batch: the full wave-1
-      // read is that batch's redelivered content
-      val replayAccepted = graft.streaming.StreamingPipeline.processBatch(
-        s.read.parquet(in), last1, out, tools, roles, cfg, Some(store))
-      tr.filter(waveKey === 1L).coalesce(2).write.mode("append").parquet(in)
-      graft.streaming.StreamingPipeline.start(s, in, out, cp, cfg,
-        ledgerDir = Some(ledgerDir)).awaitTermination()
-      val snap = store.currentSnapshot().get
-      val resumeOk = !replayAccepted && snap.checkpoint("stream") > last1
-      Seq((snap.splits.map(_.numDocs).sum,
-        s.read.parquet(s"$out/error_index").count(),
-        s.read.parquet(s"$out/dead_letter").count(),
-        resumeOk))
-        .toDF("ledger_docs", "error_rows", "dead_rows", "resume_ok")
+      val base = java.nio.file.Files.createTempDirectory("graft-streamres")
+      try {
+        val (in, out, cp) = (s"$base/in", s"$base/out", s"$base/cp")
+        val cfg = graft.pipeline.IndexingPipeline.Config()
+        val tr = transcripts(s, d).select(col("conv_id"), col("turn_idx"),
+          col("role"), col("text"), col("tool"),
+          col("ts").cast("timestamp_ltz").as("ts"))
+        val waveKey = pmod(xxhash64(col("conv_id")), lit(2L))
+        tr.filter(waveKey === 0L).coalesce(2).write.mode("append").parquet(in)
+        graft.streaming.StreamingPipeline.start(s, in, out, cp, cfg).awaitTermination()
+        val store = new graft.publish.Manifest.Store(out)
+        val last1 = store.currentSnapshot().get.checkpoint("stream")
+        // wave 1 is 2 files < maxFilesPerTrigger = ONE batch: the full wave-1
+        // read is that batch's redelivered content
+        val replay = graft.streaming.StreamingPipeline.processBatch(
+          s.read.parquet(in), last1, out, cfg)
+        tr.filter(waveKey === 1L).coalesce(2).write.mode("append").parquet(in)
+        graft.streaming.StreamingPipeline.start(s, in, out, cp, cfg).awaitTermination()
+        val snap = store.currentSnapshot().get
+        val resumeOk = replay.isEmpty && snap.checkpoint("stream") > last1
+        def rows(sink: String) =
+          s.read.option("recursiveFileLookup", "true").parquet(s"$out/$sink").count()
+        Seq((snap.splits.map(_.numDocs).sum, rows("error_index"), rows("dead_letter"),
+          resumeOk))
+          .toDF("ledger_docs", "error_rows", "dead_rows", "resume_ok")
+      } finally graft.util.Fs.deleteRecursively(base)
     },
       TranscriptsCte +
       """SELECT CAST(sum(CASE WHEN text IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS ledger_docs,

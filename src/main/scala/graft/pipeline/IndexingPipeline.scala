@@ -53,7 +53,9 @@ object IndexingPipeline {
   }
 
   /** Stage 2–5 (parse → tokenize → enrich → route) as a reusable frame
-    * transform, shared by batch and streaming paths. */
+    * transform: the front half of `run`, which every indexing path
+    * (batch and streamed micro-batches) goes through, and the routing the
+    * parity queries check. */
   def parseEnrichRoute(input: DataFrame, tools: DataFrame, roles: DataFrame,
                        cfg: Config): (DataFrame, DataFrame) = {
     val parsed = DocParser.parse(input, DocParser.Lenient)

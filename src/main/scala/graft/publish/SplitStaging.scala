@@ -4,11 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Paths
 
-/** The shared packager/uploader write shape: merge staging, delete
-  * rewrites and the streaming ledger all produce "one sorted zstd file
-  * group + its SplitEntry stats" — kept in ONE place so sort order,
-  * compression and the stats formula can never drift apart
-  * (merge_executor.rs packager chain; uploader.rs:340-343). */
+/** The shared packager/uploader write shape: merge staging and delete
+  * rewrites both produce "one sorted zstd file group + its SplitEntry
+  * stats" — kept in ONE place so sort order, compression and the stats
+  * formula can never drift apart (merge_executor.rs packager chain;
+  * uploader.rs:340-343). */
 object SplitStaging {
 
   /** Write `df` as ONE zstd parquet file group sorted by (ts, conv_id,

@@ -11,4 +11,10 @@ object Fs {
     val s = Files.list(p)
     try s.iterator().asScala.toSeq finally s.close()
   }
+
+  /** Delete `p` and everything under it; a missing path is a no-op. */
+  def deleteRecursively(p: Path): Unit = {
+    if (Files.isDirectory(p)) list(p).foreach(deleteRecursively)
+    Files.deleteIfExists(p)
+  }
 }

@@ -2,11 +2,16 @@ package graft.streaming
 
 import graft.SparkTestBase
 import graft.model.TranscriptGen
+import graft.pipeline.IndexingPipeline
+import graft.publish.{Checkpoint, Manifest}
 import org.apache.spark.sql.functions._
 
 /** Structured-Streaming pipeline tests: drain-and-stop semantics, checkpoint
-  * resume (new files only), parity with the batch pipeline's counts. */
+  * resume (new files only), parity with a batch `IndexingPipeline.run` over
+  * the same input, and a failed publish followed by a replay. */
 class StreamingPipelineSpec extends SparkTestBase {
+
+  private val cfg = IndexingPipeline.Config()
 
   private def writeBatch(dir: String, seed: Long, convs: Int): Long = {
     import spark.implicits._
@@ -15,31 +20,35 @@ class StreamingPipelineSpec extends SparkTestBase {
     turns.size.toLong
   }
 
+  /** Rows under one sink's `batch-N` dirs: partition discovery cannot read
+    * them as one table, so the count looks files up recursively. */
+  private def sinkRows(dir: String): Long =
+    spark.read.option("recursiveFileLookup", "true").parquet(dir).count()
+
+  private def publishedDocs(out: String): Long =
+    new Manifest.Store(out).currentSnapshot().get.splits.map(_.numDocs).sum
+
+  /** (routed, dead-letter) frames of the batch pipeline over all of `in`. */
+  private def batchFrames(in: String) = {
+    val (tools, roles) = IndexingPipeline.dims(spark)
+    IndexingPipeline.parseEnrichRoute(spark.read.parquet(in), tools, roles, cfg)
+  }
+
   test("AvailableNow drains existing files; checkpoint resume processes only new data") {
     val in = tmpDir("stream_in"); val out = tmpDir("stream_out"); val cp = tmpDir("stream_cp")
     val n1 = writeBatch(in, seed = 1L, convs = 40)
 
-    val q1 = StreamingPipeline.start(spark, in, out, cp)
-    q1.awaitTermination()
-    val afterFirst = spark.read.parquet(s"$out/split_stats")
-      .agg(sum("num_docs")).collect()(0).getLong(0)
-    val dead1 = spark.read.parquet(s"$out/dead_letter").count()
-    // batch-pipeline parity on the same input
-    val (tools, roles) = graft.pipeline.IndexingPipeline.dims(spark)
-    val (routed, dead) = graft.pipeline.IndexingPipeline.parseEnrichRoute(
-      spark.read.parquet(in), tools, roles, graft.pipeline.IndexingPipeline.Config())
-    assert(afterFirst === routed.count())
-    assert(dead1 === dead.count())
+    StreamingPipeline.start(spark, in, out, cp).awaitTermination()
+    val afterFirst = publishedDocs(out)
+    val (routed1, dead1) = batchFrames(in)
+    assert(afterFirst === routed1.count())
+    assert(sinkRows(s"$out/dead_letter") === dead1.count())
 
     // second wave of files: restart from checkpoint, only the delta is processed
     val n2 = writeBatch(in, seed = 2L, convs = 25)
-    val q2 = StreamingPipeline.start(spark, in, out, cp)
-    q2.awaitTermination()
-    val afterSecond = spark.read.parquet(s"$out/split_stats")
-      .agg(sum("num_docs")).collect()(0).getLong(0)
-    val totalValid = graft.pipeline.IndexingPipeline.parseEnrichRoute(
-      spark.read.parquet(in), tools, roles, graft.pipeline.IndexingPipeline.Config())._1.count()
-    assert(afterSecond === totalValid) // accumulated exactly once, no reprocessing
+    StreamingPipeline.start(spark, in, out, cp).awaitTermination()
+    val afterSecond = publishedDocs(out)
+    assert(afterSecond === batchFrames(in)._1.count()) // accumulated exactly once
     assert(afterSecond > afterFirst)
     assert(n1 > 0 && n2 > 0)
   }
@@ -53,70 +62,105 @@ class StreamingPipelineSpec extends SparkTestBase {
     assert(sinks.exists(s => s != null && s.startsWith("sink_")))
   }
 
+  test("a streamed batch publishes what a batch run over the same input does") {
+    val in = tmpDir("stream_par_in")
+    writeBatch(in, seed = 5L, convs = 40)
+    val input = spark.read.parquet(in)
+    val outS = tmpDir("stream_par_s"); val outB = tmpDir("stream_par_b")
+    val streamed = StreamingPipeline.processBatch(input, 0L, outS, cfg).get
+    val batch = IndexingPipeline.run(spark, input, outB,
+      Checkpoint.Delta(Seq(Checkpoint.PartitionDelta("batch", -1L, 1L))), cfg).get
+    assert(streamed.counts === batch.counts)
+    assert(streamed.routedChecksum === batch.routedChecksum)
+    // one entry per routing partition, with its tags and term stats
+    assert(streamed.splits.size > 1)
+    assert(streamed.splits.exists(_.tags.nonEmpty))
+    assert(streamed.splits === batch.splits)
+    assert(new Manifest.Store(outS).currentSnapshot().get.splits === batch.splits)
+    Seq("error_index", "rollup", "dead_letter").foreach { sink =>
+      assert(sinkRows(s"$outS/$sink") === sinkRows(s"$outB/$sink"), sink)
+    }
+    // a drained stream over the same files publishes the same docs
+    val outQ = tmpDir("stream_par_q")
+    StreamingPipeline.start(spark, in, outQ, tmpDir("stream_par_cp"), cfg).awaitTermination()
+    assert(publishedDocs(outQ) === batch.splits.map(_.numDocs).sum)
+  }
+
+  test("a failed publish, then a replay of the same batch, leaves exactly one copy") {
+    val in = tmpDir("stream_crash_in")
+    writeBatch(in, seed = 6L, convs = 30)
+    val input = spark.read.parquet(in)
+    val clean = tmpDir("stream_crash_clean")
+    StreamingPipeline.processBatch(input, 0L, clean, cfg).get
+    val out = tmpDir("stream_crash_out")
+    // the manifest's directory is a regular file, so the publish fails
+    // after the sinks are written
+    val blocker = java.nio.file.Paths.get(out, "metadata")
+    java.nio.file.Files.write(blocker, Array[Byte](1))
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      StreamingPipeline.processBatch(input, 0L, out, cfg)
+    }
+    assert(new java.io.File(s"$out/rollup/batch-1/_SUCCESS").exists())
+    java.nio.file.Files.delete(blocker)
+    assert(StreamingPipeline.processBatch(input, 0L, out, cfg).isDefined)
+    Seq("error_index", "rollup", "dead_letter").foreach { sink =>
+      assert(sinkRows(s"$out/$sink") === sinkRows(s"$clean/$sink"), sink)
+    }
+    assert(publishedDocs(out) === publishedDocs(clean))
+  }
+
   test("ledger resume: kill/restart + batch replay land exactly-once counts") {
     val in = tmpDir("stream_in4"); val out = tmpDir("stream_out4")
-    val cp = tmpDir("stream_cp4"); val ledgerDir = tmpDir("stream_ledger4")
-    val cfg = graft.pipeline.IndexingPipeline.Config()
-    val (tools, roles) = graft.pipeline.IndexingPipeline.dims(spark)
+    val cp = tmpDir("stream_cp4")
 
-    // wave 1 → drain; the ledger commits one entry per micro-batch
+    // wave 1 → drain; the manifest commits each micro-batch
     writeBatch(in, seed = 7L, convs = 40)
-    StreamingPipeline.start(spark, in, out, cp, cfg,
-      ledgerDir = Some(ledgerDir)).awaitTermination()
-    val store = new graft.publish.Manifest.Store(ledgerDir)
+    StreamingPipeline.start(spark, in, out, cp, cfg).awaitTermination()
+    val store = new Manifest.Store(out)
     val snap1 = store.currentSnapshot().get
-    val routedAll1 = graft.pipeline.IndexingPipeline.parseEnrichRoute(
-      spark.read.parquet(in), tools, roles, cfg)._1.count()
+    val routedAll1 = batchFrames(in)._1.count()
     assert(snap1.splits.map(_.numDocs).sum === routedAll1)
 
     // crash-redelivery: REPLAY the last committed batch directly — the
-    // ledger rejects the overlapping delta, sinks overwrite in place.
+    // manifest already holds it, so the replay writes and publishes nothing.
     // Wave 1 is 2 files < maxFilesPerTrigger, i.e. exactly ONE micro-batch,
     // so the full wave-1 read IS that batch's redelivered content.
     val lastBatch = snap1.checkpoint("stream")
-    assert(lastBatch === 0L && snap1.splits.size === 1)
-    val errBefore = spark.read.parquet(s"$out/error_index").count()
-    val accepted = StreamingPipeline.processBatch(
-      spark.read.parquet(in), lastBatch, out, tools, roles, cfg, Some(store))
-    assert(!accepted) // replay is a no-op at the ledger
-    assert(store.currentSnapshot().get.splits.map(_.numDocs).sum === routedAll1)
+    assert(lastBatch === 0L && snap1.snapshotId === 1L)
+    val errBefore = sinkRows(s"$out/error_index")
+    val replay = StreamingPipeline.processBatch(spark.read.parquet(in), lastBatch, out, cfg)
+    assert(replay.isEmpty)
+    assert(store.currentSnapshot().get === snap1)
+    assert(sinkRows(s"$out/error_index") === errBefore)
 
     // wave 2 → restart from the checkpoint: only the delta processes,
-    // batch ids continue, the ledger deltas stay contiguous
+    // batch ids continue, the manifest deltas stay contiguous
     writeBatch(in, seed = 8L, convs = 25)
-    StreamingPipeline.start(spark, in, out, cp, cfg,
-      ledgerDir = Some(ledgerDir)).awaitTermination()
+    StreamingPipeline.start(spark, in, out, cp, cfg).awaitTermination()
     val snap2 = store.currentSnapshot().get
-    val routedAll2 = graft.pipeline.IndexingPipeline.parseEnrichRoute(
-      spark.read.parquet(in), tools, roles, cfg)._1.count()
-    assert(snap2.splits.map(_.numDocs).sum === routedAll2)
+    val (routedAll2, deadAll) = batchFrames(in)
+    assert(snap2.splits.map(_.numDocs).sum === routedAll2.count())
     assert(snap2.checkpoint("stream") > lastBatch)
     // sink parity with an uninterrupted batch run over the full input
-    val errAll = graft.pipeline.IndexingPipeline.parseEnrichRoute(
-      spark.read.parquet(in), tools, roles, cfg)._1
-      .filter(graft.pipeline.IndexingPipeline.isError).count()
-    assert(spark.read.parquet(s"$out/error_index").count() === errAll)
+    val errAll = routedAll2.filter(IndexingPipeline.isError).count()
+    assert(sinkRows(s"$out/error_index") === errAll)
     assert(errBefore <= errAll)
-    val deadAll = graft.pipeline.IndexingPipeline.parseEnrichRoute(
-      spark.read.parquet(in), tools, roles, cfg)._2.count()
-    assert(spark.read.parquet(s"$out/dead_letter").count() === deadAll)
+    assert(sinkRows(s"$out/dead_letter") === deadAll.count())
   }
 
-  test("ledger enabled on a pre-existing checkpoint commits via a catch-up delta") {
-    val in = tmpDir("stream_in5"); val out = tmpDir("stream_out5")
-    val cp = tmpDir("stream_cp5"); val ledgerDir = tmpDir("stream_ledger5")
-    // phase 1: NO ledger — the streaming checkpoint advances past batch 0
+  test("a fresh outDir over an existing checkpoint commits through a catch-up delta") {
+    val in = tmpDir("stream_in5"); val cp = tmpDir("stream_cp5")
+    // phase 1: the streaming checkpoint advances past batch 0
     writeBatch(in, seed = 11L, convs = 20)
-    StreamingPipeline.start(spark, in, out, cp).awaitTermination()
-    // phase 2: ledger turned on mid-stream — the next batch id is > 0 but
-    // the ledger's position is -1; a batchId-1 anchored delta would be a
+    StreamingPipeline.start(spark, in, tmpDir("stream_out5a"), cp).awaitTermination()
+    // phase 2: a new outDir — the next batch id is > 0 but the fresh
+    // manifest's position is -1; a batchId-1 anchored delta would be a
     // permanent Gap. The catch-up delta must commit it.
     writeBatch(in, seed = 12L, convs = 15)
-    StreamingPipeline.start(spark, in, out, cp,
-      ledgerDir = Some(ledgerDir)).awaitTermination()
-    val store = new graft.publish.Manifest.Store(ledgerDir)
-    val snap = store.currentSnapshot()
-    assert(snap.isDefined, "ledger never committed after mid-stream enablement")
+    val out = tmpDir("stream_out5b")
+    StreamingPipeline.start(spark, in, out, cp).awaitTermination()
+    val snap = new Manifest.Store(out).currentSnapshot()
+    assert(snap.isDefined, "a fresh outDir never committed over an existing checkpoint")
     assert(snap.get.splits.nonEmpty)
     assert(snap.get.checkpoint("stream") >= 1L)
   }
